@@ -93,14 +93,17 @@ def stream_shuffle_width(
 
     total = 0
     for p in input_paths:
-        try:
-            if os.path.isdir(p):
-                for f in os.listdir(p):
-                    total += os.path.getsize(os.path.join(p, f))
-            else:
-                total += os.path.getsize(p)
-        except OSError:
-            pass
+        # Walk the tree: a hive-partitioned input keeps its files in
+        # subdirectories, whose own entry sizes say nothing of the data.
+        files = (
+            [os.path.join(d, f) for d, _, fs in os.walk(p) for f in fs]
+            if os.path.isdir(p) else [p]
+        )
+        for f in files:
+            try:
+                total += os.path.getsize(f)
+            except OSError:
+                pass
     ceiling = shuffle_partitions(spark)
     want = max(floor, -(-total // bytes_per_partition))
     return min(ceiling, want)

@@ -547,20 +547,25 @@ def _apply_fold_chunked(
     prev_qty: str | None,
     snap_cols: list[str],
     out_fields: list[StructField],
-    seq_chunks: int | None,
 ) -> DataFrame:
     """Bounded-memory fold: removes the applyInPandas group-size ceiling.
 
-    ``_apply_fold`` materializes one book's WHOLE event history in one Python
-    worker. Here the plan is ONE hash exchange on the book keys, an
-    in-partition (keys, seq) sort, and one ``mapInPandas`` pass that carries
-    the two ``_Side`` structures across Arrow batches — the batch analogue of
-    the Structured Streaming operator's state chaining
+    ``_apply_fold``'s group fold materializes one book's WHOLE event history
+    in one Python worker. Here the plan is ONE hash exchange on the book
+    keys, an in-partition (keys, seq) sort, and one ``mapInPandas`` pass that
+    carries the two ``_Side`` structures across Arrow batches — the batch
+    analogue of the Structured Streaming operator's state chaining
     (``streaming/book_stream.py``) without its per-micro-batch scheduling.
     Peak per-task memory is one Arrow batch
-    (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, default 10k) plus
-    the live book state — strictly tighter than the r3–r5 chained-rounds
-    design, whose floor was one seq-range chunk of one book.
+    (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows; ``get_spark``
+    sets 65,536) plus the live book state.
+
+    Exchange width: a book is one sequential fold, so the fold stage can use
+    at most one task per book. An UNKEYED fold (one book, the constant
+    ``__book__`` key) is therefore exchanged into exactly ONE partition — a
+    wider exchange would only start Python tasks that receive no rows. Keyed
+    folds use the session's shuffle width. Partitioning is by book key at
+    any width, so the result does not depend on it.
 
     Order contract this relies on: ``mapInPandas`` consumes a partition's
     rows in physical order, ``sortWithinPartitions`` puts the sort below the
@@ -571,16 +576,10 @@ def _apply_fold_chunked(
     compare null-safely in the run detector (matching groupBy's null-group
     semantics).
 
-    ``seq_chunks`` is retained as the public switch (any value > 1 selects
-    this path, ``seq_chunks=1`` forces the plain group fold; UNKEYED folds
-    come here BY DEFAULT since the single-group applyInPandas measured
-    superlinear at 10M events — BENCH_LOCAL_sf10.json. Pinned byte-identical
-    to the unchunked fold by ``tests/test_order_book_chunked.py``); the
-    chunk COUNT no longer shapes
-    the plan — the r3–r5 design paid one cogrouped applyInPandas + lazy
-    localCheckpoint round per chunk (~2 s of driver-side planning alone at
-    seq_chunks=8) and re-scanned the input every round, where this plan scans
-    it once. The builder stays fully lazy: no job runs until an action.
+    ``seq_chunks`` only selects this path (see ``_apply_fold``); its count
+    does not shape the plan, which scans the input once and stays fully
+    lazy: no job runs until an action. Pinned byte-identical to the group
+    fold by ``tests/test_order_book_chunked.py``.
     """
     keys = list(by)
     schema = StructType(
@@ -590,7 +589,10 @@ def _apply_fold_chunked(
 
     from polars_order_book_spark.functions.runtime import shuffle_partitions
 
-    n_parts = shuffle_partitions(df.sparkSession, fallback_df=df)
+    n_parts = (
+        1 if keys == [_BOOK_COL]
+        else shuffle_partitions(df.sparkSession, fallback_df=df)
+    )
 
     def fold_stream(batches):
         cur: object = object()  # sentinel unequal to any key tuple
@@ -718,25 +720,24 @@ def _apply_fold(
     drop_cols = [_BOOK_COL, *temps]
     out_fields = [f for f in df.schema.fields if f.name not in drop_cols]
 
-    # Physical-path selection. The UNKEYED fold defaults to the bounded-
-    # memory mapInPandas plan: a single-book groupBy().applyInPandas()
-    # materializes the WHOLE stream as one pandas group, which measured
-    # superlinear past ~10M events (11.3-12.9x wall at 10x data, +17 GB
-    # peak RSS at 10M rows — BENCH_LOCAL_sf10.json), while the chained-state
-    # plan holds one Arrow batch + the live book and is byte-identical
-    # (tests/test_order_book_chunked.py). At bench scale (100k events) the
-    # two are within noise of each other, so the scale-safe plan is the
-    # right default. KEYED folds keep groupBy: books parallelize across
-    # groups and per-group state is one book's history (callers with
-    # pathological per-book depth opt in via seq_chunks>1). seq_chunks=1
-    # explicitly forces the single-pass group fold — the differential twin
-    # the chunked-equality tests compare against.
+    # Physical-path selection. Two plans, byte-identical results
+    # (tests/test_order_book_chunked.py):
+    # * bounded plan (_apply_fold_chunked): one exchange on the book keys,
+    #   an in-partition sort and one mapInPandas that carries the book across
+    #   Arrow batches. The UNKEYED fold takes it by default, exchanged into
+    #   one partition (one book, one task): a single-group applyInPandas
+    #   materializes the whole stream as one pandas group, which measured
+    #   superlinear past ~10M events (BENCH_LOCAL_sf10.json). Keyed callers
+    #   with pathological per-book depth opt in with seq_chunks>1.
+    # * group fold (groupBy().applyInPandas()): the KEYED default, books
+    #   parallelize across AQE-coalesced groups. seq_chunks=1 forces it for
+    #   an unkeyed fold too — the differential twin the tests compare against.
     if (seq_chunks is not None and seq_chunks > 1) or (
         seq_chunks is None and drop_book
     ):
         result = _apply_fold_chunked(
             df, variant, price, qty, is_bid, seq, by, n, prev_price, prev_qty,
-            snap_cols, out_fields, seq_chunks,
+            snap_cols, out_fields,
         )
     else:
         schema = StructType(
@@ -798,10 +799,10 @@ def top_n_levels_from_price_updates(
 
     Physical paths (identical results, pinned by
     ``tests/test_order_book_chunked.py``): the UNKEYED fold defaults to the
-    bounded-memory chained-state plan (``_apply_fold_chunked`` — one Arrow
-    batch + live book state per task, the scale-safe shape); KEYED folds
-    default to ``groupBy().applyInPandas()`` (books parallelize across
-    groups). ``seq_chunks`` > 1 opts a keyed fold into the bounded plan;
+    bounded-memory chained-state plan (``_apply_fold_chunked`` — one Python
+    task holding one Arrow batch + the live book, the scale-safe shape);
+    KEYED folds default to ``groupBy().applyInPandas()`` (books parallelize
+    across groups). ``seq_chunks`` > 1 opts a keyed fold into the bounded plan;
     ``seq_chunks=1`` forces the single-pass group fold (the differential
     twin).
     """

@@ -1,8 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
-Tuned for the driver's local[32] harness but every setting is the one we would
-ship on a 1000-executor cluster: AQE on (runtime re-plan + skew-join splitting),
-Arrow transfer for the pandas-UDF fold path, shuffle partitions sized to cores.
+Every setting is the one we would ship on a 1000-executor cluster: AQE on
+(runtime re-plan + skew-join splitting), Arrow transfer for the pandas-UDF
+fold path, and a shuffle width equal to the cores the session is given.
 """
 
 from __future__ import annotations
@@ -33,8 +33,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Shuffle width ~ cores locally; a real cluster would use 2-3x total cores.
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
+        # Shuffle width = cores. AQE coalesces batch shuffles below it anyway;
+        # the raw width is read only by stateful streams (one state store,
+        # task and commit per partition per micro-batch) and explicit-count
+        # repartitions, where more partitions than cores only adds task waves.
+        .config("spark.sql.shuffle.partitions", str(int(cpus)))
         # Arrow both ways: toPandas and pandas UDFs (the fold path).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")

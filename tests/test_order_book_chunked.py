@@ -122,7 +122,9 @@ def test_chunked_seq_chunks_one_is_plain_fold(spark):
     fold (FlatMapGroupsInPandas — the differential twin), while the UNKEYED
     default (seq_chunks=None) takes the bounded-memory MapInPandas plan
     (the groupBy single-group fold measured superlinear at 10M events,
-    BENCH_LOCAL_sf10.json); results are byte-identical either way."""
+    BENCH_LOCAL_sf10.json), exchanged into ONE partition: one book is one
+    Python task, not a shuffle-width of mostly empty ones. Results are
+    byte-identical either way."""
     rows = [(s, True, 1 + s % 3, 1) for s in range(10)]
     df = spark.createDataFrame(rows, SCHEMA3)
     cols = snapshot_columns(1)
@@ -134,6 +136,7 @@ def test_chunked_seq_chunks_one_is_plain_fold(spark):
     assert "FlatMapGroupsInPandas" in forced_plan
     assert "MapInPandas" in default_plan
     assert "FlatMapGroupsInPandas" not in default_plan
+    assert "Exchange SinglePartition" in default_plan, default_plan
 
 
 def test_keyed_default_stays_group_fold(spark):

@@ -44,6 +44,12 @@ def test_stream_shuffle_width_sizes_from_input(spark, tmp_path):
         import os
         os.truncate(big, 80 * 1024 * 1024 * 1024)  # sparse 80 GB
         assert stream_shuffle_width(spark, str(big)) == 64
+        # hive-partitioned input: bytes live in nested subdirectories
+        nested = tmp_path / "table" / "day=1"
+        nested.mkdir(parents=True)
+        (nested / "part-0.parquet").write_bytes(b"x")
+        os.truncate(nested / "part-0.parquet", 80 * 1024 * 1024 * 1024)
+        assert stream_shuffle_width(spark, str(tmp_path / "table")) == 64
         # missing path degrades to the floor instead of raising
         assert stream_shuffle_width(spark, str(tmp_path / "nope")) == 8
     finally:

@@ -32,7 +32,7 @@ def main() -> None:
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
              .config("spark.sql.adaptive.skewJoin.enabled", "true")
-             .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
+             .config("spark.sql.shuffle.partitions", str(int(cpus)))
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
              .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
