@@ -112,10 +112,12 @@ def _ob_mutations(n):
 
 
 def _ob_chunked_mutations_deep(n, seq_chunks):
-    """Bounded-memory chunked fold × deep book (r9): the state carried
-    across Arrow batches is the FULL 40-price-per-side book plus the 4·n
-    change-tracked snapshot — the widest carry the chunked path ships
-    between batches; shares the deep mutations oracle."""
+    """Deep-book fold called with ``seq_chunks`` (r9; the argument is now
+    accepted and ignored, so this plans exactly like
+    ``_ob_mutations_deep``): the state carried across Arrow batches is the
+    FULL 40-price-per-side book plus the 4·n change-tracked snapshot — the
+    widest carry the fold ships between batches; shares the deep mutations
+    oracle."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = bs.deep_mutations_stream(load_table(spark, sf_dir, "events"))
         out = top_n_levels_from_price_mutations(stream, n=n, seq_chunks=seq_chunks)
@@ -161,11 +163,11 @@ def _ob_modify(n):
 
 
 def _ob_chunked_mutations(n, seq_chunks):
-    """Bounded-memory fold: identical semantics to `_ob_mutations` but the
-    book state streams across Arrow batches in one exchange + sort +
-    mapInPandas plan (the group-size-ceiling fix, SCALE.md; peak per-task
-    memory = one Arrow batch + live book state). Shares the mutations
-    oracle."""
+    """`_ob_mutations` called with ``seq_chunks`` (the argument is now
+    accepted and ignored, so both plan the same: one exchange + sort +
+    mapInPandas, the book state streaming across Arrow batches; peak
+    per-task memory = one Arrow batch + live book state). Shares the
+    mutations oracle."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = bs.mutations_stream(load_table(spark, sf_dir, "events"))
         out = top_n_levels_from_price_mutations(stream, n=n, seq_chunks=seq_chunks)
@@ -175,8 +177,9 @@ def _ob_chunked_mutations(n, seq_chunks):
 
 def _ob_keyed_mutations(n):
     """Multi-book fold — the reference's documented scaling workflow
-    (ref: README.md:184-216): groupBy(book) runs one independent book per
-    group, so the fold parallelizes across books instead of one serial task."""
+    (ref: README.md:184-216): the exchange by book puts each book in one
+    partition, so the fold parallelizes across books instead of one serial
+    task."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = bs.keyed_mutations_stream(load_table(spark, sf_dir, "events"))
         out = top_n_levels_from_price_mutations(stream, by=["book"], n=n)
@@ -1792,13 +1795,13 @@ def _ob_nbbo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ob_nbbo_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NBBO over the BOUNDED-memory keyed fold (seq_chunks=8 selects the
-    chained-state mapInPandas plan for the per-book folds) + the span-derived
-    auto-chunk forward fill — the composition production runs at depth: the
-    r10 third-decade probe showed the plain per-book groups complete 100M
-    events in 64 s but the bounded plan does it in 53 s with one Arrow batch
-    + live book of state per task. Same oracle as ob_nbbo_keyed — the
-    composition must be byte-identical to the plain-fold NBBO."""
+    """NBBO over the keyed fold called with ``seq_chunks=8`` + the
+    span-derived auto-chunk forward fill. ``seq_chunks`` is now accepted and
+    ignored, so the per-book folds plan exactly like ob_nbbo_keyed's: the
+    chained-state mapInPandas plan, one Arrow batch + live book of state per
+    task (the r10 third-decade probe measured it at 100M events in 53 s
+    against 64 s for the retired per-book group fold). Same oracle as
+    ob_nbbo_keyed — the composition must be byte-identical to it."""
     from polars_order_book_spark.operators.nbbo import nbbo
 
     stream = bs.keyed_mutations_stream(load_table(spark, sf_dir, "events"))

@@ -71,9 +71,8 @@ def nbbo(
       in one tiny window and join each chunk's carry-in back. No
       events-sized single-task window anywhere in the plan.
     * an ``int`` — same segmented scan with a fixed chunk WIDTH in seq
-      units (``seq div chunk_size``). NOTE the unit: a chunk SIZE, NOT the
-      fold operators' ``seq_chunks`` chunk COUNT — named differently on
-      purpose so a tuned value can't silently port between the two.
+      units (``seq div chunk_size``). NOTE the unit: a chunk SIZE, NOT a
+      chunk COUNT like the fold operators' (ignored) ``seq_chunks``.
     * ``None`` — ONE global ordered window (single task holds the whole
       timeline). Simplest plan and ~1.5x faster at sf0.1 (measured
       best-of-3: 2.5s vs 4.0s — below one task's capacity, chunking costs

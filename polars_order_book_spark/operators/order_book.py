@@ -2,8 +2,9 @@
 
 Re-expresses the reference's operator family
 (ref: polars_order_book/polars_order_book/__init__.py:22-210,
-ref: polars_order_book/src/calculate_bbo.rs:62-113) as a grouped-map pandas
-UDF: ``df.groupBy(book_keys).applyInPandas(fold, schema)``.
+ref: polars_order_book/src/calculate_bbo.rs:62-113) as one streamed pandas
+UDF: ``df.repartition(book_keys).sortWithinPartitions(book_keys, seq)
+.mapInPandas(fold_stream, schema)``.
 
 Semantics contract (SURVEY.md §2.1-2.5, FIXTURES.md):
 
@@ -25,10 +26,12 @@ Semantics contract (SURVEY.md §2.1-2.5, FIXTURES.md):
 
 Scale notes (100 TB design): parallelism = number of books, exactly the
 reference's own scaling story (ref: README.md:184-197). One book is inherently
-sequential state; Spark shuffles by the book keys, each group folds in one
-Arrow-batched Python task with numpy-buffered output (mirroring the
-preallocated builders at ref: polars_order_book/src/output.rs:47-54). For
-book-free relational execution see ``order_book_relational``.
+sequential state; Spark shuffles by the book keys and each task folds its
+books in seq order, carrying the live book across Arrow batches, with
+numpy-buffered output (mirroring the preallocated builders at
+ref: polars_order_book/src/output.rs:47-54). Per-task memory is one Arrow
+batch plus the live book, at any book depth. For book-free relational
+execution see ``order_book_relational``.
 """
 
 from __future__ import annotations
@@ -278,7 +281,7 @@ def _fold_arrays(
     # scratch snapshot array stays cache-resident at any n. Block
     # boundaries are EXACT by the emit invariant: the live book's top-N
     # always equals the last emitted column, so each block resumes from
-    # (bids, asks) state like any chunked/streaming hand-off, and its
+    # (bids, asks) state like any Arrow-batch/micro-batch hand-off, and its
     # column 0 re-baselines the forward fill.
     block = _FOLD_BLOCK_BYTES // (32 * n)
     # Scratch buffers are allocated ONCE per call and re-zeroed per block
@@ -484,8 +487,8 @@ def _fold_arrays(
 
 
 def _side_from_lists(prices: "Sequence[int] | None", qtys: "Sequence[int] | None") -> _Side:
-    """Rebuild a ``_Side`` from parallel price/qty lists (state hand-off shape
-    shared by the streaming operator and the chunked batch fold)."""
+    """Rebuild a ``_Side`` from parallel price/qty lists (the streaming
+    operator's state-store shape)."""
     side = _Side()
     # `prices` may be a list (streaming state store) or a numpy array (Arrow
     # deserialization of an array column) — avoid ambiguous truthiness.
@@ -515,6 +518,20 @@ def _as_list(s: pd.Series) -> list:
     return s.tolist()
 
 
+def _snapshot_frame(
+    base_cols: dict, out: np.ndarray, mask: np.ndarray, snap_cols: list[str]
+) -> pd.DataFrame:
+    """``base_cols`` plus the 4n snapshot columns as nullable ``IntegerArray``
+    (``mask`` True = null), built in ONE constructor call: 4n sequential
+    ``res[c] = ...`` inserts cost ~38 ms per batch at n=20 in pandas
+    block-manager churn vs ~2 ms for one dict build (r11 measurement).
+    Shared by the batch fold and both streaming folds."""
+    data = dict(base_cols)
+    for j, c in enumerate(snap_cols):
+        data[c] = pd.arrays.IntegerArray(out[j], mask[j])
+    return pd.DataFrame(data, copy=False)
+
+
 def _normalize_expr_args(
     df: DataFrame, args: dict[str, "str | Column | None"]
 ) -> tuple[DataFrame, dict[str, str | None], list[str]]:
@@ -532,115 +549,6 @@ def _normalize_expr_args(
             out[name] = tmp
             temps.append(tmp)
     return df, out, temps
-
-
-def _apply_fold_chunked(
-    df: DataFrame,
-    variant: str,
-    price: str,
-    qty: str,
-    is_bid: str,
-    seq: str,
-    by: Sequence[str],
-    n: int,
-    prev_price: str | None,
-    prev_qty: str | None,
-    snap_cols: list[str],
-    out_fields: list[StructField],
-) -> DataFrame:
-    """Bounded-memory fold: removes the applyInPandas group-size ceiling.
-
-    ``_apply_fold``'s group fold materializes one book's WHOLE event history
-    in one Python worker. Here the plan is ONE hash exchange on the book
-    keys, an in-partition (keys, seq) sort, and one ``mapInPandas`` pass that
-    carries the two ``_Side`` structures across Arrow batches — the batch
-    analogue of the Structured Streaming operator's state chaining
-    (``streaming/book_stream.py``) without its per-micro-batch scheduling.
-    Peak per-task memory is one Arrow batch
-    (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows; ``get_spark``
-    sets 65,536) plus the live book state.
-
-    Exchange width: a book is one sequential fold, so the fold stage can use
-    at most one task per book. An UNKEYED fold (one book, the constant
-    ``__book__`` key) is therefore exchanged into exactly ONE partition — a
-    wider exchange would only start Python tasks that receive no rows. Keyed
-    folds use the session's shuffle width. Partitioning is by book key at
-    any width, so the result does not depend on it.
-
-    Order contract this relies on: ``mapInPandas`` consumes a partition's
-    rows in physical order, ``sortWithinPartitions`` puts the sort below the
-    Python node, and the hash exchange makes each book contiguous within one
-    partition — so each book's events arrive exactly once, in seq order,
-    possibly split across batches; a key change inside the stream resets the
-    fold state. Null book keys hash to a partition like any value and
-    compare null-safely in the run detector (matching groupBy's null-group
-    semantics).
-
-    ``seq_chunks`` only selects this path (see ``_apply_fold``); its count
-    does not shape the plan, which scans the input once and stays fully
-    lazy: no job runs until an action. Pinned byte-identical to the group
-    fold by ``tests/test_order_book_chunked.py``.
-    """
-    keys = list(by)
-    schema = StructType(
-        out_fields + [StructField(c, LongType(), True) for c in snap_cols]
-    )
-    keep = [f.name for f in out_fields]
-
-    from polars_order_book_spark.functions.runtime import shuffle_partitions
-
-    n_parts = (
-        1 if keys == [_BOOK_COL]
-        else shuffle_partitions(df.sparkSession, fallback_df=df)
-    )
-
-    def fold_stream(batches):
-        cur: object = object()  # sentinel unequal to any key tuple
-        bids, asks = _Side(), _Side()
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            kv = pdf[keys]
-            prev = kv.shift()
-            # null-safe "key changed" per row; first row always opens a run
-            changed = (kv.ne(prev) & ~(kv.isna() & prev.isna())).any(axis=1)
-            changed.iloc[0] = True
-            outs = []
-            for _, run in pdf.groupby(changed.cumsum(), sort=False):
-                run = run.reset_index(drop=True)
-                kt = tuple(
-                    None if pd.isna(v) else v for v in run.iloc[0][keys]
-                )
-                if kt != cur:
-                    cur = kt
-                    bids, asks = _Side(), _Side()
-                out, mask, bids, asks = _fold_arrays(
-                    variant,
-                    n,
-                    run[seq].to_numpy(),
-                    _as_list(run[is_bid]),
-                    _as_list(run[price]),
-                    _as_list(run[qty]),
-                    _as_list(run[prev_price]) if prev_price else None,
-                    _as_list(run[prev_qty]) if prev_qty else None,
-                    bids=bids,
-                    asks=asks,
-                )
-                # One-shot DataFrame construction: 4n+len(keep) sequential
-                # `res[c] = ...` inserts cost ~38 ms/batch at n=20 in pandas
-                # block-manager churn vs ~2 ms for a single dict build
-                # (r11 measurement) — per-batch fixed cost on the fold's
-                # serial task.
-                data = {k: run[k] for k in keep}
-                for j, c in enumerate(snap_cols):
-                    data[c] = pd.arrays.IntegerArray(out[j], mask[j])
-                outs.append(pd.DataFrame(data, copy=False))
-            yield outs[0] if len(outs) == 1 else pd.concat(outs, ignore_index=True)
-
-    parted = df.repartition(n_parts, *[F.col(k) for k in keys]).sortWithinPartitions(
-        *[F.col(k) for k in keys], F.col(seq)
-    )
-    return parted.mapInPandas(fold_stream, schema)
 
 
 def _validate_tick_dtype(dtype, col: str):
@@ -672,7 +580,6 @@ def _apply_fold(
     prev_price: str | None = None,
     prev_qty: str | None = None,
     output_struct: str | None = None,
-    seq_chunks: int | None = None,
 ) -> DataFrame:
     _check_n(n)
     df, named, temps = _normalize_expr_args(
@@ -711,65 +618,80 @@ def _apply_fold(
     price_snap_cast = None if isinstance(price_dt, LongType) else price_dt
     price_snap_cols = [c for c in snap_cols if "_price_" in c]
 
-    drop_book = False
     if not by:
         df = df.withColumn(_BOOK_COL, F.lit(0))
         by = [_BOOK_COL]
-        drop_book = True
+    keys = list(by)
 
     drop_cols = [_BOOK_COL, *temps]
     out_fields = [f for f in df.schema.fields if f.name not in drop_cols]
+    keep = [f.name for f in out_fields]
+    schema = StructType(
+        out_fields + [StructField(c, LongType(), True) for c in snap_cols]
+    )
 
-    # Physical-path selection. Two plans, byte-identical results
-    # (tests/test_order_book_chunked.py):
-    # * bounded plan (_apply_fold_chunked): one exchange on the book keys,
-    #   an in-partition sort and one mapInPandas that carries the book across
-    #   Arrow batches. The UNKEYED fold takes it by default, exchanged into
-    #   one partition (one book, one task): a single-group applyInPandas
-    #   materializes the whole stream as one pandas group, which measured
-    #   superlinear past ~10M events (BENCH_LOCAL_sf10.json). Keyed callers
-    #   with pathological per-book depth opt in with seq_chunks>1.
-    # * group fold (groupBy().applyInPandas()): the KEYED default, books
-    #   parallelize across AQE-coalesced groups. seq_chunks=1 forces it for
-    #   an unkeyed fold too — the differential twin the tests compare against.
-    if (seq_chunks is not None and seq_chunks > 1) or (
-        seq_chunks is None and drop_book
-    ):
-        result = _apply_fold_chunked(
-            df, variant, price, qty, is_bid, seq, by, n, prev_price, prev_qty,
-            snap_cols, out_fields,
-        )
-    else:
-        schema = StructType(
-            out_fields + [StructField(c, LongType(), True) for c in snap_cols]
-        )
+    def fold_stream(batches):
+        cur: object = object()  # sentinel unequal to any key tuple
+        bids = asks = None
+        for pdf in batches:
+            m = len(pdf)
+            if not m:
+                continue
+            # Decode the batch once; each run of equal book keys then folds
+            # on slices of the decoded lists.
+            seqs = pdf[seq].to_numpy()
+            cols = [_as_list(pdf[c]) if c else None
+                    for c in (is_bid, price, qty, prev_price, prev_qty)]
+            kv = pdf[keys]
+            prev = kv.shift()
+            # null-safe "key changed" per row; the first row always opens a run
+            changed = (kv.ne(prev) & ~(kv.isna() & prev.isna())).any(axis=1)
+            changed = changed.to_numpy(copy=True)
+            changed[0] = True
+            starts = np.flatnonzero(changed).tolist()
+            run_keys = kv.iloc[starts].itertuples(index=False, name=None)
+            outs, masks = [], []
+            for a, b, kt in zip(starts, starts[1:] + [m], run_keys):
+                kt = tuple(None if pd.isna(v) else v for v in kt)
+                if kt != cur:
+                    cur, bids, asks = kt, None, None
+                out, mask, bids, asks = _fold_arrays(
+                    variant, n, seqs[a:b],
+                    *[c[a:b] if c is not None else None for c in cols],
+                    bids=bids, asks=asks,
+                )
+                outs.append(out)
+                masks.append(mask)
+            if len(outs) == 1:
+                out, mask = outs[0], masks[0]
+            else:
+                out = np.concatenate(outs, axis=1)
+                mask = np.concatenate(masks, axis=1)
+            yield _snapshot_frame({k: pdf[k] for k in keep}, out, mask, snap_cols)
 
-        def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(seq, kind="mergesort", ignore_index=True)
-            out, mask, _, _ = _fold_arrays(
-                variant,
-                n,
-                pdf[seq].to_numpy(),
-                _as_list(pdf[is_bid]),
-                _as_list(pdf[price]),
-                _as_list(pdf[qty]),
-                _as_list(pdf[prev_price]) if prev_price else None,
-                _as_list(pdf[prev_qty]) if prev_qty else None,
-            )
-            # one-shot construction — see fold_stream's note on insert churn
-            data = {c: pdf[c] for c in pdf.columns if c not in drop_cols}
-            for j, c in enumerate(snap_cols):
-                data[c] = pd.arrays.IntegerArray(out[j], mask[j])
-            return pd.DataFrame(data, copy=False)
-
-        result = df.groupBy(*by).applyInPandas(fold, schema=schema)
+    # One plan for every fold. The exchange puts each book in one partition
+    # (an unkeyed fold is one book, so one partition and one Python task;
+    # keyed folds exchange without a count, so AQE coalesces them), the sort
+    # lands below the Python node, and mapInPandas consumes the partition in
+    # that order: each book's events arrive once, in seq order, possibly
+    # split across Arrow batches, and a key change resets the book. Null keys
+    # hash like any value and compare null-safely above, so a null key is a
+    # book of its own, as in groupBy. Per task: one Arrow batch
+    # (spark.sql.execution.arrow.maxRecordsPerBatch, 65,536 in get_spark)
+    # plus the live book.
+    key_cols = [F.col(k) for k in keys]
+    width = (1,) if keys == [_BOOK_COL] else ()
+    result = (
+        df.repartition(*width, *key_cols)
+        .sortWithinPartitions(*key_cols, F.col(seq))
+        .mapInPandas(fold_stream, schema)
+    )
 
     if price_snap_cast is not None:
         result = result.withColumns(
             {c: F.col(c).cast(price_snap_cast) for c in price_snap_cols}
         )
     if output_struct:
-        keep = [f.name for f in out_fields]
         result = result.select(*keep, F.struct(*snap_cols).alias(output_struct))
     return result
 
@@ -797,17 +719,13 @@ def top_n_levels_from_price_updates(
     ``seq`` orders events within a book; ``by`` names the book key columns
     (e.g. ``["product_id", "reset_count"]``, ref: README.md:184-216).
 
-    Physical paths (identical results, pinned by
-    ``tests/test_order_book_chunked.py``): the UNKEYED fold defaults to the
-    bounded-memory chained-state plan (``_apply_fold_chunked`` — one Python
-    task holding one Arrow batch + the live book, the scale-safe shape);
-    KEYED folds default to ``groupBy().applyInPandas()`` (books parallelize
-    across groups). ``seq_chunks`` > 1 opts a keyed fold into the bounded plan;
-    ``seq_chunks=1`` forces the single-pass group fold (the differential
-    twin).
+    Plan: one exchange on the book keys, an in-partition (keys, seq) sort and
+    one ``mapInPandas`` that carries each book across Arrow batches, so a
+    task holds one batch plus the live book. ``seq_chunks`` is accepted for
+    API compatibility and ignored.
     """
     return _apply_fold(df, "updates", price, qty, is_bid, seq, by, n,
-                       output_struct=output_struct, seq_chunks=seq_chunks)
+                       output_struct=output_struct)
 
 
 def top_n_levels_from_price_mutations(
@@ -826,10 +744,11 @@ def top_n_levels_from_price_mutations(
 
     Parity: ref: __init__.py:101-154, ref: calculate_bbo.rs:172-215,
     ref: update.rs:113-123. Errors on delete-from-missing-level and over-delete
-    exactly like the reference (ref: book_side.rs:91-112).
+    exactly like the reference (ref: book_side.rs:91-112). Same plan as
+    ``top_n_levels_from_price_updates``; ``seq_chunks`` is ignored.
     """
     return _apply_fold(df, "mutations", price, qty, is_bid, seq, by, n,
-                       output_struct=output_struct, seq_chunks=seq_chunks)
+                       output_struct=output_struct)
 
 
 def top_n_levels_from_price_mutations_with_modify(
@@ -852,6 +771,8 @@ def top_n_levels_from_price_mutations_with_modify(
     Parity: ref: __init__.py:22-98, ref: calculate_bbo.rs:217-268, decision
     table ref: update.rs:132-162. Passing exactly one of ``prev_price`` /
     ``prev_qty`` raises ValueError before execution (ref: __init__.py:84-90).
+    Same plan as ``top_n_levels_from_price_updates``; ``seq_chunks`` is
+    ignored.
     """
     if (prev_price is None) != (prev_qty is None):
         raise ValueError(
@@ -860,7 +781,7 @@ def top_n_levels_from_price_mutations_with_modify(
         )
     if prev_price is None:
         return _apply_fold(df, "mutations", price, qty, is_bid, seq, by, n,
-                           output_struct=output_struct, seq_chunks=seq_chunks)
+                           output_struct=output_struct)
     return _apply_fold(df, "modify", price, qty, is_bid, seq, by, n,
                        prev_price=prev_price, prev_qty=prev_qty,
-                       output_struct=output_struct, seq_chunks=seq_chunks)
+                       output_struct=output_struct)

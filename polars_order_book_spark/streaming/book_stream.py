@@ -10,10 +10,11 @@ Semantics: identical to the batch operators in ``operators.order_book`` —
 both paths call the same ``_fold_arrays`` event loop, with the streaming path
 persisting the two ``_Side`` structures into the state store between
 micro-batches. Events must arrive in ``seq`` order ACROSS micro-batches for a
-given book (within a batch we sort); this mirrors the reference's own
-"always sort your data" contract and is the documented delta from a
-watermark/late-data design (which would need to buffer and reorder — see
-module notes at the bottom).
+given book (within a batch we sort), and a batch that breaks this (a seq at or
+below the last folded one, or a seq repeated) fails the query; this mirrors
+the reference's own "always sort your data" contract and is the documented
+delta from a watermark/late-data design (``reorder_horizon`` buffers and
+reorders instead).
 
 Scale notes (100 TB design): state per book is O(live price levels), a few KB;
 the state store shards by key hash across executors, so throughput scales with
@@ -40,6 +41,7 @@ from polars_order_book_spark.operators.order_book import (
     _register_self_by_value,
     _side_from_lists,
     _side_to_lists,
+    _snapshot_frame,
     snapshot_columns,
 )
 
@@ -47,19 +49,21 @@ from polars_order_book_spark.operators.order_book import (
 # module-level helpers here); see operators.order_book for rationale.
 _register_self_by_value(__name__)
 
-_STATE_SCHEMA = StructType(
-    [
-        StructField("bid_prices", ArrayType(LongType()), True),
-        StructField("bid_qtys", ArrayType(LongType()), True),
-        StructField("ask_prices", ArrayType(LongType()), True),
-        StructField("ask_qtys", ArrayType(LongType()), True),
-    ]
-)
+_SIDE_FIELDS = [
+    StructField("bid_prices", ArrayType(LongType()), True),
+    StructField("bid_qtys", ArrayType(LongType()), True),
+    StructField("ask_prices", ArrayType(LongType()), True),
+    StructField("ask_qtys", ArrayType(LongType()), True),
+]
+# Fold high-water: the last seq folded into the book.
+_DONE_FIELD = StructField("done", LongType(), True)
+
+_STATE_SCHEMA = StructType(_SIDE_FIELDS + [_DONE_FIELD])
 
 # Reorder mode adds an in-state event buffer (parallel arrays) plus the seq
-# watermark (`wm` = max seq ever seen) and fold high-water (`done`).
+# watermark (`wm` = max seq ever seen) ahead of `done`.
 _REORDER_STATE_SCHEMA = StructType(
-    _STATE_SCHEMA.fields
+    _SIDE_FIELDS
     + [
         StructField("pend_seq", ArrayType(LongType()), True),
         StructField("pend_is_bid", ArrayType(LongType()), True),
@@ -68,7 +72,7 @@ _REORDER_STATE_SCHEMA = StructType(
         StructField("pend_prev_price", ArrayType(LongType()), True),
         StructField("pend_prev_qty", ArrayType(LongType()), True),
         StructField("wm", LongType(), True),
-        StructField("done", LongType(), True),
+        _DONE_FIELD,
     ]
 )
 
@@ -101,9 +105,11 @@ def top_n_levels_stream(
 
     ``reorder_horizon``: opt-in late-data mode. By default events must arrive
     in ``seq`` order ACROSS micro-batches (the documented delta from a
-    production stream). With a horizon ``h``, each book buffers events in its
-    state and folds/emits an event only once it is safe — its seq ≤ wm − h,
-    where wm is the max seq seen for that book (a seq-domain watermark). The
+    production stream); a seq at or below the book's last folded seq, or a
+    seq repeated within a micro-batch, fails the query. With a horizon
+    ``h``, each book buffers events in its state and folds/emits an event
+    only once it is safe — its seq ≤ wm − h, where wm is the max seq seen
+    for that book (a seq-domain watermark). The
     arrival contract becomes: every event's seq must be > wm − h at arrival
     (late by at most ``h`` seq units); a later event fails the query loudly,
     like every other contract violation. Emission is therefore delayed by up
@@ -195,7 +201,6 @@ def top_n_levels_stream(
             order = np.argsort(np.asarray(pend[0]), kind="stable")
             ready = [i for i in order if pend[0][i] <= bound]
             if ready:
-                res = pd.DataFrame({k: [kv] * len(ready) for k, kv in zip(keys, key)})
                 out, mask, bids, asks = _fold_arrays(
                     variant,
                     n,
@@ -208,9 +213,9 @@ def top_n_levels_stream(
                     bids=bids,
                     asks=asks,
                 )
-                res[seq] = [pend[0][i] for i in ready]
-                for j, c in enumerate(snap_cols):
-                    res[c] = pd.arrays.IntegerArray(out[j], mask[j])
+                base = {k: [kv] * len(ready) for k, kv in zip(keys, key)}
+                base[seq] = [pend[0][i] for i in ready]
+                res = _snapshot_frame(base, out, mask, snap_cols)
                 done = max(pend[0][i] for i in ready) if done is None else max(
                     done, *(pend[0][i] for i in ready)
                 )
@@ -227,12 +232,14 @@ def top_n_levels_stream(
         pdfs: Iterable[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        from polars_order_book_spark.operators.order_book import OrderBookError
+
         if state.exists:
-            bp, bq, ap, aq = state.get
+            bp, bq, ap, aq, done = state.get
             bids = _side_from_lists(bp, bq)
             asks = _side_from_lists(ap, aq)
         else:
-            bids, asks = _Side(), _Side()
+            bids, asks, done = _Side(), _Side(), None
 
         # applyInPandasWithState delivers one group's micro-batch as MULTIPLE
         # Arrow chunks in arbitrary post-shuffle order (chunking kicks in past
@@ -244,10 +251,24 @@ def top_n_levels_stream(
         if chunks:
             pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
             pdf = pdf.sort_values(seq, kind="mergesort", ignore_index=True)
+            seqs = pdf[seq].to_numpy()
+            # In-order contract: a replayed or out-of-order batch would
+            # otherwise fold stale events into the book silently.
+            if done is not None and seqs[0] <= done:
+                raise OrderBookError(
+                    f"event seq {seqs[0]} arrived out of order: the book "
+                    f"already folded through seq {done}"
+                )
+            dup = seqs[1:] == seqs[:-1]
+            if dup.any():
+                raise OrderBookError(
+                    f"duplicate event seq {seqs[1:][dup][0]} in one "
+                    "micro-batch — seqs must be unique per book"
+                )
             out, mask, bids, asks = _fold_arrays(
                 variant,
                 n,
-                pdf[seq].to_numpy(),
+                seqs,
                 _as_list(pdf[is_bid]),
                 _as_list(pdf[price]),
                 _as_list(pdf[qty]),
@@ -256,15 +277,14 @@ def top_n_levels_stream(
                 bids=bids,
                 asks=asks,
             )
-            res = pd.DataFrame({k: pdf[k] for k in keys})
-            res[seq] = pdf[seq]
-            for j, c in enumerate(snap_cols):
-                res[c] = pd.arrays.IntegerArray(out[j], mask[j])
-            yield res
+            done = int(seqs[-1])
+            yield _snapshot_frame(
+                {**{k: pdf[k] for k in keys}, seq: pdf[seq]}, out, mask, snap_cols
+            )
 
         bp2, bq2 = _side_to_lists(bids)
         ap2, aq2 = _side_to_lists(asks)
-        state.update((bp2, bq2, ap2, aq2))
+        state.update((bp2, bq2, ap2, aq2, done))
 
     fold_fn = fold_batches if reorder_horizon is None else fold_batches_reorder
     state_schema = _STATE_SCHEMA if reorder_horizon is None else _REORDER_STATE_SCHEMA

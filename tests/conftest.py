@@ -85,7 +85,7 @@ SLOW_TESTS = {
     "test_registry.py::test_query_analyzes[ann_recall_lsh]",
     "test_registry.py::test_query_analyzes[part_snapshot_diff]",
     "test_asof.py::test_asof_differential_vs_pandas_merge_asof",
-    "test_order_book_chunked.py::test_property_chunked_equals_unchunked_mutations",
+    "test_order_book_chunked.py::test_property_fold_matches_naive_mutations",
     "test_dedup_streaming.py::test_drop_duplicates_within_watermark_dedups_and_evicts",
     "test_similarity_stream.py::test_topk_stream_replay_overwrites_instead_of_duplicating",
     "test_pipeline_ops.py::test_domain_mix_proportions_property",
@@ -99,7 +99,7 @@ SLOW_TESTS = {
     "test_state_store.py::test_interval_join_rocksdb_matches_default",
     "test_registry.py::test_query_analyzes[ann_recall_pq]",
     "test_order_book_streaming.py::test_stream_reorder_horizon_zero_equals_in_order_contract",
-    "test_order_book_chunked.py::test_property_chunked_equals_unchunked_modify",
+    "test_order_book_chunked.py::test_property_fold_matches_naive_modify",
     "test_registry.py::test_query_analyzes[part_triangle_counts]",
     "test_order_book_streaming.py::test_stream_reorder_duplicate_pending_seq_fails_loudly",
     "test_order_book_relational.py::test_relational_narrow_seq_bounds_clamp_exact",
@@ -278,9 +278,35 @@ SLOW_TESTS = {
 def pytest_collection_modifyitems(config, items):
     import pytest as _pytest
 
+    modules = {}
     for item in items:
         nodeid = item.nodeid.replace("\\", "/")
         if nodeid.startswith("tests/"):
             nodeid = nodeid[len("tests/"):]
+        modules.setdefault(nodeid.split("::")[0], getattr(item, "module", None))
         if nodeid in SLOW_TESTS:
             item.add_marker(_pytest.mark.slow)
+
+    # A renamed or deleted test would silently drop its entry and move the
+    # slow test's replacement into the default tier: fail collection instead
+    # when an entry's file is gone, or its function / class method is gone
+    # from a collected module.
+    here = os.path.dirname(os.path.abspath(__file__))
+    stale = []
+    for entry in SLOW_TESTS:
+        path, *names = entry.split("[")[0].split("::")
+        if not os.path.exists(os.path.join(here, path)):
+            stale.append(entry)
+            continue
+        obj = modules.get(path)
+        if obj is None:
+            continue
+        for name in names:
+            obj = getattr(obj, name, None)
+        if obj is None:
+            stale.append(entry)
+    if stale:
+        raise _pytest.UsageError(
+            "tests/conftest.py SLOW_TESTS names tests that no longer exist: "
+            + ", ".join(sorted(stale))
+        )

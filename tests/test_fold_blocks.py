@@ -2,9 +2,10 @@
 each resuming from the live (bids, asks) state with its column 0 as the
 forward-fill baseline. At the real budget the first boundary sits at 4,096
 rows (n=20), past every small test stream, so these tests shrink the budget
-to 3-row blocks and require the blocked fold to equal the single-block fold
-and a fold resumed from (bids, asks) at a random cut. Spark-free: the kernel
-is called directly.
+to 3-row blocks and require the blocked fold to equal the single-block fold,
+a fold resumed from (bids, asks) at a random cut, and the naive reference
+(``naive_book``), which recomputes the top-N on every row. Spark-free: the
+kernel is called directly.
 """
 
 import random
@@ -12,6 +13,7 @@ import random
 import numpy as np
 import pytest
 
+from naive_book import top_n
 from polars_order_book_spark.operators import order_book
 from polars_order_book_spark.operators.order_book import _fold_arrays
 
@@ -72,6 +74,14 @@ def _fold(variant, n, rows, bids=None, asks=None):
     )
 
 
+def _naive(variant, n, rows):
+    """The naive reference's snapshots as the kernel's (values, mask)."""
+    snaps = top_n(rows, variant, n)
+    cols = np.array([snaps[r[0]] for r in rows], dtype=object).T
+    mask = np.equal(cols, None)
+    return np.where(mask, 0, cols).astype(np.int64), mask
+
+
 def _assert_same(got, want):
     (out_g, mask_g), (out_w, mask_w) = got, want
     np.testing.assert_array_equal(mask_g, mask_w)
@@ -84,6 +94,7 @@ def test_blocked_fold_equals_single_block_and_resumed(monkeypatch, variant, n):
     seed = 7919 * n + len(variant)
     rows = _stream(variant, seed)
     out, mask, _, _ = _fold(variant, n, rows)  # one block at the real budget
+    _assert_same((out, mask), _naive(variant, n, rows))
 
     monkeypatch.setattr(order_book, "_FOLD_BLOCK_BYTES", 32 * n * 3)
     b_out, b_mask, _, _ = _fold(variant, n, rows)

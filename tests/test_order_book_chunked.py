@@ -1,12 +1,18 @@
-"""Chunked batch fold (``seq_chunks=``) must be byte-identical to the
-unchunked fold — it only changes WHERE state lives (chained across seq-range
-chunks, like the streaming operator chains it across micro-batches), never
-the semantics. Covers the group-size-ceiling fix from SCALE.md."""
+"""The batch fold against the Spark-free naive reference (``naive_book``),
+across every boundary the streamed plan has: Arrow batches (a book's events
+split over many batches, a key change inside a batch), keyed runs, the null
+book key, Column inputs and the error contract. The fold carries each book
+across Arrow batches in one ``mapInPandas`` pass, so a bug in that hand-off
+shows up here as a snapshot that differs from recomputing the top-N from
+scratch on every row."""
+
+import re
+from contextlib import contextmanager
 
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import given, settings, strategies as st
 
-from pyspark.sql.types import BooleanType, LongType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from polars_order_book_spark import (
     OrderBookError,
@@ -16,6 +22,7 @@ from polars_order_book_spark import (
     top_n_levels_from_price_updates,
 )
 
+from naive_book import top_n, top_n_keyed
 from test_property_differential import (
     SCHEMA3,
     SCHEMA5,
@@ -28,34 +35,36 @@ from test_property_differential import (
 KEYED_SCHEMA = StructType([StructField("book", LongType())] + SCHEMA3.fields)
 
 
+@contextmanager
+def _arrow_batch_rows(spark, rows: int):
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(rows))
+    try:
+        yield
+    finally:
+        spark.conf.set(conf, old)
+
+
 @settings(**SETTINGS)
-@given(rows=mutation_stream(), k=st.sampled_from([2, 5]))
-def test_property_chunked_equals_unchunked_mutations(spark, rows, k):
+@given(rows=mutation_stream(), n=st.sampled_from([1, 2]))
+def test_property_fold_matches_naive_mutations(spark, rows, n):
     df = spark.createDataFrame(rows, SCHEMA3)
-    cols = snapshot_columns(2)
-    base = by_seq(top_n_levels_from_price_mutations(df, n=2), cols)
-    chunked = by_seq(top_n_levels_from_price_mutations(df, n=2, seq_chunks=k), cols)
-    assert chunked == base
+    got = by_seq(top_n_levels_from_price_mutations(df, n=n), snapshot_columns(n))
+    assert got == top_n(rows, "mutations", n)
 
 
 @settings(**SETTINGS)
 @given(rows=modify_stream())
-def test_property_chunked_equals_unchunked_modify(spark, rows):
+def test_property_fold_matches_naive_modify(spark, rows):
     df = spark.createDataFrame(rows, SCHEMA5)
-    cols = snapshot_columns(2)
-    base = by_seq(
+    got = by_seq(
         top_n_levels_from_price_mutations_with_modify(
             df, prev_price="prev_price", prev_qty="prev_qty", n=2
         ),
-        cols,
+        snapshot_columns(2),
     )
-    chunked = by_seq(
-        top_n_levels_from_price_mutations_with_modify(
-            df, prev_price="prev_price", prev_qty="prev_qty", n=2, seq_chunks=3
-        ),
-        cols,
-    )
-    assert chunked == base
+    assert got == top_n(rows, "modify", 2)
 
 
 def _keyed_rows():
@@ -77,129 +86,139 @@ def _keyed_rows():
 
 
 def _collect_keyed(df, n):
-    cols = ["book", "seq"] + snapshot_columns(n)
+    cols = snapshot_columns(n)
     return {(r["book"], r["seq"]): tuple(r[c] for c in cols) for r in df.collect()}
 
 
 def test_chunked_keyed_and_tiny_chunks(spark):
-    df = spark.createDataFrame(_keyed_rows(), KEYED_SCHEMA)
-    base = _collect_keyed(top_n_levels_from_price_mutations(df, by=["book"], n=2), 2)
-    # more chunks than any book's span: every chunk holds <= a couple events
-    for k in (3, 12):
-        chunked = _collect_keyed(
-            top_n_levels_from_price_mutations(df, by=["book"], n=2, seq_chunks=k), 2
-        )
-        assert chunked == base
+    """Two books with the same seqs fold independently."""
+    rows = _keyed_rows()
+    df = spark.createDataFrame(rows, KEYED_SCHEMA)
+    got = _collect_keyed(top_n_levels_from_price_mutations(df, by=["book"], n=2), 2)
+    assert got == top_n_keyed(rows, "mutations", 2)
 
 
 def test_chunked_updates_unkeyed(spark):
     rows = [(s, s % 2 == 0, 1 + s % 5, s % 4) for s in range(60)]
     df = spark.createDataFrame(rows, SCHEMA3)
-    cols = snapshot_columns(3)
-    base = by_seq(top_n_levels_from_price_updates(df, n=3), cols)
-    chunked = by_seq(top_n_levels_from_price_updates(df, n=3, seq_chunks=4), cols)
-    assert chunked == base
+    got = by_seq(top_n_levels_from_price_updates(df, n=3), snapshot_columns(3))
+    assert got == top_n(rows, "updates", 3)
 
 
 def test_chunked_error_contract_crosses_chunks(spark):
-    """An over-delete whose level was consumed in an EARLIER chunk must still
-    raise: state chains across chunks, so chunk 2 sees chunk 1's book."""
+    """An over-delete whose level was consumed in an EARLIER Arrow batch must
+    still raise: the book carries across batches, so batch 2 sees batch 1's
+    book. The naive reference raises the same error."""
     rows = [
-        (0, True, 5, 3),   # add 3@5            (chunk 0)
-        (1, True, 5, -3),  # delete all         (chunk 0)
-        (2, True, 7, 1),   # unrelated add      (chunk 1)
-        (3, True, 5, -1),  # over-delete: level 5 is gone (chunk 1)
+        (0, True, 5, 3),   # add 3@5            (batch 0)
+        (1, True, 5, -3),  # delete all         (batch 0)
+        (2, True, 7, 1),   # unrelated add      (batch 1)
+        (3, True, 5, -1),  # over-delete: level 5 is gone (batch 1)
     ]
-    df = spark.createDataFrame(rows, SCHEMA3)
-    out = top_n_levels_from_price_mutations(df, n=1, seq_chunks=2)
-    with pytest.raises(Exception) as ei:
+    with pytest.raises(OrderBookError, match="Level not found"):
+        top_n(rows, "mutations", 1)
+    out = top_n_levels_from_price_mutations(spark.createDataFrame(rows, SCHEMA3), n=1)
+    with _arrow_batch_rows(spark, 2), pytest.raises(Exception) as ei:
         out.collect()
     assert "Level not found" in str(ei.value)
 
 
+def _plan(df):
+    """Executed plan with expression and plan ids blanked, so the plans of
+    separately built DataFrames compare equal when their shape is."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.sub(r"(#|plan_id=)\d+L?", r"\1", plan)
+
+
 def test_chunked_seq_chunks_one_is_plain_fold(spark):
-    """Path-selection contract: seq_chunks=1 forces the single-pass group
-    fold (FlatMapGroupsInPandas — the differential twin), while the UNKEYED
-    default (seq_chunks=None) takes the bounded-memory MapInPandas plan
-    (the groupBy single-group fold measured superlinear at 10M events,
-    BENCH_LOCAL_sf10.json), exchanged into ONE partition: one book is one
-    Python task, not a shuffle-width of mostly empty ones. Results are
-    byte-identical either way."""
+    """An unkeyed fold is one book: one exchange into ONE partition, one sort
+    and one MapInPandas. ``seq_chunks`` is accepted and ignored: seq_chunks=1
+    and seq_chunks=4 plan exactly like the default and give the same
+    snapshots."""
     rows = [(s, True, 1 + s % 3, 1) for s in range(10)]
     df = spark.createDataFrame(rows, SCHEMA3)
-    cols = snapshot_columns(1)
-    forced = top_n_levels_from_price_mutations(df, n=1, seq_chunks=1)
     default = top_n_levels_from_price_mutations(df, n=1)
-    assert by_seq(forced, cols) == by_seq(default, cols)
-    forced_plan = forced._jdf.queryExecution().executedPlan().toString()
-    default_plan = default._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in forced_plan
-    assert "MapInPandas" in default_plan
-    assert "FlatMapGroupsInPandas" not in default_plan
-    assert "Exchange SinglePartition" in default_plan, default_plan
+    plan = _plan(default)
+    assert "Exchange SinglePartition" in plan, plan
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("Sort [") == 1, plan
+    assert "MapInPandas" in plan and "FlatMapGroupsInPandas" not in plan, plan
+    cols = snapshot_columns(1)
+    for k in (1, 4):
+        forced = top_n_levels_from_price_mutations(df, n=1, seq_chunks=k)
+        assert _plan(forced) == plan
+        assert by_seq(forced, cols) == by_seq(default, cols)
 
 
 def test_keyed_default_stays_group_fold(spark):
-    """KEYED folds keep groupBy().applyInPandas() by default — books
-    parallelize across groups; the bounded path stays opt-in there."""
-    rows = [(s, s % 2, True, 1 + s % 3, 1) for s in range(10)]
-    df = spark.createDataFrame(rows, "seq long, book long, is_bid boolean, price long, qty long")
-    out = top_n_levels_from_price_mutations(df, by=["book"], n=1)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan
+    """A keyed fold still folds each book as its own group, in one pass:
+    one exchange on the book keys without a count (REPARTITION_BY_COL,
+    which AQE coalesces), one sort and one MapInPandas, not the
+    FlatMapGroupsInPandas plan. ``seq_chunks`` does not change the plan."""
+    keyed = spark.createDataFrame(
+        [(s % 2, s, True, 1 + s % 3, 1) for s in range(10)], KEYED_SCHEMA
+    )
+    plan = _plan(top_n_levels_from_price_mutations(keyed, by=["book"], n=1))
+    assert "MapInPandas" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1, plan
+    assert "Exchange hashpartitioning(book#" in exchanges[0], plan
+    assert "REPARTITION_BY_COL" in exchanges[0], plan
+    assert plan.count("Sort [") == 1, plan
+    for k in (1, 4):
+        assert _plan(
+            top_n_levels_from_price_mutations(keyed, by=["book"], n=1, seq_chunks=k)
+        ) == plan
 
 
 def test_chunked_accepts_column_expressions(spark):
-    """seq_chunks composes with IntoExpr-style Column inputs: the temp expr
-    columns must thread through the chunk rounds and not leak into output."""
+    """IntoExpr-style Column inputs thread through the fold as temp columns
+    and do not leak into the output."""
     from pyspark.sql import functions as F
 
     rows = [(s, "B" if s % 2 == 0 else "A", 1.0 + (s % 4) * 0.01, 2) for s in range(30)]
     df = spark.createDataFrame(rows, ["seq", "side", "price_f", "qty"])
-    kwargs = dict(
+    out = top_n_levels_from_price_mutations(
+        df,
         price=F.round(F.col("price_f") * 100).cast("long"),
         qty=F.col("qty"),
         is_bid=F.col("side") == "B",
         n=2,
     )
-    base = top_n_levels_from_price_mutations(df, **kwargs)
-    chunked = top_n_levels_from_price_mutations(df, seq_chunks=3, **kwargs)
-    assert not [c for c in chunked.columns if c.startswith("__")]
-    cols = snapshot_columns(2)
-    assert by_seq(chunked, cols) == by_seq(base, cols)
+    assert not [c for c in out.columns if c.startswith("__")]
+    want = top_n(
+        [(s, side == "B", int(round(pf * 100)), q) for s, side, pf, q in rows],
+        "mutations", 2,
+    )
+    assert by_seq(out, snapshot_columns(2)) == want
 
 
 def test_chunked_state_carries_across_arrow_batches(spark):
     """The streamed fold's correctness hinges on carrying book state across
     Arrow batches within a partition. Force tiny batches
     (maxRecordsPerBatch=7) so every book spans many batches and a book
-    boundary can land mid-batch, then pin byte-equality with the unchunked
-    fold."""
-    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, "7")
-    try:
-        df = spark.createDataFrame(_keyed_rows(), KEYED_SCHEMA)
-        base = _collect_keyed(
+    boundary lands mid-batch."""
+    rows = _keyed_rows()
+    df = spark.createDataFrame(rows, KEYED_SCHEMA)
+    with _arrow_batch_rows(spark, 7):
+        got = _collect_keyed(
             top_n_levels_from_price_mutations(df, by=["book"], n=2), 2
         )
-        chunked = _collect_keyed(
-            top_n_levels_from_price_mutations(df, by=["book"], n=2, seq_chunks=2), 2
-        )
-        assert chunked == base
-    finally:
-        spark.conf.set(conf, old)
+    assert got == top_n_keyed(rows, "mutations", 2)
 
 
 def test_chunked_null_book_key_matches_unchunked(spark):
-    """Null book keys form a group in groupBy; the chunked path's bounds join
-    must match them null-safely instead of dropping the null-key book."""
+    """A null book key is a book of its own (groupBy's null-group semantics):
+    keys compare null-safely, also when the null-key book spans Arrow
+    batches (maxRecordsPerBatch=7), instead of dropping the null-key book or
+    restarting it at every batch."""
     rows = [(None, s, True, 1 + s % 3, 1) for s in range(10)]
     rows += [(1, s, True, 1 + s % 3, 1) for s in range(10)]
     df = spark.createDataFrame(rows, KEYED_SCHEMA)
-    base = _collect_keyed(top_n_levels_from_price_mutations(df, by=["book"], n=1), 1)
-    chunked = _collect_keyed(
-        top_n_levels_from_price_mutations(df, by=["book"], n=1, seq_chunks=3), 1
-    )
-    assert chunked == base
-    assert any(k[0] is None for k in chunked)  # the null book is present
+    with _arrow_batch_rows(spark, 7):
+        got = _collect_keyed(
+            top_n_levels_from_price_mutations(df, by=["book"], n=1), 1
+        )
+    assert got == top_n_keyed(rows, "mutations", 1)
+    assert any(k[0] is None for k in got)  # the null book is present

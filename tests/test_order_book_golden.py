@@ -388,8 +388,12 @@ def test_float_ticks_rejected_loudly(spark):
 
 
 def test_int32_ticks_chunked_matches_unchunked(spark):
-    """The seq-chunked path shares the tick-cast plumbing."""
+    """The fold's tick-cast plumbing (int32 in, long fold, int32 prices out)
+    against the Spark-free naive reference."""
     from pyspark.sql.types import IntegerType
+
+    from naive_book import top_n
+    from polars_order_book_spark import snapshot_columns
 
     schema = StructType([
         StructField("seq", LongType()),
@@ -399,8 +403,7 @@ def test_int32_ticks_chunked_matches_unchunked(spark):
     ])
     rows = [(i, i % 2 == 0, 100 + i % 5, 1 + i % 3) for i in range(1, 41)]
     df = spark.createDataFrame(rows, schema)
-    base = sorted(map(tuple, top_n_levels_from_price_mutations(df, n=2).collect()))
-    chunked = sorted(
-        map(tuple, top_n_levels_from_price_mutations(df, n=2, seq_chunks=4).collect())
-    )
-    assert chunked == base
+    cols = snapshot_columns(2)
+    got = {r["seq"]: tuple(r[c] for c in cols)
+           for r in top_n_levels_from_price_mutations(df, n=2).collect()}
+    assert got == top_n(rows, "mutations", 2)

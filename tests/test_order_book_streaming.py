@@ -363,3 +363,25 @@ def test_stream_reorder_duplicate_pending_seq_fails_loudly(spark):
 
     with _pytest.raises(StreamingQueryException, match="duplicate event seq 2"):
         _run_stream_batches(spark, batches, "reorder_dup_sink", horizon=100)
+
+
+def test_stream_in_order_replayed_seq_fails_loudly(spark):
+    """Default (in-order) mode: a micro-batch that repeats a seq the book
+    already folded must fail the query instead of folding it again."""
+    from pyspark.errors import StreamingQueryException
+
+    batches = [
+        [("A", 1, True, 10, 3), ("A", 2, True, 10, 2)],
+        [("A", 2, True, 10, 2), ("A", 3, True, 10, 1)],  # seq 2 replayed
+    ]
+    with pytest.raises(StreamingQueryException,
+                       match="event seq 2 arrived out of order"):
+        _run_stream_batches(spark, batches, "in_order_replay_sink", horizon=None)
+
+
+def test_stream_in_order_duplicate_seq_in_batch_fails_loudly(spark):
+    from pyspark.errors import StreamingQueryException
+
+    batches = [[("A", 1, True, 10, 3), ("A", 1, True, 10, 3)]]
+    with pytest.raises(StreamingQueryException, match="duplicate event seq 1"):
+        _run_stream_batches(spark, batches, "in_order_dup_sink", horizon=None)

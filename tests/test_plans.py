@@ -83,7 +83,7 @@ def test_relational_book_shuffles_on_seq_bucket(spark):
 
 @needs_testdata
 def test_streamed_fold_is_single_pass(spark):
-    """The bounded-memory fold (seq_chunks>1) must stay the r6 single-pass
+    """The batch fold (``seq_chunks`` is ignored) must stay the single-pass
     shape: ONE exchange on the book keys + in-partition sort + ONE
     MapInPandas — no chained cogrouped rounds (FlatMapCoGroupsInPandas), no
     per-round re-scan (multiple parquet scans), no bounds broadcast join."""

@@ -222,8 +222,8 @@ def main() -> int:
     with open(args.out, "w") as f:
         f.write("# Physical plans (formatted) — headline queries\n\n")
         f.write(f"Generated from `{args.sf}`. Pandas-UDF fold queries are "
-                "omitted: their plan is a single FlatMapGroupsInPandas over "
-                "one exchange by the book keys.\n")
+                "omitted: their plan is one exchange by the book keys, a sort "
+                "by (keys, seq) and a single MapInPandas.\n")
         for name in HEADLINE:
             # Per-name isolation: one query failing at plan-build must not
             # silently truncate every later section (same artifact-integrity

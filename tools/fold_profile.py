@@ -120,7 +120,7 @@ BATCH = 65536  # spark.sql.execution.arrow.maxRecordsPerBatch (session.py)
 
 def run_one(spec: dict) -> tuple[float, int]:
     """Chained-state fold in Arrow-batch-sized chunks — the exact shape
-    ``_apply_fold_chunked.fold_stream`` drives per task, minus the
+    ``_apply_fold``'s ``fold_stream`` drives per task, minus the
     pandas/Arrow framing, so the number is the kernel's own throughput."""
     m = len(spec["seq"])
 
