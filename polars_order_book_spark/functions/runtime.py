@@ -104,6 +104,14 @@ def stream_shuffle_width(
                 total += os.path.getsize(f)
             except OSError:
                 pass
+    if not total:
+        import warnings
+
+        warnings.warn(
+            f"stream_shuffle_width: inputs {input_paths!r} add up to 0 bytes "
+            f"(missing, unreadable or empty); sizing to the floor {floor}",
+            stacklevel=2,
+        )
     ceiling = shuffle_partitions(spark)
     want = max(floor, -(-total // bytes_per_partition))
     return min(ceiling, want)

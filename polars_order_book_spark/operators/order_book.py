@@ -219,7 +219,8 @@ class _SideBest:
 # (4n, block+1) int64 emit/forward-fill working set stays ~2.5 MB
 # (L2/L3-resident) at ANY depth — one 65536-row Arrow batch at the n=20
 # ceiling made it 42 MB and the deep fold measured best-of 103k rows/s
-# purely on cache misses vs 232k blocked (r11, tools/fold_profile.py).
+# purely on cache misses vs 232k blocked (r11; perfbench's Spark-free
+# `kernel.rows_per_s` replay now tracks kernel throughput).
 # Sized in bytes, not columns: a fixed column count would add per-block
 # overhead at shallow n where the array was already cache-resident
 # (measured 23% off the n=1 fast path at 4096 columns).
@@ -250,6 +251,7 @@ def _fold_arrays(
     top-N-changing rows and forward-filled vectorized afterwards (the numpy
     analog of the reference's incremental top-N maintenance,
     ref: top_n_levels.rs:59-63, which equally skips below-worst updates)."""
+    _check_n(n)
     m = len(price)
     fast = fast_n1 and n == 1
     if fast:
@@ -283,12 +285,12 @@ def _fold_arrays(
     # always equals the last emitted column, so each block resumes from
     # (bids, asks) state like any Arrow-batch/micro-batch hand-off, and its
     # column 0 re-baselines the forward fill.
-    block = _FOLD_BLOCK_BYTES // (32 * n)
+    block = max(1, _FOLD_BLOCK_BYTES // (32 * n))
     # Scratch buffers are allocated ONCE per call and re-zeroed per block
-    # (a ~2.5 MB memset): this sandbox's host shows multi-second page-fault
-    # stalls on fresh large mmaps (tools/fold_profile.py measured a 3.1 s
-    # outlier on a bare 42 MB alloc+touch), so fewer fresh allocations
-    # both bounds that exposure and skips the per-block mmap/munmap churn.
+    # (a ~2.5 MB memset): some hosts stall for seconds on page faults in
+    # fresh large mmaps (a 3.1 s outlier was measured on a bare 42 MB
+    # alloc+touch), so fewer fresh allocations both bound that exposure
+    # and skip the per-block mmap/munmap churn.
     width = (block if block < stop else stop) + 1
     scratch = np.zeros((4 * n, width), dtype=np.int64, order="F") if stop else None
     nbuf_b = np.empty(width, dtype=np.int64) if stop else None

@@ -7,6 +7,8 @@ batches: it shares nothing with ``_fold_arrays`` but the event semantics
 leading words.
 """
 
+import random
+
 from polars_order_book_spark import OrderBookError
 
 
@@ -90,3 +92,51 @@ def top_n_keyed(rows, variant: str, n: int) -> dict:
         for book, book_rows in books.items()
         for seq, snap in top_n(book_rows, variant, n).items()
     }
+
+
+def valid_stream(variant: str, seed: int, m: int = 240) -> list[tuple]:
+    """Seeded valid stream over prices 1..40 per side (deep enough that
+    n=20 books fill and overflow). ``updates`` rows are (seq, is_bid,
+    price, qty), qty 0 deleting; ``mutations`` rows are (seq, is_bid,
+    price, signed qty); ``modify`` rows add prev_price/prev_qty and cover
+    plain adds, full moves, modify-to-zero and qty-only shrinks."""
+    rng = random.Random(seed)
+    book: dict = {}
+    rows = []
+    for s in range(m):
+        b = rng.random() < 0.5
+        live = sorted(p for (bb, p), q in book.items() if bb == b and q > 0)
+        op = rng.randrange(4) if live and rng.random() < 0.4 else 0
+        if variant == "updates":
+            rows.append((s, b, rng.randint(1, 40), rng.randint(0, 6)))
+        elif variant == "mutations":
+            if op:
+                p = rng.choice(live)
+                q = -rng.randint(1, book[(b, p)])
+            else:
+                p, q = rng.randint(1, 40), rng.randint(0, 6)  # 0 = no-op
+            book[(b, p)] = book.get((b, p), 0) + q
+            rows.append((s, b, p, q))
+        elif op == 0:  # plain add
+            p, q = rng.randint(1, 40), rng.randint(1, 6)
+            book[(b, p)] = book.get((b, p), 0) + q
+            rows.append((s, b, p, q, None, None))
+        elif op == 1:  # full modify: move dq from pp to p
+            pp = rng.choice(live)
+            dq = rng.randint(1, book[(b, pp)])
+            p = rng.randint(1, 40)
+            book[(b, pp)] -= dq
+            book[(b, p)] = book.get((b, p), 0) + dq
+            rows.append((s, b, p, dq, pp, dq))
+        elif op == 2:  # modify-to-zero: delete pq at pp
+            pp = rng.choice(live)
+            pq = rng.randint(1, book[(b, pp)])
+            book[(b, pp)] -= pq
+            rows.append((s, b, pp, 0, pp, pq))
+        else:  # qty-only shrink: level pq -> q at p
+            p = rng.choice(live)
+            pq = book[(b, p)]
+            q = rng.randint(1, pq)
+            book[(b, p)] = q
+            rows.append((s, b, p, q, None, pq))
+    return rows

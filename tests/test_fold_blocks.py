@@ -13,54 +13,9 @@ import random
 import numpy as np
 import pytest
 
-from naive_book import top_n
+from naive_book import top_n, valid_stream as _stream
 from polars_order_book_spark.operators import order_book
 from polars_order_book_spark.operators.order_book import _fold_arrays
-
-
-def _stream(variant: str, seed: int, m: int = 240) -> list[tuple]:
-    """Seeded valid stream over prices 1..40 per side (deep enough that
-    n=20 books fill and overflow). ``mutations`` rows are (seq, is_bid,
-    price, signed qty); ``modify`` rows add prev_price/prev_qty and cover
-    plain adds, full moves, modify-to-zero and qty-only shrinks."""
-    rng = random.Random(seed)
-    book: dict = {}
-    rows = []
-    for s in range(m):
-        b = rng.random() < 0.5
-        live = sorted(p for (bb, p), q in book.items() if bb == b and q > 0)
-        op = rng.randrange(4) if live and rng.random() < 0.4 else 0
-        if variant == "mutations":
-            if op:
-                p = rng.choice(live)
-                q = -rng.randint(1, book[(b, p)])
-            else:
-                p, q = rng.randint(1, 40), rng.randint(0, 6)  # 0 = no-op
-            book[(b, p)] = book.get((b, p), 0) + q
-            rows.append((s, b, p, q))
-        elif op == 0:  # plain add
-            p, q = rng.randint(1, 40), rng.randint(1, 6)
-            book[(b, p)] = book.get((b, p), 0) + q
-            rows.append((s, b, p, q, None, None))
-        elif op == 1:  # full modify: move dq from pp to p
-            pp = rng.choice(live)
-            dq = rng.randint(1, book[(b, pp)])
-            p = rng.randint(1, 40)
-            book[(b, pp)] -= dq
-            book[(b, p)] = book.get((b, p), 0) + dq
-            rows.append((s, b, p, dq, pp, dq))
-        elif op == 2:  # modify-to-zero: delete pq at pp
-            pp = rng.choice(live)
-            pq = rng.randint(1, book[(b, pp)])
-            book[(b, pp)] -= pq
-            rows.append((s, b, pp, 0, pp, pq))
-        else:  # qty-only shrink: level pq -> q at p
-            p = rng.choice(live)
-            pq = book[(b, p)]
-            q = rng.randint(1, pq)
-            book[(b, p)] = q
-            rows.append((s, b, p, q, None, pq))
-    return rows
 
 
 def _fold(variant, n, rows, bids=None, asks=None):
@@ -108,3 +63,33 @@ def test_blocked_fold_equals_single_block_and_resumed(monkeypatch, variant, n):
          np.concatenate([a_mask, r_mask], axis=1)),
         (out, mask),
     )
+
+
+@pytest.mark.parametrize("n", [0, 21])
+def test_kernel_rejects_unsupported_depth(n):
+    rows = _stream("mutations", 5, m=10)
+    with pytest.raises(order_book.OrderBookError, match="Unsupported number of levels"):
+        _fold("mutations", n, rows)
+
+
+@pytest.mark.parametrize("variant", ["mutations", "modify"])
+@pytest.mark.parametrize("n", [1, 3])
+def test_budget_below_one_column_folds_one_row_per_block(monkeypatch, variant, n):
+    """A budget under 32·n bytes still folds, one row per block."""
+    rows = _stream(variant, 31 * n, m=60)
+    monkeypatch.setattr(order_book, "_FOLD_BLOCK_BYTES", 1)
+    out, mask, _, _ = _fold(variant, n, rows)
+    _assert_same((out, mask), _naive(variant, n, rows))
+
+
+@pytest.mark.parametrize("at", [2, 3])
+def test_null_price_at_block_edge_raises_with_its_seq(monkeypatch, at):
+    """3-row blocks: a null price as the last row of the first block (2)
+    or the first row of the second (3) raises naming that row's seq."""
+    rows = [(100 + s, b, p, q) for s, b, p, q in _stream("mutations", 11, m=9)]
+    rows[at] = (rows[at][0], rows[at][1], None, rows[at][3])
+    monkeypatch.setattr(order_book, "_FOLD_BLOCK_BYTES", 32 * 2 * 3)
+    with pytest.raises(order_book.OrderBookError, match=f"at seq={100 + at} "):
+        _fold("mutations", 2, rows)
+    with pytest.raises(order_book.OrderBookError, match=f"at seq={100 + at}$"):
+        top_n(rows, "mutations", 2)

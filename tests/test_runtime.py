@@ -3,6 +3,8 @@ runtimes report "auto" — stock Spark won't even let conf.set store it, which
 is exactly why operators can't bare-int() the value), and the
 DataFrame/default fallbacks."""
 
+import pytest
+
 from polars_order_book_spark.functions.runtime import shuffle_partitions
 
 
@@ -50,8 +52,9 @@ def test_stream_shuffle_width_sizes_from_input(spark, tmp_path):
         (nested / "part-0.parquet").write_bytes(b"x")
         os.truncate(nested / "part-0.parquet", 80 * 1024 * 1024 * 1024)
         assert stream_shuffle_width(spark, str(tmp_path / "table")) == 64
-        # missing path degrades to the floor instead of raising
-        assert stream_shuffle_width(spark, str(tmp_path / "nope")) == 8
+        # missing path degrades to the floor instead of raising, and warns
+        with pytest.warns(UserWarning, match="add up to 0 bytes"):
+            assert stream_shuffle_width(spark, str(tmp_path / "nope")) == 8
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
