@@ -13,7 +13,7 @@ import random
 import numpy as np
 import pytest
 
-from naive_book import top_n, valid_stream as _stream
+from naive_book import top_n, valid_stream
 from polars_order_book_spark.operators import order_book
 from polars_order_book_spark.operators.order_book import _fold_arrays
 
@@ -47,7 +47,7 @@ def _assert_same(got, want):
 @pytest.mark.parametrize("n", [1, 3, 20])
 def test_blocked_fold_equals_single_block_and_resumed(monkeypatch, variant, n):
     seed = 7919 * n + len(variant)
-    rows = _stream(variant, seed)
+    rows = valid_stream(variant, seed)
     out, mask, _, _ = _fold(variant, n, rows)  # one block at the real budget
     _assert_same((out, mask), _naive(variant, n, rows))
 
@@ -67,7 +67,7 @@ def test_blocked_fold_equals_single_block_and_resumed(monkeypatch, variant, n):
 
 @pytest.mark.parametrize("n", [0, 21])
 def test_kernel_rejects_unsupported_depth(n):
-    rows = _stream("mutations", 5, m=10)
+    rows = valid_stream("mutations", 5, m=10)
     with pytest.raises(order_book.OrderBookError, match="Unsupported number of levels"):
         _fold("mutations", n, rows)
 
@@ -76,7 +76,7 @@ def test_kernel_rejects_unsupported_depth(n):
 @pytest.mark.parametrize("n", [1, 3])
 def test_budget_below_one_column_folds_one_row_per_block(monkeypatch, variant, n):
     """A budget under 32·n bytes still folds, one row per block."""
-    rows = _stream(variant, 31 * n, m=60)
+    rows = valid_stream(variant, 31 * n, m=60)
     monkeypatch.setattr(order_book, "_FOLD_BLOCK_BYTES", 1)
     out, mask, _, _ = _fold(variant, n, rows)
     _assert_same((out, mask), _naive(variant, n, rows))
@@ -86,7 +86,7 @@ def test_budget_below_one_column_folds_one_row_per_block(monkeypatch, variant, n
 def test_null_price_at_block_edge_raises_with_its_seq(monkeypatch, at):
     """3-row blocks: a null price as the last row of the first block (2)
     or the first row of the second (3) raises naming that row's seq."""
-    rows = [(100 + s, b, p, q) for s, b, p, q in _stream("mutations", 11, m=9)]
+    rows = [(100 + s, b, p, q) for s, b, p, q in valid_stream("mutations", 11, m=9)]
     rows[at] = (rows[at][0], rows[at][1], None, rows[at][3])
     monkeypatch.setattr(order_book, "_FOLD_BLOCK_BYTES", 32 * 2 * 3)
     with pytest.raises(order_book.OrderBookError, match=f"at seq={100 + at} "):
