@@ -111,20 +111,6 @@ def _ob_mutations(n):
     return run
 
 
-def _ob_chunked_mutations_deep(n, seq_chunks):
-    """Deep-book fold called with ``seq_chunks`` (r9; the argument is now
-    accepted and ignored, so this plans exactly like
-    ``_ob_mutations_deep``): the state carried across Arrow batches is the
-    FULL 40-price-per-side book plus the 4·n change-tracked snapshot — the
-    widest carry the fold ships between batches; shares the deep mutations
-    oracle."""
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        stream = bs.deep_mutations_stream(load_table(spark, sf_dir, "events"))
-        out = top_n_levels_from_price_mutations(stream, n=n, seq_chunks=seq_chunks)
-        return out.select("seq", *snapshot_columns(n))
-    return run
-
-
 def _ob_mutations_deep(n):
     """Deep-book add/delete fold: paired add/delete stream over 40 prices
     per side, so the signed-delta emit + nth-best backfill paths
@@ -158,19 +144,6 @@ def _ob_modify(n):
         out = top_n_levels_from_price_mutations_with_modify(
             stream, prev_price="prev_price", prev_qty="prev_qty", n=n
         )
-        return out.select("seq", *snapshot_columns(n))
-    return run
-
-
-def _ob_chunked_mutations(n, seq_chunks):
-    """`_ob_mutations` called with ``seq_chunks`` (the argument is now
-    accepted and ignored, so both plan the same: one exchange + sort +
-    mapInPandas, the book state streaming across Arrow batches; peak
-    per-task memory = one Arrow batch + live book state). Shares the
-    mutations oracle."""
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        stream = bs.mutations_stream(load_table(spark, sf_dir, "events"))
-        out = top_n_levels_from_price_mutations(stream, n=n, seq_chunks=seq_chunks)
         return out.select("seq", *snapshot_columns(n))
     return run
 
@@ -1791,23 +1764,6 @@ def _ob_nbbo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = bs.keyed_mutations_stream(load_table(spark, sf_dir, "events"))
     snaps = top_n_levels_from_price_mutations(stream, by=["book"], n=1)
-    return nbbo(snaps, books=list(range(7)))
-
-
-def _ob_nbbo_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NBBO over the keyed fold called with ``seq_chunks=8`` + the
-    span-derived auto-chunk forward fill. ``seq_chunks`` is now accepted and
-    ignored, so the per-book folds plan exactly like ob_nbbo_keyed's: the
-    chained-state mapInPandas plan, one Arrow batch + live book of state per
-    task (the r10 third-decade probe measured it at 100M events in 53 s
-    against 64 s for the retired per-book group fold). Same oracle as
-    ob_nbbo_keyed — the composition must be byte-identical to it."""
-    from polars_order_book_spark.operators.nbbo import nbbo
-
-    stream = bs.keyed_mutations_stream(load_table(spark, sf_dir, "events"))
-    snaps = top_n_levels_from_price_mutations(
-        stream, by=["book"], n=1, seq_chunks=8
-    )
     return nbbo(snaps, books=list(range(7)))
 
 
@@ -8306,7 +8262,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "documents_hash_embed_knn": _docs_hash_embed_knn,
         "embeddings_kmeans_step": _embeddings_kmeans_step,
         "ob_nbbo_keyed_chunked": _ob_nbbo_chunked,
-        "ob_nbbo_keyed_bounded": _ob_nbbo_bounded,
+        "ob_nbbo_keyed_bounded": _ob_nbbo,
         "q2_min_cost_supplier": hq.q2_min_cost_supplier,
         "q8_market_share": hq.q8_market_share,
         "q9_product_profit": hq.q9_product_profit,
@@ -8343,7 +8299,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q1_pricing_summary": hq.q1_pricing_summary,
         "documents_deduped": _documents_deduped,
         "dedup_components": _dedup_components,
-        "ob_chunked_mutations_top2": _ob_chunked_mutations(2, seq_chunks=4),
+        "ob_chunked_mutations_top2": _ob_mutations(2),
         "events_user_distinct_approx": hq.events_user_distinct_approx,
         "documents_hash_sample": _docs_hash_sample,
         "ann_cosine_topk_lsh": _ann_lsh,
@@ -8381,7 +8337,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ob_mutations_top10_deep": _ob_mutations_deep(10),
         "ob_modify_top20_deep": _ob_modify_deep(20),
         "ob_relational_updates_top20_deep": _ob_relational_deep(20),
-        "ob_chunked_mutations_top10_deep": _ob_chunked_mutations_deep(10, seq_chunks=4),
+        "ob_chunked_mutations_top10_deep": _ob_mutations_deep(10),
         "ob_stream_keyed_mutations_top2": _ob_stream_keyed(2),
         "ob_stream_parquet_sink_top3": _ob_stream_parquet_sink(3),
         # r9: widest streaming state row x production state backend

@@ -5,7 +5,8 @@ The reference (surveyed in /root/repo/SURVEY.md) is a Polars expression plugin
 computing, per input event row, the top-N price levels of a limit order book.
 This package re-expresses that operator family Spark-first:
 
-* ``operators.order_book``            — exact stateful fold (grouped pandas UDF)
+* ``operators.order_book``            — exact stateful fold (one streamed
+  ``mapInPandas`` pass over the book-sorted events)
 * ``operators.order_book_relational`` — pure DataFrame/window formulation
   (Catalyst-optimizable; doubles as a differential oracle)
 * ``functions.conversion``            — exchange-message → event-stream helpers

@@ -38,23 +38,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from polars_order_book_spark.operators.order_book import _register_self_by_value
+
 EOW = "</w>"
 
 
-def _register_self_by_value() -> None:
-    import sys
-
-    from pyspark import cloudpickle
-
-    mod = sys.modules.get(__name__)
-    if mod is not None:
-        try:
-            cloudpickle.register_pickle_by_value(mod)
-        except Exception:
-            pass
-
-
-_register_self_by_value()
+_register_self_by_value(__name__)
 
 
 def word_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -41,23 +41,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from polars_order_book_spark.operators.order_book import _register_self_by_value
+
 
 # Ship by value: the mapInPandas closure references module-level _mg_merge
 # (same contract as operators/order_book.py).
-def _register_self_by_value() -> None:
-    import sys
-
-    from pyspark import cloudpickle
-
-    mod = sys.modules.get(__name__)
-    if mod is not None:
-        try:
-            cloudpickle.register_pickle_by_value(mod)
-        except Exception:
-            pass
-
-
-_register_self_by_value()
+_register_self_by_value(__name__)
 
 
 def _mg_merge_tracked(

@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     BinaryType, LongType, StringType, StructField, StructType,
 )
 
+from polars_order_book_spark.operators.order_book import _register_self_by_value
+
 
 def _import_optional(name: str):
     """Best-effort import of an optional codec library; None when absent."""
@@ -43,20 +45,7 @@ def _import_optional(name: str):
 # order_book.py. Without this, mapInPandas closures referencing module-level
 # decode_* fail with ModuleNotFoundError on workers (caught by the /verify
 # outside-repo recipe, r5).
-def _register_self_by_value() -> None:
-    import sys
-
-    from pyspark import cloudpickle
-
-    mod = sys.modules.get(__name__)
-    if mod is not None:
-        try:
-            cloudpickle.register_pickle_by_value(mod)
-        except Exception:
-            pass
-
-
-_register_self_by_value()
+_register_self_by_value(__name__)
 
 
 # Detected once at import; decode functions accept an explicit module handle

@@ -63,16 +63,16 @@ def nbbo(
     ``chunk_size`` selects the forward-fill strategy:
 
     * ``"auto"`` (default) — SEGMENTED SCAN with chunk boundaries derived
-      lazily from the seq bounds (one tiny broadcast agg, same pattern as
-      the chunked book fold): the timeline splits into ~shuffle-partitions
-      equal seq ranges, (1) fill within each chunk in parallel, (2)
-      summarize each chunk's final per-column state (``max_by`` over
-      non-null rows — chunks-sized relation), (3) prefix-scan the summaries
-      in one tiny window and join each chunk's carry-in back. No
-      events-sized single-task window anywhere in the plan.
+      lazily from the seq bounds (one tiny broadcast agg): the timeline
+      splits into ~shuffle-partitions equal seq ranges, (1) fill within
+      each chunk in parallel, (2) summarize each chunk's final per-column
+      state (``max_by`` over non-null rows — chunks-sized relation), (3)
+      prefix-scan the summaries in one tiny window and join each chunk's
+      carry-in back. No events-sized single-task window anywhere in the
+      plan.
     * an ``int`` — same segmented scan with a fixed chunk WIDTH in seq
       units (``seq div chunk_size``). NOTE the unit: a chunk SIZE, NOT a
-      chunk COUNT like the fold operators' (ignored) ``seq_chunks``.
+      chunk COUNT.
     * ``None`` — ONE global ordered window (single task holds the whole
       timeline). Simplest plan and ~1.5x faster at sf0.1 (measured
       best-of-3: 2.5s vs 4.0s — below one task's capacity, chunking costs

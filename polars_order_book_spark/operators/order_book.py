@@ -49,7 +49,6 @@ from pyspark.sql.types import (
 )
 
 MAX_LEVELS = 20  # reference guardrail, ref: calculate_bbo.rs:120-123
-_BOOK_COL = "__book__"
 
 # Ship this module inside the UDF closure (pickle-by-value) so executors don't
 # need the package on their PYTHONPATH — the Spark analog of the reference
@@ -238,7 +237,6 @@ def _fold_arrays(
     prev_qty: Sequence | None,
     bids: "_Side | _SideBest | None" = None,
     asks: "_Side | _SideBest | None" = None,
-    fast_n1: bool = True,
 ) -> "tuple[np.ndarray, np.ndarray, _Side | _SideBest, _Side | _SideBest]":
     """Sequential fold over one book; returns (values, missing_mask, bids,
     asks) with the arrays shaped (4n, m). Port of the event loop at
@@ -253,7 +251,7 @@ def _fold_arrays(
     ref: top_n_levels.rs:59-63, which equally skips below-worst updates)."""
     _check_n(n)
     m = len(price)
-    fast = fast_n1 and n == 1
+    fast = n == 1
     if fast:
         bids = _SideBest.from_side(bids, hi=True)
         asks = _SideBest.from_side(asks, hi=False)
@@ -508,11 +506,21 @@ def _side_to_lists(side: "_Side | _SideBest") -> tuple[list, list]:
 
 
 def _as_list(s: pd.Series) -> list:
-    """Column -> python list with None for nulls (fast path for the row loop)."""
+    """Column -> python list with None for nulls (fast path for the row loop).
+
+    Arrow hands a nullable integral column that holds a null to pandas as
+    float64, which holds integers exactly only below 2**53: a larger tick
+    has already been rounded, so it raises rather than fold a neighbouring
+    level."""
     if s.dtype == object:
         return [None if v is None or v is pd.NA else v for v in s.tolist()]
     arr = s.to_numpy()
     if arr.dtype.kind == "f":
+        if (np.abs(arr) >= 2.0 ** 53).any():
+            raise OrderBookError(
+                f"column {s.name!r} arrived as float64 (it holds a null) with a "
+                "value of magnitude >= 2**53, which float64 cannot hold exactly"
+            )
         return [None if np.isnan(v) else int(v) for v in arr.tolist()]
     isna = s.isna()
     if isna.any():
@@ -620,13 +628,8 @@ def _apply_fold(
     price_snap_cast = None if isinstance(price_dt, LongType) else price_dt
     price_snap_cols = [c for c in snap_cols if "_price_" in c]
 
-    if not by:
-        df = df.withColumn(_BOOK_COL, F.lit(0))
-        by = [_BOOK_COL]
-    keys = list(by)
-
-    drop_cols = [_BOOK_COL, *temps]
-    out_fields = [f for f in df.schema.fields if f.name not in drop_cols]
+    keys = list(by or ())
+    out_fields = [f for f in df.schema.fields if f.name not in temps]
     keep = [f.name for f in out_fields]
     schema = StructType(
         out_fields + [StructField(c, LongType(), True) for c in snap_cols]
@@ -651,7 +654,8 @@ def _apply_fold(
             changed = changed.to_numpy(copy=True)
             changed[0] = True
             starts = np.flatnonzero(changed).tolist()
-            run_keys = kv.iloc[starts].itertuples(index=False, name=None)
+            # one key row per run, empty for an unkeyed fold (no key columns)
+            run_keys = kv.iloc[starts].to_numpy(dtype=object).tolist()
             outs, masks = [], []
             for a, b, kt in zip(starts, starts[1:] + [m], run_keys):
                 kt = tuple(None if pd.isna(v) else v for v in kt)
@@ -672,17 +676,17 @@ def _apply_fold(
             yield _snapshot_frame({k: pdf[k] for k in keep}, out, mask, snap_cols)
 
     # One plan for every fold. The exchange puts each book in one partition
-    # (an unkeyed fold is one book, so one partition and one Python task;
-    # keyed folds exchange without a count, so AQE coalesces them), the sort
-    # lands below the Python node, and mapInPandas consumes the partition in
-    # that order: each book's events arrive once, in seq order, possibly
-    # split across Arrow batches, and a key change resets the book. Null keys
-    # hash like any value and compare null-safely above, so a null key is a
-    # book of its own, as in groupBy. Per task: one Arrow batch
-    # (spark.sql.execution.arrow.maxRecordsPerBatch, 65,536 in get_spark)
-    # plus the live book.
+    # (an unkeyed fold is the zero-key case: one book, so one partition and
+    # one Python task; keyed folds exchange without a count, so AQE
+    # coalesces them), the sort lands below the Python node, and mapInPandas
+    # consumes the partition in that order: each book's events arrive once,
+    # in seq order, possibly split across Arrow batches, and a key change
+    # resets the book. Null keys hash like any value and compare null-safely
+    # above, so a null key is a book of its own, as in groupBy. Per task:
+    # one Arrow batch (spark.sql.execution.arrow.maxRecordsPerBatch, 65,536
+    # in get_spark) plus the live book.
     key_cols = [F.col(k) for k in keys]
-    width = (1,) if keys == [_BOOK_COL] else ()
+    width = () if keys else (1,)
     result = (
         df.repartition(*width, *key_cols)
         .sortWithinPartitions(*key_cols, F.col(seq))
@@ -708,7 +712,6 @@ def top_n_levels_from_price_updates(
     by: Sequence[str] | None = None,
     n: int = 1,
     output_struct: str | None = None,
-    seq_chunks: int | None = None,
 ) -> DataFrame:
     """Fold snapshot-set events: qty replaces the level, qty=0 deletes it.
 
@@ -723,8 +726,8 @@ def top_n_levels_from_price_updates(
 
     Plan: one exchange on the book keys, an in-partition (keys, seq) sort and
     one ``mapInPandas`` that carries each book across Arrow batches, so a
-    task holds one batch plus the live book. ``seq_chunks`` is accepted for
-    API compatibility and ignored.
+    task holds one batch plus the live book. Without ``by`` the whole frame
+    is one book, folded in one task.
     """
     return _apply_fold(df, "updates", price, qty, is_bid, seq, by, n,
                        output_struct=output_struct)
@@ -740,14 +743,13 @@ def top_n_levels_from_price_mutations(
     by: Sequence[str] | None = None,
     n: int = 1,
     output_struct: str | None = None,
-    seq_chunks: int | None = None,
 ) -> DataFrame:
     """Fold signed-delta events: qty>0 adds, qty<0 deletes, 0 no-op.
 
     Parity: ref: __init__.py:101-154, ref: calculate_bbo.rs:172-215,
     ref: update.rs:113-123. Errors on delete-from-missing-level and over-delete
     exactly like the reference (ref: book_side.rs:91-112). Same plan as
-    ``top_n_levels_from_price_updates``; ``seq_chunks`` is ignored.
+    ``top_n_levels_from_price_updates``.
     """
     return _apply_fold(df, "mutations", price, qty, is_bid, seq, by, n,
                        output_struct=output_struct)
@@ -765,7 +767,6 @@ def top_n_levels_from_price_mutations_with_modify(
     by: Sequence[str] | None = None,
     n: int = 1,
     output_struct: str | None = None,
-    seq_chunks: int | None = None,
 ) -> DataFrame:
     """Mutations plus atomic order moves (delete prev_qty@prev_price then add
     qty@price in one event).
@@ -773,8 +774,7 @@ def top_n_levels_from_price_mutations_with_modify(
     Parity: ref: __init__.py:22-98, ref: calculate_bbo.rs:217-268, decision
     table ref: update.rs:132-162. Passing exactly one of ``prev_price`` /
     ``prev_qty`` raises ValueError before execution (ref: __init__.py:84-90).
-    Same plan as ``top_n_levels_from_price_updates``; ``seq_chunks`` is
-    ignored.
+    Same plan as ``top_n_levels_from_price_updates``.
     """
     if (prev_price is None) != (prev_qty is None):
         raise ValueError(

@@ -28,6 +28,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from polars_order_book_spark.operators.order_book import _register_self_by_value
+
 
 def rrf_fuse(
     sources: "Sequence[tuple[str, DataFrame, str, str]]",
@@ -80,20 +82,7 @@ def rrf_fuse(
 #
 # Ship by value: the applyInPandas closure references module-level helpers
 # (same contract as operators/order_book.py / frequency.py).
-def _register_self_by_value() -> None:
-    import sys
-
-    from pyspark import cloudpickle
-
-    mod = sys.modules.get(__name__)
-    if mod is not None:
-        try:
-            cloudpickle.register_pickle_by_value(mod)
-        except Exception:
-            pass
-
-
-_register_self_by_value()
+_register_self_by_value(__name__)
 
 _MICRO = 1_000_000
 

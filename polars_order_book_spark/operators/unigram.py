@@ -30,23 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from polars_order_book_spark.operators.order_book import _register_self_by_value
+
 COMBINE = 1 << 20  # lexicographic (cost, n_pieces) encoding multiplier
 
 
-def _register_self_by_value() -> None:
-    import sys
-
-    from pyspark import cloudpickle
-
-    mod = sys.modules.get(__name__)
-    if mod is not None:
-        try:
-            cloudpickle.register_pickle_by_value(mod)
-        except Exception:
-            pass
-
-
-_register_self_by_value()
+_register_self_by_value(__name__)
 
 
 def unigram_vocab(

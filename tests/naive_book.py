@@ -9,6 +9,8 @@ leading words.
 
 import random
 
+import numpy as np
+
 from polars_order_book_spark import OrderBookError
 
 
@@ -78,6 +80,16 @@ def top_n(rows, variant: str, n: int) -> dict:
             snap += [bp, bq, ap, aq]
         out[seq] = tuple(snap)
     return out
+
+
+def top_n_arrays(rows, variant: str, n: int):
+    """``top_n`` in the kernel's shape: (values, mask) arrays of shape
+    (4n, len(rows)), one column per row in ``rows`` order, mask True (and
+    value 0) at a missing level."""
+    snaps = top_n(rows, variant, n)
+    cols = np.array([snaps[r[0]] for r in rows], dtype=object).T
+    mask = np.equal(cols, None)
+    return np.where(mask, 0, cols).astype(np.int64), mask
 
 
 def top_n_keyed(rows, variant: str, n: int) -> dict:

@@ -162,3 +162,17 @@ def test_restart_with_larger_horizon_rejects_folded_seq():
     _run(_fold("mutations"), [_mut(1, 2, 3)], store)
     with pytest.raises(OrderBookError, match="event seq 2 arrived out of order"):
         _run(_fold("mutations", horizon=5), [_mut(2)], store)
+
+
+def test_float64_tick_past_exact_range_raises():
+    """A nullable long column holding a null reaches pandas as float64, where
+    2**53 + 1 already reads 2**53: the fold must refuse the column rather
+    than move qty off the wrong level."""
+    pdf = pd.DataFrame({
+        "book": ["A", "A"], "seq": [0, 1], "is_bid": [True, True],
+        "price": [5, 7], "qty": [3, 1],
+        "prev_price": [float("nan"), 2.0 ** 53],
+        "prev_qty": [float("nan"), 1.0],
+    })
+    with pytest.raises(OrderBookError, match="'prev_price'.*2\\*\\*53"):
+        list(_fold("modify")(("A",), iter([pdf]), _State({}, ("A",))))

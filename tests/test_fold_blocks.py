@@ -4,18 +4,33 @@ forward-fill baseline. At the real budget the first boundary sits at 4,096
 rows (n=20), past every small test stream, so these tests shrink the budget
 to 3-row blocks and require the blocked fold to equal the single-block fold,
 a fold resumed from (bids, asks) at a random cut, and the naive reference
-(``naive_book``), which recomputes the top-N on every row. Spark-free: the
-kernel is called directly.
+(``naive_book``), which recomputes the top-N on every row. Seeded and
+hypothesis-generated streams both cross those edges. Spark-free: the kernel
+is called directly.
 """
 
 import random
+from unittest import mock
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 
-from naive_book import top_n, valid_stream
+from naive_book import top_n, top_n_arrays, valid_stream
 from polars_order_book_spark.operators import order_book
 from polars_order_book_spark.operators.order_book import _fold_arrays
+from test_property_differential import (
+    SETTINGS,
+    modify_stream,
+    mutation_stream,
+    update_stream,
+)
+
+STREAMS = {
+    "updates": update_stream(),
+    "mutations": mutation_stream(),
+    "modify": modify_stream(),
+}
 
 
 def _fold(variant, n, rows, bids=None, asks=None):
@@ -27,14 +42,6 @@ def _fold(variant, n, rows, bids=None, asks=None):
         list(cols[5]) if variant == "modify" else None,
         bids=bids, asks=asks,
     )
-
-
-def _naive(variant, n, rows):
-    """The naive reference's snapshots as the kernel's (values, mask)."""
-    snaps = top_n(rows, variant, n)
-    cols = np.array([snaps[r[0]] for r in rows], dtype=object).T
-    mask = np.equal(cols, None)
-    return np.where(mask, 0, cols).astype(np.int64), mask
 
 
 def _assert_same(got, want):
@@ -49,7 +56,7 @@ def test_blocked_fold_equals_single_block_and_resumed(monkeypatch, variant, n):
     seed = 7919 * n + len(variant)
     rows = valid_stream(variant, seed)
     out, mask, _, _ = _fold(variant, n, rows)  # one block at the real budget
-    _assert_same((out, mask), _naive(variant, n, rows))
+    _assert_same((out, mask), top_n_arrays(rows, variant, n))
 
     monkeypatch.setattr(order_book, "_FOLD_BLOCK_BYTES", 32 * n * 3)
     b_out, b_mask, _, _ = _fold(variant, n, rows)
@@ -63,6 +70,19 @@ def test_blocked_fold_equals_single_block_and_resumed(monkeypatch, variant, n):
          np.concatenate([a_mask, r_mask], axis=1)),
         (out, mask),
     )
+
+
+@pytest.mark.parametrize("variant", STREAMS)
+@pytest.mark.parametrize("n", [1, 3, 20])
+@settings(**SETTINGS)
+@given(data=st.data())
+def test_property_streams_fold_in_tiny_blocks(variant, n, data):
+    """The property suites' generated streams, folded in 3-row blocks, equal
+    the naive reference at every depth's emit path."""
+    rows = data.draw(STREAMS[variant])
+    with mock.patch.object(order_book, "_FOLD_BLOCK_BYTES", 32 * n * 3):
+        out, mask, _, _ = _fold(variant, n, rows)
+    _assert_same((out, mask), top_n_arrays(rows, variant, n))
 
 
 @pytest.mark.parametrize("n", [0, 21])
@@ -79,7 +99,7 @@ def test_budget_below_one_column_folds_one_row_per_block(monkeypatch, variant, n
     rows = valid_stream(variant, 31 * n, m=60)
     monkeypatch.setattr(order_book, "_FOLD_BLOCK_BYTES", 1)
     out, mask, _, _ = _fold(variant, n, rows)
-    _assert_same((out, mask), _naive(variant, n, rows))
+    _assert_same((out, mask), top_n_arrays(rows, variant, n))
 
 
 @pytest.mark.parametrize("at", [2, 3])

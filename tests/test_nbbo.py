@@ -103,7 +103,7 @@ def test_nbbo_matches_bruteforce(spark, rows):
 
 
 def test_nbbo_chunked_equals_global(spark):
-    """Segmented-scan fill (seq_chunks) must reproduce the single-window
+    """Segmented-scan fill (chunk_size) must reproduce the single-window
     result exactly, including carries across silent chunks and sentinel
     re-emptying."""
     import random

@@ -123,6 +123,26 @@ def test_chunked_error_contract_crosses_chunks(spark):
     assert "Level not found" in str(ei.value)
 
 
+def test_float64_rounded_tick_raises(spark):
+    """A nullable long column that holds a null crosses into pandas as
+    float64, which rounds 2**53 + 1 to 2**53. Moving 5 off level 2**53 + 1
+    must not silently delete from level 2**53 instead: the fold raises."""
+    big = 2**53
+    rows = [
+        (0, True, big, 5, None, None),
+        (1, True, big + 1, 5, None, None),
+        (2, True, big + 2, 5, big + 1, 5),  # move 5 from big+1 to big+2
+    ]
+    assert top_n(rows, "modify", 2)[2][4] == big  # bid_price_2
+    out = top_n_levels_from_price_mutations_with_modify(
+        spark.createDataFrame(rows, SCHEMA5),
+        prev_price="prev_price", prev_qty="prev_qty", n=2,
+    )
+    with pytest.raises(Exception) as ei:
+        out.collect()
+    assert "'prev_price'" in str(ei.value) and "2**53" in str(ei.value)
+
+
 def _plan(df):
     """Executed plan with expression and plan ids blanked, so the plans of
     separately built DataFrames compare equal when their shape is."""
@@ -131,10 +151,10 @@ def _plan(df):
 
 
 def test_chunked_seq_chunks_one_is_plain_fold(spark):
-    """An unkeyed fold is one book: one exchange into ONE partition, one sort
-    and one MapInPandas. ``seq_chunks`` is accepted and ignored: seq_chunks=1
-    and seq_chunks=4 plan exactly like the default and give the same
-    snapshots."""
+    """An unkeyed fold is one book, the zero-key case of the keyed plan: one
+    exchange into ONE partition, one sort on seq alone (no synthetic book
+    column) and one MapInPandas. The retired ``seq_chunks`` argument is
+    rejected."""
     rows = [(s, True, 1 + s % 3, 1) for s in range(10)]
     df = spark.createDataFrame(rows, SCHEMA3)
     default = top_n_levels_from_price_mutations(df, n=1)
@@ -142,19 +162,19 @@ def test_chunked_seq_chunks_one_is_plain_fold(spark):
     assert "Exchange SinglePartition" in plan, plan
     assert plan.count("Exchange") == 1, plan
     assert plan.count("Sort [") == 1, plan
+    assert "Sort [seq# ASC NULLS FIRST]" in plan, plan
     assert "MapInPandas" in plan and "FlatMapGroupsInPandas" not in plan, plan
-    cols = snapshot_columns(1)
-    for k in (1, 4):
-        forced = top_n_levels_from_price_mutations(df, n=1, seq_chunks=k)
-        assert _plan(forced) == plan
-        assert by_seq(forced, cols) == by_seq(default, cols)
+    assert by_seq(default, snapshot_columns(1)) == top_n(rows, "mutations", 1)
+    with pytest.raises(TypeError):
+        top_n_levels_from_price_mutations(df, n=1, seq_chunks=4)
 
 
 def test_keyed_default_stays_group_fold(spark):
     """A keyed fold still folds each book as its own group, in one pass:
     one exchange on the book keys without a count (REPARTITION_BY_COL,
     which AQE coalesces), one sort and one MapInPandas, not the
-    FlatMapGroupsInPandas plan. ``seq_chunks`` does not change the plan."""
+    FlatMapGroupsInPandas plan. The retired ``seq_chunks`` argument is
+    rejected."""
     keyed = spark.createDataFrame(
         [(s % 2, s, True, 1 + s % 3, 1) for s in range(10)], KEYED_SCHEMA
     )
@@ -166,10 +186,8 @@ def test_keyed_default_stays_group_fold(spark):
     assert "Exchange hashpartitioning(book#" in exchanges[0], plan
     assert "REPARTITION_BY_COL" in exchanges[0], plan
     assert plan.count("Sort [") == 1, plan
-    for k in (1, 4):
-        assert _plan(
-            top_n_levels_from_price_mutations(keyed, by=["book"], n=1, seq_chunks=k)
-        ) == plan
+    with pytest.raises(TypeError):
+        top_n_levels_from_price_mutations(keyed, by=["book"], n=1, seq_chunks=4)
 
 
 def test_chunked_accepts_column_expressions(spark):

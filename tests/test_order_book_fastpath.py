@@ -1,16 +1,19 @@
-"""N=1 fast-path book (``_SideBest``) must be byte-identical to the generic
-sorted-list fold — it only changes the side data structure (tracked best +
-dict, ref: book_side_tracked_basic.rs:45-78), never the semantics.
+"""N=1 fast-path book (``_SideBest``, chosen by ``_fold_arrays`` whenever
+n == 1) must give the reference's snapshots — it only changes the side data
+structure (tracked best + dict, ref: book_side_tracked_basic.rs:45-78),
+never the semantics.
 
 Differential tests run at the ``_fold_arrays`` level (pure Python — no Spark
-job), covering fresh books, resumed state (the streaming/chunked hand-off
-round-trips ``_Side`` ↔ ``_SideBest``), and the error contract.
+job) against the Spark-free naive reference (``naive_book``), covering fresh
+books, resumed state (the streaming/chunked hand-off round-trips ``_Side`` ↔
+``_SideBest``), and the error contract.
 """
 
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
+from naive_book import top_n, top_n_arrays
 from polars_order_book_spark.operators.order_book import (
     OrderBookError,
     _fold_arrays,
@@ -31,7 +34,7 @@ from test_property_differential import (
 )
 
 
-def _run(variant, rows, fast, bids=None, asks=None):
+def _run(variant, rows, bids=None, asks=None):
     seq = np.array([r[0] for r in rows], dtype=np.int64)
     is_bid = [r[1] for r in rows]
     price = [r[2] for r in rows]
@@ -39,34 +42,38 @@ def _run(variant, rows, fast, bids=None, asks=None):
     pp = [r[4] for r in rows] if variant == "modify" else None
     pq = [r[5] for r in rows] if variant == "modify" else None
     return _fold_arrays(
-        variant, 1, seq, is_bid, price, qty, pp, pq,
-        bids=bids, asks=asks, fast_n1=fast,
+        variant, 1, seq, is_bid, price, qty, pp, pq, bids=bids, asks=asks,
     )
 
 
-def _assert_same(rows, variant):
-    out_f, mask_f, _, _ = _run(variant, rows, fast=True)
-    out_g, mask_g, _, _ = _run(variant, rows, fast=False)
-    np.testing.assert_array_equal(mask_f, mask_g)
-    np.testing.assert_array_equal(out_f[~mask_f], out_g[~mask_g])
+def _assert_same(got, want):
+    (out_g, mask_g), (out_w, mask_w) = got, want
+    np.testing.assert_array_equal(mask_g, mask_w)
+    np.testing.assert_array_equal(out_g[~mask_g], out_w[~mask_w])
+
+
+def _assert_matches_naive(rows, variant):
+    out, mask, bids, asks = _run(variant, rows)
+    assert isinstance(bids, _SideBest) and isinstance(asks, _SideBest)
+    _assert_same((out, mask), top_n_arrays(rows, variant, 1))
 
 
 @settings(**SETTINGS)
 @given(rows=mutation_stream())
 def test_property_fast_equals_generic_mutations(rows):
-    _assert_same(rows, "mutations")
+    _assert_matches_naive(rows, "mutations")
 
 
 @settings(**SETTINGS)
 @given(rows=update_stream())
 def test_property_fast_equals_generic_updates(rows):
-    _assert_same(rows, "updates")
+    _assert_matches_naive(rows, "updates")
 
 
 @settings(**SETTINGS)
 @given(rows=modify_stream())
 def test_property_fast_equals_generic_modify(rows):
-    _assert_same(rows, "modify")
+    _assert_matches_naive(rows, "modify")
 
 
 @settings(**SETTINGS)
@@ -74,34 +81,34 @@ def test_property_fast_equals_generic_modify(rows):
 def test_property_fast_resume_state_roundtrip(rows, cut):
     """Split the stream, fold part 1 fast, serialize state through the
     streaming list shape, rebuild (as ``_Side``) and fold part 2 fast — the
-    concatenation must equal the single-pass generic fold. Exercises both
-    conversion directions of the state hand-off."""
+    concatenation must equal the naive reference over the whole stream.
+    Exercises both conversion directions of the state hand-off."""
     cut = min(cut, len(rows) - 1)
     a, b = rows[:cut], rows[cut:]
-    out_a, mask_a, bids, asks = _run("mutations", a, fast=True)
+    out_a, mask_a, bids, asks = _run("mutations", a)
     assert isinstance(bids, _SideBest) and isinstance(asks, _SideBest)
     bp, bq = _side_to_lists(bids)
     ap, aq = _side_to_lists(asks)
     out_b, mask_b, _, _ = _run(
-        "mutations", b, fast=True,
+        "mutations", b,
         bids=_side_from_lists(bp, bq), asks=_side_from_lists(ap, aq),
     )
-    out = np.concatenate([out_a, out_b], axis=1)
-    mask = np.concatenate([mask_a, mask_b], axis=1)
-    out_g, mask_g, _, _ = _run("mutations", rows, fast=False)
-    np.testing.assert_array_equal(mask, mask_g)
-    np.testing.assert_array_equal(out[~mask], out_g[~mask_g])
+    _assert_same(
+        (np.concatenate([out_a, out_b], axis=1),
+         np.concatenate([mask_a, mask_b], axis=1)),
+        top_n_arrays(rows, "mutations", 1),
+    )
 
 
 def test_fast_error_contract_matches_generic():
-    rows = [(0, True, 5, 3), (1, True, 5, -4)]  # over-delete
-    for fast in (True, False):
-        with pytest.raises(OrderBookError, match="Qty exceeds available"):
-            _run("mutations", rows, fast=fast)
-    rows = [(0, True, 5, 3), (1, True, 7, -1)]  # delete missing level
-    for fast in (True, False):
-        with pytest.raises(OrderBookError, match="Level not found"):
-            _run("mutations", rows, fast=fast)
+    for rows, msg in (
+        ([(0, True, 5, 3), (1, True, 5, -4)], "Qty exceeds available"),  # over-delete
+        ([(0, True, 5, 3), (1, True, 7, -1)], "Level not found"),  # missing level
+    ):
+        with pytest.raises(OrderBookError, match=msg):
+            _run("mutations", rows)
+        with pytest.raises(OrderBookError, match=msg):
+            top_n(rows, "mutations", 1)
 
 
 def test_side_best_rescan_on_best_delete():

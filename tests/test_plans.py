@@ -83,14 +83,14 @@ def test_relational_book_shuffles_on_seq_bucket(spark):
 
 @needs_testdata
 def test_streamed_fold_is_single_pass(spark):
-    """The batch fold (``seq_chunks`` is ignored) must stay the single-pass
-    shape: ONE exchange on the book keys + in-partition sort + ONE
-    MapInPandas — no chained cogrouped rounds (FlatMapCoGroupsInPandas), no
-    per-round re-scan (multiple parquet scans), no bounds broadcast join."""
+    """The batch fold must stay the single-pass shape: ONE exchange on the
+    book keys + in-partition sort + ONE MapInPandas — no chained cogrouped
+    rounds (FlatMapCoGroupsInPandas), no per-round re-scan (multiple parquet
+    scans), no bounds broadcast join."""
     from polars_order_book_spark import top_n_levels_from_price_mutations
 
     stream = bs.mutations_stream(load_table(spark, SF_DIR, "events"))
-    plan = plan_of(top_n_levels_from_price_mutations(stream, n=2, seq_chunks=4))
+    plan = plan_of(top_n_levels_from_price_mutations(stream, n=2))
     assert plan.count("MapInPandas") == 1, plan
     assert "FlatMapCoGroupsInPandas" not in plan
     assert plan.count("Scan parquet") == 1, plan
