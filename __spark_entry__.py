@@ -43,29 +43,54 @@ from polars_order_book_spark.plans import queries as hq
 from polars_order_book_spark.sources.tables import load_table
 
 
-def _drain_memory_sink(spark, df, name, ckpt):
-    """Materialize a memory-sink rig's result and release the rig's session
-    state. A memory-sink table lives on the driver heap for the SESSION's
-    lifetime, so a 260-query oracle gate (or full-registry bench) quietly
-    accumulates every streaming rig's full output ×3 runs in the one JVM
-    that is also executing every later query — heap pressure with no owner
-    (r9 ADVICE item; the rocksdb deep rig has carried this exact template
-    since r9 and is oracle-green with it). The eager localCheckpoint
-    detaches the returned rows from both the temp view and the checkpoint
-    dir; its blocks are freed by the ContextCleaner when the returned
-    DataFrame is garbage-collected — unlike the temp view, which would
-    persist until session stop. try/finally (r10 ADVICE): if the eager
-    checkpoint itself fails (executor OOM, task failure), the temp view and
-    checkpoint dir must STILL be released — leaking them on error is the
-    exact accumulation this helper exists to prevent (the rocksdb rig's
-    inline version has always cleaned up in a finally)."""
-    import shutil
+def _await(q) -> None:
+    """Wait up to 600 s for a streaming query to finish. A failed query
+    raises its own exception here; one that runs out of time is stopped and
+    raises ``TimeoutError``, so no caller reads a partial result."""
+    if not q.awaitTermination(600):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} did not finish within 600s - "
+            "refusing to read partial results"
+        )
 
+
+def _run_stream(df, mode, input_path, read=lambda t: t, parquet=False):
+    """Run a streaming rig to completion and return its result as a bounded
+    DataFrame: availableNow into a memory sink (or a parquet file sink with
+    ``parquet=True``), under a shuffle width sized from ``input_path``.
+    ``read`` maps the sink's contents (``spark.table`` of the memory sink,
+    ``spark.read.parquet`` of the file sink) to the rig's result.
+
+    The result is detached by an eager ``localCheckpoint``; its blocks are
+    freed when the returned DataFrame is garbage-collected. The memory-sink
+    view (driver heap, otherwise kept until the session stops) and the
+    temp directory are released in a ``finally``: on success, on a failed
+    query and on a timeout alike, so a registry run never accumulates
+    earlier rigs' output."""
+    import shutil
+    import tempfile
+    import uuid
+
+    spark = df.sparkSession
+    name = f"stream_rig_{uuid.uuid4().hex[:8]}"
+    tmp = tempfile.mkdtemp(prefix="stream_rig_")
+    out = os.path.join(tmp, "out")
     try:
-        return df.localCheckpoint(eager=True)
+        w = (
+            df.writeStream.queryName(name)
+            .outputMode(mode)
+            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+            .trigger(availableNow=True)
+        )
+        w = w.format("parquet").option("path", out) if parquet else w.format("memory")
+        with scoped_stream_shuffle(spark, input_path):
+            _await(w.start())
+        sunk = spark.read.parquet(out) if parquet else spark.table(name)
+        return read(sunk).localCheckpoint(eager=True)
     finally:
         spark.catalog.dropTempView(name)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -194,9 +219,6 @@ def _ob_stream_keyed(n):
     bounded DataFrame. Its per-event snapshots must equal the BATCH keyed
     fold, so the streaming path gets the same full oracle hash check."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-        import uuid
-
         from polars_order_book_spark.sources.tables import load_table_stream
         from polars_order_book_spark.streaming import top_n_levels_stream
 
@@ -206,25 +228,9 @@ def _ob_stream_keyed(n):
         ev = load_table_stream(spark, sf_dir, "events")
         stream = bs.keyed_mutations_stream(ev)
         snaps = top_n_levels_stream(stream, "mutations", by=["book"], n=n)
-        name = f"ob_stream_snaps_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ob_stream_ckpt_")
-        with scoped_stream_shuffle(spark, f"{sf_dir}/events.parquet"):
-            q = (
-                snaps.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise TimeoutError("streaming query did not finish within 600s - refusing to read partial results")
-        return _drain_memory_sink(
-            spark,
-            spark.table(name).select("book", "seq", *snapshot_columns(n)),
-            name,
-            ckpt,
+        return _run_stream(
+            snaps, "update", f"{sf_dir}/events.parquet",
+            lambda t: t.select("book", "seq", *snapshot_columns(n)),
         )
     return run
 
@@ -267,12 +273,7 @@ def _ob_stream_parquet_sink(n):
                     .trigger(availableNow=True)
                     .start()
                 )
-                if not q.awaitTermination(600):
-                    q.stop()
-                    raise TimeoutError(
-                        "streaming query did not finish within 600s - refusing "
-                        "to read partial results"
-                    )
+                _await(q)
             out = read_stream_batches(spark, root).select(
                 "book", "seq", *snapshot_columns(n)
             )
@@ -297,17 +298,11 @@ def _ob_stream_deep_rocksdb(n):
     check), same caveat as ob_stream_keyed_mutations_top2 — a production
     deployment writes a parquet/kafka sink in update mode instead."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import shutil
-        import tempfile
-        import uuid
-
         from polars_order_book_spark.sources.tables import load_table_stream
         from polars_order_book_spark.streaming import top_n_levels_stream
 
         key = "spark.sql.streaming.stateStore.providerClass"
         prev = spark.conf.get(key, None)
-        ckpt = None
-        name = None
         try:
             spark.conf.set(
                 key,
@@ -317,41 +312,15 @@ def _ob_stream_deep_rocksdb(n):
             ev = load_table_stream(spark, sf_dir, "events")
             stream = bs.keyed_deep_updates_stream(ev)
             snaps = top_n_levels_stream(stream, "updates", by=["book"], n=n)
-            name = f"ob_stream_deep_{uuid.uuid4().hex[:8]}"
-            ckpt = tempfile.mkdtemp(prefix="ob_stream_deep_ckpt_")
-            with scoped_stream_shuffle(spark, f"{sf_dir}/events.parquet"):
-                q = (
-                    snaps.writeStream.format("memory")
-                    .queryName(name)
-                    .outputMode("update")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                if not q.awaitTermination(600):
-                    q.stop()
-                    raise TimeoutError(
-                        "streaming query did not finish within 600s - refusing "
-                        "to read partial results"
-                    )
-            # materialize BEFORE restoring the conf: the memory sink table
-            # is already bounded, but keep the read inside the scope for
-            # clarity about what ran under rocksdb
-            out = spark.table(name).select("book", "seq", *snapshot_columns(n))
-            out = out.localCheckpoint(eager=True)
+            return _run_stream(
+                snaps, "update", f"{sf_dir}/events.parquet",
+                lambda t: t.select("book", "seq", *snapshot_columns(n)),
+            )
         finally:
             if prev is None:
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, prev)
-            # the localCheckpoint above detaches `out` from both the memory
-            # sink and the checkpoint dir, so drop them — repeated bench
-            # runs must not accumulate disk/session state (r9 ADVICE)
-            if name is not None:
-                spark.catalog.dropTempView(name)
-            if ckpt is not None:
-                shutil.rmtree(ckpt, ignore_errors=True)
-        return out
     return run
 
 
@@ -360,9 +329,6 @@ def _events_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion with availableNow -> complete-mode memory sink. Boundary
     semantics are pinned equal to the batch lag-rule, so the streaming
     output gets the full batch oracle hash check."""
-    import tempfile
-    import uuid
-
     from polars_order_book_spark.sources.tables import load_table, load_table_stream
     from polars_order_book_spark.streaming import sessionize_stream
 
@@ -384,25 +350,9 @@ def _events_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ev = load_table_stream(spark, sf_dir, "events")
     sess = sessionize_stream(ev, gap="30 minutes")
-    name = f"sess_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="sess_stream_ckpt_")
-    with scoped_stream_shuffle(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("streaming query did not finish within 600s - refusing to read partial results")
-    return _drain_memory_sink(
-        spark,
-        spark.table(name).select("user_id", "n_events", "start_us", "end_us"),
-        name,
-        ckpt,
+    return _run_stream(
+        sess, "complete", f"{sf_dir}/events.parquet",
+        lambda t: t.select("user_id", "n_events", "start_us", "end_us"),
     )
 
 
@@ -415,29 +365,16 @@ def _events_sessionize_stream_append(spark: SparkSession, sf_dir: str) -> DataFr
     durable parquet; state is bounded to open sessions. The oracle is
     restricted to watermark-closed sessions (gap 30m, delay 1h): a session
     emits when max_event_ts + gap < final watermark = global_max_ts - delay."""
-    import tempfile
-    import uuid
-
     from polars_order_book_spark.sources.tables import load_table_stream
     from polars_order_book_spark.streaming import sessionize_stream
 
     ev = load_table_stream(spark, sf_dir, "events")
     sess = sessionize_stream(ev, gap="30 minutes", watermark="1 hour")
-    out_dir = tempfile.mkdtemp(prefix="sess_append_") + "/sessions"
-    ckpt = tempfile.mkdtemp(prefix="sess_append_ckpt_")
-    with scoped_stream_shuffle(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            sess.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("streaming query did not finish within 600s - refusing to read partial results")
-    return spark.read.parquet(out_dir).select("user_id", "n_events", "start_us", "end_us")
+    return _run_stream(
+        sess, "append", f"{sf_dir}/events.parquet",
+        lambda t: t.select("user_id", "n_events", "start_us", "end_us"),
+        parquet=True,
+    )
 
 
 def _events_attribution_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -450,9 +387,6 @@ def _events_attribution_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair set and gets the full batch-join oracle hash. In production the
     7-day watermark bounds each side's buffered state; the range bound
     additionally evicts clicks >30min past the right-side watermark."""
-    import tempfile
-    import uuid
-
     from polars_order_book_spark.sources.tables import load_table_stream
     from polars_order_book_spark.streaming import interval_join_stream
 
@@ -478,27 +412,9 @@ def _events_attribution_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_id",
         (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias("gap_us"),
     )
-    name = f"attr_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="attr_stream_ckpt_")
-    with scoped_stream_shuffle(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming query did not finish within 600s - refusing to read partial results"
-            )
-    return _drain_memory_sink(
-        spark,
-        spark.table(name).select("user_id", "click_id", "purchase_id", "gap_us"),
-        name,
-        ckpt,
+    return _run_stream(
+        pairs, "append", f"{sf_dir}/events.parquet",
+        lambda t: t.select("user_id", "click_id", "purchase_id", "gap_us"),
     )
 
 
@@ -520,9 +436,6 @@ def _events_attribution_stream_outer(spark: SparkSession, sf_dir: str) -> DataFr
     max-event-time minus the 1-minute delay — the same ms-precision modeling
     the append-mode sessionizer oracle uses). Matched pairs emit on arrival
     and are oracle-complete."""
-    import tempfile
-    import uuid
-
     from polars_order_book_spark.sources.tables import load_table_stream
     from polars_order_book_spark.streaming import interval_join_stream
 
@@ -551,27 +464,9 @@ def _events_attribution_stream_outer(spark: SparkSession, sf_dir: str) -> DataFr
         "purchase_id",
         (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias("gap_us"),
     )
-    name = f"attro_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="attro_stream_ckpt_")
-    with scoped_stream_shuffle(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming query did not finish within 600s - refusing to read partial results"
-            )
-    return _drain_memory_sink(
-        spark,
-        spark.table(name).select("user_id", "click_id", "purchase_id", "gap_us"),
-        name,
-        ckpt,
+    return _run_stream(
+        pairs, "append", f"{sf_dir}/events.parquet",
+        lambda t: t.select("user_id", "click_id", "purchase_id", "gap_us"),
     )
 
 
@@ -607,8 +502,6 @@ def _events_hourly_stream_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once when the watermark passes its end; state = open windows
     only. Oracle restricts to watermark-closed windows with the same
     ms-truncated arithmetic as the append-mode sessionizer."""
-    import tempfile
-
     from polars_order_book_spark.sources.tables import load_table_stream
 
     ev = load_table_stream(spark, sf_dir, "events")
@@ -625,23 +518,11 @@ def _events_hourly_stream_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    out_dir = tempfile.mkdtemp(prefix="hourly_append_") + "/hours"
-    ckpt = tempfile.mkdtemp(prefix="hourly_append_ckpt_")
-    with scoped_stream_shuffle(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming query did not finish within 600s - refusing to read partial results"
-            )
-    return spark.read.parquet(out_dir).select("hour_start_us", "n_events", "sum_value")
+    return _run_stream(
+        agg, "append", f"{sf_dir}/events.parquet",
+        lambda t: t.select("hour_start_us", "n_events", "sum_value"),
+        parquet=True,
+    )
 
 
 EVENTS_HOURLY_STREAM_APPEND_SQL = """
@@ -664,9 +545,6 @@ def _events_enriched_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch (picking up dim updates) and broadcasts — the stream never
     shuffles on the join key. Update-mode memory sink; final counts taken
     as max per segment (monotone under accumulation)."""
-    import tempfile
-    import uuid
-
     from polars_order_book_spark.sources.tables import load_table_stream
 
     ev = load_table_stream(spark, sf_dir, "events")
@@ -677,29 +555,9 @@ def _events_enriched_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", F.col("user_id") % 1500 + 1
     ).join(F.broadcast(cust), "c_custkey")
     agg = enriched.groupBy("c_mktsegment").agg(F.count(F.lit(1)).alias("n_events"))
-    name = f"enrich_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="enrich_stream_ckpt_")
-    with scoped_stream_shuffle(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming query did not finish within 600s - refusing to read partial results"
-            )
-    return _drain_memory_sink(
-        spark,
-        spark.table(name)
-        .groupBy("c_mktsegment")
-        .agg(F.max("n_events").alias("n_events")),
-        name,
-        ckpt,
+    return _run_stream(
+        agg, "update", f"{sf_dir}/events.parquet",
+        lambda t: t.groupBy("c_mktsegment").agg(F.max("n_events").alias("n_events")),
     )
 
 
@@ -2172,38 +2030,16 @@ def _events_user_profile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity-pinned). Update-mode memory sink re-emits a user's row each batch
     it appears in; the monotone n_events picks the final profile per user,
     making the harness multi-batch-robust."""
-    import tempfile
-    import uuid
-
     from polars_order_book_spark.sources.tables import load_table_stream
     from polars_order_book_spark.streaming import user_profile_stream
 
     prof = user_profile_stream(load_table_stream(spark, sf_dir, "events"))
-    name = f"profile_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="profile_stream_ckpt_")
-    with scoped_stream_shuffle(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            prof.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming query did not finish within 600s - refusing to read partial results"
-            )
     final = F.max(F.struct("n_events", "value_sum_micros", "last_us")).alias("p")
-    return _drain_memory_sink(
-        spark,
-        spark.table(name)
-        .groupBy("user_id")
+    return _run_stream(
+        prof, "update", f"{sf_dir}/events.parquet",
+        lambda t: t.groupBy("user_id")
         .agg(final)
         .select("user_id", "p.n_events", "p.value_sum_micros", "p.last_us"),
-        name,
-        ckpt,
     )
 
 
@@ -2336,9 +2172,6 @@ def _dedup_stream_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink. Every document is tagged with the canonical keep_id (min id
     of the hash's first micro-batch); a single-file availableNow replay is
     one batch, so the oracle is min(doc_id) per md5(text)."""
-    import tempfile
-    import uuid
-
     from polars_order_book_spark.streaming.dedup_stream import (
         dedup_stream_with_survivor,
     )
@@ -2347,25 +2180,9 @@ def _dedup_stream_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table_stream(spark, sf_dir, "documents")
     tagged = dedup_stream_with_survivor(docs)
-    name = f"dedup_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dedup_stream_ckpt_")
-    with scoped_stream_shuffle(spark, f"{sf_dir}/documents.parquet"):
-        q = (
-            tagged.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("streaming query did not finish within 600s - refusing to read partial results")
-    return _drain_memory_sink(
-        spark,
-        spark.table(name).select("content_hash", "doc_id", "keep_id", "is_first"),
-        name,
-        ckpt,
+    return _run_stream(
+        tagged, "update", f"{sf_dir}/documents.parquet",
+        lambda t: t.select("content_hash", "doc_id", "keep_id", "is_first"),
     )
 
 
@@ -2385,9 +2202,6 @@ def _events_stream_dropdup(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink. Only the key columns are emitted (which physical row
     survives within a batch is not defined), so the oracle is SELECT
     DISTINCT over the same keys."""
-    import tempfile
-    import uuid
-
     from polars_order_book_spark.streaming.dedup_stream import (
         drop_duplicates_within_watermark,
     )
@@ -2397,23 +2211,7 @@ def _events_stream_dropdup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = drop_duplicates_within_watermark(
         ev, ["user_id", "event_type"], ts_col="ts", watermark="1 hour"
     ).select("user_id", "event_type")
-    name = f"dropdup_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dropdup_stream_ckpt_")
-    with scoped_stream_shuffle(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            dd.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming query did not finish within 600s - refusing to read partial results"
-            )
-    return _drain_memory_sink(spark, spark.table(name), name, ckpt)
+    return _run_stream(dd, "append", f"{sf_dir}/events.parquet")
 
 
 EVENTS_STREAM_DROPDUP_SQL = """
@@ -2784,11 +2582,7 @@ def _orders_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["o_orderkey"],
         checkpoint=os.path.join(tmp, "ckpt"),
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "streaming merge did not finish within 600s - refusing partial table"
-        )
+    _await(q)
     return read_current(spark, tbl)
 
 
@@ -3721,9 +3515,6 @@ def _docs_wordfreq_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary. State is vocab-sized (corpus-independent, the same reason
     learn_bpe_merges may collect it); periodic learn_bpe_merges re-runs
     read this table instead of re-scanning the corpus."""
-    import tempfile
-    import uuid
-
     from polars_order_book_spark.operators.text import tokens
     from polars_order_book_spark.sources.tables import load_table_stream
 
@@ -3734,29 +3525,26 @@ def _docs_wordfreq_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    name = f"wordfreq_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="wordfreq_stream_ckpt_")
-    with scoped_stream_shuffle(spark, f"{sf_dir}/documents.parquet"):
-        q = (
-            wf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming query did not finish within 600s - refusing to read partial results"
-            )
-    return _drain_memory_sink(spark, spark.table(name), name, ckpt)
+    return _run_stream(wf, "complete", f"{sf_dir}/documents.parquet")
 
 
 DOCS_WORDFREQ_STREAM_SQL = r"""
 WITH tk AS (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS word FROM documents)
 SELECT word, count(*) AS freq FROM tk WHERE word <> '' GROUP BY word
 """
+
+
+def _hh_current(t: DataFrame) -> DataFrame:
+    """Current state per key = its rows at max(n_seen): each emission lists
+    every qualifying item of the key, so older emissions are superseded.
+    A window (keys-sized sink relation) avoids the memory-view self-join."""
+    from pyspark.sql import Window
+
+    return (
+        t.withColumn("__mx", F.max("n_seen").over(Window.partitionBy("event_type")))
+        .where(F.col("n_seen") == F.col("__mx"))
+        .select("event_type", "user_id", "n", "n_seen", "support")
+    )
 
 
 def _events_heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3768,45 +3556,12 @@ def _events_heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     max n_seen) equals the batch GROUP BY/HAVING heavy hitters — the
     documented exact regime. The sub-k-pruning regime (counters as lower
     bounds, no false negatives) is pinned by pytest."""
-    import tempfile
-    import uuid
-
     from polars_order_book_spark.streaming import heavy_hitters_stream
     from polars_order_book_spark.sources.tables import load_table_stream
 
     ev = load_table_stream(spark, sf_dir, "events")
     hh = heavy_hitters_stream(ev, "event_type", "user_id", support=0.008, k=100_000)
-    name = f"hh_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="hh_stream_ckpt_")
-    with scoped_stream_shuffle(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            hh.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming query did not finish within 600s - refusing to read partial results"
-            )
-    # Current state per key = its rows at max(n_seen): each emission lists
-    # every qualifying item of the key, so older emissions are superseded.
-    # A window (keys-sized sink relation) avoids the memory-view self-join.
-    from pyspark.sql import Window
-
-    out = spark.table(name)
-    w = Window.partitionBy("event_type")
-    return _drain_memory_sink(
-        spark,
-        out.withColumn("__mx", F.max("n_seen").over(w))
-        .where(F.col("n_seen") == F.col("__mx"))
-        .select("event_type", "user_id", "n", "n_seen", "support"),
-        name,
-        ckpt,
-    )
+    return _run_stream(hh, "update", f"{sf_dir}/events.parquet", _hh_current)
 
 
 EVENTS_HEAVY_HITTERS_STREAM_SQL = """
@@ -3939,9 +3694,6 @@ def _events_heavy_hitters_stream_abs(spark: SparkSession, sf_dir: str) -> DataFr
     users per type at every test SF, so counters are true counts and the
     final emission equals the batch GROUP BY/HAVING with the absolute
     threshold)."""
-    import tempfile
-    import uuid
-
     from polars_order_book_spark.streaming import heavy_hitters_stream
     from polars_order_book_spark.sources.tables import load_table_stream
 
@@ -3949,34 +3701,7 @@ def _events_heavy_hitters_stream_abs(spark: SparkSession, sf_dir: str) -> DataFr
     hh = heavy_hitters_stream(
         ev, "event_type", "user_id", min_count=20, k=100_000
     )
-    name = f"hh_stream_abs_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="hh_stream_abs_ckpt_")
-    with scoped_stream_shuffle(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            hh.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming query did not finish within 600s - refusing to read partial results"
-            )
-    from pyspark.sql import Window
-
-    out = spark.table(name)
-    w = Window.partitionBy("event_type")
-    return _drain_memory_sink(
-        spark,
-        out.withColumn("__mx", F.max("n_seen").over(w))
-        .where(F.col("n_seen") == F.col("__mx"))
-        .select("event_type", "user_id", "n", "n_seen", "support"),
-        name,
-        ckpt,
-    )
+    return _run_stream(hh, "update", f"{sf_dir}/events.parquet", _hh_current)
 
 
 EVENTS_HEAVY_HITTERS_STREAM_ABS_SQL = """
@@ -5556,11 +5281,7 @@ def _docs_classifier_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(in_dir)
     )
     q = score_stream(stream, w, os.path.join(tmp, "out"), os.path.join(tmp, "ckpt"))
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "streaming query did not finish within 600s - refusing to read partial results"
-        )
+    _await(q)
     return read_results(spark, os.path.join(tmp, "out"))
 
 
@@ -5710,11 +5431,7 @@ def _embeddings_ann_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5,
         n_planes=6,
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "streaming query did not finish within 600s - refusing to read partial results"
-        )
+    _await(q)
     return read_results(spark, os.path.join(tmp, "out"))
 
 
@@ -6759,9 +6476,7 @@ def _orders_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_exprs={"last_order": F.max("o_orderdate")},
         checkpoint=os.path.join(tmp, "ckpt"),
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("rollup maintenance stream did not finish in 600s")
+    _await(q)
     return read_current(spark, tbl).select(
         "o_custkey",
         "n_orders",
@@ -6838,9 +6553,7 @@ def _orders_join_view_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_exprs={"last_order": F.max("o_orderdate")},
         checkpoint=os.path.join(tmp, "ckpt"),
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("join-view maintenance stream did not finish in 600s")
+    _await(q)
     return read_current(spark, tbl).select(
         "c_mktsegment",
         "o_orderpriority",
@@ -7443,8 +7156,6 @@ def _events_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     State = open windows only (bounded by slide count × window span). The
     tumbling sibling is events_hourly_stream_append; the slide is what
     overlapping trailing metrics need without a batch rescan."""
-    import tempfile
-
     from polars_order_book_spark.sources.tables import load_table_stream
 
     ev = load_table_stream(spark, sf_dir, "events")
@@ -7461,23 +7172,11 @@ def _events_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    out_dir = tempfile.mkdtemp(prefix="sliding_stream_") + "/windows"
-    ckpt = tempfile.mkdtemp(prefix="sliding_stream_ckpt_")
-    with scoped_stream_shuffle(spark, f"{sf_dir}/events.parquet"):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming query did not finish within 600s - refusing to read partial results"
-            )
-    return spark.read.parquet(out_dir).select("window_start_us", "n_events", "sum_value")
+    return _run_stream(
+        agg, "append", f"{sf_dir}/events.parquet",
+        lambda t: t.select("window_start_us", "n_events", "sum_value"),
+        parquet=True,
+    )
 
 
 EVENTS_SLIDING_STREAM_SQL = """
@@ -7853,9 +7552,7 @@ def _events_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         count_col="n_rows",
         checkpoint=os.path.join(tmp, "ckpt"),
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("drift maintenance stream did not finish in 600s")
+    _await(q)
     return drift_from_counts(
         baseline,
         read_current(spark, tbl),

@@ -10,6 +10,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+# Stateful-stream shuffle width: one partition per 32 MiB of input, at
+# least 8 (see stream_shuffle_width).
+STREAM_SHUFFLE_FLOOR = 8
+STREAM_BYTES_PER_PARTITION = 32 * 1024 * 1024
+
 
 def shuffle_partitions(
     spark: SparkSession,
@@ -68,12 +73,7 @@ def fan_out_for_compute(df: DataFrame, *, min_partitions: "int | None" = None) -
     return df.repartition(target)
 
 
-def stream_shuffle_width(
-    spark: SparkSession,
-    *input_paths: str,
-    floor: int = 8,
-    bytes_per_partition: int = 32 * 1024 * 1024,
-) -> int:
+def stream_shuffle_width(spark: SparkSession, *input_paths: str) -> int:
     """Input-sized width for a STATEFUL streaming query's shuffle.
 
     A micro-batch stateful operator materializes one state-store instance
@@ -109,11 +109,12 @@ def stream_shuffle_width(
 
         warnings.warn(
             f"stream_shuffle_width: inputs {input_paths!r} add up to 0 bytes "
-            f"(missing, unreadable or empty); sizing to the floor {floor}",
+            "(missing, unreadable or empty); sizing to the floor "
+            f"{STREAM_SHUFFLE_FLOOR}",
             stacklevel=2,
         )
     ceiling = shuffle_partitions(spark)
-    want = max(floor, -(-total // bytes_per_partition))
+    want = max(STREAM_SHUFFLE_FLOOR, -(-total // STREAM_BYTES_PER_PARTITION))
     return min(ceiling, want)
 
 
@@ -124,14 +125,13 @@ class scoped_stream_shuffle:
     scoped width for its whole life (StreamExecution clones the session at
     ``start()``), so the scope only needs to cover query construction."""
 
-    def __init__(self, spark: SparkSession, *input_paths: str, floor: int = 8):
+    def __init__(self, spark: SparkSession, *input_paths: str):
         self.spark = spark
         self.paths = input_paths
-        self.floor = floor
 
     def __enter__(self) -> int:
         self._saved = self.spark.conf.get("spark.sql.shuffle.partitions", "200")
-        width = stream_shuffle_width(self.spark, *self.paths, floor=self.floor)
+        width = stream_shuffle_width(self.spark, *self.paths)
         self.spark.conf.set("spark.sql.shuffle.partitions", str(width))
         return width
 

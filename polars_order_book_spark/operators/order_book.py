@@ -505,22 +505,25 @@ def _side_to_lists(side: "_Side | _SideBest") -> tuple[list, list]:
     return list(prices), [side.levels[p] for p in prices]
 
 
-def _as_list(s: pd.Series) -> list:
-    """Column -> python list with None for nulls (fast path for the row loop).
+def _check_exact(s: pd.Series) -> None:
+    """Arrow hands a nullable integral column that holds a null to pandas as
+    float64, which holds integers exactly only below 2**53: a larger value
+    has already been rounded, so raise rather than fold a neighbouring
+    level, merge two books or emit a rounded pass-through value."""
+    if s.dtype.kind == "f" and (np.abs(s.to_numpy()) >= 2.0 ** 53).any():
+        raise OrderBookError(
+            f"column {s.name!r} arrived as float64 (it holds a null) with a "
+            "value of magnitude >= 2**53, which float64 cannot hold exactly"
+        )
 
-    Arrow hands a nullable integral column that holds a null to pandas as
-    float64, which holds integers exactly only below 2**53: a larger tick
-    has already been rounded, so it raises rather than fold a neighbouring
-    level."""
+
+def _as_list(s: pd.Series) -> list:
+    """Column -> python list with None for nulls (fast path for the row loop)."""
     if s.dtype == object:
         return [None if v is None or v is pd.NA else v for v in s.tolist()]
     arr = s.to_numpy()
     if arr.dtype.kind == "f":
-        if (np.abs(arr) >= 2.0 ** 53).any():
-            raise OrderBookError(
-                f"column {s.name!r} arrived as float64 (it holds a null) with a "
-                "value of magnitude >= 2**53, which float64 cannot hold exactly"
-            )
+        _check_exact(s)
         return [None if np.isnan(v) else int(v) for v in arr.tolist()]
     isna = s.isna()
     if isna.any():
@@ -631,6 +634,11 @@ def _apply_fold(
     keys = list(by or ())
     out_fields = [f for f in df.schema.fields if f.name not in temps]
     keep = [f.name for f in out_fields]
+    # Long keys and pass-through columns round like ticks once they reach
+    # pandas as float64 (the tick columns are checked in _as_list).
+    ticks = (price, qty, prev_price, prev_qty)
+    exact = [f.name for f in out_fields
+             if isinstance(f.dataType, LongType) and f.name not in ticks]
     schema = StructType(
         out_fields + [StructField(c, LongType(), True) for c in snap_cols]
     )
@@ -642,6 +650,8 @@ def _apply_fold(
             m = len(pdf)
             if not m:
                 continue
+            for c in exact:
+                _check_exact(pdf[c])
             # Decode the batch once; each run of equal book keys then folds
             # on slices of the decoded lists.
             seqs = pdf[seq].to_numpy()

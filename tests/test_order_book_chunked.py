@@ -143,6 +143,46 @@ def test_float64_rounded_tick_raises(spark):
     assert "'prev_price'" in str(ei.value) and "2**53" in str(ei.value)
 
 
+def test_float64_rounded_book_key_raises(spark):
+    """A null book key sends the key column to pandas as float64, where
+    2**53 and 2**53 + 1 are one value: the fold raises instead of folding
+    the two books as one (book 2**53 + 1 would report bid_price_2 = 7)."""
+    big = 2**53
+    rows = [(None, 0, True, 5, 1), (big, 1, True, 7, 1), (big + 1, 2, True, 9, 1)]
+    conf = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "1")  # all three books in one Arrow batch
+    try:
+        out = top_n_levels_from_price_updates(
+            spark.createDataFrame(rows, KEYED_SCHEMA), by=["book"], n=2
+        )
+        with pytest.raises(Exception) as ei:
+            out.collect()
+    finally:
+        spark.conf.set(conf, old)
+    assert "'book'" in str(ei.value) and "2**53" in str(ei.value)
+
+
+TS_SCHEMA = StructType(SCHEMA3.fields + [StructField("ts", LongType())])
+TS = 1700000000000000001
+
+
+def test_float64_rounded_pass_through_raises(spark):
+    """A pass-through bigint holding a null reaches pandas as float64, which
+    reads 1700000000000000001 as ...000: the fold raises instead."""
+    rows = [(0, True, 5, 1, None), (1, True, 6, 1, TS)]
+    out = top_n_levels_from_price_mutations(spark.createDataFrame(rows, TS_SCHEMA))
+    with pytest.raises(Exception) as ei:
+        out.collect()
+    assert "'ts'" in str(ei.value) and "2**53" in str(ei.value)
+
+
+def test_pass_through_long_without_null_is_exact(spark):
+    rows = [(0, True, 5, 1, TS - 2), (1, True, 6, 1, TS)]
+    out = top_n_levels_from_price_mutations(spark.createDataFrame(rows, TS_SCHEMA))
+    assert {r.seq: r.ts for r in out.collect()} == {0: TS - 2, 1: TS}
+
+
 def _plan(df):
     """Executed plan with expression and plan ids blanked, so the plans of
     separately built DataFrames compare equal when their shape is."""

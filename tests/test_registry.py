@@ -333,3 +333,13 @@ def test_entry_contract(spark):
     df = E.entry(spark)
     assert len(df.columns) >= 13
     assert df.count() > 0
+
+
+def test_streaming_rigs_share_one_lifecycle():
+    """Every streaming rig runs through ``_run_stream``/``_await``: one
+    bounded wait and one memory-sink writer in the whole registry, so a new
+    rig cannot copy the lifecycle (and its cleanup gaps) inline again."""
+    with open(E.__file__) as fh:
+        src = fh.read()
+    assert src.count("awaitTermination") == 1
+    assert src.count('format("memory")') == 1

@@ -1,15 +1,19 @@
-"""Memory-sink streaming rigs must not leak session state (r10 change 8).
+"""Streaming rigs must not leak session state or temp directories.
 
 A memory-sink table lives on the driver heap until the session stops, so a
 260-query oracle gate or full-registry bench quietly accumulates every
-rig's full output in the JVM that executes every later query. The rigs now
-drain through ``_drain_memory_sink`` (eager localCheckpoint → dropTempView
-→ checkpoint-dir rmtree): results must be identical AND the catalog must
-stay clean afterwards.
+rig's full output in the JVM that executes every later query. Every rig
+runs through ``_run_stream`` (start → bounded wait → eager localCheckpoint,
+then dropTempView and temp-dir rmtree in a ``finally``): results must be
+identical AND the catalog and temp directory must stay clean afterwards,
+whether the stream succeeds, fails or times out.
 """
 
 import os
 import sys
+import tempfile
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -62,3 +66,57 @@ def test_drained_rig_matches_batch_twin(spark):
         .collect()
     }
     assert got == want
+
+
+@pytest.mark.parametrize("parquet", [False, True], ids=["memory", "parquet"])
+def test_failed_rig_leaves_nothing_behind(spark, tmp_path, monkeypatch, parquet):
+    """A rig whose stream fails raises the stream's own exception, and its
+    memory-sink view, checkpoint and output directory are gone afterwards;
+    the same rig over valid input returns its rows and cleans up too."""
+    import __spark_entry__ as E
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import functions as F
+
+    src = tmp_path / "in"
+    spark.range(10).write.parquet(str(src))
+    rigs_tmp = tmp_path / "rigs"
+    rigs_tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(rigs_tmp))
+
+    def stream(limit):
+        ev = spark.readStream.schema("id long").parquet(str(src))
+        return ev.select(
+            "id", F.assert_true(F.col("id") < limit, "id past limit").alias("ok")
+        )
+
+    before = set(_temp_tables(spark))
+    with pytest.raises(StreamingQueryException, match="id past limit"):
+        E._run_stream(stream(5), "append", str(src), parquet=parquet)
+    assert set(_temp_tables(spark)) == before, "failed rig leaked its view"
+    assert not os.listdir(rigs_tmp), "failed rig left its temp directory"
+
+    out = E._run_stream(
+        stream(100), "append", str(src), lambda t: t.select("id"), parquet=parquet
+    )
+    assert sorted(r.id for r in out.collect()) == list(range(10))
+    assert set(_temp_tables(spark)) == before
+    assert not os.listdir(rigs_tmp)
+
+
+def test_await_stops_a_query_that_runs_out_of_time():
+    import __spark_entry__ as E
+
+    class Slow:
+        name, id, stopped = "slow", "id-1", False
+
+        def awaitTermination(self, timeout):
+            assert timeout == 600
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    q = Slow()
+    with pytest.raises(TimeoutError, match="slow did not finish within 600s"):
+        E._await(q)
+    assert q.stopped
