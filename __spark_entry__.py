@@ -10,7 +10,10 @@ aligned for the driver's order-insensitive value-hash compare).
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
+import uuid
 from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -55,6 +58,38 @@ def _await(q) -> None:
         )
 
 
+def _in_scratch(build):
+    """Run ``build(tmp)`` in a fresh scratch directory and return its result
+    as a bounded DataFrame detached from the directory by an eager
+    ``localCheckpoint`` (its blocks are freed when the returned DataFrame is
+    garbage-collected). The directory is removed in a ``finally``: on
+    success and on failure alike, so no rig that writes files leaves them
+    behind, and nothing reads them lazily after they are gone."""
+    tmp = tempfile.mkdtemp(prefix="rig_")
+    try:
+        return build(tmp).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _two_file_stream(df, key, tmp):
+    """Land ``df`` under ``tmp`` as two ordered parquet files, split on
+    ``key % 2``, and return a file stream that reads one per trigger: two
+    micro-batches over the same rows, in a fixed order."""
+    in_dir = os.path.join(tmp, "in")
+    os.makedirs(in_dir)
+    for i in (0, 1):
+        pdir = os.path.join(tmp, f"part_{i}")
+        df.where(F.col(key) % 2 == i).coalesce(1).write.parquet(pdir)
+        pq = next(f for f in os.listdir(pdir) if f.endswith(".parquet"))
+        os.rename(os.path.join(pdir, pq), os.path.join(in_dir, f"{i:03d}.parquet"))
+    return (
+        df.sparkSession.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+
+
 def _run_stream(df, mode, input_path, read=lambda t: t, parquet=False):
     """Run a streaming rig to completion and return its result as a bounded
     DataFrame: availableNow into a memory sink (or a parquet file sink with
@@ -62,21 +97,16 @@ def _run_stream(df, mode, input_path, read=lambda t: t, parquet=False):
     ``read`` maps the sink's contents (``spark.table`` of the memory sink,
     ``spark.read.parquet`` of the file sink) to the rig's result.
 
-    The result is detached by an eager ``localCheckpoint``; its blocks are
-    freed when the returned DataFrame is garbage-collected. The memory-sink
-    view (driver heap, otherwise kept until the session stops) and the
-    temp directory are released in a ``finally``: on success, on a failed
-    query and on a timeout alike, so a registry run never accumulates
-    earlier rigs' output."""
-    import shutil
-    import tempfile
-    import uuid
-
+    The checkpoint and file-sink output live in an ``_in_scratch``
+    directory. The memory-sink view (driver heap, otherwise kept until the
+    session stops) is dropped in a ``finally`` of its own, so on success,
+    on a failed query and on a timeout alike a registry run never
+    accumulates earlier rigs' output."""
     spark = df.sparkSession
     name = f"stream_rig_{uuid.uuid4().hex[:8]}"
-    tmp = tempfile.mkdtemp(prefix="stream_rig_")
-    out = os.path.join(tmp, "out")
-    try:
+
+    def build(tmp):
+        out = os.path.join(tmp, "out")
         w = (
             df.writeStream.queryName(name)
             .outputMode(mode)
@@ -86,11 +116,12 @@ def _run_stream(df, mode, input_path, read=lambda t: t, parquet=False):
         w = w.format("parquet").option("path", out) if parquet else w.format("memory")
         with scoped_stream_shuffle(spark, input_path):
             _await(w.start())
-        sunk = spark.read.parquet(out) if parquet else spark.table(name)
-        return read(sunk).localCheckpoint(eager=True)
+        return read(spark.read.parquet(out) if parquet else spark.table(name))
+
+    try:
+        return _in_scratch(build)
     finally:
         spark.catalog.dropTempView(name)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -247,9 +278,6 @@ def _ob_stream_parquet_sink(n):
     is the sink's own idempotence contract — a retried batch overwrites its
     own batch_id dir, never double-appends."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import shutil
-        import tempfile
-
         from polars_order_book_spark.sources.sinks import (
             append_stream_batch,
             read_stream_batches,
@@ -260,29 +288,26 @@ def _ob_stream_parquet_sink(n):
         ev = load_table_stream(spark, sf_dir, "events")
         stream = bs.keyed_mutations_stream(ev)
         snaps = top_n_levels_stream(stream, "mutations", by=["book"], n=n)
-        root = tempfile.mkdtemp(prefix="ob_stream_sink_data_")
-        ckpt = tempfile.mkdtemp(prefix="ob_stream_sink_ckpt_")
-        try:
+
+        def build(tmp):
+            # the checkpoint stays outside the sink root (read_stream_batches)
+            root = os.path.join(tmp, "data")
             with scoped_stream_shuffle(spark, f"{sf_dir}/events.parquet"):
                 q = (
                     snaps.writeStream.foreachBatch(
                         lambda bdf, bid: append_stream_batch(bdf, bid, root)
                     )
                     .outputMode("update")
-                    .option("checkpointLocation", ckpt)
+                    .option("checkpointLocation", os.path.join(tmp, "ckpt"))
                     .trigger(availableNow=True)
                     .start()
                 )
                 _await(q)
-            out = read_stream_batches(spark, root).select(
+            return read_stream_batches(spark, root).select(
                 "book", "seq", *snapshot_columns(n)
             )
-            # detach from the temp dirs before they are removed
-            out = out.localCheckpoint(eager=True)
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-            shutil.rmtree(ckpt, ignore_errors=True)
-        return out
+
+        return _in_scratch(build)
     return run
 
 
@@ -639,15 +664,17 @@ def _sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwrite) then read_partitioned, hashed against DuckDB reading the
     ORIGINAL table — proves the sink loses no rows/values and the partition
     column survives the directory encoding."""
-    import tempfile
-
     from polars_order_book_spark.sources.sinks import read_partitioned, write_partitioned
 
     part = load_table(spark, sf_dir, "part")
-    path = tempfile.mkdtemp(prefix="sink_rt_") + "/part"
-    write_partitioned(part, path, ["p_brand"])
-    back = read_partitioned(spark, path)
-    return back.select("p_partkey", "p_name", "p_brand", "p_retailprice")
+
+    def build(tmp):
+        path = os.path.join(tmp, "part")
+        write_partitioned(part, path, ["p_brand"])
+        back = read_partitioned(spark, path)
+        return back.select("p_partkey", "p_name", "p_brand", "p_retailprice")
+
+    return _in_scratch(build)
 
 
 SINK_ROUNDTRIP_SQL = """
@@ -663,19 +690,21 @@ def _orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (BIGINT/DOUBLE/VARCHAR/TIMESTAMP) across the format boundary. ORC
     timestamps round-trip as TIMESTAMP under the session's UTC pin; the
     epoch-seconds export keeps the oracle encoding-agnostic."""
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="orc_rt_") + "/orders"
-    orders.write.mode("overwrite").format("orc").save(path)
-    back = spark.read.format("orc").load(path)
-    return back.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        "o_totalprice",
-        F.unix_timestamp("o_orderdate").alias("o_date_epoch"),
-    )
+
+    def build(tmp):
+        path = os.path.join(tmp, "orders")
+        orders.write.mode("overwrite").format("orc").save(path)
+        back = spark.read.format("orc").load(path)
+        return back.select(
+            "o_orderkey",
+            "o_custkey",
+            "o_orderstatus",
+            "o_totalprice",
+            F.unix_timestamp("o_orderdate").alias("o_date_epoch"),
+        )
+
+    return _in_scratch(build)
 
 
 ORC_ROUNDTRIP_SQL = """
@@ -2225,8 +2254,6 @@ def _events_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_event_csv with an explicit schema (single pass, splittable scan),
     hashed against DuckDB reading the original parquet. Timestamps travel as
     unix micros so the comparison is exact, not format-dependent."""
-    import tempfile
-
     from polars_order_book_spark.sources.tables import load_event_csv
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -2237,17 +2264,20 @@ def _events_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         "props",
     )
-    path = tempfile.mkdtemp(prefix="csv_rt_") + "/events_csv"
-    ev.write.mode("overwrite").option("header", "true").csv(path)
-    # multiLine: quoted newlines inside props must not tear records (the
-    # default reader splits on raw newlines regardless of quoting).
-    back = load_event_csv(
-        spark,
-        path,
-        schema="event_id long, ts_us long, user_id long, event_type string, value double, props string",
-        multiLine="true",
-    )
-    return back
+
+    def build(tmp):
+        path = os.path.join(tmp, "events_csv")
+        ev.write.mode("overwrite").option("header", "true").csv(path)
+        # multiLine: quoted newlines inside props must not tear records (the
+        # default reader splits on raw newlines regardless of quoting).
+        return load_event_csv(
+            spark,
+            path,
+            schema="event_id long, ts_us long, user_id long, event_type string, value double, props string",
+            multiLine="true",
+        )
+
+    return _in_scratch(build)
 
 
 EVENTS_CSV_ROUNDTRIP_SQL = """
@@ -2289,8 +2319,6 @@ def _events_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     by line), hashed against DuckDB reading the original parquet. Timestamps
     travel as unix micros; the free-text props column exercises JSON string
     escaping."""
-    import tempfile
-
     from polars_order_book_spark.sources.tables import load_event_jsonl
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -2301,13 +2329,17 @@ def _events_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         "props",
     )
-    path = tempfile.mkdtemp(prefix="jsonl_rt_") + "/events_jsonl"
-    ev.write.mode("overwrite").json(path)
-    return load_event_jsonl(
-        spark,
-        path,
-        schema="event_id long, ts_us long, user_id long, event_type string, value double, props string",
-    )
+
+    def build(tmp):
+        path = os.path.join(tmp, "events_jsonl")
+        ev.write.mode("overwrite").json(path)
+        return load_event_jsonl(
+            spark,
+            path,
+            schema="event_id long, ts_us long, user_id long, event_type string, value double, props string",
+        )
+
+    return _in_scratch(build)
 
 
 EVENTS_JSONL_ROUNDTRIP_SQL = EVENTS_CSV_ROUNDTRIP_SQL
@@ -2550,8 +2582,6 @@ def _orders_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     global LWW), folded into a versioned parquet table via foreachBatch +
     merge_upsert, marker-flipped per batch. The oracle is the single-shot
     MERGE replay — the maintained table must converge to it exactly."""
-    import tempfile
-
     from polars_order_book_spark.streaming.merge_stream import (
         apply_changes_stream,
         init_table,
@@ -2559,31 +2589,20 @@ def _orders_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     base, changes = _orders_merge_parts(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="merge_stream_")
-    tbl = os.path.join(tmp, "table")
-    in_dir = os.path.join(tmp, "in")
-    os.makedirs(in_dir)
-    init_table(base, tbl)
-    schema = changes.schema
-    for i in (0, 1):
-        part = changes.where(F.col("o_orderkey") % 2 == i)
-        pdir = os.path.join(tmp, f"part_{i}")
-        part.coalesce(1).write.parquet(pdir)
-        pq_file = [f for f in os.listdir(pdir) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(pdir, pq_file), os.path.join(in_dir, f"{i:03d}.parquet"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = apply_changes_stream(
-        stream,
-        tbl,
-        ["o_orderkey"],
-        checkpoint=os.path.join(tmp, "ckpt"),
-    )
-    _await(q)
-    return read_current(spark, tbl)
+
+    def build(tmp):
+        tbl = os.path.join(tmp, "table")
+        init_table(base, tbl)
+        q = apply_changes_stream(
+            _two_file_stream(changes, "o_orderkey", tmp),
+            tbl,
+            ["o_orderkey"],
+            checkpoint=os.path.join(tmp, "ckpt"),
+        )
+        _await(q)
+        return read_current(spark, tbl)
+
+    return _in_scratch(build)
 
 
 ORDERS_MERGE_APPLY_SQL = """
@@ -5255,9 +5274,6 @@ def _docs_classifier_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch (streaming/classifier_stream.py). Scores are final in
     their own batch, so the union over batches must equal single-shot batch
     scoring — the documents_classifier_score oracle verifies exactly that."""
-    import tempfile
-    import uuid as _uuid
-
     from polars_order_book_spark.streaming.classifier_stream import (
         read_results,
         score_stream,
@@ -5266,23 +5282,14 @@ def _docs_classifier_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_with_weak_label(spark, sf_dir)
     w = clf.collect_weights(clf.logreg_train(docs, n_iter=2, dim=16, lr=0.5), 16)
     feed = docs.select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix=f"clf_stream_{_uuid.uuid4().hex[:6]}_")
-    in_dir = os.path.join(tmp, "in")
-    os.makedirs(in_dir)
-    for i in (0, 1):
-        part = feed.where(F.col("doc_id") % 2 == i)
-        pdir = os.path.join(tmp, f"part_{i}")
-        part.coalesce(1).write.parquet(pdir)
-        pq = [f for f in os.listdir(pdir) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(pdir, pq), os.path.join(in_dir, f"{i:03d}.parquet"))
-    stream = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = score_stream(stream, w, os.path.join(tmp, "out"), os.path.join(tmp, "ckpt"))
-    _await(q)
-    return read_results(spark, os.path.join(tmp, "out"))
+
+    def build(tmp):
+        out = os.path.join(tmp, "out")
+        stream = _two_file_stream(feed, "doc_id", tmp)
+        _await(score_stream(stream, w, out, os.path.join(tmp, "ckpt")))
+        return read_results(spark, out)
+
+    return _in_scratch(build)
 
 
 def _embeddings_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5397,9 +5404,6 @@ def _embeddings_ann_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch LSH operator inside foreachBatch — per-query results are final
     in the query's own batch, so the union over batches must equal the
     single-shot batch answer (the oracle)."""
-    import tempfile
-    import uuid as _uuid
-
     from polars_order_book_spark.streaming.similarity_stream import (
         read_results,
         topk_stream,
@@ -5409,30 +5413,21 @@ def _embeddings_ann_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    tmp = tempfile.mkdtemp(prefix=f"ann_stream_{_uuid.uuid4().hex[:6]}_")
-    in_dir = os.path.join(tmp, "in")
-    os.makedirs(in_dir)
-    for i in (0, 1):
-        part = queries.where(F.col("query_id") % 2 == i)
-        pdir = os.path.join(tmp, f"part_{i}")
-        part.coalesce(1).write.parquet(pdir)
-        pq = [f for f in os.listdir(pdir) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(pdir, pq), os.path.join(in_dir, f"{i:03d}.parquet"))
-    stream = (
-        spark.readStream.schema(queries.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = topk_stream(
-        stream,
-        emb,
-        os.path.join(tmp, "out"),
-        os.path.join(tmp, "ckpt"),
-        k=5,
-        n_planes=6,
-    )
-    _await(q)
-    return read_results(spark, os.path.join(tmp, "out"))
+
+    def build(tmp):
+        out = os.path.join(tmp, "out")
+        q = topk_stream(
+            _two_file_stream(queries, "query_id", tmp),
+            emb,
+            out,
+            os.path.join(tmp, "ckpt"),
+            k=5,
+            n_planes=6,
+        )
+        _await(q)
+        return read_results(spark, out)
+
+    return _in_scratch(build)
 
 
 def _text_dup_span_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6427,8 +6422,6 @@ def _orders_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal sums, so the final table equals the full recompute however the
     stream was batched — which is exactly the oracle (shared with
     orders_incremental_agg)."""
-    import tempfile
-
     from polars_order_book_spark.streaming.agg_stream import (
         init_table,
         maintain_rollup_stream,
@@ -6448,41 +6441,28 @@ def _orders_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     delta = orders.where(F.col("o_orderdate") >= cut)
-    tmp = tempfile.mkdtemp(prefix="rollup_stream_")
-    tbl = os.path.join(tmp, "table")
-    in_dir = os.path.join(tmp, "in")
-    os.makedirs(in_dir)
-    init_table(base_agg, tbl)
-    schema = delta.schema
-    for i in (0, 1):
-        part = delta.where(F.col("o_orderkey") % 2 == i)
-        pdir = os.path.join(tmp, f"part_{i}")
-        part.coalesce(1).write.parquet(pdir)
-        pq_file = [f for f in os.listdir(pdir) if f.endswith(".parquet")][0]
-        os.rename(
-            os.path.join(pdir, pq_file), os.path.join(in_dir, f"{i:03d}.parquet")
+
+    def build(tmp):
+        tbl = os.path.join(tmp, "table")
+        init_table(base_agg, tbl)
+        q = maintain_rollup_stream(
+            _two_file_stream(delta, "o_orderkey", tmp),
+            tbl,
+            ["o_custkey"],
+            count_col="n_orders",
+            sum_exprs={"sum_total": F.sum(dec)},
+            max_exprs={"last_order": F.max("o_orderdate")},
+            checkpoint=os.path.join(tmp, "ckpt"),
         )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = maintain_rollup_stream(
-        stream,
-        tbl,
-        ["o_custkey"],
-        count_col="n_orders",
-        sum_exprs={"sum_total": F.sum(dec)},
-        max_exprs={"last_order": F.max("o_orderdate")},
-        checkpoint=os.path.join(tmp, "ckpt"),
-    )
-    _await(q)
-    return read_current(spark, tbl).select(
-        "o_custkey",
-        "n_orders",
-        F.col("sum_total").cast("double").alias("sum_total"),
-        F.unix_micros(F.col("last_order")).alias("last_order_us"),
-    )
+        _await(q)
+        return read_current(spark, tbl).select(
+            "o_custkey",
+            "n_orders",
+            F.col("sum_total").cast("double").alias("sum_total"),
+            F.unix_micros(F.col("last_order")).alias("last_order_us"),
+        )
+
+    return _in_scratch(build)
 
 
 def _orders_join_view_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6494,8 +6474,6 @@ def _orders_join_view_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded via the replay-guarded "+= delta". The oracle is the FULL
     recompute over the complete join (shared with orders_incremental_join)
     — the maintained table must equal it however the stream was batched."""
-    import tempfile
-
     from polars_order_book_spark.streaming.agg_stream import (
         init_table,
         maintain_join_view_stream,
@@ -6522,46 +6500,33 @@ def _orders_join_view_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     delta = orders.where(F.col("o_orderdate") >= cut)
-    tmp = tempfile.mkdtemp(prefix="join_view_stream_")
-    tbl = os.path.join(tmp, "table")
-    in_dir = os.path.join(tmp, "in")
-    os.makedirs(in_dir)
-    init_table(base_view, tbl)
-    schema = delta.schema
-    for i in (0, 1):
-        part = delta.where(F.col("o_orderkey") % 2 == i)
-        pdir = os.path.join(tmp, f"part_{i}")
-        part.coalesce(1).write.parquet(pdir)
-        pq_file = [f for f in os.listdir(pdir) if f.endswith(".parquet")][0]
-        os.rename(
-            os.path.join(pdir, pq_file), os.path.join(in_dir, f"{i:03d}.parquet")
+
+    def build(tmp):
+        tbl = os.path.join(tmp, "table")
+        init_table(base_view, tbl)
+        q = maintain_join_view_stream(
+            _two_file_stream(delta, "o_orderkey", tmp),
+            customer,
+            on,
+            tbl,
+            keys,
+            count_col="n_rows",
+            sum_exprs={"sum_total": F.sum(dec)},
+            min_exprs={"min_total": F.min(dec)},
+            max_exprs={"last_order": F.max("o_orderdate")},
+            checkpoint=os.path.join(tmp, "ckpt"),
         )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = maintain_join_view_stream(
-        stream,
-        customer,
-        on,
-        tbl,
-        keys,
-        count_col="n_rows",
-        sum_exprs={"sum_total": F.sum(dec)},
-        min_exprs={"min_total": F.min(dec)},
-        max_exprs={"last_order": F.max("o_orderdate")},
-        checkpoint=os.path.join(tmp, "ckpt"),
-    )
-    _await(q)
-    return read_current(spark, tbl).select(
-        "c_mktsegment",
-        "o_orderpriority",
-        "n_rows",
-        F.col("sum_total").cast("double").alias("sum_total"),
-        F.col("min_total").cast("double").alias("min_total"),
-        F.unix_micros(F.col("last_order")).alias("last_order_us"),
-    )
+        _await(q)
+        return read_current(spark, tbl).select(
+            "c_mktsegment",
+            "o_orderpriority",
+            "n_rows",
+            F.col("sum_total").cast("double").alias("sum_total"),
+            F.col("min_total").cast("double").alias("min_total"),
+            F.unix_micros(F.col("last_order")).alias("last_order_us"),
+        )
+
+    return _in_scratch(build)
 
 
 def _docs_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6691,8 +6656,6 @@ def _sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — proves the rewrite loses no rows/values. The one-file-per-
     partition property itself is pinned by tests/test_sinks.py; at 100 TB
     this pass is what keeps scan planning off the listing bottleneck."""
-    import tempfile
-
     from polars_order_book_spark.sources.sinks import (
         compact_partitions,
         read_partitioned,
@@ -6702,11 +6665,15 @@ def _sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    path = tempfile.mkdtemp(prefix="compact_rt_") + "/events"
-    write_partitioned(ev.repartition(8), path, ["event_type"])
-    compact_partitions(spark, path, ["event_type"])
-    back = read_partitioned(spark, path)
-    return back.select("event_id", "user_id", "event_type", "value")
+
+    def build(tmp):
+        path = os.path.join(tmp, "events")
+        write_partitioned(ev.repartition(8), path, ["event_type"])
+        compact_partitions(spark, path, ["event_type"])
+        back = read_partitioned(spark, path)
+        return back.select("event_id", "user_id", "event_type", "value")
+
+    return _in_scratch(build)
 
 
 SINK_COMPACTION_SQL = """
@@ -7494,8 +7461,6 @@ def _events_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescan of either cohort's facts, ever. Additive counts are associative,
     so the final TV/KS equal the batch recompute however the stream was
     micro-batched: the oracle IS events_value_drift's SQL, verbatim."""
-    import tempfile
-
     from polars_order_book_spark.operators.profiling import drift_from_counts
     from polars_order_book_spark.streaming.agg_stream import (
         init_table,
@@ -7520,45 +7485,31 @@ def _events_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     current_facts = bucketed.where(F.col("ts") >= cut)
 
-    tmp = tempfile.mkdtemp(prefix="drift_stream_")
-    tbl = os.path.join(tmp, "table")
-    in_dir = os.path.join(tmp, "in")
-    os.makedirs(in_dir)
-    # current-cohort histogram starts EMPTY; the stream builds it
-    init_table(
-        current_facts.where(F.lit(False))
-        .groupBy("event_type", "bucket")
-        .agg(F.count(F.lit(1)).alias("n_rows")),
-        tbl,
-    )
-    schema = current_facts.schema
-    for i in (0, 1):
-        part = current_facts.where(F.col("event_id") % 2 == i)
-        pdir = os.path.join(tmp, f"part_{i}")
-        part.coalesce(1).write.parquet(pdir)
-        pq_file = [f for f in os.listdir(pdir) if f.endswith(".parquet")][0]
-        os.rename(
-            os.path.join(pdir, pq_file), os.path.join(in_dir, f"{i:03d}.parquet")
+    def build(tmp):
+        tbl = os.path.join(tmp, "table")
+        # current-cohort histogram starts EMPTY; the stream builds it
+        init_table(
+            current_facts.where(F.lit(False))
+            .groupBy("event_type", "bucket")
+            .agg(F.count(F.lit(1)).alias("n_rows")),
+            tbl,
         )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = maintain_rollup_stream(
-        stream,
-        tbl,
-        ["event_type", "bucket"],
-        count_col="n_rows",
-        checkpoint=os.path.join(tmp, "ckpt"),
-    )
-    _await(q)
-    return drift_from_counts(
-        baseline,
-        read_current(spark, tbl),
-        by=["event_type"],
-        bucket_col="bucket",
-    )
+        q = maintain_rollup_stream(
+            _two_file_stream(current_facts, "event_id", tmp),
+            tbl,
+            ["event_type", "bucket"],
+            count_col="n_rows",
+            checkpoint=os.path.join(tmp, "ckpt"),
+        )
+        _await(q)
+        return drift_from_counts(
+            baseline,
+            read_current(spark, tbl),
+            by=["event_type"],
+            bucket_col="bucket",
+        )
+
+    return _in_scratch(build)
 
 
 def _sink_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7571,22 +7522,24 @@ def _sink_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer read per FILE at planning time — fine per-batch, not something
     to leave on for a million-file table (persist the merged schema
     instead)."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="schema_evo_") + "/data"
-    ev.where(F.col("event_id") % 2 == 0).select(
-        "event_id", "user_id", "event_type"
-    ).write.parquet(out)
-    ev.where(F.col("event_id") % 2 == 1).select(
-        "event_id", "user_id", "event_type", "value"
-    ).write.mode("append").parquet(out)
-    merged = spark.read.option("mergeSchema", "true").parquet(out)
-    return merged.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count("value").alias("n_with_value"),
-        F.sum(F.col("value").cast("decimal(20,6)")).cast("double").alias("sum_value"),
-    )
+
+    def build(tmp):
+        out = os.path.join(tmp, "data")
+        ev.where(F.col("event_id") % 2 == 0).select(
+            "event_id", "user_id", "event_type"
+        ).write.parquet(out)
+        ev.where(F.col("event_id") % 2 == 1).select(
+            "event_id", "user_id", "event_type", "value"
+        ).write.mode("append").parquet(out)
+        merged = spark.read.option("mergeSchema", "true").parquet(out)
+        return merged.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count("value").alias("n_with_value"),
+            F.sum(F.col("value").cast("decimal(20,6)")).cast("double").alias("sum_value"),
+        )
+
+    return _in_scratch(build)
 
 
 SINK_SCHEMA_EVOLUTION_SQL = """

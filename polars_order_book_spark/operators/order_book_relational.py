@@ -117,7 +117,6 @@ def _segmented_running_levels(
     source: DataFrame,
     deltas: DataFrame,
     levels: DataFrame,
-    seq_bounds: "tuple[int, int] | None" = None,
 ) -> DataFrame:
     """Two-phase segmented scan of the running level aggregate.
 
@@ -130,46 +129,27 @@ def _segmented_running_levels(
         level_qty = carry_in (+ local running sum | coalesce local last)
 
     The carry-in relation is |buckets| × |levels| rows — broadcastable at any
-    event count. Bucket boundaries come from ``seq_bounds`` when the caller
-    supplies them (pure-literal plan), else LAZILY from a 1-row min/max(seq)
+    event count. Bucket boundaries come LAZILY from a 1-row min/max(seq)
     aggregate attached via broadcast cross join — the scalar-normalizer shape,
     so construction triggers zero Spark jobs and the bounds subtree executes
     with the query (its exchange is identical on both attach sites, which
     AQE/ReuseExchange dedupes).
     """
-    if seq_bounds is not None:
-        mn, mx = int(seq_bounds[0]), int(seq_bounds[1])
-        width = max(1, (mx - mn) // n_buckets + 1)
+    bounds = source.agg(
+        F.min(F.col(seq)).alias("__mn"), F.max(F.col(seq)).alias("__mx")
+    ).select(
+        "__mn",
+        F.expr(
+            f"greatest(1L, ((__mx - __mn) div {n_buckets}) + 1L)"
+        ).alias("__w"),
+    )
 
-        def bkt_of(rel: DataFrame) -> DataFrame:
-            # Clamp: caller-supplied bounds narrower than the data would put
-            # seqs outside [0, n_buckets] where the carry join has no domain
-            # row, silently nulling their levels. Any weakly-monotone-in-seq
-            # assignment is correct, so clamping to the edge buckets keeps
-            # results exact (same guard as the chunked fold's F.least).
-            return rel.withColumn(
-                "__bkt",
-                F.expr(
-                    f"least(greatest((`{seq}` - {mn}) div {width}, 0L), "
-                    f"CAST({n_buckets} AS BIGINT))"
-                ),
-            )
-    else:
-        bounds = source.agg(
-            F.min(F.col(seq)).alias("__mn"), F.max(F.col(seq)).alias("__mx")
-        ).select(
-            "__mn",
-            F.expr(
-                f"greatest(1L, ((__mx - __mn) div {n_buckets}) + 1L)"
-            ).alias("__w"),
+    def bkt_of(rel: DataFrame) -> DataFrame:
+        return (
+            rel.crossJoin(F.broadcast(bounds))
+            .withColumn("__bkt", F.expr(f"(`{seq}` - __mn) div __w"))
+            .drop("__mn", "__w")
         )
-
-        def bkt_of(rel: DataFrame) -> DataFrame:
-            return (
-                rel.crossJoin(F.broadcast(bounds))
-                .withColumn("__bkt", F.expr(f"(`{seq}` - __mn) div __w"))
-                .drop("__mn", "__w")
-            )
 
     g = bkt_of(g)
 
@@ -278,7 +258,6 @@ def top_n_levels_relational(
     n: int = 1,
     variant: str = "mutations",
     seq_buckets: int | None = None,
-    seq_bounds: "tuple[int, int] | None" = None,
 ) -> DataFrame:
     """Book snapshots via windows + grid join; returns (by..., seq, 4·n cols).
 
@@ -296,13 +275,11 @@ def top_n_levels_relational(
     ``by`` is empty (single global book), off when keyed (parallelism already
     scales with the number of books; pass explicitly for skewed books).
 
-    Construction is fully lazy either way: with ``seq_bounds`` the bucket
-    arithmetic is literal; without, bounds come from a 1-row min/max(seq)
-    aggregate broadcast-cross-joined in (the scalar-normalizer shape), which
-    executes with the query — no job runs at construction (pinned by
-    tests/test_order_book_relational.py's zero-jobs listener test). Pass
-    ``seq_bounds=(min_seq, max_seq)`` when known to shave the tiny bounds
-    subtree out of the runtime plan.
+    Construction is fully lazy: bucket bounds come from a 1-row
+    min/max(seq) aggregate broadcast-cross-joined in (the scalar-normalizer
+    shape), which executes with the query — no job runs at construction
+    (pinned by tests/test_order_book_relational.py's zero-jobs listener
+    test).
     """
     from polars_order_book_spark.operators.order_book import _check_n
 
@@ -352,7 +329,7 @@ def top_n_levels_relational(
     if seq_buckets and seq_buckets > 1:
         booked = _segmented_running_levels(
             g, variant, keys, seq, is_bid, price, qty, seq_buckets, df, deltas,
-            levels, seq_bounds,
+            levels,
         )
     else:
         w = (

@@ -76,6 +76,7 @@ SLOW_TESTS = {
     "test_order_book_streaming.py::test_stream_reorder_buffer_matches_sorted_batch_golden",
     "test_similarity.py::test_ivf_trained_centroids_improve_recall_on_clustered_data",
     "test_registry.py::test_query_analyzes[orders_merge_stream]",
+    "test_stream_rig_drain.py::test_file_writing_rig_outlives_its_scratch_dir[orders_merge_stream]",
     "test_dedup.py::test_star_components_long_chain",
     "test_property_differential.py::test_property_mutations_a_equals_b",
     "test_order_book_relational.py::test_differential_updates[42-3]",
@@ -102,7 +103,6 @@ SLOW_TESTS = {
     "test_order_book_chunked.py::test_property_fold_matches_naive_modify",
     "test_registry.py::test_query_analyzes[part_triangle_counts]",
     "test_order_book_streaming.py::test_stream_reorder_duplicate_pending_seq_fails_loudly",
-    "test_order_book_relational.py::test_relational_narrow_seq_bounds_clamp_exact",
     "test_profile_stream.py::test_profile_accumulates_across_micro_batches",
     "test_agg_stream.py::test_two_sequential_runs_both_fold_with_default_checkpoint",
     "test_join_stream.py::test_stream_left_outer_emits_null_for_unmatched",

@@ -121,39 +121,34 @@ def test_join_view_fold_batches_converge_to_full_join_recompute(spark):
         assert got == want
 
 
-def test_two_sequential_runs_both_fold_with_default_checkpoint(spark):
+def test_two_sequential_runs_both_fold_with_default_checkpoint(spark, tmp_path):
     """r8 self-review: with checkpoint=None each .start() previously got a
     TEMP checkpoint, so a second run's batch ids restarted at 0 and the
     replay guard (marker == _v0) silently DROPPED the new run's facts. The
     checkpoint now defaults to <base_path>/_checkpoint, so batch ids stay
     monotonic across runs and both runs' facts fold."""
-    import shutil
-
     from polars_order_book_spark.streaming.agg_stream import (
         maintain_rollup_stream,
     )
 
-    tmp = tempfile.mkdtemp(prefix="rollup_runs_")
-    try:
-        src = os.path.join(tmp, "src")
-        tbl = os.path.join(tmp, "t")
-        os.makedirs(src)
-        kw = dict(count_col="n_rows",
-                  sum_exprs={"sum_v": F.sum(F.col("v").cast("decimal(18,0)"))})
-        init_table(_rollup(_facts(spark, [])), tbl)
-        _facts(spark, [("a", 1), ("b", 2)]).write.mode("append").parquet(src)
-        stream = spark.readStream.schema("k string, v long").parquet(src)
-        q = maintain_rollup_stream(stream, tbl, ["k"], **kw)
-        q.awaitTermination(120)
-        # run 2: new facts land, a NEW query starts against the same table
-        _facts(spark, [("a", 10)]).write.mode("append").parquet(src)
-        stream2 = spark.readStream.schema("k string, v long").parquet(src)
-        q2 = maintain_rollup_stream(stream2, tbl, ["k"], **kw)
-        q2.awaitTermination(120)
-        got = _rowmap(read_current(spark, tbl))
-        assert got == {"a": (2, 11), "b": (1, 2)}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    tmp = str(tmp_path)
+    src = os.path.join(tmp, "src")
+    tbl = os.path.join(tmp, "t")
+    os.makedirs(src)
+    kw = dict(count_col="n_rows",
+              sum_exprs={"sum_v": F.sum(F.col("v").cast("decimal(18,0)"))})
+    init_table(_rollup(_facts(spark, [])), tbl)
+    _facts(spark, [("a", 1), ("b", 2)]).write.mode("append").parquet(src)
+    stream = spark.readStream.schema("k string, v long").parquet(src)
+    q = maintain_rollup_stream(stream, tbl, ["k"], **kw)
+    q.awaitTermination(120)
+    # run 2: new facts land, a NEW query starts against the same table
+    _facts(spark, [("a", 10)]).write.mode("append").parquet(src)
+    stream2 = spark.readStream.schema("k string, v long").parquet(src)
+    q2 = maintain_rollup_stream(stream2, tbl, ["k"], **kw)
+    q2.awaitTermination(120)
+    got = _rowmap(read_current(spark, tbl))
+    assert got == {"a": (2, 11), "b": (1, 2)}
 
 
 def test_current_marker_write_is_atomic(spark):

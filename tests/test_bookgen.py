@@ -1,7 +1,6 @@
 """Custom Python DataSource (bookgen): formulas, partitioning, pushdown,
 streaming offsets."""
 
-import tempfile
 import uuid
 
 import pytest
@@ -55,7 +54,7 @@ def test_filter_pushdown_narrows_generation(spark, gen):
     assert len(rows) == sum(1 for s in range(10, 50) if s % N_BOOKS == 3)
 
 
-def test_stream_reader_serves_same_rows(spark):
+def test_stream_reader_serves_same_rows(spark, tmp_path):
     bookgen.register(spark)
     src = (
         spark.readStream.format("bookgen")
@@ -69,7 +68,7 @@ def test_stream_reader_serves_same_rows(spark):
     q = (
         src.writeStream.format("memory").queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bg_ckpt_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="200 milliseconds")
         .start()
     )

@@ -185,12 +185,10 @@ def test_jsonl_event_ingest_folds(spark):
     assert out[3] == (5, 9)  # the 6-level emptied; best bid falls back to 5
 
 
-def test_event_csv_roundtrip_with_embedded_newlines(spark):
+def test_event_csv_roundtrip_with_embedded_newlines(spark, tmp_path):
     """Quoted newlines in free-text columns must survive a CSV round trip:
     the writer quotes them, and the reader needs multiLine=true or the
     record is torn at the raw newline (review finding, r4)."""
-    import tempfile
-
     from polars_order_book_spark.sources.tables import load_event_csv
 
     rows = [
@@ -199,7 +197,7 @@ def test_event_csv_roundtrip_with_embedded_newlines(spark):
         (3, 'comma, "quote", and\r\nnewline', 3.5),
     ]
     df = spark.createDataFrame(rows, "id long, text string, v double")
-    path = tempfile.mkdtemp(prefix="csv_nl_") + "/events_csv"
+    path = str(tmp_path / "events_csv")
     df.write.mode("overwrite").option("header", "true").csv(path)
     back = load_event_csv(
         spark, path, schema="id long, text string, v double", multiLine="true"

@@ -2,7 +2,6 @@
 
 import os
 import shutil
-import tempfile
 import time
 
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -22,37 +21,34 @@ BATCHES = [
 ]
 
 
-def test_survivor_mapping_sticky_across_batches(spark):
-    tmp = tempfile.mkdtemp(prefix="dedupstream_")
+def test_survivor_mapping_sticky_across_batches(spark, tmp_path):
+    tmp = str(tmp_path)
     in_dir = os.path.join(tmp, "in")
     ckpt = os.path.join(tmp, "ckpt")
     os.makedirs(in_dir)
-    try:
-        for i, batch in enumerate(BATCHES):
-            part = os.path.join(tmp, f"part_{i}")
-            spark.createDataFrame(batch, DOC_SCHEMA).coalesce(1).write.parquet(part)
-            pq = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
-            shutil.copy(os.path.join(part, pq), os.path.join(in_dir, f"{i:03d}.parquet"))
-            time.sleep(1.1)
+    for i, batch in enumerate(BATCHES):
+        part = os.path.join(tmp, f"part_{i}")
+        spark.createDataFrame(batch, DOC_SCHEMA).coalesce(1).write.parquet(part)
+        pq = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
+        shutil.copy(os.path.join(part, pq), os.path.join(in_dir, f"{i:03d}.parquet"))
+        time.sleep(1.1)
 
-        stream_in = (
-            spark.readStream.schema(DOC_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        tagged = dedup_stream_with_survivor(stream_in)
-        q = (
-            tagged.writeStream.format("memory")
-            .queryName("dedup_tags")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = {r["doc_id"]: r for r in spark.table("dedup_tags").collect()}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    stream_in = (
+        spark.readStream.schema(DOC_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+    tagged = dedup_stream_with_survivor(stream_in)
+    q = (
+        tagged.writeStream.format("memory")
+        .queryName("dedup_tags")
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    rows = {r["doc_id"]: r for r in spark.table("dedup_tags").collect()}
 
     assert set(rows) == {1, 2, 3, 4, 5}
     # "alpha" survivor fixed at min id of its first batch, sticky afterwards
@@ -64,7 +60,7 @@ def test_survivor_mapping_sticky_across_batches(spark):
     assert rows[1]["content_hash"] == rows[4]["content_hash"]
 
 
-def test_drop_duplicates_within_watermark_dedups_and_evicts(spark):
+def test_drop_duplicates_within_watermark_dedups_and_evicts(spark, tmp_path):
     """Within the horizon duplicates are dropped; once the watermark passes a
     key's arrival its state evicts, so a much-later recurrence re-emits."""
     from pyspark.sql.types import TimestampType
@@ -96,36 +92,33 @@ def test_drop_duplicates_within_watermark_dedups_and_evicts(spark):
         [(4, m(190))],
         [(1, m(195))],
     ]
-    tmp = tempfile.mkdtemp(prefix="dropdup_")
+    tmp = str(tmp_path)
     in_dir = os.path.join(tmp, "in")
     ckpt = os.path.join(tmp, "ckpt")
     os.makedirs(in_dir)
-    try:
-        for i, batch in enumerate(batches):
-            part = os.path.join(tmp, f"part_{i}")
-            spark.createDataFrame(batch, schema).coalesce(1).write.parquet(part)
-            pq = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
-            shutil.copy(os.path.join(part, pq), os.path.join(in_dir, f"{i:03d}.parquet"))
-            time.sleep(1.1)
+    for i, batch in enumerate(batches):
+        part = os.path.join(tmp, f"part_{i}")
+        spark.createDataFrame(batch, schema).coalesce(1).write.parquet(part)
+        pq = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
+        shutil.copy(os.path.join(part, pq), os.path.join(in_dir, f"{i:03d}.parquet"))
+        time.sleep(1.1)
 
-        stream_in = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        dd = drop_duplicates_within_watermark(stream_in, ["k"], ts_col="ts", watermark="1 hour")
-        q = (
-            dd.writeStream.format("memory")
-            .queryName("dropdup_wm")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        rows = [(r["k"], r["ts"]) for r in spark.table("dropdup_wm").collect()]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    stream_in = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+    dd = drop_duplicates_within_watermark(stream_in, ["k"], ts_col="ts", watermark="1 hour")
+    q = (
+        dd.writeStream.format("memory")
+        .queryName("dropdup_wm")
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    rows = [(r["k"], r["ts"]) for r in spark.table("dropdup_wm").collect()]
 
     ks = sorted(k for k, _ in rows)
     # key 1 emitted twice: first arrival, then the post-eviction recurrence
@@ -134,7 +127,7 @@ def test_drop_duplicates_within_watermark_dedups_and_evicts(spark):
     assert (1, m(195)) in rows  # re-emitted after state eviction
 
 
-def test_null_text_docs_are_excluded_not_grouped(spark):
+def test_null_text_docs_are_excluded_not_grouped(spark, tmp_path):
     """r8 self-review: md5(NULL) is NULL, so all null-text docs previously
     collapsed into ONE dedup group keyed (None,) and wrote a null into the
     non-nullable content_hash output field. A doc with no content has no
@@ -143,30 +136,27 @@ def test_null_text_docs_are_excluded_not_grouped(spark):
         StructField("doc_id", LongType(), False),
         StructField("text", StringType(), True),
     ])
-    tmp = tempfile.mkdtemp(prefix="dedupnull_")
+    tmp = str(tmp_path)
     in_dir = os.path.join(tmp, "in")
     ckpt = os.path.join(tmp, "ckpt")
     os.makedirs(in_dir)
-    try:
-        part = os.path.join(tmp, "part_0")
-        spark.createDataFrame(
-            [(1, "alpha"), (2, None), (3, None), (4, "alpha")], nullable
-        ).coalesce(1).write.parquet(part)
-        pq = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
-        shutil.copy(os.path.join(part, pq), os.path.join(in_dir, "000.parquet"))
-        stream_in = spark.readStream.schema(nullable).parquet(in_dir)
-        tagged = dedup_stream_with_survivor(stream_in)
-        q = (
-            tagged.writeStream.format("memory")
-            .queryName("dedup_null_tags")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = {r["doc_id"]: r for r in spark.table("dedup_null_tags").collect()}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    part = os.path.join(tmp, "part_0")
+    spark.createDataFrame(
+        [(1, "alpha"), (2, None), (3, None), (4, "alpha")], nullable
+    ).coalesce(1).write.parquet(part)
+    pq = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
+    shutil.copy(os.path.join(part, pq), os.path.join(in_dir, "000.parquet"))
+    stream_in = spark.readStream.schema(nullable).parquet(in_dir)
+    tagged = dedup_stream_with_survivor(stream_in)
+    q = (
+        tagged.writeStream.format("memory")
+        .queryName("dedup_null_tags")
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    rows = {r["doc_id"]: r for r in spark.table("dedup_null_tags").collect()}
     assert set(rows) == {1, 4}  # null-text docs excluded, not grouped
     assert rows[1]["keep_id"] == 1 and rows[4]["keep_id"] == 1

@@ -2,7 +2,6 @@
 batch operator, cross-micro-batch state accumulation, and the
 no-false-negative guarantee under pruning."""
 
-import tempfile
 import uuid
 from collections import Counter
 
@@ -15,13 +14,13 @@ from polars_order_book_spark.streaming import heavy_hitters_stream
 from polars_order_book_spark.streaming.frequency_stream import _emit_rows, _fold_mg
 
 
-def _run(spark, stream_df):
+def _run(spark, stream_df, base):
     name = f"hh_{uuid.uuid4().hex[:8]}"
     q = (
         stream_df.writeStream.format("memory")
         .queryName(name)
         .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hh_ckpt_"))
+        .option("checkpointLocation", f"{base}/ckpt")
         .trigger(availableNow=True)
         .start()
     )
@@ -55,7 +54,7 @@ def _write_batches(spark, base, batches):
     )
 
 
-def test_exact_regime_matches_batch_operator(spark):
+def test_exact_regime_matches_batch_operator(spark, tmp_path):
     import random
 
     rng = random.Random(5)
@@ -63,10 +62,10 @@ def test_exact_regime_matches_batch_operator(spark):
         (rng.choice(["a", "b"]), rng.choice([1, 1, 2, rng.randint(3, 40)]))
         for _ in range(2000)
     ]
-    base = tempfile.mkdtemp(prefix="hh_exact_")
+    base = str(tmp_path)
     src = _write_batches(spark, base, [rows])
     out = _final_state(
-        _run(spark, heavy_hitters_stream(src, "k", "item", support=0.05, k=10_000))
+        _run(spark, heavy_hitters_stream(src, "k", "item", support=0.05, k=10_000), base)
     )
     got = {(r["k"], r["item"]): r["n"] for r in out.collect()}
     from polars_order_book_spark.operators.frequency import heavy_hitters_by
@@ -79,7 +78,7 @@ def test_exact_regime_matches_batch_operator(spark):
     assert got == exp
 
 
-def test_min_count_exact_regime_matches_batch_operator(spark):
+def test_min_count_exact_regime_matches_batch_operator(spark, tmp_path):
     """The absolute-threshold mode (min_count) in the exact regime equals the
     batch heavy_hitters_by_count filter — the scale-aware contract that does
     not dilute as n_seen grows (cf. the relative mode's 0-row sf10 finding)."""
@@ -90,10 +89,10 @@ def test_min_count_exact_regime_matches_batch_operator(spark):
         (rng.choice(["a", "b"]), rng.choice([1, 1, 2, rng.randint(3, 40)]))
         for _ in range(2000)
     ]
-    base = tempfile.mkdtemp(prefix="hh_abs_")
+    base = str(tmp_path)
     src = _write_batches(spark, base, [rows[:1000], rows[1000:]])
     out = _final_state(
-        _run(spark, heavy_hitters_stream(src, "k", "item", min_count=25, k=10_000))
+        _run(spark, heavy_hitters_stream(src, "k", "item", min_count=25, k=10_000), base)
     )
     got = {(r["k"], r["item"]): r["n"] for r in out.collect()}
     exp = {
@@ -125,30 +124,30 @@ def test_emit_rows_min_count_threshold():
     assert set(rel["item"]) == {1, 2}
 
 
-def test_state_accumulates_across_micro_batches(spark):
+def test_state_accumulates_across_micro_batches(spark, tmp_path):
     """Item 7 is below threshold in every individual batch but above it in
     total — only carried state can find it."""
     b1 = [("a", 7)] * 3 + [("a", i) for i in range(100, 120)]
     b2 = [("a", 7)] * 3 + [("a", i) for i in range(200, 220)]
-    base = tempfile.mkdtemp(prefix="hh_batches_")
+    base = str(tmp_path)
     src = _write_batches(spark, base, [b1, b2])
     out = _final_state(
-        _run(spark, heavy_hitters_stream(src, "k", "item", support=0.1, k=10_000))
+        _run(spark, heavy_hitters_stream(src, "k", "item", support=0.1, k=10_000), base)
     )
     rows = {r["item"]: (r["n"], r["n_seen"]) for r in out.collect()}
     # total: 46 rows, item 7 count 6 >= ceil(0.1*46)=5; singletons are below
     assert rows == {7: (6, 46)}
 
 
-def test_pruning_regime_no_false_negatives_and_lower_bounds(spark):
+def test_pruning_regime_no_false_negatives_and_lower_bounds(spark, tmp_path):
     """k far below the distinct-item count: cuts happen, yet every true
     heavy hitter must still be emitted, and every emitted n must be a lower
     bound on the true count."""
     rows = [("a", 0)] * 120 + [("a", 1000 + i) for i in range(400)]
-    base = tempfile.mkdtemp(prefix="hh_prune_")
+    base = str(tmp_path)
     src = _write_batches(spark, base, [rows])
     out = _final_state(
-        _run(spark, heavy_hitters_stream(src, "k", "item", support=0.2, k=5))
+        _run(spark, heavy_hitters_stream(src, "k", "item", support=0.2, k=5), base)
     )
     got = {r["item"]: r["n"] for r in out.collect()}
     true = Counter(v for _, v in rows)
@@ -158,12 +157,12 @@ def test_pruning_regime_no_false_negatives_and_lower_bounds(spark):
         assert n <= true[item]
 
 
-def test_null_keys_and_items_excluded(spark):
+def test_null_keys_and_items_excluded(spark, tmp_path):
     rows = [("a", 1), ("a", 1), (None, 1), ("a", None)]
-    base = tempfile.mkdtemp(prefix="hh_nulls_")
+    base = str(tmp_path)
     src = _write_batches(spark, base, [rows])
     out = _final_state(
-        _run(spark, heavy_hitters_stream(src, "k", "item", support=0.5, k=100))
+        _run(spark, heavy_hitters_stream(src, "k", "item", support=0.5, k=100), base)
     )
     got = {(r["k"], r["item"]): (r["n"], r["n_seen"]) for r in out.collect()}
     assert got == {("a", 1): (2, 2)}

@@ -6,7 +6,6 @@ batch side doubles as the oracle for the streaming side.
 """
 
 import datetime as dt
-import tempfile
 import uuid
 
 import pytest
@@ -54,9 +53,9 @@ def test_batch_interval_join_boundaries(spark, clicks_purchases):
     assert pairs == {(10, 100), (11, 102), (20, 200)}
 
 
-def test_stream_matches_batch(spark, clicks_purchases):
+def test_stream_matches_batch(spark, clicks_purchases, tmp_path):
     clicks, purchases = clicks_purchases
-    base = tempfile.mkdtemp(prefix="ij_stream_")
+    base = str(tmp_path)
     clicks.write.parquet(f"{base}/clicks")
     purchases.write.parquet(f"{base}/purchases")
     sc = spark.readStream.schema(clicks.schema).parquet(f"{base}/clicks")
@@ -68,7 +67,7 @@ def test_stream_matches_batch(spark, clicks_purchases):
     q = (
         joined.writeStream.format("memory").queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ij_ckpt_"))
+        .option("checkpointLocation", f"{base}/ckpt")
         .trigger(availableNow=True)
         .start()
     )
@@ -77,13 +76,13 @@ def test_stream_matches_batch(spark, clicks_purchases):
     assert got == {(10, 100), (11, 102), (20, 200)}
 
 
-def test_stream_plan_is_symmetric_hash_join(spark, clicks_purchases):
+def test_stream_plan_is_symmetric_hash_join(spark, clicks_purchases, tmp_path):
     """The streaming plan must be a StreamingSymmetricHashJoin keyed on the
     equality column — the state-store-backed operator whose eviction the
     watermark + range bound drive. A fallback to a non-streaming join here
     would silently buffer everything."""
     clicks, purchases = clicks_purchases
-    base = tempfile.mkdtemp(prefix="ij_plan_")
+    base = str(tmp_path)
     clicks.write.parquet(f"{base}/clicks")
     purchases.write.parquet(f"{base}/purchases")
     sc = spark.readStream.schema(clicks.schema).parquet(f"{base}/clicks")
@@ -95,7 +94,7 @@ def test_stream_plan_is_symmetric_hash_join(spark, clicks_purchases):
     q = (
         joined.writeStream.format("memory").queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ijp_ckpt_"))
+        .option("checkpointLocation", f"{base}/ckpt")
         .trigger(processingTime="1 second")
         .start()
     )
@@ -119,13 +118,13 @@ def test_batch_same_code_path(spark, clicks_purchases):
     assert out.count() == 3
 
 
-def test_stream_left_outer_flushes_closed_windows(spark, clicks_purchases):
+def test_stream_left_outer_flushes_closed_windows(spark, clicks_purchases, tmp_path):
     """Left-outer: clicks with no purchase in-window emit with nulls once the
     final no-data batch advances the watermark past their join window. With a
     short delay (1 min) and data spanning 55 min, every click's window closes
     below the final watermark, so ALL unmatched clicks flush."""
     clicks, purchases = clicks_purchases
-    base = tempfile.mkdtemp(prefix="ij_outer_")
+    base = str(tmp_path)
     clicks.write.parquet(f"{base}/clicks")
     purchases.write.parquet(f"{base}/purchases")
     sc = spark.readStream.schema(clicks.schema).parquet(f"{base}/clicks")
@@ -139,7 +138,7 @@ def test_stream_left_outer_flushes_closed_windows(spark, clicks_purchases):
     q = (
         joined.writeStream.format("memory").queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ijo_ckpt_"))
+        .option("checkpointLocation", f"{base}/ckpt")
         .trigger(availableNow=True)
         .start()
     )
@@ -150,8 +149,8 @@ def test_stream_left_outer_flushes_closed_windows(spark, clicks_purchases):
     assert {(10, 100), (11, 102), (20, 200)} <= got
 
 
-def test_stream_left_outer_emits_null_for_unmatched(spark):
-    base = tempfile.mkdtemp(prefix="ij_null_")
+def test_stream_left_outer_emits_null_for_unmatched(spark, tmp_path):
+    base = str(tmp_path)
     clicks = spark.createDataFrame(
         [Row(user_id=9, click_id=90, click_ts=_ts(0)),
          Row(user_id=9, click_id=91, click_ts=_ts(50))],
@@ -172,7 +171,7 @@ def test_stream_left_outer_emits_null_for_unmatched(spark):
     q = (
         joined.writeStream.format("memory").queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ijn_ckpt_"))
+        .option("checkpointLocation", f"{base}/ckpt")
         .trigger(availableNow=True)
         .start()
     )
@@ -183,9 +182,9 @@ def test_stream_left_outer_emits_null_for_unmatched(spark):
     assert got == {(90, None), (91, 900)}
 
 
-def test_left_outer_requires_both_watermarks(spark, clicks_purchases):
+def test_left_outer_requires_both_watermarks(spark, clicks_purchases, tmp_path):
     clicks, purchases = clicks_purchases
-    base = tempfile.mkdtemp(prefix="ij_req_")
+    base = str(tmp_path)
     clicks.write.parquet(f"{base}/clicks")
     purchases.write.parquet(f"{base}/purchases")
     sc = spark.readStream.schema(clicks.schema).parquet(f"{base}/clicks")

@@ -236,19 +236,6 @@ def test_modify_to_mutations_invalid_row_fails_loudly(spark):
         modify_to_mutations(df).collect()
 
 
-def test_relational_narrow_seq_bounds_clamp_exact(spark):
-    """seq_bounds narrower than the data must still give exact snapshots:
-    out-of-range seqs clamp to the edge buckets (weakly monotone), they
-    must not silently lose levels."""
-    rows = [(s, s % 2 == 0, 10 + s % 3, 1) for s in range(1, 41)]
-    df = spark.createDataFrame(rows, "seq long, is_bid boolean, price long, qty long")
-    full = top_n_levels_relational(df, variant="mutations", n=2, seq_buckets=4)
-    narrow = top_n_levels_relational(
-        df, variant="mutations", n=2, seq_buckets=4, seq_bounds=(1, 10)
-    )
-    assert sorted(map(tuple, full.collect())) == sorted(map(tuple, narrow.collect()))
-
-
 def test_modify_to_mutations_rejects_what_the_fold_rejects(spark):
     """r8 self-review (execution-confirmed): a negative new qty with
     non-null prevs matched branch 1 of BOTH deltas and silently emitted a

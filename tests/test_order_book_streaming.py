@@ -9,7 +9,6 @@ a book must resume mid-stream exactly where the previous micro-batch left it.
 
 import os
 import shutil
-import tempfile
 import time
 
 import pytest
@@ -56,7 +55,7 @@ def _mutation_events():
 
 
 @pytest.mark.parametrize("n", [1, 2])
-def test_stream_matches_batch_across_microbatches(spark, n):
+def test_stream_matches_batch_across_microbatches(spark, n, tmp_path):
     rows = _mutation_events()
     batch_df = spark.createDataFrame(rows, EVENT_SCHEMA)
     expected = rows_by_seq(
@@ -66,46 +65,43 @@ def test_stream_matches_batch_across_microbatches(spark, n):
         seq="k",
     )
 
-    tmp = tempfile.mkdtemp(prefix="obstream_")
+    tmp = str(tmp_path)
     in_dir = os.path.join(tmp, "in")
     ckpt = os.path.join(tmp, "ckpt")
     os.makedirs(in_dir)
-    try:
-        # 3 chronological chunks -> 3 micro-batches (maxFilesPerTrigger=1,
-        # file source orders by modification time).
-        chunks = [rows[0:13], rows[13:27], rows[27:]]
-        for i, chunk in enumerate(chunks):
-            part = os.path.join(tmp, f"part_{i}")
-            spark.createDataFrame(chunk, EVENT_SCHEMA).coalesce(1).write.parquet(part)
-            pq = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
-            shutil.copy(os.path.join(part, pq), os.path.join(in_dir, f"{i:03d}.parquet"))
-            time.sleep(1.1)  # distinct mtimes => deterministic file order
+    # 3 chronological chunks -> 3 micro-batches (maxFilesPerTrigger=1,
+    # file source orders by modification time).
+    chunks = [rows[0:13], rows[13:27], rows[27:]]
+    for i, chunk in enumerate(chunks):
+        part = os.path.join(tmp, f"part_{i}")
+        spark.createDataFrame(chunk, EVENT_SCHEMA).coalesce(1).write.parquet(part)
+        pq = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
+        shutil.copy(os.path.join(part, pq), os.path.join(in_dir, f"{i:03d}.parquet"))
+        time.sleep(1.1)  # distinct mtimes => deterministic file order
 
-        stream_in = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        snaps = top_n_levels_stream(
-            stream_in, "mutations", by=["product_id"], n=n
-        )
-        q = (
-            snaps.writeStream.format("memory")
-            .queryName(f"book_snaps_{n}")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = rows_by_seq(
-            spark.table(f"book_snaps_{n}").withColumn(
-                "k", F.concat_ws("|", "product_id", "seq")
-            ),
-            seq="k",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    stream_in = (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+    snaps = top_n_levels_stream(
+        stream_in, "mutations", by=["product_id"], n=n
+    )
+    q = (
+        snaps.writeStream.format("memory")
+        .queryName(f"book_snaps_{n}")
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = rows_by_seq(
+        spark.table(f"book_snaps_{n}").withColumn(
+            "k", F.concat_ws("|", "product_id", "seq")
+        ),
+        seq="k",
+    )
 
     assert set(got) == set(expected)
     snap_cols = [c for c in next(iter(expected.values())) if c.startswith(("bid_", "ask_"))]
@@ -114,7 +110,7 @@ def test_stream_matches_batch_across_microbatches(spark, n):
             assert got[k][c] == exp[c], f"{k}.{c}: {got[k][c]} != {exp[c]}"
 
 
-def test_stream_updates_variant_matches_batch(spark):
+def test_stream_updates_variant_matches_batch(spark, tmp_path):
     """Set-level (updates) variant through the streaming path: one
     micro-batch, parity with the batch operator including qty=0 deletes."""
     from polars_order_book_spark import top_n_levels_from_price_updates
@@ -127,29 +123,26 @@ def test_stream_updates_variant_matches_batch(spark):
     batch_df = spark.createDataFrame(rows, EVENT_SCHEMA)
     expected = rows_by_seq(top_n_levels_from_price_updates(batch_df, by=["product_id"], n=2))
 
-    tmp = tempfile.mkdtemp(prefix="obstream_upd_")
+    tmp = str(tmp_path)
     in_dir = os.path.join(tmp, "in")
     ckpt = os.path.join(tmp, "ckpt")
     os.makedirs(in_dir)
-    try:
-        part = os.path.join(tmp, "part")
-        spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.parquet(part)
-        pq = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
-        shutil.copy(os.path.join(part, pq), os.path.join(in_dir, "000.parquet"))
-        stream_in = spark.readStream.schema(EVENT_SCHEMA).parquet(in_dir)
-        snaps = top_n_levels_stream(stream_in, "updates", by=["product_id"], n=2)
-        q = (
-            snaps.writeStream.format("memory")
-            .queryName("book_snaps_upd")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = rows_by_seq(spark.table("book_snaps_upd"))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    part = os.path.join(tmp, "part")
+    spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.parquet(part)
+    pq = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
+    shutil.copy(os.path.join(part, pq), os.path.join(in_dir, "000.parquet"))
+    stream_in = spark.readStream.schema(EVENT_SCHEMA).parquet(in_dir)
+    snaps = top_n_levels_stream(stream_in, "updates", by=["product_id"], n=2)
+    q = (
+        snaps.writeStream.format("memory")
+        .queryName("book_snaps_upd")
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = rows_by_seq(spark.table("book_snaps_upd"))
 
     snap_cols = [c for c in next(iter(expected.values())) if c.startswith(("bid_", "ask_"))]
     assert set(got) == set(expected)
@@ -158,7 +151,7 @@ def test_stream_updates_variant_matches_batch(spark):
             assert got[k][c] == exp[c], f"{k}.{c}: {got[k][c]} != {exp[c]}"
 
 
-def test_stream_multichunk_microbatch_folds_in_seq_order(spark):
+def test_stream_multichunk_microbatch_folds_in_seq_order(spark, tmp_path):
     """One micro-batch larger than arrow.maxRecordsPerBatch arrives at the
     state fold as MULTIPLE pandas chunks; events must be folded in seq order
     across chunks, not per-chunk. Input is written in reverse-seq order so a
@@ -174,7 +167,7 @@ def test_stream_multichunk_microbatch_folds_in_seq_order(spark):
     expected = rows_by_seq(top_n_levels_from_price_mutations(batch_df, by=["product_id"], n=2))
 
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    tmp = tempfile.mkdtemp(prefix="obchunk_")
+    tmp = str(tmp_path)
     in_dir = os.path.join(tmp, "in")
     ckpt = os.path.join(tmp, "ckpt")
     os.makedirs(in_dir)
@@ -199,7 +192,6 @@ def test_stream_multichunk_microbatch_folds_in_seq_order(spark):
         got = rows_by_seq(spark.table("book_snaps_chunks"))
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-        shutil.rmtree(tmp, ignore_errors=True)
 
     assert set(got) == set(expected)
     snap_cols = [c for c in next(iter(expected.values())) if c.startswith(("bid_", "ask_"))]
@@ -208,35 +200,32 @@ def test_stream_multichunk_microbatch_folds_in_seq_order(spark):
             assert got[k][c] == exp[c], f"{k}.{c}: {got[k][c]} != {exp[c]}"
 
 
-def test_stream_invalid_delete_fails_query(spark):
+def test_stream_invalid_delete_fails_query(spark, tmp_path):
     """The error contract survives streaming: an over-delete terminates the
     query with the same 'Qty exceeds available' failure the batch fold
     raises (ref: book_side.rs:110)."""
     rows = [("A", 0, True, 100, 3), ("A", 1, True, 100, -5)]
-    tmp = tempfile.mkdtemp(prefix="obstream_err_")
+    tmp = str(tmp_path)
     in_dir = os.path.join(tmp, "in")
     ckpt = os.path.join(tmp, "ckpt")
     os.makedirs(in_dir)
-    try:
-        part = os.path.join(tmp, "part")
-        spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.parquet(part)
-        pq = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
-        shutil.copy(os.path.join(part, pq), os.path.join(in_dir, "000.parquet"))
-        stream_in = spark.readStream.schema(EVENT_SCHEMA).parquet(in_dir)
-        snaps = top_n_levels_stream(stream_in, "mutations", by=["product_id"], n=1)
-        q = (
-            snaps.writeStream.format("memory")
-            .queryName("book_snaps_err")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        with pytest.raises(Exception) as e:
-            q.awaitTermination(120)
-        assert "Qty exceeds available" in str(e.value)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    part = os.path.join(tmp, "part")
+    spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.parquet(part)
+    pq = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
+    shutil.copy(os.path.join(part, pq), os.path.join(in_dir, "000.parquet"))
+    stream_in = spark.readStream.schema(EVENT_SCHEMA).parquet(in_dir)
+    snaps = top_n_levels_stream(stream_in, "mutations", by=["product_id"], n=1)
+    q = (
+        snaps.writeStream.format("memory")
+        .queryName("book_snaps_err")
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception) as e:
+        q.awaitTermination(120)
+    assert "Qty exceeds available" in str(e.value)
 
 
 def test_stream_requires_keys(spark):
@@ -245,43 +234,40 @@ def test_stream_requires_keys(spark):
         top_n_levels_stream(df, "mutations", by=[])
 
 
-def _run_stream_batches(spark, batches, name, horizon, n=2, timeout=180):
+def _run_stream_batches(spark, tmp, batches, name, horizon, n=2, timeout=180):
     """Feed chronological micro-batches (one file per trigger) through the
-    reorder-mode stream; return rows_by_seq of the memory sink."""
-    tmp = tempfile.mkdtemp(prefix="obreorder_")
+    reorder-mode stream under directory ``tmp``; return rows_by_seq of the
+    memory sink."""
     in_dir = os.path.join(tmp, "in")
     ckpt = os.path.join(tmp, "ckpt")
     os.makedirs(in_dir)
-    try:
-        for i, chunk in enumerate(batches):
-            part = os.path.join(tmp, f"part_{i}")
-            spark.createDataFrame(chunk, EVENT_SCHEMA).coalesce(1).write.parquet(part)
-            pq = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
-            shutil.copy(os.path.join(part, pq), os.path.join(in_dir, f"{i:03d}.parquet"))
-            time.sleep(1.1)
-        stream_in = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        snaps = top_n_levels_stream(
-            stream_in, "mutations", by=["product_id"], n=n, reorder_horizon=horizon
-        )
-        q = (
-            snaps.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout)
-        return rows_by_seq(spark.table(name))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    for i, chunk in enumerate(batches):
+        part = os.path.join(tmp, f"part_{i}")
+        spark.createDataFrame(chunk, EVENT_SCHEMA).coalesce(1).write.parquet(part)
+        pq = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
+        shutil.copy(os.path.join(part, pq), os.path.join(in_dir, f"{i:03d}.parquet"))
+        time.sleep(1.1)
+    stream_in = (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+    snaps = top_n_levels_stream(
+        stream_in, "mutations", by=["product_id"], n=n, reorder_horizon=horizon
+    )
+    q = (
+        snaps.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(timeout)
+    return rows_by_seq(spark.table(name))
 
 
-def test_stream_reorder_buffer_matches_sorted_batch_golden(spark):
+def test_stream_reorder_buffer_matches_sorted_batch_golden(spark, tmp_path):
     """Out-of-order arrival within the horizon: emitted snapshots must equal
     the sorted-batch golden for every seq at or below the final watermark
     minus the horizon; later seqs stay buffered (unemitted)."""
@@ -310,7 +296,7 @@ def test_stream_reorder_buffer_matches_sorted_batch_golden(spark):
     order2 = [12, 10, 11, 14, 13, 15, 17, 16, 19, 18]
     order3 = [21, 20, 22, 24, 23, 25, 27, 26, 29, 28]
     batches = [[rows[s] for s in o] for o in (order1, order2, order3)]
-    got = _run_stream_batches(spark, batches, "book_reorder_ok", horizon=5)
+    got = _run_stream_batches(spark, tmp_path, batches, "book_reorder_ok", horizon=5)
 
     emitted_bound = 29 - 5  # final watermark minus horizon
     assert set(got) == set(s for s in range(emitted_bound + 1))
@@ -320,17 +306,17 @@ def test_stream_reorder_buffer_matches_sorted_batch_golden(spark):
             assert got[s][c] == expected[s][c], f"seq {s} col {c}"
 
 
-def test_stream_reorder_too_late_fails_query(spark):
+def test_stream_reorder_too_late_fails_query(spark, tmp_path):
     """An event later than the horizon violates the arrival contract and must
     fail the query loudly, like every other contract violation."""
     rows1 = [("A", s, True, 100 + s % 3, 1) for s in range(10)]  # wm -> 9
     rows2 = [("A", 3, True, 100, 1)]  # 3 <= 9 - 5: beyond the horizon
     with pytest.raises(Exception) as e:
-        _run_stream_batches(spark, [rows1, rows2], "book_reorder_late", horizon=5)
+        _run_stream_batches(spark, tmp_path, [rows1, rows2], "book_reorder_late", horizon=5)
     assert "reorder horizon" in str(e.value)
 
 
-def test_stream_reorder_horizon_zero_equals_in_order_contract(spark):
+def test_stream_reorder_horizon_zero_equals_in_order_contract(spark, tmp_path):
     """horizon=0 folds everything already seen except nothing is held back:
     wm - 0 covers every seq, so in-order input matches the batch golden
     completely."""
@@ -341,7 +327,7 @@ def test_stream_reorder_horizon_zero_equals_in_order_contract(spark):
         )
     )
     got = _run_stream_batches(
-        spark, [rows[:6], rows[6:]], "book_reorder_zero", horizon=0
+        spark, tmp_path, [rows[:6], rows[6:]], "book_reorder_zero", horizon=0
     )
     assert set(got) == set(golden)
     snap_cols = [c for c in next(iter(golden.values())) if c.startswith(("bid_", "ask_"))]
@@ -350,7 +336,7 @@ def test_stream_reorder_horizon_zero_equals_in_order_contract(spark):
             assert got[s][c] == exp[c]
 
 
-def test_stream_reorder_duplicate_pending_seq_fails_loudly(spark):
+def test_stream_reorder_duplicate_pending_seq_fails_loudly(spark, tmp_path):
     """A duplicate of a still-pending seq must raise, not be folded twice:
     the too-late check alone would admit it and silently double-apply the
     qty delta."""
@@ -362,10 +348,10 @@ def test_stream_reorder_duplicate_pending_seq_fails_loudly(spark):
     from pyspark.errors import StreamingQueryException
 
     with _pytest.raises(StreamingQueryException, match="duplicate event seq 2"):
-        _run_stream_batches(spark, batches, "reorder_dup_sink", horizon=100)
+        _run_stream_batches(spark, tmp_path, batches, "reorder_dup_sink", horizon=100)
 
 
-def test_stream_in_order_replayed_seq_fails_loudly(spark):
+def test_stream_in_order_replayed_seq_fails_loudly(spark, tmp_path):
     """Default (in-order) mode: a micro-batch that repeats a seq the book
     already folded must fail the query instead of folding it again."""
     from pyspark.errors import StreamingQueryException
@@ -376,12 +362,12 @@ def test_stream_in_order_replayed_seq_fails_loudly(spark):
     ]
     with pytest.raises(StreamingQueryException,
                        match="event seq 2 arrived out of order"):
-        _run_stream_batches(spark, batches, "in_order_replay_sink", horizon=None)
+        _run_stream_batches(spark, tmp_path, batches, "in_order_replay_sink", horizon=None)
 
 
-def test_stream_in_order_duplicate_seq_in_batch_fails_loudly(spark):
+def test_stream_in_order_duplicate_seq_in_batch_fails_loudly(spark, tmp_path):
     from pyspark.errors import StreamingQueryException
 
     batches = [[("A", 1, True, 10, 3), ("A", 1, True, 10, 3)]]
     with pytest.raises(StreamingQueryException, match="duplicate event seq 1"):
-        _run_stream_batches(spark, batches, "in_order_dup_sink", horizon=None)
+        _run_stream_batches(spark, tmp_path, batches, "in_order_dup_sink", horizon=None)

@@ -2,7 +2,6 @@
 implementation gating."""
 
 import datetime as dt
-import tempfile
 import uuid
 
 import pytest
@@ -20,12 +19,12 @@ def _events(spark, rows):
     )
 
 
-def _run(spark, stream_df, extra_options=None):
+def _run(spark, stream_df, ckpt, extra_options=None):
     name = f"prof_{uuid.uuid4().hex[:8]}"
     w = (
         stream_df.writeStream.format("memory").queryName(name)
         .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="prof_ckpt_"))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
     )
     q = w.start()
@@ -33,11 +32,11 @@ def _run(spark, stream_df, extra_options=None):
     return spark.table(name)
 
 
-def test_profile_accumulates_across_micro_batches(spark):
+def test_profile_accumulates_across_micro_batches(spark, tmp_path):
     """Two files + maxFilesPerTrigger=1 → two micro-batches; the second
     batch's emission must include the first batch's state (count carries
     over, sum stays exact, last_us is the max across batches)."""
-    base = tempfile.mkdtemp(prefix="prof_batches_")
+    base = str(tmp_path)
     _events(spark, [(1, 0, 1.25), (1, 1, 2.5), (2, 0, 10.0)]).coalesce(1).write.parquet(
         f"{base}/data/b1"
     )
@@ -51,7 +50,7 @@ def test_profile_accumulates_across_micro_batches(spark):
         .option("recursiveFileLookup", "true")
         .parquet(f"{base}/data")
     )
-    out = _run(spark, user_profile_stream(src, impl="apply"))
+    out = _run(spark, user_profile_stream(src, impl="apply"), f"{base}/ckpt")
     # update sink appends one row per (user, batch-touched); final = max by n
     final = {
         r["user_id"]: r
@@ -84,15 +83,15 @@ def test_impl_gating_and_validation(spark):
 
 
 @pytest.mark.skipif(not tws_available(), reason="google.protobuf not installed")
-def test_tws_matches_apply(spark):
-    base = tempfile.mkdtemp(prefix="prof_tws_")
+def test_tws_matches_apply(spark, tmp_path):
+    base = str(tmp_path)
     _events(spark, [(1, 0, 1.5), (1, 1, 2.0), (3, 0, 7.0)]).write.parquet(
         f"{base}/data"
     )
     schema = spark.read.parquet(f"{base}/data").schema
     for impl in ("tws", "apply"):
         src = spark.readStream.schema(schema).parquet(f"{base}/data")
-        out = _run(spark, user_profile_stream(src, impl=impl))
+        out = _run(spark, user_profile_stream(src, impl=impl), f"{base}/ckpt_{impl}")
         rows = sorted(
             (r["user_id"], r["n_events"], r["value_sum_micros"]) for r in out.collect()
         )

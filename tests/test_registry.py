@@ -336,10 +336,15 @@ def test_entry_contract(spark):
 
 
 def test_streaming_rigs_share_one_lifecycle():
-    """Every streaming rig runs through ``_run_stream``/``_await``: one
-    bounded wait and one memory-sink writer in the whole registry, so a new
-    rig cannot copy the lifecycle (and its cleanup gaps) inline again."""
+    """Every streaming rig runs through ``_run_stream``/``_await`` and every
+    rig that writes files through ``_in_scratch``: one bounded wait, one
+    memory-sink writer, one scratch directory with its one removal and one
+    two-file stream input in the whole registry, so a new rig cannot copy
+    the lifecycle (and its cleanup gaps) inline again."""
     with open(E.__file__) as fh:
         src = fh.read()
     assert src.count("awaitTermination") == 1
     assert src.count('format("memory")') == 1
+    assert src.count("mkdtemp") == 1
+    assert src.count("rmtree") == 1
+    assert src.count("maxFilesPerTrigger") == 1

@@ -5,7 +5,6 @@ delta must hold."""
 import datetime
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType, TimestampType
@@ -57,34 +56,31 @@ def test_sessionize_stream_batch_mode_matches_gap_rule(spark):
     assert got == want
 
 
-def test_sessionize_stream_availablenow_equals_batch(spark):
-    tmp = tempfile.mkdtemp(prefix="sessstream_")
+def test_sessionize_stream_availablenow_equals_batch(spark, tmp_path):
+    tmp = str(tmp_path)
     in_dir = os.path.join(tmp, "in")
     ckpt = os.path.join(tmp, "ckpt")
     os.makedirs(in_dir)
-    try:
-        df = spark.createDataFrame(ROWS, EV_SCHEMA)
-        df.coalesce(1).write.parquet(os.path.join(tmp, "part"))
-        for f in os.listdir(os.path.join(tmp, "part")):
-            if f.endswith(".parquet"):
-                shutil.copy(os.path.join(tmp, "part", f), os.path.join(in_dir, f))
-        stream_in = spark.readStream.schema(EV_SCHEMA).parquet(in_dir)
-        sess = sessionize_stream(stream_in)
-        q = (
-            sess.writeStream.format("memory")
-            .queryName("sess_stream")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            (r["user_id"], r["start_us"], r["end_us"], r["n_events"])
-            for r in spark.table("sess_stream").collect()
-        }
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    df = spark.createDataFrame(ROWS, EV_SCHEMA)
+    df.coalesce(1).write.parquet(os.path.join(tmp, "part"))
+    for f in os.listdir(os.path.join(tmp, "part")):
+        if f.endswith(".parquet"):
+            shutil.copy(os.path.join(tmp, "part", f), os.path.join(in_dir, f))
+    stream_in = spark.readStream.schema(EV_SCHEMA).parquet(in_dir)
+    sess = sessionize_stream(stream_in)
+    q = (
+        sess.writeStream.format("memory")
+        .queryName("sess_stream")
+        .outputMode("complete")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = {
+        (r["user_id"], r["start_us"], r["end_us"], r["n_events"])
+        for r in spark.table("sess_stream").collect()
+    }
     batch = {
         (r["user_id"], r["start_us"], r["end_us"], r["n_events"])
         for r in sessionize_stream(spark.createDataFrame(ROWS, EV_SCHEMA)).collect()

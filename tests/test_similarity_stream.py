@@ -6,7 +6,6 @@ regardless of how the stream chops the query set.
 """
 
 import os
-import tempfile
 
 import numpy as np
 import pytest
@@ -33,14 +32,14 @@ def _write_query_batches(tmp, spark, queries, n_batches=3):
     return in_dir
 
 
-def test_topk_stream_matches_batch_lsh(spark):
+def test_topk_stream_matches_batch_lsh(spark, tmp_path):
     rng = np.random.default_rng(17)
     rows = [(i, rng.normal(size=64).tolist()) for i in range(120)]
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = corpus.where(F.col("vec_id") < 9).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    tmp = tempfile.mkdtemp(prefix="ann_stream_")
+    tmp = str(tmp_path)
     in_dir = _write_query_batches(tmp, spark, queries)
     stream = (
         spark.readStream.schema(queries.schema)
@@ -68,7 +67,7 @@ def test_topk_stream_matches_batch_lsh(spark):
     assert len({qid for qid, _ in got}) > 0
 
 
-def test_topk_stream_empty_batches_append_nothing(spark):
+def test_topk_stream_empty_batches_append_nothing(spark, tmp_path):
     rng = np.random.default_rng(19)
     rows = [(i, rng.normal(size=64).tolist()) for i in range(40)]
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
@@ -77,7 +76,7 @@ def test_topk_stream_empty_batches_append_nothing(spark):
     empty = corpus.where(F.lit(False)).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    tmp = tempfile.mkdtemp(prefix="ann_stream_empty_")
+    tmp = str(tmp_path)
     in_dir = os.path.join(tmp, "in")
     empty.coalesce(1).write.parquet(in_dir)
     stream = (
@@ -96,7 +95,7 @@ def test_topk_stream_empty_batches_append_nothing(spark):
         assert read_results(spark, out_dir).count() == 0
 
 
-def test_topk_stream_replay_overwrites_instead_of_duplicating(spark):
+def test_topk_stream_replay_overwrites_instead_of_duplicating(spark, tmp_path):
     """r8 self-review: the sink writes each batch to its own batch_id=N
     directory with overwrite, so a REPLAYED batch (simulated here by
     deleting the checkpoint and re-running the whole stream over the same
@@ -110,29 +109,26 @@ def test_topk_stream_replay_overwrites_instead_of_duplicating(spark):
     queries = corpus.where(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    tmp = tempfile.mkdtemp(prefix="ann_replay_")
-    try:
-        in_dir = _write_query_batches(tmp, spark, queries)
-        out, ckpt = os.path.join(tmp, "out"), os.path.join(tmp, "ckpt")
+    tmp = str(tmp_path)
+    in_dir = _write_query_batches(tmp, spark, queries)
+    out, ckpt = os.path.join(tmp, "out"), os.path.join(tmp, "ckpt")
 
-        def run():
-            stream = (
-                spark.readStream.schema(queries.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(in_dir)
-            )
-            q = topk_stream(stream, corpus, out, ckpt, k=5, n_planes=6)
-            assert q.awaitTermination(300)
+    def run():
+        stream = (
+            spark.readStream.schema(queries.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir)
+        )
+        q = topk_stream(stream, corpus, out, ckpt, k=5, n_planes=6)
+        assert q.awaitTermination(300)
 
-        run()
-        first = sorted(
-            map(tuple, read_results(spark, out).collect())
-        )
-        shutil.rmtree(ckpt)  # forget progress -> every batch replays
-        run()
-        second = sorted(
-            map(tuple, read_results(spark, out).collect())
-        )
-        assert second == first  # no duplicates, same results
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    run()
+    first = sorted(
+        map(tuple, read_results(spark, out).collect())
+    )
+    shutil.rmtree(ckpt)  # forget progress -> every batch replays
+    run()
+    second = sorted(
+        map(tuple, read_results(spark, out).collect())
+    )
+    assert second == first  # no duplicates, same results

@@ -1,8 +1,6 @@
 """Sink round-trips: partition pruning must reach the re-read plan."""
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -16,52 +14,46 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_partitioned_write_roundtrip_and_pruning(spark):
+def test_partitioned_write_roundtrip_and_pruning(spark, tmp_path):
     rows = [(i, ["click", "view", "error"][i % 3], float(i)) for i in range(300)]
     df = spark.createDataFrame(rows, ["event_id", "event_type", "value"])
-    tmp = tempfile.mkdtemp(prefix="sink_")
+    tmp = str(tmp_path)
     path = os.path.join(tmp, "events_out")
-    try:
-        write_partitioned(df, path, partition_by=["event_type"])
-        # hive layout on disk
-        assert sorted(
-            d for d in os.listdir(path) if d.startswith("event_type=")
-        ) == ["event_type=click", "event_type=error", "event_type=view"]
+    write_partitioned(df, path, partition_by=["event_type"])
+    # hive layout on disk
+    assert sorted(
+        d for d in os.listdir(path) if d.startswith("event_type=")
+    ) == ["event_type=click", "event_type=error", "event_type=view"]
 
-        back = read_partitioned(spark, path)
-        assert back.count() == 300
-        filtered = back.where(F.col("event_type") == "click")
-        assert filtered.count() == 100
-        plan = plan_of(filtered)
-        # pruning happens at planning: the partition filter reaches the scan
-        assert "PartitionFilters" in plan and "event_type" in plan.split("PartitionFilters", 1)[1][:200]
-        # values survive the round trip
-        got = {r["event_id"] for r in filtered.collect()}
-        assert got == {i for i in range(300) if i % 3 == 0}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    back = read_partitioned(spark, path)
+    assert back.count() == 300
+    filtered = back.where(F.col("event_type") == "click")
+    assert filtered.count() == 100
+    plan = plan_of(filtered)
+    # pruning happens at planning: the partition filter reaches the scan
+    assert "PartitionFilters" in plan and "event_type" in plan.split("PartitionFilters", 1)[1][:200]
+    # values survive the round trip
+    got = {r["event_id"] for r in filtered.collect()}
+    assert got == {i for i in range(300) if i % 3 == 0}
 
 
-def test_partitioned_overwrite_is_idempotent(spark):
+def test_partitioned_overwrite_is_idempotent(spark, tmp_path):
     rows = [(i, "a" if i < 5 else "b", float(i)) for i in range(10)]
     df = spark.createDataFrame(rows, ["id", "part", "v"])
-    tmp = tempfile.mkdtemp(prefix="sink_")
+    tmp = str(tmp_path)
     path = os.path.join(tmp, "t")
-    try:
-        write_partitioned(df, path, partition_by=["part"])
-        write_partitioned(df, path, partition_by=["part"])  # rerun
-        assert read_partitioned(spark, path).count() == 10
-        # DYNAMIC overwrite contract (review finding, r4): rewriting only
-        # partition 'a' must leave partition 'b' intact — static mode would
-        # delete it. This is what makes partial backfills safe.
-        write_partitioned(
-            df.where(F.col("part") == "a"), path, partition_by=["part"]
-        )
-        left = read_partitioned(spark, path)
-        assert left.count() == 10
-        assert left.where(F.col("part") == "b").count() == 5
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    write_partitioned(df, path, partition_by=["part"])
+    write_partitioned(df, path, partition_by=["part"])  # rerun
+    assert read_partitioned(spark, path).count() == 10
+    # DYNAMIC overwrite contract (review finding, r4): rewriting only
+    # partition 'a' must leave partition 'b' intact — static mode would
+    # delete it. This is what makes partial backfills safe.
+    write_partitioned(
+        df.where(F.col("part") == "a"), path, partition_by=["part"]
+    )
+    left = read_partitioned(spark, path)
+    assert left.count() == 10
+    assert left.where(F.col("part") == "b").count() == 5
 
 
 def test_bucketed_join_elides_shuffle(spark, tmp_path):

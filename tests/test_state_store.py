@@ -11,7 +11,6 @@ it in a finally block — it never stops or replaces the shared session.
 
 import os
 import sys
-import tempfile
 
 import pytest
 
@@ -25,7 +24,7 @@ needs_testdata = pytest.mark.skipif(
 
 
 @needs_testdata
-def test_sessionize_stream_rocksdb_matches_default(spark):
+def test_sessionize_stream_rocksdb_matches_default(spark, tmp_path):
     from polars_order_book_spark.sources.tables import load_table_stream
     from polars_order_book_spark.streaming import sessionize_stream
 
@@ -36,7 +35,7 @@ def test_sessionize_stream_rocksdb_matches_default(spark):
             sess.writeStream.format("memory")
             .queryName(name)
             .outputMode("complete")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix=f"{name}_ckpt_"))
+            .option("checkpointLocation", str(tmp_path / name))
             .trigger(availableNow=True)
             .start()
         )
@@ -103,7 +102,7 @@ def test_book_stream_rocksdb_matches_default(spark):
 
 
 @needs_testdata
-def test_interval_join_rocksdb_matches_default(spark):
+def test_interval_join_rocksdb_matches_default(spark, tmp_path):
     """Stream-stream interval join parity under the RocksDB provider — the
     symmetric join buffers BOTH sides in the state store, so backend parity
     matters more here than for any aggregation."""
@@ -131,7 +130,7 @@ def test_interval_join_rocksdb_matches_default(spark):
         q = (
             pairs.writeStream.format("memory").queryName(name)
             .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ij_ss_ckpt_"))
+            .option("checkpointLocation", str(tmp_path / name))
             .trigger(availableNow=True)
             .start()
         )

@@ -1,12 +1,14 @@
-"""Streaming rigs must not leak session state or temp directories.
+"""Registry rigs must not leak session state or temp directories.
 
 A memory-sink table lives on the driver heap until the session stops, so a
 260-query oracle gate or full-registry bench quietly accumulates every
 rig's full output in the JVM that executes every later query. Every rig
-runs through ``_run_stream`` (start → bounded wait → eager localCheckpoint,
-then dropTempView and temp-dir rmtree in a ``finally``): results must be
-identical AND the catalog and temp directory must stay clean afterwards,
-whether the stream succeeds, fails or times out.
+that writes files does so in one ``_in_scratch`` directory (build → eager
+localCheckpoint, then rmtree in a ``finally``), and every streaming rig
+runs through ``_run_stream`` on top of it (start → bounded wait, then
+dropTempView in a ``finally``): results must be identical AND still
+readable after the directory is gone, and the catalog and temp directory
+must stay clean afterwards, whether the rig succeeds, fails or times out.
 """
 
 import os
@@ -120,3 +122,37 @@ def test_await_stops_a_query_that_runs_out_of_time():
     with pytest.raises(TimeoutError, match="slow did not finish within 600s"):
         E._await(q)
     assert q.stopped
+
+
+def test_scratch_build_that_raises_leaves_nothing_behind(tmp_path, monkeypatch):
+    """A build that writes into its scratch directory and then fails
+    raises its own exception, and the directory is gone afterwards."""
+    import __spark_entry__ as E
+
+    rigs_tmp = tmp_path / "rigs"
+    rigs_tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(rigs_tmp))
+
+    def build(tmp):
+        with open(os.path.join(tmp, "partial.parquet"), "w") as fh:
+            fh.write("half a file")
+        raise ValueError("build failed mid-write")
+
+    with pytest.raises(ValueError, match="build failed mid-write"):
+        E._in_scratch(build)
+    assert not os.listdir(rigs_tmp), "failed build left its scratch directory"
+
+
+@pytest.mark.parametrize("name", ["sink_roundtrip", "orders_merge_stream"])
+def test_file_writing_rig_outlives_its_scratch_dir(spark, tmp_path, monkeypatch, name):
+    """A rig that writes files returns a result that still collects after
+    its builder returns, with nothing left in the temp directory."""
+    import __spark_entry__ as E
+
+    rigs_tmp = tmp_path / "rigs"
+    rigs_tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(rigs_tmp))
+
+    out = E.queries()[name](spark, SF_DIR)
+    assert not os.listdir(rigs_tmp), f"{name} left its temp directory"
+    assert len(out.collect()) > 0

@@ -5,8 +5,6 @@ the single-shot run's. This is the operational property every production
 stream relies on and no single-run test exercises.
 """
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 
@@ -32,14 +30,14 @@ def _run_until_done(stream_df, out_dir, ckpt):
     assert q.awaitTermination(300), "stream did not finish"
 
 
-def test_dedup_stream_state_survives_restart(spark):
+def test_dedup_stream_state_survives_restart(spark, tmp_path):
     from polars_order_book_spark.streaming.dedup_stream import (
         drop_exact_duplicates_stream,
     )
 
-    src = tempfile.mkdtemp(prefix="rec_src_")
-    out = tempfile.mkdtemp(prefix="rec_out_") + "/docs"
-    ckpt = tempfile.mkdtemp(prefix="rec_ckpt_")
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "docs")
+    ckpt = str(tmp_path / "ckpt")
     schema = "doc_id long, text string, ts timestamp"
 
     # Phase 1: three distinct texts (one duplicated within the phase).
@@ -67,15 +65,15 @@ def test_dedup_stream_state_survives_restart(spark):
     assert len(final) == 4
 
 
-def test_heavy_hitters_stream_state_survives_restart(spark):
+def test_heavy_hitters_stream_state_survives_restart(spark, tmp_path):
     """The Misra-Gries summary (counters + n_seen) must restore from the
     checkpoint: after a restart, an item's count spans BOTH phases, and the
     support threshold uses the lifetime n_seen."""
     from polars_order_book_spark.streaming import heavy_hitters_stream
 
-    src = tempfile.mkdtemp(prefix="rechh_src_")
-    ckpt = tempfile.mkdtemp(prefix="rechh_ckpt_")
-    sink = tempfile.mkdtemp(prefix="rechh_sink_") + "/hh"
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    sink = str(tmp_path / "hh")
     schema = "k string, item long"
 
     def write(rows):
@@ -117,8 +115,8 @@ def test_heavy_hitters_stream_state_survives_restart(spark):
     assert p2 == {2: (6, 11)}
 
 
-def test_windowed_agg_restart_equals_single_shot(spark):
-    src = tempfile.mkdtemp(prefix="recw_src_")
+def test_windowed_agg_restart_equals_single_shot(spark, tmp_path):
+    src = str(tmp_path / "src")
     schema = "ts timestamp, v long"
 
     def rows(hours):
@@ -145,16 +143,16 @@ def test_windowed_agg_restart_equals_single_shot(spark):
         _run_until_done(agg_stream(), out, ckpt)
 
     # Two-phase run with a restart between hour batches.
-    out_a = tempfile.mkdtemp(prefix="recw_a_") + "/w"
-    ckpt_a = tempfile.mkdtemp(prefix="recw_ca_")
+    out_a = str(tmp_path / "w_a")
+    ckpt_a = str(tmp_path / "ckpt_a")
     write([0, 1, 2])
     run(out_a, ckpt_a)
     write([3, 4, 5])
     run(out_a, ckpt_a)
 
     # Single-shot run over the identical final file set (fresh checkpoint).
-    out_b = tempfile.mkdtemp(prefix="recw_b_") + "/w"
-    ckpt_b = tempfile.mkdtemp(prefix="recw_cb_")
+    out_b = str(tmp_path / "w_b")
+    ckpt_b = str(tmp_path / "ckpt_b")
     run(out_b, ckpt_b)
 
     a = {(r["ws"], r["sv"], r["n"]) for r in spark.read.parquet(out_a).collect()}

@@ -11,7 +11,6 @@ the NEXT drift is caught by pytest, not by the driver.
 
 import datetime as dt
 import os
-import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -43,10 +42,10 @@ def _write_events(path: str, encoding: str) -> None:
 
 
 @pytest.fixture(scope="module")
-def encoded_dirs(spark):
+def encoded_dirs(spark, tmp_path_factory):
     """One sf-dir per encoding, each holding a 2-row events.parquet."""
     dirs = {}
-    root = tempfile.mkdtemp(prefix="ts_matrix_")
+    root = tmp_path_factory.mktemp("ts_matrix")
     for enc in ENCODINGS:
         d = os.path.join(root, enc)
         os.makedirs(d, exist_ok=True)
