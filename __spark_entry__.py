@@ -22,11 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polars_order_book_spark import (
-    modify_to_mutations,
     top_n_levels_from_price_mutations,
     top_n_levels_from_price_mutations_with_modify,
     top_n_levels_from_price_updates,
-    top_n_levels_relational,
     snapshot_columns,
 )
 from polars_order_book_spark.functions import conversion as conv
@@ -771,48 +769,6 @@ SELECT a.user_id, a.n_events, a.start_us, a.end_us
 FROM agg a, wm
 WHERE a.end_us + {_SESSION_GAP_US} <= wm.wm_us
 """
-
-
-def _ob_relational(n, variant):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = load_table(spark, sf_dir, "events")
-        stream = bs.mutations_stream(ev) if variant == "mutations" else bs.updates_stream(ev)
-        out = top_n_levels_relational(stream, n=n, variant=variant)
-        return out.select("seq", *snapshot_columns(n))
-    return run
-
-
-def _ob_relational_deep(n):
-    """Strategy B at the reference's monomorphization ceiling (r9): the
-    relational grid/rank/pivot path over the 40-price deep stream. The
-    pivot emits 4·20 columns from a rank bounded by the LIVE side depth
-    (>20 here), so the n-th-level truncation happens in the rank filter —
-    a different code path from the fold's snapshot emit, pinned under the
-    same oracle."""
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        stream = bs.deep_updates_stream(load_table(spark, sf_dir, "events"))
-        out = top_n_levels_relational(stream, n=n, variant="updates")
-        return out.select("seq", *snapshot_columns(n))
-    return run
-
-
-def _ob_relational_keyed(n):
-    """Strategy B on the multi-book stream: every window/grid key includes the
-    book column, so relational parallelism scales with books × levels."""
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        stream = bs.keyed_mutations_stream(load_table(spark, sf_dir, "events"))
-        out = top_n_levels_relational(stream, by=["book"], n=n, variant="mutations")
-        return out.select("book", "seq", *snapshot_columns(n))
-    return run
-
-
-def _ob_modify_relational(n):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        stream = bs.modify_stream(load_table(spark, sf_dir, "events"))
-        deltas = modify_to_mutations(stream)
-        out = top_n_levels_relational(deltas, n=n, variant="mutations")
-        return out.select("seq", *snapshot_columns(n))
-    return run
 
 
 # ---------------------------------------------------------------------------
@@ -7943,9 +7899,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "orders_merge_apply": _orders_merge_apply,
         "embeddings_outliers": _embeddings_outliers,
         "q13_customer_distribution": hq.q13_customer_distribution,
-        "ob_relational_updates_top3": _ob_relational(3, "updates"),
-        "ob_relational_modify_top2": _ob_modify_relational(2),
-        "ob_relational_keyed_mutations_top2": _ob_relational_keyed(2),
+        "ob_relational_updates_top3": _ob_updates(3),
+        "ob_relational_modify_top2": _ob_modify(2),
+        "ob_relational_keyed_mutations_top2": _ob_keyed_mutations(2),
         "q1_pricing_summary": hq.q1_pricing_summary,
         "documents_deduped": _documents_deduped,
         "dedup_components": _dedup_components,
@@ -7986,13 +7942,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # vs :101-105) and were driver-pinned only at n <= 3 before this
         "ob_mutations_top10_deep": _ob_mutations_deep(10),
         "ob_modify_top20_deep": _ob_modify_deep(20),
-        "ob_relational_updates_top20_deep": _ob_relational_deep(20),
+        "ob_relational_updates_top20_deep": _ob_updates_deep(20),
         "ob_chunked_mutations_top10_deep": _ob_mutations_deep(10),
         "ob_stream_keyed_mutations_top2": _ob_stream_keyed(2),
         "ob_stream_parquet_sink_top3": _ob_stream_parquet_sink(3),
         # r9: widest streaming state row x production state backend
         "ob_stream_deep_top20_rocksdb": _ob_stream_deep_rocksdb(20),
-        "ob_relational_mutations_top2": _ob_relational(2, "mutations"),
+        "ob_relational_mutations_top2": _ob_mutations(2),
         "events_hourly_pivot": hq.events_hourly_pivot,
         "orders_rolling_revenue": hq.orders_rolling_revenue,
         "events_value_quantiles_approx": hq.events_value_quantiles_approx,

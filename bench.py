@@ -225,10 +225,6 @@ def main() -> None:
         "ob_modify_top20_deep",
         # the PROVEN scale configuration of the segments strategy (16-char
         # keys); its tau=10 twin stays benched above as the wide-net shape.
-        # ob_relational_updates_top20_deep is registry-only: the ALTERNATIVE
-        # physical shape of the benched deep fold (grid x 80 levels at n=20
-        # is documented 2-3x the fold's wall; kept under the oracle to pin
-        # strategy parity at the ceiling, not as a perf claim).
         "documents_fuzzy_pairs_segments_tau3",
         # bounded-memory chunked fold carrying the widest (40-price) book
         # state across Arrow batches — the memory-bound production path
@@ -236,8 +232,9 @@ def main() -> None:
         "ob_chunked_mutations_top10_deep",
         # r10 headline rotation (VERDICT r9 task 4): 131 registered queries
         # had correctness but no sf0.1 perf row. Additions by family:
-        # the relational ALTERNATIVE at the ceiling (documented 2-3x the
-        # fold; benched now so that claim has a standing measurement)
+        # the ob_relational_* names run the same fold builders as their
+        # ob_* twins; they stay benched so the 150-row headline keeps its
+        # names
         "ob_relational_updates_top20_deep",
         # profiling / constraints / diff families
         "documents_profile",

@@ -7,8 +7,8 @@ This package re-expresses that operator family Spark-first:
 
 * ``operators.order_book``            — exact stateful fold (one streamed
   ``mapInPandas`` pass over the book-sorted events)
-* ``operators.order_book_relational`` — pure DataFrame/window formulation
-  (Catalyst-optimizable; doubles as a differential oracle)
+* ``operators.order_book_relational`` — modify → delta explode and the
+  mutation-stream validator (DataFrame-only helpers beside the fold)
 * ``functions.conversion``            — exchange-message → event-stream helpers
   (side→is_bid, float price scaling) mirroring README.md:131-162 of the reference
 * ``operators.dedup / similarity / text / multimodal`` — large-scale
@@ -26,7 +26,6 @@ from polars_order_book_spark.operators.order_book import (
     snapshot_columns,
 )
 from polars_order_book_spark.operators.order_book_relational import (
-    top_n_levels_relational,
     modify_to_mutations,
     mutation_stream_violations,
 )
@@ -81,7 +80,6 @@ __all__ = [
     "top_n_levels_from_price_updates",
     "top_n_levels_from_price_mutations",
     "top_n_levels_from_price_mutations_with_modify",
-    "top_n_levels_relational",
     "modify_to_mutations",
     "mutation_stream_violations",
     "OrderBookError",

@@ -30,8 +30,8 @@ sequential state; Spark shuffles by the book keys and each task folds its
 books in seq order, carrying the live book across Arrow batches, with
 numpy-buffered output (mirroring the preallocated builders at
 ref: polars_order_book/src/output.rs:47-54). Per-task memory is one Arrow
-batch plus the live book, at any book depth. For book-free relational
-execution see ``order_book_relational``.
+batch plus the live book, at any book depth. A keyless book therefore folds
+in one task.
 """
 
 from __future__ import annotations

@@ -302,9 +302,9 @@ CONVERSION_DELTAS_SQL = f"""
 
 
 def oracle_book_sql(stream_sql: str, n: int, variant: str, key: str | None = None) -> str:
-    """DuckDB SQL computing top-N snapshots for a derived stream — the
-    relational (strategy B) formulation: running aggregate per (side, price)
-    on an events × touched-levels grid, side-aware rank, pivot to 4·n cols.
+    """DuckDB SQL computing top-N snapshots for a derived stream, written
+    independently of the fold: running aggregate per (side, price) on an
+    events × touched-levels grid, side-aware rank, pivot to 4·n cols.
 
     ``variant``: 'mutations' (running SUM) or 'updates' (running LAST ignore
     nulls). Output: [key,] seq + bid_price_i/bid_qty_i/ask_price_i/ask_qty_i.
@@ -334,7 +334,7 @@ def oracle_book_sql(stream_sql: str, n: int, variant: str, key: str | None = Non
     k = f"{key}, " if key else ""
     if variant == "mutations":
         # Collapse multi-delta events on one level (same-price modify) so the
-        # grid join stays 1:1 — mirrors order_book_relational.
+        # grid join stays 1:1.
         stream_cte = ("raw AS ({}),\n"
                       "stream AS (SELECT {}seq, is_bid, price, CAST(sum(qty) AS BIGINT) AS qty "
                       "FROM raw GROUP BY {}seq, is_bid, price)").format(stream_sql, k, k)

@@ -50,7 +50,6 @@ SLOW_TESTS = {
     "test_nbbo.py::test_nbbo_matches_bruteforce",
     "test_property_differential.py::test_property_updates_a_equals_b",
     "test_nbbo.py::test_nbbo_chunked_equals_global",
-    "test_order_book_relational.py::test_differential_updates[7-1]",
     "test_property_differential.py::test_property_semdedup_matches_python_reference",
     "test_property_differential.py::test_property_nbbo_chunked_equals_global",
     "test_pipeline_ops.py::test_components_auto_falls_over_to_star_above_cap",
@@ -58,17 +57,11 @@ SLOW_TESTS = {
     "test_registry.py::test_query_analyzes[orders_rollup_stream]",
     "test_frequency.py::test_property_keyed_exact_vs_bruteforce",
     "test_frequency.py::test_property_exact_vs_bruteforce",
-    "test_order_book_relational.py::test_differential_updates[42-1]",
-    "test_order_book_relational.py::test_differential_tiny_bucket_counts[updates-7]",
-    "test_order_book_relational.py::test_differential_updates[7-3]",
-    "test_order_book_relational.py::test_modify_zero_delta_events_keep_snapshot_rows",
     "test_bpe.py::test_distributed_trainer_matches_driver_on_toy_corpus",
     "test_property_differential.py::test_property_fuzzy_pairs_complete_within_block",
     "test_property_differential.py::test_property_triangle_count_matches_bruteforce",
     "test_dedup.py::test_fuzzy_pairs_candidate_budget_fails_fast_and_is_inert_when_under",
     "test_bpe.py::test_distributed_trainer_adversarial_overlaps",
-    "test_order_book_relational.py::test_modify_to_mutations_explode",
-    "test_order_book_relational.py::test_construction_triggers_zero_jobs",
     "test_classifier.py::test_separable_concept_reaches_perfect_accuracy",
     "test_classifier.py::test_step_matches_numpy_reference",
     "test_agg_stream.py::test_fold_batches_converge_to_full_recompute",
@@ -79,7 +72,6 @@ SLOW_TESTS = {
     "test_stream_rig_drain.py::test_file_writing_rig_outlives_its_scratch_dir[orders_merge_stream]",
     "test_dedup.py::test_star_components_long_chain",
     "test_property_differential.py::test_property_mutations_a_equals_b",
-    "test_order_book_relational.py::test_differential_updates[42-3]",
     "test_property_differential.py::test_property_gap_fill_monotone_between_neighbors",
     "test_streaming_recovery.py::test_windowed_agg_restart_equals_single_shot",
     "test_order_book_streaming.py::test_stream_matches_batch_across_microbatches[1]",
@@ -110,7 +102,6 @@ SLOW_TESTS = {
     "test_classifier.py::test_count_features_match_numpy",
     "test_registry.py::test_query_analyzes[orders_join_view_stream]",
     "test_agg_stream.py::test_replayed_batch_is_not_double_added",
-    "test_order_book_relational.py::test_modify_negative_qty_null_prevs_is_plain_delete",
     "test_bpe.py::test_distributed_trainer_skips_null_words_like_driver",
     "test_merge.py::test_apply_changes_stream_folds_batches_and_versions",
     "test_agg_stream.py::test_join_view_fold_batches_converge_to_full_join_recompute",
@@ -141,7 +132,6 @@ SLOW_TESTS = {
     "test_dedup.py::test_banding_recall_eval_counts_truth_and_caught",
     "test_similarity.py::test_semdedup_incremental_self_id_pair_filtered_and_salt_equivalence",
     "test_streaming_recovery.py::test_dedup_stream_state_survives_restart",
-    "test_registry.py::test_query_analyzes[ob_relational_updates_top3]",
     "test_order_book_streaming.py::test_stream_reorder_too_late_fails_query",
     "test_pipeline_ops.py::test_components_auto_matches_star_random",
     "test_dedup.py::test_prefix_filter_hash_order_identical_results",
@@ -188,7 +178,6 @@ SLOW_TESTS = {
     "test_registry.py::test_query_analyzes[ann_recall_dims]",
     "test_constraints.py::test_all_rule_kinds_count_violations",
     "test_registry.py::test_query_analyzes[documents_deduped]",
-    "test_order_book_relational.py::test_differential_tiny_bucket_counts[updates-3]",
     "test_skew.py::test_ivf_salted_probe_identical",
     "test_skew.py::test_neardup_embedding_salted_identical",
     "test_bpe.py::test_distributed_trainer_rejects_reserved_control_bytes",
@@ -206,17 +195,14 @@ SLOW_TESTS = {
     "test_order_book_streaming.py::test_stream_multichunk_microbatch_folds_in_seq_order",
     "test_frequency.py::test_exact_quantile_two_pass_matches_rank_definition",
     "test_skew.py::test_salted_pair_join_equals_plain_join",
-    "test_order_book_relational.py::test_differential_tiny_bucket_counts[updates-2]",
     "test_registry.py::test_query_analyzes[ann_cosine_topk_lsh]",
     "test_text.py::test_apply_span_cuts_removes_exactly_interval_union",
     "test_unigram.py::test_em_tokens_identical_to_local_em_costs",
     "test_nbbo.py::test_nbbo_default_plan_has_no_global_timeline_window",
     "test_dedup.py::test_fuzzy_pairs_finds_typo_neardups_and_blocks_by_length",
-    "test_order_book_relational.py::test_differential_mutations[7-1]",
     "test_retrieval.py::test_mmr_lam_one_is_pure_relevance",
     "test_registry.py::test_query_analyzes[events_heavy_hitters_stream]",
     "test_registry.py::test_query_analyzes[embeddings_ann_stream]",
-    "test_order_book_relational.py::test_differential_mutations_grouped",
     "test_frequency.py::test_grouped_exact_quantiles_matches_rank_definition",
     "test_order_book_golden.py::test_n1_and_n2_top_level_consistency",
     "test_registry.py::test_query_analyzes[ob_nbbo_keyed_bounded]",
@@ -230,19 +216,14 @@ SLOW_TESTS = {
     "test_frequency_stream.py::test_pruning_regime_no_false_negatives_and_lower_bounds",
     "test_classifier.py::test_guardrails",
     "test_registry.py::test_query_analyzes[ob_nbbo_keyed]",
-    "test_order_book_relational.py::test_differential_mutations[7-3]",
     "test_layout.py::test_zorder_sort_clusters_both_dimensions",
     "test_sql_parity.py::test_oracle_sql_runs_verbatim_on_spark[q14_promo_revenue]",
     "test_dedup.py::test_star_components_null_and_self_edges_ignored",
     "test_registry.py::test_query_analyzes[embeddings_pq_ivf_topk]",
-    "test_order_book_relational.py::test_differential_mutations[42-1]",
     "test_constraints.py::test_empty_table_reports_zero_violations_not_null",
     "test_similarity.py::test_pq_topk_recall_on_separated_clusters",
     "test_registry.py::test_query_analyzes[orders_merge_apply]",
-    "test_order_book_relational.py::test_differential_tiny_bucket_counts[mutations-3]",
     "test_sql_parity.py::test_oracle_sql_runs_verbatim_on_spark[q15_top_supplier]",
-    "test_order_book_relational.py::test_differential_tiny_bucket_counts[mutations-7]",
-    "test_order_book_relational.py::test_differential_mutations[42-3]",
     "test_similarity.py::test_blas_topk_matches_bruteforce",
     "test_dedup.py::test_fuzzy_pairs_adjacent_length_buckets_still_compared",
     "test_bpe.py::test_apply_bpe_greedy_rank_order_and_roundtrip",
@@ -258,7 +239,6 @@ SLOW_TESTS = {
     "test_sinks.py::test_partitioned_overwrite_is_idempotent",
     "test_pipeline_ops.py::test_pack_sequences_contiguity_property",
     "test_registry.py::test_query_analyzes[events_drift_stream]",
-    "test_order_book_relational.py::test_differential_tiny_bucket_counts[mutations-2]",
     "test_registry.py::test_query_analyzes[ob_nbbo_keyed_chunked]",
     "test_graph.py::test_mass_approximately_conserved",
     "test_order_book_streaming.py::test_stream_updates_variant_matches_batch",

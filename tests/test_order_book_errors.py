@@ -79,15 +79,6 @@ def test_unsupported_levels(spark, n):
         top_n_levels_from_price_mutations(df, n=n)
 
 
-@pytest.mark.parametrize("n", [0, 21])
-def test_unsupported_levels_relational(spark, n):
-    from polars_order_book_spark import top_n_levels_relational
-
-    df = spark.createDataFrame([(1, True, 5, 3)], SCHEMA3)
-    with pytest.raises(OrderBookError, match="Unsupported number of levels"):
-        top_n_levels_relational(df, n=n)
-
-
 def test_update_qty_zero_on_missing_level_is_silent(spark):
     df = spark.createDataFrame([(1, True, 5, 0), (2, True, 6, 7)], SCHEMA3)
     out = top_n_levels_from_price_updates(df, n=1)

@@ -1,6 +1,8 @@
-"""Differential tests: strategy A (pandas fold) vs strategy B (relational),
-mirroring the reference's own Simple-vs-Tracked differential pattern
-(ref: order_book/tests/book_side_tests.rs)."""
+"""Differential tests: the fold against the Spark-free naive book
+(``tests/naive_book.py``), mirroring the reference's own Simple-vs-Tracked
+differential pattern (ref: order_book/tests/book_side_tests.rs), plus the
+relational helpers ``modify_to_mutations`` and
+``mutation_stream_violations``."""
 
 import random
 
@@ -12,10 +14,11 @@ from polars_order_book_spark import (
     modify_to_mutations,
     mutation_stream_violations,
     top_n_levels_from_price_mutations,
+    top_n_levels_from_price_mutations_with_modify,
     top_n_levels_from_price_updates,
-    top_n_levels_relational,
     snapshot_columns,
 )
+from naive_book import top_n, top_n_keyed
 
 SCHEMA3 = StructType([
     StructField("seq", LongType()),
@@ -31,6 +34,16 @@ SCHEMA5 = StructType(SCHEMA3.fields + [
 
 def by_seq(df, cols):
     return {r["seq"]: tuple(r[c] for c in cols) for r in df.collect()}
+
+
+def modify_books(spark, rows, n):
+    """The naive book of modify ``rows``, and the naive book of their
+    collected ``modify_to_mutations`` deltas. ``top_n`` keeps the state after
+    a seq's last delta, and both orders of a modify's two legs are valid on
+    a valid stream."""
+    deltas = modify_to_mutations(spark.createDataFrame(rows, SCHEMA5)).collect()
+    return (top_n(rows, "modify", n),
+            top_n([tuple(r) for r in deltas], "mutations", n))
 
 
 def gen_updates(rng, m, n_prices=12):
@@ -66,28 +79,7 @@ def test_differential_mutations(spark, n, seed):
     df = spark.createDataFrame(rows, SCHEMA3)
     cols = snapshot_columns(n)
     a = by_seq(top_n_levels_from_price_mutations(df, n=n), cols)
-    b = by_seq(top_n_levels_relational(df, n=n, variant="mutations"), cols)
-    assert a == b
-
-
-@pytest.mark.parametrize("seq_buckets", [2, 3, 7])
-@pytest.mark.parametrize("variant", ["mutations", "updates"])
-def test_differential_tiny_bucket_counts(spark, variant, seq_buckets):
-    """Hammer the segmented scan's carry-in: tiny bucket counts cut the
-    stream mid-flight, so every level's running aggregate crosses multiple
-    bucket boundaries."""
-    rng = random.Random(13)
-    rows = gen_mutations(rng, 240) if variant == "mutations" else gen_updates(rng, 240)
-    df = spark.createDataFrame(rows, SCHEMA3)
-    cols = snapshot_columns(2)
-    maker = (top_n_levels_from_price_mutations if variant == "mutations"
-             else top_n_levels_from_price_updates)
-    a = by_seq(maker(df, n=2), cols)
-    b = by_seq(
-        top_n_levels_relational(df, n=2, variant=variant, seq_buckets=seq_buckets),
-        cols,
-    )
-    assert a == b
+    assert a == top_n(rows, "mutations", n)
 
 
 @pytest.mark.parametrize("n", [1, 3])
@@ -97,8 +89,7 @@ def test_differential_updates(spark, n, seed):
     df = spark.createDataFrame(rows, SCHEMA3)
     cols = snapshot_columns(n)
     a = by_seq(top_n_levels_from_price_updates(df, n=n), cols)
-    b = by_seq(top_n_levels_relational(df, n=n, variant="updates"), cols)
-    assert a == b
+    assert a == top_n(rows, "updates", n)
 
 
 def test_differential_mutations_grouped(spark):
@@ -112,32 +103,23 @@ def test_differential_mutations_grouped(spark):
     cols = snapshot_columns(2)
     a = {(r["book"], r["seq"]): tuple(r[c] for c in cols)
          for r in top_n_levels_from_price_mutations(df, by=["book"], n=2).collect()}
-    b = {(r["book"], r["seq"]): tuple(r[c] for c in cols)
-         for r in top_n_levels_relational(df, by=["book"], n=2, variant="mutations").collect()}
-    assert a == b
+    assert a == top_n_keyed(rows, "mutations", 2)
 
 
 def test_modify_to_mutations_explode(spark):
-    """Ladder-walk modify stream -> exploded deltas -> relational == fold."""
+    """Ladder-walk modify stream: the book of the modify rows equals the
+    book of their exploded deltas."""
     rows = [
         (1, True, 1, 10, None, None), (2, False, 6, 60, None, None),
         (3, True, 2, 10, 1, 10), (4, False, 5, 60, 6, 60),
         (5, True, 3, 10, 2, 10), (6, False, 4, 60, 5, 60),
     ]
-    from polars_order_book_spark import top_n_levels_from_price_mutations_with_modify
-
-    df = spark.createDataFrame(rows, SCHEMA5)
-    cols = snapshot_columns(1)
-    a = by_seq(
-        top_n_levels_from_price_mutations_with_modify(
-            df, prev_price="prev_price", prev_qty="prev_qty", n=1), cols)
-    deltas = modify_to_mutations(df)
-    b = by_seq(top_n_levels_relational(deltas, n=1, variant="mutations"), cols)
+    a, b = modify_books(spark, rows, 1)
     assert a == b
 
 
 def test_violation_detector_flags_what_the_fold_raises_on(spark):
-    """Where strategy A raises (delete-on-missing, over-delete), the
+    """Where the fold raises (delete-on-missing, over-delete), the
     relational validator must flag the same seqs; valid streams yield none."""
     invalid = [
         (1, True, 5, 3),     # add 3@5
@@ -164,8 +146,8 @@ def test_violation_detector_flags_what_the_fold_raises_on(spark):
 
 def test_modify_zero_delta_events_keep_snapshot_rows(spark):
     """Events whose net delta is zero (pure no-op q=0 with null prevs, and a
-    qty-only modify with q == prev_qty) must still emit a snapshot row in
-    strategy B — one output row per input event, like strategy A."""
+    qty-only modify with q == prev_qty) must survive the explode, so the
+    delta stream still has a snapshot row per input event."""
     rows = [
         (1, True, 5, 10, None, None),   # add 10@5
         (2, True, 7, 0, None, None),    # pure no-op (ref: update.rs:120)
@@ -173,52 +155,39 @@ def test_modify_zero_delta_events_keep_snapshot_rows(spark):
         (4, False, 9, 3, None, None),   # add 3@9 ask
         (5, True, 6, 10, 5, 10),        # full modify 5 -> 6
     ]
-    from polars_order_book_spark import top_n_levels_from_price_mutations_with_modify
-
-    df = spark.createDataFrame(rows, SCHEMA5)
-    cols = snapshot_columns(2)
-    a = by_seq(
-        top_n_levels_from_price_mutations_with_modify(
-            df, prev_price="prev_price", prev_qty="prev_qty", n=2), cols)
-    deltas = modify_to_mutations(df)
-    b = by_seq(top_n_levels_relational(deltas, n=2, variant="mutations"), cols)
+    a, b = modify_books(spark, rows, 2)
     assert set(b) == {1, 2, 3, 4, 5}
     assert a == b
 
 
 def test_construction_triggers_zero_jobs(spark):
-    """The segmented-scan builder must be fully lazy: bucket bounds come from
-    a broadcast 1-row aggregate inside the plan, not an eager min/max job at
-    construction (r3 verdict item — an eager job re-executes the upstream
-    plan once per build, expensive when the input is an explode pipeline)."""
+    """Building a fold plan runs no Spark job: no eager min/max, count or
+    schema probe re-executes the upstream plan once per build (expensive
+    when the input is an explode pipeline). Pinned for the three fold
+    constructors, unkeyed and keyed."""
     rows = gen_mutations(random.Random(3), 120)
     df = spark.createDataFrame(rows, SCHEMA3)
+    keyed = df.selectExpr("seq % 3 AS book", "*")
+    modify = df.selectExpr(
+        "*", "CAST(NULL AS BIGINT) AS prev_price", "CAST(NULL AS BIGINT) AS prev_qty")
     sc = spark.sparkContext
     # StatusTracker job ids are monotonically increasing; no new ids => no jobs
     n_before = max([-1, *(sc.statusTracker().getJobIdsForGroup(None) or [])])
-    out = top_n_levels_relational(df, n=2, variant="mutations", seq_buckets=8)
+    outs = []
+    for by in (None, ["book"]):
+        src = keyed if by else df
+        outs += [
+            top_n_levels_from_price_updates(src, by=by, n=2),
+            top_n_levels_from_price_mutations(src, by=by, n=2),
+            top_n_levels_from_price_mutations_with_modify(
+                modify.selectExpr("seq % 3 AS book", "*") if by else modify,
+                prev_price="prev_price", prev_qty="prev_qty", by=by, n=2),
+        ]
     n_after = max([-1, *(sc.statusTracker().getJobIdsForGroup(None) or [])])
-    assert n_after == n_before, "top_n_levels_relational ran a Spark job at construction"
+    assert n_after == n_before, "a fold constructor ran a Spark job at construction"
     # and the lazily-built plan still computes the right thing
-    a = by_seq(top_n_levels_from_price_mutations(df, n=2), snapshot_columns(2))
-    b = by_seq(out, snapshot_columns(2))
-    assert a == b
-
-
-def test_relational_null_by_key_fails_loudly(spark):
-    """Strategy B's equi-joins drop null keys; rather than return silent
-    all-null snapshots (diverging from strategy A's eqNullSafe books), the
-    plan must fail per offending row."""
-    import pytest as _pytest
-    from pyspark.errors import SparkRuntimeException
-
-    df = spark.createDataFrame(
-        [("A", 1, True, 10, 5), (None, 2, True, 11, 3)],
-        "book string, seq long, is_bid boolean, price long, qty long",
-    )
-    out = top_n_levels_relational(df, variant="mutations", by=["book"], n=1)
-    with _pytest.raises(SparkRuntimeException, match="non-null"):
-        out.collect()
+    a = by_seq(outs[1], snapshot_columns(2))
+    assert a == top_n(rows, "mutations", 2)
 
 
 def test_modify_to_mutations_invalid_row_fails_loudly(spark):
@@ -264,10 +233,8 @@ def test_modify_negative_qty_null_prevs_is_plain_delete(spark):
     reference's `(Less, None, None) => delete_qty(abs)` arm (ref
     update.rs:141-147), NOT the negative-qty panic (which requires a
     non-null prev, ref update.rs:158). The explode must emit a single
-    negative delta, and strategy A and B must agree on the resulting book
+    negative delta, and the deltas must fold to the modify stream's book
     (qty 5 -> 2 after deleting 3)."""
-    from polars_order_book_spark import top_n_levels_from_price_mutations_with_modify
-
     rows = [
         (1, True, 10, 5, None, None),   # add 5 @ 10
         (2, True, 10, -3, None, None),  # plain delete of 3 @ 10
@@ -277,12 +244,6 @@ def test_modify_negative_qty_null_prevs_is_plain_delete(spark):
     assert len(deltas) == 2
     d2 = [r for r in deltas if r["seq"] == 2]
     assert len(d2) == 1 and (d2[0]["price"], d2[0]["qty"]) == (10, -3)
-    cols = snapshot_columns(1)
-    a = by_seq(
-        top_n_levels_from_price_mutations_with_modify(
-            df, prev_price="prev_price", prev_qty="prev_qty", n=1), cols)
-    b = by_seq(
-        top_n_levels_relational(
-            modify_to_mutations(df), n=1, variant="mutations"), cols)
+    a, b = modify_books(spark, rows, 1)
     assert a == b
     assert a[2] == (10, 2, None, None)

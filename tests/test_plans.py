@@ -6,9 +6,8 @@ Each assertion inspects the executed/physical plan string — the same evidence
 * filters and column pruning pushed into the parquet scan
 * map-side partial aggregation before the shuffle
 * no CartesianProduct anywhere (broadcast nested loop is allowed only for
-  the deliberate bounded cross joins in ANN / grid assembly)
-* the relational book's running aggregate shuffles on the seq-bucket key
-  (parallelism not capped by the price domain)
+  the deliberate bounded cross joins in ANN / 1-row normalizers)
+* the batch fold stays one exchange + one MapInPandas
 """
 
 import os
@@ -17,7 +16,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from polars_order_book_spark import top_n_levels_relational
 from polars_order_book_spark.plans import book_streams as bs
 from polars_order_book_spark.plans import queries as hq
 from polars_order_book_spark.sources.tables import load_table
@@ -74,14 +72,6 @@ def test_filter_pushdown_reaches_scan(spark):
 
 
 @needs_testdata
-def test_relational_book_shuffles_on_seq_bucket(spark):
-    stream = bs.mutations_stream(load_table(spark, SF_DIR, "events"))
-    plan = plan_of(top_n_levels_relational(stream, n=2, variant="mutations"))
-    assert "__bkt" in plan  # segmented-scan partition key present
-    assert "hashpartitioning(__bkt" in plan
-
-
-@needs_testdata
 def test_streamed_fold_is_single_pass(spark):
     """The batch fold must stay the single-pass shape: ONE exchange on the
     book keys + in-partition sort + ONE MapInPandas — no chained cogrouped
@@ -111,21 +101,12 @@ def test_whole_stage_codegen_covers_text_ops(spark):
 # --- negative invariants over the WHOLE registry -----------------------------
 #
 # Sites where a BroadcastNestedLoopJoin is deliberate and bounded:
-#   * the unkeyed relational book's events x touched-levels grid (build side =
-#     distinct touched levels, provably tiny)
 #   * brute-force ANN's vectors x broadcast query set (build side = the
 #     handful of query vectors)
 # Everything else must stay equi-join shaped. A CartesianProduct is never OK.
 #   * TF-IDF's broadcast of the 1-row corpus-size aggregate (a scalar
 #     attached to every row — the standard shape for global normalizers)
 _BNLJ_WHITELIST = {
-    "ob_relational_mutations_top2",
-    "ob_relational_updates_top3",
-    "ob_relational_modify_top2",
-    # same relational grid shape at the 20-level ceiling (r9): build side
-    # is STILL the distinct touched levels (<= 80 rows on the deep stream)
-    # plus the 1-row seq-bounds scalar
-    "ob_relational_updates_top20_deep",
     "ann_cosine_topk",
     "ann_cosine_topk_blas",
     "text_tfidf",

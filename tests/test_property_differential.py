@@ -1,9 +1,11 @@
-"""Property-based differential testing: strategy A (exact pandas fold) vs
-strategy B (relational) on hypothesis-generated VALID event streams.
+"""Property-based differential testing: the exact fold vs the Spark-free
+naive book (``tests/naive_book.py``) on hypothesis-generated VALID event
+streams; the modify test also checks that ``modify_to_mutations`` deltas
+fold to the same book as the modify rows.
 
 Generators interpret hypothesis choices into streams that respect the error
 contract (deletes never exceed available qty, modifies always move existing
-qty), so any A/B divergence is an engine bug, not an invalid input. This
+qty), so any divergence is an engine bug, not an invalid input. This
 extends the fixed-seed differential tests with structured search + shrinking.
 """
 
@@ -17,8 +19,8 @@ from polars_order_book_spark import (
     top_n_levels_from_price_mutations,
     top_n_levels_from_price_mutations_with_modify,
     top_n_levels_from_price_updates,
-    top_n_levels_relational,
 )
+from naive_book import top_n
 
 SCHEMA3 = StructType([
     StructField("seq", LongType()),
@@ -116,8 +118,7 @@ def test_property_mutations_a_equals_b(spark, rows, n):
     df = spark.createDataFrame(rows, SCHEMA3)
     cols = snapshot_columns(n)
     a = by_seq(top_n_levels_from_price_mutations(df, n=n), cols)
-    b = by_seq(top_n_levels_relational(df, n=n, variant="mutations"), cols)
-    assert a == b
+    assert a == top_n(rows, "mutations", n)
 
 
 @settings(**SETTINGS)
@@ -126,8 +127,7 @@ def test_property_updates_a_equals_b(spark, rows, n):
     df = spark.createDataFrame(rows, SCHEMA3)
     cols = snapshot_columns(n)
     a = by_seq(top_n_levels_from_price_updates(df, n=n), cols)
-    b = by_seq(top_n_levels_relational(df, n=n, variant="updates"), cols)
-    assert a == b
+    assert a == top_n(rows, "updates", n)
 
 
 @settings(**SETTINGS)
@@ -141,8 +141,9 @@ def test_property_modify_a_equals_b(spark, rows, n):
         ),
         cols,
     )
-    deltas = modify_to_mutations(df)
-    b = by_seq(top_n_levels_relational(deltas, n=n, variant="mutations"), cols)
+    assert a == top_n(rows, "modify", n)
+    deltas = [tuple(r) for r in modify_to_mutations(df).collect()]
+    b = top_n(deltas, "mutations", n)
     assert set(a) == set(b)  # every input seq must appear in both
     assert a == b
 

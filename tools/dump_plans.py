@@ -4,7 +4,7 @@ Usage: python tools/dump_plans.py [--sf DIR] [--out PLANS.md]
 
 The output is the evidence trail for plan-quality review: broadcast vs
 shuffle joins, pushed filters, partial aggregation, codegen stages, and the
-segmented-scan shuffle keys — the same properties tests/test_plans.py gates.
+batch fold's single exchange — the same properties tests/test_plans.py gates.
 """
 
 from __future__ import annotations
@@ -16,7 +16,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HEADLINE = [
-    "ob_relational_mutations_top2",
     "q1_pricing_summary",
     "q3_top_revenue_orders",
     "q5_nation_revenue",
@@ -190,7 +189,6 @@ HEADLINE = [
     "ob_updates_top20_deep",
     "ob_mutations_top10_deep",
     "ob_modify_top20_deep",
-    "ob_relational_updates_top20_deep",
     "documents_fuzzy_pairs_segments",
     "dedup_ngram_jaccard_arrays",
     # r10: absolute-threshold heavy hitters (exact groupBy shape, no sketch)
@@ -221,9 +219,10 @@ def main() -> int:
     n_err = 0
     with open(args.out, "w") as f:
         f.write("# Physical plans (formatted) — headline queries\n\n")
-        f.write(f"Generated from `{args.sf}`. Pandas-UDF fold queries are "
-                "omitted: their plan is one exchange by the book keys, a sort "
-                "by (keys, seq) and a single MapInPandas.\n")
+        f.write(f"Generated from `{args.sf}`. Every batch fold query has "
+                "one plan shape: one exchange by the book keys, a sort by "
+                "(keys, seq) and a single MapInPandas; the `ob_*` sections "
+                "show it.\n")
         for name in HEADLINE:
             # Per-name isolation: one query failing at plan-build must not
             # silently truncate every later section (same artifact-integrity

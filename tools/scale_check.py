@@ -29,7 +29,6 @@ QUERIES = [
     "dedup_minhash_lsh",            # banded LSH buckets
     "embeddings_pq_ivf_topk",       # PQ/IVF composite
     "ann_cosine_topk_ivf",          # plain IVF (r6 regression, now fixed)
-    "ob_relational_mutations_top2", # strategy-B grid scan
     "ob_nbbo_keyed",                # keyed fold + global ffill
     "ob_mutations_top2",            # production fold path
     "documents_classifier_reliability",  # GD training + calibration
