@@ -1599,10 +1599,11 @@ FROM orders
 def _ob_nbbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consolidated cross-book best bid/offer (NBBO) over the 7-book keyed
     stream: each book folds independently (the reference's multi-product
-    workflow), then operators/nbbo.py forward-fills every book's level-1
-    state over the global timeline and takes max-bid / min-ask with TOTAL
-    displayed size at the best price. Empty sides stop contributing via the
-    sentinel encode/decode (stale-quote hazard pinned by pytest)."""
+    workflow), then operators/nbbo.py folds the books' level-1 snapshots in
+    seq order, one pass per seq chunk seeded with every book's last quote,
+    and takes max-bid / min-ask with TOTAL displayed size at the best price.
+    A null price is an empty side and stops contributing (stale-quote hazard
+    pinned by pytest)."""
     from polars_order_book_spark.operators.nbbo import nbbo
 
     stream = bs.keyed_mutations_stream(load_table(spark, sf_dir, "events"))
@@ -1611,10 +1612,9 @@ def _ob_nbbo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ob_nbbo_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NBBO with the segmented-scan forward fill (chunk_size=2000 seq
-    units): the scale path — per-chunk fills run in parallel, one tiny
-    chunks-sized prefix scan supplies carry-ins. Same oracle as
-    ob_nbbo_keyed; equality with the global-window plan also pinned by
+    """NBBO with a fixed chunk width (chunk_size=2000 seq units): the same
+    one-fold plan as ob_nbbo_keyed with width-derived chunk ids. Same
+    oracle as ob_nbbo_keyed; equality across chunk widths also pinned by
     tests/test_nbbo.py."""
     from polars_order_book_spark.operators.nbbo import nbbo
 

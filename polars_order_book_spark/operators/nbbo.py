@@ -4,43 +4,92 @@ The reference maintains ONE book per key (ref: README.md:184-197 multi-product
 group_by); the consolidated view one level up — "best bid/ask across all
 venues, with total displayed size at that price" — is the National BBO
 (Reg-NMS shape). Input is the keyed n=1 snapshot stream the existing
-operators already produce; output is one row per event with the
+operators already produce; output is one row per event seq with the
 cross-book best.
 
 Semantics per event seq:
-* every book's state = its most recent snapshot at or before seq (forward
-  fill over the global timeline);
+* every book's state = its most recent snapshot at or before seq;
 * ``nbb_price`` = max bid across books, ``nbo_price`` = min ask;
 * ``nbb_qty`` / ``nbo_qty`` = TOTAL size across all books quoting exactly
   the best price (consolidated displayed size).
 
-Empty-side correctness: a book whose bid side empties must STOP contributing
-— a bare ignore-nulls forward fill would carry its stale price forever. Each
-snapshot therefore encodes "now empty" as a sentinel before the fill and
-decodes after (prices must exceed ``empty_sentinel``; the default -1 suits
-positive integer ticks).
+A null price is an empty side: a book whose bid side empties stops
+contributing to the bid until it quotes again. Every non-null price is a
+quote, negative ones included.
 
-Scale contract: the book count B is venue-bounded (dimension-sized — tens,
-not millions), so the pivot is 4·B columns wide. The forward fill DEFAULTS
-to the segmented scan ("auto"): fill within seq-range chunks in parallel,
-prefix-scan the chunks-sized summaries, join the carry back. The only
-unpartitioned window in the default plan runs over the chunk summaries —
-a bounded relation — never over the event timeline, so the plan survives a
-100× scale-up without silently serializing into one task (r5 default flip;
-the old single-window behavior remains via ``chunk_size=None``).
+Plan: NBBO is itself a fold over the global seq order with a little state
+per book, so it runs as one. Each row gets a seq-chunk id; each chunk is
+seeded with every book's last snapshot before it (a chunks × books
+``max_by`` summary, exploded over the chunks each summary row carries
+into), and every chunk folds in one sequential ``mapInPandas`` pass. The
+chunks fold in parallel, and no window runs over the event timeline.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+from pyspark.storagelevel import StorageLevel
 
-# Auto-chunk bound for the segmented forward-fill: one chunk never covers
-# more than this many seq units, however few shuffle partitions the session
-# has. For unique-seq streams (the book contract) span ≈ rows, so this also
-# bounds the rows a single chunk — and therefore a single cached pivot
-# block and a single window task — can hold.
+from polars_order_book_spark.operators.order_book import (
+    _as_list, _register_self_by_value, _validate_tick_dtype,
+)
+
+_register_self_by_value(__name__)
+
+# Auto-chunk bound: one chunk never covers more than this many seq units,
+# however few shuffle partitions the session has. For unique-seq streams
+# (the book contract) span ≈ rows, so this also bounds the rows one fold
+# task holds per chunk.
 _AUTO_CHUNK_MAX_SPAN = 2_000_000
+
+_QUOTES = ("bid_price_1", "bid_qty_1", "ask_price_1", "ask_qty_1")
+_SIDES = ("bp", "bq", "ap", "aq")
+_OUT = ("seq", "nbb_price", "nbb_qty", "nbo_price", "nbo_qty")
+
+
+def _best(state: dict) -> tuple:
+    """(nbb, nbb_qty, nbo, nbo_qty) over each book's (bp, bq, ap, aq)."""
+    nbb = nbq = nbo = noq = None
+    for bp, bq, ap, aq in state.values():
+        if bp is not None:
+            if nbb is None or bp > nbb:
+                nbb, nbq = bp, bq
+            elif bp == nbb:
+                nbq = None if nbq is None or bq is None else nbq + bq
+        if ap is not None:
+            if nbo is None or ap < nbo:
+                nbo, noq = ap, aq
+            elif ap == nbo:
+                noq = None if noq is None or aq is None else noq + aq
+    return nbb, nbq, nbo, noq
+
+
+def _nbbo_fold(batches):
+    """Fold ``(__ck, seq, book, bp, bq, ap, aq)`` rows sorted by
+    ``(__ck, seq NULLS FIRST)`` into one NBBO row per seq.
+
+    A chunk change resets the per-book state; a seed row (null seq) sets
+    its book's state and emits nothing. A seq's row is emitted once every
+    row of that seq is applied, also when those rows span two batches.
+    """
+    ck, pend, state = object(), None, {}
+    for pdf in batches:
+        out = []
+        cols = [_as_list(pdf[c]) for c in ("__ck", "seq", "book", *_SIDES)]
+        for c, s, book, *quote in zip(*cols):
+            if pend is not None and (c != ck or s != pend):
+                out.append((pend, *_best(state)))
+            if c != ck:
+                ck, state = c, {}
+            state[book] = quote
+            pend = s
+        if out:
+            yield pd.DataFrame(out, columns=_OUT, dtype=object)
+    if pend is not None:
+        yield pd.DataFrame([(pend, *_best(state))], columns=_OUT, dtype=object)
 
 
 def nbbo(
@@ -49,35 +98,26 @@ def nbbo(
     *,
     book_col: str = "book",
     seq_col: str = "seq",
-    empty_sentinel: int = -1,
     chunk_size: "int | None | str" = "auto",
 ) -> DataFrame:
     """Consolidate keyed level-1 snapshots into the cross-book NBBO.
 
     ``snapshots`` must carry one row per (book, event) with columns
     (book_col, seq_col, bid_price_1, bid_qty_1, ask_price_1, ask_qty_1) —
-    the keyed ``top_n_levels_*(n=1)`` output. ``books`` is the explicit book
-    id list (venue universe = static configuration, keeping the plan fully
-    lazy; ids absent from the data simply never contribute).
+    the keyed ``top_n_levels_*(n=1)`` output — and a non-null seq.
+    ``books`` is the explicit book id list (venue universe = static
+    configuration); ids absent from the data never contribute, and a row of
+    a book missing from the list fails the query.
 
-    ``chunk_size`` selects the forward-fill strategy:
+    ``chunk_size`` cuts the seq order into the chunks that fold in parallel:
 
-    * ``"auto"`` (default) — SEGMENTED SCAN with chunk boundaries derived
-      lazily from the seq bounds (one tiny broadcast agg): the timeline
-      splits into ~shuffle-partitions equal seq ranges, (1) fill within
-      each chunk in parallel, (2) summarize each chunk's final per-column
-      state (``max_by`` over non-null rows — chunks-sized relation), (3)
-      prefix-scan the summaries in one tiny window and join each chunk's
-      carry-in back. No events-sized single-task window anywhere in the
-      plan.
-    * an ``int`` — same segmented scan with a fixed chunk WIDTH in seq
-      units (``seq div chunk_size``). NOTE the unit: a chunk SIZE, NOT a
-      chunk COUNT.
-    * ``None`` — ONE global ordered window (single task holds the whole
-      timeline). Simplest plan and ~1.5x faster at sf0.1 (measured
-      best-of-3: 2.5s vs 4.0s — below one task's capacity, chunking costs
-      more than the lost parallelism buys), but it serializes at scale;
-      opt in only when the timeline is known small.
+    * ``"auto"`` (default) — about shuffle-partitions equal seq ranges,
+      derived lazily from the seq bounds (one tiny scalar aggregate), with no
+      chunk wider than ``_AUTO_CHUNK_MAX_SPAN`` seq units.
+    * an ``int`` — a fixed chunk WIDTH in seq units (``seq div chunk_size``),
+      NOT a chunk count. Every chunk id between the first and the last is
+      seeded, so a width far below the seq gaps makes many empty chunks.
+    * ``None`` — one chunk: the whole timeline folds in one task.
 
     All three produce identical output (pinned by differential tests + the
     shared driver oracle).
@@ -88,178 +128,95 @@ def nbbo(
         raise ValueError(f"chunk_size must be an int, None, or 'auto', got {chunk_size!r}")
     if isinstance(chunk_size, int) and chunk_size <= 0:
         raise ValueError(f"chunk_size must be > 0, got {chunk_size}")
-    sent = F.lit(empty_sentinel)
-    # Misconfiguration guard (r8 self-review): pivot(__book, books) silently
-    # DISCARDS rows from any book present in the data but missing from the
-    # caller's list — a best bid sitting only on the unlisted venue would
-    # vanish and the NBBO would be quietly wrong. Assert membership per row
-    # so a stale venue config fails loudly instead.
+    # A row of a book missing from the caller's list would otherwise be
+    # folded in silently from a venue the caller never declared; a row
+    # with a null seq has no place in the seq order (and a null seq marks
+    # a seed row below). Both fail the query instead.
     known = F.assert_true(
-        F.col(book_col).isin([*books]),
-        F.concat(
+        F.col(book_col).isin([*books]) & F.col(seq_col).isNotNull(),
+        F.when(
+            F.col(seq_col).isNull(), F.lit("nbbo: snapshot row with a null seq")
+        ).otherwise(F.concat(
             F.lit("nbbo: snapshot row for book "),
             F.col(book_col).cast("string"),
             F.lit(f" not in the caller's books list {list(books)} — its "
                   "quotes would be silently excluded from the NBBO"),
-        ),
+        )),
     )
-    enc = snapshots.where(known.isNull()).select(
+    types = {f.name: f.dataType for f in snapshots.schema.fields}
+    # The fold decodes through _as_list, which reads float columns as ints.
+    for c in (seq_col, *_QUOTES):
+        _validate_tick_dtype(types[c], c)
+    # Serialized memory+disk: the rows feed the bounds, the chunk summary
+    # and the fold, and the checkpoint keeps the upstream plan from running
+    # once for each.
+    rows = snapshots.where(known.isNull()).select(
         F.col(seq_col).alias("seq"),
-        F.col(book_col).alias("__book"),
-        F.coalesce(F.col("bid_price_1"), sent).alias("bp"),
-        F.coalesce(F.col("bid_qty_1"), sent).alias("bq"),
-        F.coalesce(F.col("ask_price_1"), sent).alias("ap"),
-        F.coalesce(F.col("ask_qty_1"), sent).alias("aq"),
-    )
-    piv = (
-        enc.groupBy("seq")
-        .pivot("__book", list(books))
-        .agg(
-            F.first("bp").alias("bp"),
-            F.first("bq").alias("bq"),
-            F.first("ap").alias("ap"),
-            F.first("aq").alias("aq"),
-        )
-    )
-    raw_names = [f"{b}_{c}" for b in books for c in ("bp", "bq", "ap", "aq")]
-    out_names = {f"{b}_{c}": f"{c}{b}" for b in books for c in ("bp", "bq", "ap", "aq")}
-
-    def decode(col):
-        return F.when(col == empty_sentinel, F.lit(None)).otherwise(col)
+        F.col(book_col).alias("book"),
+        *[F.col(src).alias(dst) for src, dst in zip(_QUOTES, _SIDES)],
+    ).localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
     if chunk_size is None:
-        w = Window.orderBy("seq").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
+        tagged = rows.withColumn("__ck", F.lit(0).cast("long"))
+    elif chunk_size == "auto":
+        # Lazy equal-width chunking: the seq bounds are one-row scalar
+        # subqueries, so the plan stays fully lazy, never collects
+        # driver-side and joins nothing.
+        from polars_order_book_spark.functions.runtime import shuffle_partitions
+
+        n_chunks = shuffle_partitions(snapshots.sparkSession, fallback_df=rows)
+        smin = rows.agg(F.min("seq")).scalar()
+        span = rows.agg(F.max("seq")).scalar() - smin + F.lit(1)
+        # Divide BEFORE multiplying, in double: (seq - smin) * n_chunks as
+        # a long multiply overflows (and wraps) once the seq span exceeds
+        # 2^63/n_chunks, silently breaking chunk-id monotonicity. The
+        # double path loses only low-bit precision, and the least() cap +
+        # coalesce keep ids in [0, n_chunks).
+        frac = (F.col("seq") - smin).cast("double") / span.cast("double")
+        # Chunk COUNT is itself span-derived (still fully in-plan): at
+        # least the shuffle width, but enough chunks that one chunk never
+        # spans more than _AUTO_CHUNK_MAX_SPAN seq units. A fixed count
+        # equal to the local shuffle width (32) made ~3M-row chunks at 100M
+        # events (r10 third-decade probe). For unique-seq streams span ≈
+        # rows, so this bounds chunk rows; on a real cluster shuffle width
+        # is thousands and the floor rarely binds.
+        nck = F.greatest(
+            F.lit(n_chunks).cast("long"),
+            F.ceil(span.cast("double") / F.lit(float(_AUTO_CHUNK_MAX_SPAN))),
         )
-        state = piv.select(
-            "seq",
-            *[
-                decode(F.last(F.col(n), ignorenulls=True).over(w)).alias(out_names[n])
-                for n in raw_names
-            ],
-        )
+        ck = F.least(nck - F.lit(1), F.floor(frac * nck.cast("double")))
+        tagged = rows.withColumn("__ck", F.coalesce(ck, F.lit(0)).cast("long"))
     else:
-        if chunk_size == "auto":
-            # Lazy equal-width chunking into ~shuffle-partitions ranges: the
-            # bounds relation is ONE row, broadcast, so the plan stays fully
-            # lazy and never collects driver-side.
-            from polars_order_book_spark.functions.runtime import shuffle_partitions
+        tagged = rows.withColumn("__ck", F.expr(f"seq div {int(chunk_size)}"))
 
-            n_chunks = shuffle_partitions(snapshots.sparkSession, fallback_df=piv)
-            bounds = piv.agg(
-                F.min("seq").alias("__smin"), F.max("seq").alias("__smax")
-            )
-            span = F.col("__smax") - F.col("__smin") + F.lit(1)
-            # Divide BEFORE multiplying, in double: (seq - smin) * n_chunks as
-            # a long multiply overflows (and wraps) once the seq span exceeds
-            # 2^63/n_chunks, silently breaking chunk-id monotonicity. The
-            # double path loses only low-bit precision, and the least() cap +
-            # coalesce keep ids in [0, n_chunks).
-            frac = (F.col("seq") - F.col("__smin")).cast("double") / span.cast("double")
-            # Chunk COUNT is itself span-derived (still fully in-plan): at
-            # least the shuffle width, but enough chunks that one chunk
-            # never spans more than _AUTO_CHUNK_MAX_SPAN seq units. A fixed
-            # count equal to the local shuffle width (32) made ~3M-row
-            # chunks at 100M events, and the checkpointed pivot's ~920 MB
-            # per-partition blocks blew the JVM's direct-memory allowance
-            # (r10 third-decade probe). For unique-seq streams span ≈ rows,
-            # so this bounds chunk rows; on a real cluster shuffle width is
-            # thousands and the floor rarely binds. Plans below
-            # 32 × _AUTO_CHUNK_MAX_SPAN seq units are unchanged.
-            nck = F.greatest(
-                F.lit(n_chunks).cast("long"),
-                F.ceil(span.cast("double") / F.lit(float(_AUTO_CHUNK_MAX_SPAN))),
-            )
-            ck = F.least(
-                nck - F.lit(1),
-                F.floor(frac * nck.cast("double")),
-            )
-            with_ck = (
-                piv.join(F.broadcast(bounds))
-                .withColumn("__ck", F.coalesce(ck, F.lit(0)).cast("long"))
-                .drop("__smin", "__smax")
-            )
-        else:
-            with_ck = piv.withColumn("__ck", F.expr(f"seq div {int(chunk_size)}"))
-        # localCheckpoint: the chunked pivot feeds BOTH the within-chunk
-        # fill and the summary aggregate — without lineage truncation the
-        # events-sized pivot shuffle runs twice per action. SERIALIZED
-        # memory+disk, not the default deserialized level: this relation is
-        # events-sized × ~4·|books| columns, and deserialized row objects
-        # for 100M events are ~3× the heap that serialized blocks need —
-        # the r10 third-decade probe OOMed even a 24 GB heap on the default
-        # level while the fold itself ran fine in 53 s. Serialized blocks
-        # also evict to disk wholesale instead of re-unrolling.
-        from pyspark.storagelevel import StorageLevel
-
-        chunked = with_ck.localCheckpoint(
-            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
+    # Carry-in: each book's last snapshot per chunk seeds every later chunk
+    # up to and including the book's next chunk (or the last chunk). Seeds
+    # have a null seq, so they sort first in their chunk.
+    summary = tagged.groupBy("__ck", "book").agg(
+        F.max_by(F.struct(*_SIDES), "seq").alias("__s")
+    )
+    stop = F.coalesce(
+        F.lead("__ck").over(Window.partitionBy("book").orderBy("__ck")),
+        F.max("__ck").over(Window.partitionBy()),
+    )
+    # Spark's sequence counts down when start > stop: only rows with a
+    # later chunk to seed may reach it.
+    seeds = (
+        summary.withColumn("__stop", stop)
+        .where(F.col("__ck") < F.col("__stop"))
+        .select(
+            F.explode(F.sequence(F.col("__ck") + 1, F.col("__stop"))).alias("__ck"),
+            F.lit(None).cast(types[seq_col]).alias("seq"),
+            "book",
+            *[F.col(f"__s.{c}").alias(c) for c in _SIDES],
         )
-        w_in = (
-            Window.partitionBy("__ck")
-            .orderBy("seq")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        within = chunked.select(
-            "seq",
-            "__ck",
-            *[
-                F.last(F.col(n), ignorenulls=True).over(w_in).alias(f"__w_{n}")
-                for n in raw_names
-            ],
-        )
-        # Chunk summaries: the final (highest-seq) non-null raw value per
-        # column — max_by skips rows whose ordering key is null, so a column
-        # silent for a whole chunk summarizes as null and the prefix scan
-        # looks further back.
-        summary = chunked.groupBy("__ck").agg(
-            *[
-                F.max_by(
-                    F.col(n), F.when(F.col(n).isNotNull(), F.col("seq"))
-                ).alias(f"__s_{n}")
-                for n in raw_names
-            ]
-        )
-        w_carry = Window.orderBy("__ck").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        carry = summary.select(
-            "__ck",
-            *[
-                F.last(F.col(f"__s_{n}"), ignorenulls=True)
-                .over(w_carry)
-                .alias(f"__c_{n}")
-                for n in raw_names
-            ],
-        )
-        state = within.join(carry, "__ck").select(
-            "seq",
-            *[
-                decode(F.coalesce(F.col(f"__w_{n}"), F.col(f"__c_{n}"))).alias(
-                    out_names[n]
-                )
-                for n in raw_names
-            ],
-        )
-    bids = [F.col(f"bp{b}") for b in books]
-    asks = [F.col(f"ap{b}") for b in books]
-    nbb = F.greatest(*bids) if len(bids) > 1 else bids[0]
-    nbo = F.least(*asks) if len(asks) > 1 else asks[0]
-
-    def size_at(price_col, price_of, qty_of):
-        terms = [
-            F.when(F.col(price_of(b)) == price_col, F.col(qty_of(b))).otherwise(F.lit(0))
-            for b in books
-        ]
-        total = terms[0]
-        for t in terms[1:]:
-            total = total + t
-        return F.when(price_col.isNull(), F.lit(None)).otherwise(total)
-
-    return state.select(
-        "seq",
-        nbb.alias("nbb_price"),
-        size_at(nbb, lambda b: f"bp{b}", lambda b: f"bq{b}").alias("nbb_qty"),
-        nbo.alias("nbo_price"),
-        size_at(nbo, lambda b: f"ap{b}", lambda b: f"aq{b}").alias("nbo_qty"),
+    )
+    schema = StructType([
+        StructField(name, types[src]) for name, src in zip(_OUT, (seq_col, *_QUOTES))
+    ])
+    return (
+        seeds.unionByName(tagged.select("__ck", "seq", "book", *_SIDES))
+        .repartition("__ck")
+        .sortWithinPartitions("__ck", F.col("seq").asc_nulls_first())
+        .mapInPandas(_nbbo_fold, schema)
     )

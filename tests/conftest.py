@@ -198,14 +198,12 @@ SLOW_TESTS = {
     "test_registry.py::test_query_analyzes[ann_cosine_topk_lsh]",
     "test_text.py::test_apply_span_cuts_removes_exactly_interval_union",
     "test_unigram.py::test_em_tokens_identical_to_local_em_costs",
-    "test_nbbo.py::test_nbbo_default_plan_has_no_global_timeline_window",
     "test_dedup.py::test_fuzzy_pairs_finds_typo_neardups_and_blocks_by_length",
     "test_retrieval.py::test_mmr_lam_one_is_pure_relevance",
     "test_registry.py::test_query_analyzes[events_heavy_hitters_stream]",
     "test_registry.py::test_query_analyzes[embeddings_ann_stream]",
     "test_frequency.py::test_grouped_exact_quantiles_matches_rank_definition",
     "test_order_book_golden.py::test_n1_and_n2_top_level_consistency",
-    "test_registry.py::test_query_analyzes[ob_nbbo_keyed_bounded]",
     "test_similarity.py::test_blas_tie_break_matches_bruteforce_on_identical_vectors",
     "test_dedup.py::test_star_components_star_input_converges_immediately",
     "test_registry.py::test_query_analyzes[documents_fuzzy_pairs_segments]",
@@ -215,7 +213,6 @@ SLOW_TESTS = {
     "test_state_store.py::test_sessionize_stream_rocksdb_matches_default",
     "test_frequency_stream.py::test_pruning_regime_no_false_negatives_and_lower_bounds",
     "test_classifier.py::test_guardrails",
-    "test_registry.py::test_query_analyzes[ob_nbbo_keyed]",
     "test_layout.py::test_zorder_sort_clusters_both_dimensions",
     "test_sql_parity.py::test_oracle_sql_runs_verbatim_on_spark[q14_promo_revenue]",
     "test_dedup.py::test_star_components_null_and_self_edges_ignored",
@@ -228,7 +225,6 @@ SLOW_TESTS = {
     "test_dedup.py::test_fuzzy_pairs_adjacent_length_buckets_still_compared",
     "test_bpe.py::test_apply_bpe_greedy_rank_order_and_roundtrip",
     "test_skew.py::test_salted_bipartite_join_pair_budget_enforced",
-    "test_nbbo.py::test_unseen_books_and_validation",
     "test_registry.py::test_query_analyzes[q8_market_share]",
     "test_similarity.py::test_centroid_outliers_finds_planted_outlier",
     "test_frequency_stream.py::test_null_keys_and_items_excluded",
@@ -239,7 +235,6 @@ SLOW_TESTS = {
     "test_sinks.py::test_partitioned_overwrite_is_idempotent",
     "test_pipeline_ops.py::test_pack_sequences_contiguity_property",
     "test_registry.py::test_query_analyzes[events_drift_stream]",
-    "test_registry.py::test_query_analyzes[ob_nbbo_keyed_chunked]",
     "test_graph.py::test_mass_approximately_conserved",
     "test_order_book_streaming.py::test_stream_updates_variant_matches_batch",
     "test_sql_parity.py::test_oracle_sql_runs_verbatim_on_spark[q19_disjunctive_revenue]",

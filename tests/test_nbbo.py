@@ -41,6 +41,20 @@ def test_emptied_side_stops_contributing(spark):
     assert (out[3]["nbb_price"], out[3]["nbb_qty"]) == (8, 2)
 
 
+def test_negative_and_old_sentinel_prices_are_quotes(spark):
+    """A null price is the only empty side: a bid at -1 (the old encode
+    sentinel) or below is a real quote in every chunk mode."""
+    snaps = _snaps(spark, [
+        (0, 1, -1, 5, None, None),
+        (1, 2, -3, 4, -1, 2),
+    ])
+    for chunk in ("auto", None, 1, 3):
+        out = {r["seq"]: r for r in nbbo(snaps, books=[0, 1], chunk_size=chunk).collect()}
+        assert (out[1]["nbb_price"], out[1]["nbb_qty"]) == (-1, 5), chunk
+        assert (out[2]["nbb_price"], out[2]["nbb_qty"]) == (-1, 5), chunk
+        assert (out[2]["nbo_price"], out[2]["nbo_qty"]) == (-1, 2), chunk
+
+
 def test_unseen_books_and_validation(spark):
     snaps = _snaps(spark, [(0, 1, 10, 5, 12, 3)])
     # declaring extra venues that never quote must not change the result
@@ -80,9 +94,9 @@ def _nbbo_py(rows, books):
     rows=st.lists(
         st.tuples(
             st.integers(0, 2),                        # book
-            st.one_of(st.none(), st.integers(1, 9)),  # bid price (None = empty)
+            st.one_of(st.none(), st.integers(-3, 9)),  # bid price (None = empty)
             st.integers(1, 5),                        # bid qty
-            st.one_of(st.none(), st.integers(1, 9)),  # ask price
+            st.one_of(st.none(), st.integers(-3, 9)),  # ask price
             st.integers(1, 5),                        # ask qty
         ),
         min_size=1,
@@ -139,20 +153,23 @@ def test_nbbo_chunked_equals_global(spark):
 
 
 def test_nbbo_default_plan_has_no_global_timeline_window(spark):
-    """Scale pin (r5 default flip): the DEFAULT plan must never forward-fill
-    through ONE unpartitioned events-sized window — only the chunks-sized
-    carry prefix-scan may be unpartitioned. An unpartitioned timeline window
-    shows up as windowspecdefinition(seq ASC ...) with no partition columns;
-    the within-chunk fill partitions by __ck first."""
+    """Scale pin (r5 default flip): the DEFAULT plan must never run ONE
+    unpartitioned events-sized window ordered by seq. Every mode is one
+    fold: one MapInPandas, no pivot and no window over seq (the chunk
+    carry-in windows run over the chunks x books summary)."""
+    import re
+
     snaps = _snaps(spark, [(0, 1, 10, 1, 12, 1), (1, 2, 11, 2, 13, 2)])
     plan = nbbo(snaps, books=[0, 1])._jdf.queryExecution().optimizedPlan().toString()
     assert "windowspecdefinition(seq#" not in plan, plan
-    # opt-out keeps the single global window
-    plan_global = (
-        nbbo(snaps, books=[0, 1], chunk_size=None)
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert "windowspecdefinition(seq#" in plan_global, plan_global
+    for chunk in ("auto", 2, None):
+        plan = (
+            nbbo(snaps, books=[0, 1], chunk_size=chunk)
+            ._jdf.queryExecution().optimizedPlan().toString()
+        )
+        assert plan.count("MapInPandas") == 1, (chunk, plan)
+        assert "pivot" not in plan.lower(), (chunk, plan)
+        assert not re.search(r"windowspecdefinition\([^)]*\bseq#", plan), (chunk, plan)
 
 
 def test_nbbo_chunked_guardrail(spark):
@@ -167,6 +184,11 @@ def test_nbbo_chunked_guardrail(spark):
 
     with _pytest.raises(ValueError):
         nbbo(snaps, [0], chunk_size=0)
+    # the fold would read float ticks as ints, and a null seq marks a seed
+    with _pytest.raises(ValueError, match="tick dtype double"):
+        nbbo(snaps.withColumn("bid_price_1", snaps.bid_price_1 + 0.5), [0])
+    with _pytest.raises(Exception, match="null seq"):
+        nbbo(snaps.withColumn("seq", snaps.seq + None), [0]).collect()
 
 
 def test_unlisted_book_fails_loudly_instead_of_vanishing(spark):
@@ -190,3 +212,97 @@ def test_unlisted_book_fails_loudly_instead_of_vanishing(spark):
     # complete list: the book-2 bid wins
     got = nbbo(snaps, books=[0, 1, 2]).collect()[0]
     assert got["nbb_price"] == 11
+
+
+# --- the per-chunk fold, Spark-free ------------------------------------------
+
+import pandas as pd
+
+from polars_order_book_spark.operators.nbbo import _nbbo_fold
+
+_FOLD_COLS = ["__ck", "seq", "book", "bp", "bq", "ap", "aq"]
+
+
+def _fold_input(rows, chunk_of):
+    """The sorted rows the plan hands the fold: each present chunk opens
+    with one seed row (null seq) per book quoted before it, carrying that
+    book's last snapshot, then the chunk's own rows in seq order."""
+    rows = sorted(rows, key=lambda r: r[1])
+    out, last = [], {}
+    for ck in sorted({chunk_of(r[1]) for r in rows}):
+        out += [(ck, None, b, *q) for b, q in sorted(last.items())]
+        for book, seq, *q in rows:
+            if chunk_of(seq) == ck:
+                out.append((ck, seq, book, *q))
+                last[book] = tuple(q)
+    return out
+
+
+def _run_fold(rows, cuts=()):
+    """Feed ``rows`` to _nbbo_fold as pandas batches split at ``cuts``."""
+    bounds = [0, *sorted(cuts), len(rows)]
+    batches = [
+        pd.DataFrame(rows[a:b], columns=_FOLD_COLS)
+        for a, b in zip(bounds, bounds[1:]) if b > a
+    ]
+    got = {}
+    for frame in _nbbo_fold(iter(batches)):
+        for seq, *best in frame.itertuples(index=False):
+            assert seq not in got, f"seq {seq} emitted twice"
+            got[seq] = tuple(None if pd.isna(v) else v for v in best)
+    return got
+
+
+def test_fold_one_seq_across_two_batches():
+    rows = [(0, 1, 0, 10, 5, 12, 3), (0, 1, 1, 10, 2, 11, 4), (0, 2, 1, 9, 1, 11, 4)]
+    want = {1: (10, 7, 11, 4), 2: (10, 5, 11, 4)}
+    for cuts in ((), (1,), (2,), (1, 2)):
+        assert _run_fold(rows, cuts) == want, cuts
+
+
+def test_fold_seeds_then_silent_books():
+    # chunk 1: books 0 and 1 only seed; book 2 quotes on its own
+    rows = [
+        (1, None, 0, 10, 5, None, None),
+        (1, None, 1, 11, 1, 13, 2),
+        (1, 20, 2, 11, 3, 12, 1),
+        (1, 21, 2, None, None, 13, 6),
+    ]
+    assert _run_fold(rows) == {20: (11, 4, 12, 1), 21: (11, 1, 13, 8)}
+    assert _run_fold(rows, (1, 3)) == _run_fold(rows)
+
+
+def test_fold_chunk_change_resets_state():
+    # chunk 1 has no seed for book 0: its chunk-0 quote must not leak in
+    rows = [(0, 1, 0, 10, 5, 12, 3), (1, 5, 1, 8, 2, 14, 1)]
+    assert _run_fold(rows) == {1: (10, 5, 12, 3), 5: (8, 2, 14, 1)}
+    assert _run_fold(rows, (1,)) == _run_fold(rows)
+
+
+@hsettings(max_examples=60, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(0, 2),                         # book
+            st.integers(0, 15),                        # seq (gaps, shared seqs)
+            st.one_of(st.none(), st.integers(-3, 9)),  # bid price
+            st.integers(1, 5),
+            st.one_of(st.none(), st.integers(-3, 9)),  # ask price
+            st.integers(1, 5),
+        ),
+        min_size=1,
+        max_size=30,
+        unique_by=lambda r: (r[0], r[1]),              # one row per (book, seq)
+    ),
+    width=st.integers(1, 8),
+    data=st.data(),
+)
+def test_fold_chunks_and_batches_match_bruteforce(rows, width, data):
+    snaps = [
+        (book, seq, bp, (bq if bp is not None else None),
+         ap, (aq if ap is not None else None))
+        for book, seq, bp, bq, ap, aq in rows
+    ]
+    fold_rows = _fold_input(snaps, lambda seq: seq // width)
+    cuts = data.draw(st.sets(st.integers(1, max(1, len(fold_rows) - 1))))
+    assert _run_fold(fold_rows, cuts) == _nbbo_py(snaps, [0, 1, 2])

@@ -92,7 +92,7 @@ def main() -> int:
     import __spark_entry__ as E
     from polars_order_book_spark.session import get_spark
 
-    spark = get_spark("check-correctness", cpus=8)
+    spark = get_spark("check-correctness")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -205,7 +205,7 @@ def main() -> int:
     import __spark_entry__ as E
     from polars_order_book_spark.session import get_spark
 
-    spark = get_spark("dump-plans", cpus=8)
+    spark = get_spark("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
 

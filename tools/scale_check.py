@@ -29,7 +29,7 @@ QUERIES = [
     "dedup_minhash_lsh",            # banded LSH buckets
     "embeddings_pq_ivf_topk",       # PQ/IVF composite
     "ann_cosine_topk_ivf",          # plain IVF (r6 regression, now fixed)
-    "ob_nbbo_keyed",                # keyed fold + global ffill
+    "ob_nbbo_keyed",                # keyed fold + NBBO chunk fold
     "ob_mutations_top2",            # production fold path
     "documents_classifier_reliability",  # GD training + calibration
     "events_sessionize_stream",     # stateful streaming session windows
