@@ -159,9 +159,9 @@ def nbbo(
     if chunk_size is None:
         tagged = rows.withColumn("__ck", F.lit(0).cast("long"))
     elif chunk_size == "auto":
-        # Lazy equal-width chunking: the seq bounds are one-row scalar
-        # subqueries, so the plan stays fully lazy, never collects
-        # driver-side and joins nothing.
+        # Equal-width chunking: the seq bounds are one-row scalar
+        # subqueries, so the chunk ids stay in-plan, nothing is collected
+        # driver-side and nothing is joined.
         from polars_order_book_spark.functions.runtime import shuffle_partitions
 
         n_chunks = shuffle_partitions(snapshots.sparkSession, fallback_df=rows)
