@@ -910,26 +910,12 @@ FROM votes GROUP BY doc_id
 
 
 def _dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact n-gram Jaccard pairs ≥ 0.4 within each language block
+    (operators/dedup.py ngram_jaccard_pairs): hash-ordered per-doc shingle
+    arrays, prefix-only explode, array_intersect verification. Also serves
+    dedup_ngram_jaccard_arrays, the name of the retired second plan."""
     docs = load_table(spark, sf_dir, "documents")
-    # order_by="hash": identical pairs (pinned by test) with two fewer passes
-    # over the shingle relation than the freq ordering
-    return dedup.ngram_jaccard_pairs(
-        docs, threshold=0.4, block_col="lang", order_by="hash"
-    )
-
-
-def _dedup_jaccard_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ARRAY-NATIVE exact-jaccard physical shape
-    (operators/dedup.py ngram_jaccard_pairs_arrays): hash-ordered per-doc
-    shingle arrays, prefix-only explode, array_intersect verification —
-    pytest pins it identical to the relational path; this row keeps the
-    alternative implementation under the driver oracle too (shares
-    JACCARD_SQL — same pairs by the prefix theorem under the same hash
-    total order)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.ngram_jaccard_pairs_arrays(
-        docs, threshold=0.4, block_col="lang"
-    )
+    return dedup.ngram_jaccard_pairs(docs, threshold=0.4, block_col="lang")
 
 
 JACCARD_SQL = """
@@ -958,35 +944,26 @@ WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.4
 
 def _dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the MinHash-LSH pair graph -> survivor per
-    duplicate cluster. Runs the DEFAULT algorithm="auto" (r6): verified
-    duplicate pairs are tiny relative to the corpus, so below the
-    5M-edge cap the components come from driver union-find over the
-    checkpointed pair list (zero iterative Spark jobs — the BLAS/BPE
-    bounded-collect pattern); past the cap it fails over to the
-    large-star/small-star rounds."""
+    duplicate cluster (operators/dedup.py neardup_components): verified
+    duplicate pairs are tiny relative to the corpus, so below the 5M-edge
+    cap the components come from driver union-find over the checkpointed
+    pair list (zero iterative Spark jobs — the BLAS/BPE bounded-collect
+    pattern); past the cap it fails over to the large-star/small-star
+    rounds. Also serves dedup_components_prop, the name of the retired
+    min-label propagation."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_duplicates(docs, threshold=0.5)
     return dedup.neardup_components(pairs)
 
 
 def _dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same component/survivor contract, forced through the distributed
+    """Same component/survivor contract, computed by the distributed
     large-star/small-star rounds (O(log n) rounds independent of cluster
-    diameter — auto's above-cap fallback, kept under its own driver oracle
-    so the distributed path stays verified)."""
+    diameter) — the path dedup_components takes above its edge cap, kept
+    under its own driver oracle so that path stays verified."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_duplicates(docs, threshold=0.5)
-    return dedup.neardup_components(pairs, algorithm="star")
-
-
-def _dedup_components_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same component/survivor contract as dedup_components, computed with
-    the opt-in min-label propagation (O(diameter) rounds over a fixed edge
-    relation — cheaper per round when clusters are known shallow). Keeps the
-    non-default algorithm under driver oracle."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_duplicates(docs, threshold=0.5)
-    return dedup.neardup_components_prop(pairs)
+    return dedup.neardup_components_star(pairs)
 
 
 def _components_sql() -> str:
@@ -7916,10 +7893,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_value_quantiles": hq.events_value_quantiles,
         "ann_cosine_topk_blas": _ann_blas,
         "text_winnow_fingerprints": _text_winnow,
-        # r6: dedup_components runs algorithm="auto" (driver union-find under
-        # the edge cap, star rounds above); these two keep the explicit
-        # distributed algorithms under driver oracle
-        "dedup_components_prop": _dedup_components_prop,
+        # dedup_components runs driver union-find under the edge cap (star
+        # rounds above); dedup_components_star keeps the star rounds under
+        # the oracle, and dedup_components_prop names the retired min-label
+        # propagation, now the same builder as dedup_components
+        "dedup_components_prop": _dedup_components,
         "dedup_components_star": _dedup_components_star,
         "text_fingerprint": _text_fingerprint,
         "text_lang_id": _text_lang,
@@ -7955,7 +7933,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact": _dedup_exact,
         "dedup_minhash_lsh": _dedup_minhash,
         "dedup_ngram_jaccard": _dedup_jaccard,
-        "dedup_ngram_jaccard_arrays": _dedup_jaccard_arrays,
+        "dedup_ngram_jaccard_arrays": _dedup_jaccard,
         "documents_budget_pack": _docs_budget_pack,
         "text_docfreq_score": _text_docfreq,
         "text_redact_pii": _text_redact,

@@ -88,7 +88,8 @@ def main() -> None:
         "events_heavy_hitters",
         # r6 additions: keyed heavy hitters (per-segment Misra-Gries),
         # end-to-end BPE tokenize (learn top merge + mapInPandas apply), and
-        # the dedup components pipeline tracking the star-algorithm default.
+        # the dedup components pipeline (driver union-find under the edge
+        # cap, star rounds above it).
         "events_heavy_hitters_by_type",
         "documents_bpe_tokens",
         "dedup_components",
@@ -205,9 +206,8 @@ def main() -> None:
         "documents_unigram_vocab",
         "documents_unigram_tokens",
         # r8 registrations. dedup_ngram_jaccard_arrays is registry-only:
-        # the array-native ALTERNATIVE physical shape of the benched
-        # relational path (documented 2-3x slower end-to-end; kept under
-        # the oracle to pin implementation parity, not as a perf claim)
+        # it names the retired second Jaccard plan and runs the same
+        # builder as the benched dedup_ngram_jaccard
         "ob_updates_top10",
         "documents_unigram_em_vocab",
         "documents_unigram_em_tokens",

@@ -14,10 +14,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def md5_hex(c: Column) -> Column:
-    return F.md5(c.cast("string"))
-
-
 def hash64(c: Column) -> Column:
     """Deterministic 60-bit positive integer hash of a string column."""
     return F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("long")

@@ -22,7 +22,7 @@ stable so they are avoided).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from polars_order_book_spark.functions.hashing import hash64
@@ -63,15 +63,19 @@ def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     base = fan_out_for_compute(
         df.select(F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("__toks"))
     )
-    toks = F.col("__toks")
+    return base.select("doc_id", F.explode(_kshingles(F.col("__toks"), k)).alias("shingle"))
+
+
+def _kshingles(toks: Column, k: int) -> Column:
+    """The k-shingle strings of a projected token-array column, in text order
+    with duplicates kept (empty when the doc has fewer than k tokens)."""
     idx = F.when(F.size(toks) >= k, F.sequence(F.lit(0), F.size(toks) - k)).otherwise(
         F.array().cast("array<int>")
     )
-    sh = F.transform(
+    return F.transform(
         idx,
         lambda i: F.concat_ws(" ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(k)]),
     )
-    return base.select("doc_id", F.explode(sh).alias("shingle"))
 
 
 MINHASH_PRIME = 2147483647  # 2^31 - 1
@@ -185,14 +189,17 @@ def jaccard_verify(pairs: DataFrame, sh: DataFrame, threshold: float = 0.5) -> D
     )
 
 
+# Past this many verified pairs the components run distributed: 5M edges is
+# about 80 MB of longs on the driver.
+_MAX_DRIVER_EDGES = 5_000_000
+
+
 def neardup_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     *,
     max_iter: int = 25,
-    algorithm: str = "auto",
-    max_driver_edges: int = 5_000_000,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph → survivor
     selection: returns (doc_id, component, is_survivor) where ``component`` is
@@ -200,52 +207,32 @@ def neardup_components(
     equal to its component id. The step after any pairwise dedup — collapse
     transitive duplicate clusters to one kept document.
 
-    ``algorithm``:
-
-    * ``"auto"`` (default): probe the pair count against
-      ``max_driver_edges``; at or below the cap, collect the (already tiny
-      relative to the corpus) pair list and run driver-side union-find —
-      milliseconds, zero iterative Spark jobs; above it, fall back to the
-      star rounds. The pair relation is lazily checkpointed FIRST so the
-      probe and the collect share one execution of the (expensive) upstream
-      pair pipeline. This is the bounded-collect pattern the BLAS top-k and
-      BPE trainer use: verified duplicate PAIRS are orders of magnitude
-      smaller than the corpus, so most real runs take the driver path, and
-      the cap (≈80 MB of longs at the default) fails over — never over-
-      collects.
-    * ``"star"``: alternating large-star/small-star rounds
-      (:func:`neardup_components_star`) — O(log n) rounds independent of
-      cluster diameter, the distributed choice for pair graphs past the cap.
-    * ``"prop"``: min-label propagation (:func:`neardup_components_prop`) —
-      O(diameter) rounds over a FIXED edge relation, cheaper per round, fine
-      when clusters are known shallow.
-
-    All three produce identical output (pinned equal by test), so the
-    dispatch never changes results.
+    The pair relation is lazily checkpointed, then its size is probed against
+    ``_MAX_DRIVER_EDGES``. At or below the cap the pair list is collected and
+    union-find runs on the driver — milliseconds, zero iterative Spark jobs;
+    above it the components come from :func:`neardup_components_star`
+    (``max_iter`` bounds its rounds). The checkpoint lets the probe and the
+    collect share one execution of the (expensive) upstream pair pipeline.
+    This is the bounded-collect pattern the BLAS top-k and BPE trainer use:
+    verified duplicate PAIRS are orders of magnitude smaller than the corpus,
+    so most real runs take the driver path, and the cap fails over — never
+    over-collects. Both paths give identical output (pinned equal by test).
     """
-    if algorithm == "auto":
-        cleaned = (
-            pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-            .where(F.col(a_col).isNotNull() & F.col(b_col).isNotNull())
-            .localCheckpoint(eager=False)
-        )
-        if cleaned.limit(max_driver_edges + 1).count() <= max_driver_edges:
-            return _components_driver_unionfind(cleaned)
-        return neardup_components_star(cleaned, "u", "v", max_iter=max_iter)
-    if algorithm == "star":
-        return neardup_components_star(pairs, a_col, b_col, max_iter=max_iter)
-    if algorithm == "prop":
-        return neardup_components_prop(pairs, a_col, b_col, max_iter=max_iter)
-    raise ValueError(
-        f"algorithm must be 'auto', 'star' or 'prop', got {algorithm!r}"
+    cleaned = (
+        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+        .where(F.col(a_col).isNotNull() & F.col(b_col).isNotNull())
+        .localCheckpoint(eager=False)
     )
+    if cleaned.limit(_MAX_DRIVER_EDGES + 1).count() <= _MAX_DRIVER_EDGES:
+        return _components_driver_unionfind(cleaned)
+    return neardup_components_star(cleaned, "u", "v", max_iter=max_iter)
 
 
 def _components_driver_unionfind(cleaned: DataFrame) -> DataFrame:
     """Driver union-find over a collected (u, v) pair list — the sub-cap limb
-    of ``algorithm="auto"``. Same edge semantics as the star variant: null
-    endpoints were dropped upstream, self-pairs contribute their node as a
-    singleton but no edge. Output contract identical (min-id component,
+    of :func:`neardup_components`. Same edge semantics as the star variant:
+    null endpoints were dropped upstream, self-pairs contribute their node as
+    a singleton but no edge. Output contract identical (min-id component,
     survivor = member equal to the component id)."""
     from pyspark.sql.types import BooleanType, StructField, StructType
 
@@ -279,77 +266,6 @@ def _components_driver_unionfind(cleaned: DataFrame) -> DataFrame:
     return cleaned.sparkSession.createDataFrame(data, out_schema)
 
 
-def neardup_components_prop(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    *,
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components by min-label propagation (the opt-in
-    ``algorithm="prop"`` of :func:`neardup_components`).
-
-    Algorithm: min-label propagation. Labels start as each node's own id;
-    every round each node takes the min of its label and its neighbors'
-    labels; converged when a round changes nothing. Rounds needed = graph
-    diameter (duplicate clusters are short-diameter in practice). Each round
-    is one join + one groupBy on the edge relation — all shuffles on node id,
-    AQE-skew-splittable; lineage is truncated per round (localCheckpoint),
-    and convergence is checked with a count, so this builder runs EAGER Spark
-    jobs (bounded by ``max_iter``) — the standard shape for iterative
-    fixpoints. Raises if the fixpoint is not reached within ``max_iter``
-    (pathological diameter — raise the cap or pre-cluster).
-    """
-    # null endpoints are excluded up front (r8 review): the star/auto
-    # variants filter them, and the three algorithms are pinned equal —
-    # a NULL dst never equi-joins labels and would otherwise emit a
-    # spurious all-NULL output row
-    pairs = pairs.where(F.col(a_col).isNotNull() & F.col(b_col).isNotNull())
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, on=[edges.dst == labels.node], how="inner")
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, on=[labels.node == neighbor_min.src], how="left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels.select(
-                F.col("node").alias("doc_id"),
-                F.col("label").alias("component"),
-                (F.col("node") == F.col("label")).alias("is_survivor"),
-            )
-    raise RuntimeError(
-        f"neardup_components_prop did not converge in {max_iter} rounds; "
-        "component diameter exceeds the cap"
-    )
-
-
 def neardup_components_star(
     pairs: DataFrame,
     a_col: str = "doc_a",
@@ -361,14 +277,14 @@ def neardup_components_star(
     the MapReduce CC algorithm of Kiveris et al. (SoCC'14, "Connected
     Components in MapReduce and Beyond"). Same output contract as
     ``neardup_components`` (doc_id, component, is_survivor), pinned equal by
-    test.
+    test; :func:`neardup_components` runs it for pair graphs above its
+    driver cap.
 
-    Why a second algorithm: min-label propagation converges in O(diameter)
-    rounds over the *fixed* edge relation; large-star/small-star rewrites the
-    edge relation itself each round and converges in O(log² n) (O(log n) in
-    practice) rounds *independent of diameter* — the scale-safe choice when
-    duplicate clusters can be long chains (e.g. near-dup drift across crawl
-    snapshots).
+    Each round rewrites the edge relation itself, so it converges in
+    O(log² n) (O(log n) in practice) rounds *independent of diameter* — the
+    scale-safe choice when duplicate clusters can be long chains (e.g.
+    near-dup drift across crawl snapshots). Raises if the fixpoint is not
+    reached within ``max_iter`` rounds.
 
     - large-star: for each node u, connect every strictly-larger neighbor to
       u's current minimum neighbor (including u).
@@ -622,8 +538,8 @@ def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
 def _shingle_arrays(df: DataFrame, text_col: str, id_col: str, k: int,
                     block_col: str | None) -> DataFrame:
     """(doc_id[, __blk], __sh): DISTINCT shingles per doc as ONE array,
-    ordered by (hash64, shingle) — the same global total order the relational
-    path's order_by='hash' uses, derived in-array (no shuffle, no window)."""
+    ordered by (hash64, shingle) — a global total order derived in-array (no
+    shuffle, no window)."""
     from polars_order_book_spark.functions.runtime import fan_out_for_compute
 
     cols = [F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("__toks")]
@@ -632,145 +548,13 @@ def _shingle_arrays(df: DataFrame, text_col: str, id_col: str, k: int,
     # compute-bound lambda chain over a bytes-narrow scan: provision
     # parallelism by compute (see functions/runtime.py fan_out_for_compute)
     base = fan_out_for_compute(df.select(*cols))
-    toks = F.col("__toks")
-    idx = F.when(F.size(toks) >= k, F.sequence(F.lit(0), F.size(toks) - k)).otherwise(
-        F.array().cast("array<int>")
-    )
-    sh = F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(k)]),
-    )
     keyed = F.transform(
-        F.array_distinct(sh), lambda s: F.struct(hash64(s).alias("h"), s.alias("s"))
+        F.array_distinct(_kshingles(F.col("__toks"), k)),
+        lambda s: F.struct(hash64(s).alias("h"), s.alias("s")),
     )
     ordered = F.transform(F.array_sort(keyed), lambda x: x["s"])
     out = ["doc_id", "__blk"] if block_col is not None else ["doc_id"]
     return base.withColumn("__sh", ordered).select(*out, "__sh")
-
-
-def ngram_jaccard_pairs_arrays(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    k: int = DEFAULT_SHINGLE_K,
-    block_col: str | None = None,
-    threshold: float = 0.5,
-    spread: int | None = None,
-    prefix_group_cap: int | None = 4096,
-    candidate_budget: int | None = 10_000_000,
-) -> DataFrame:
-    """Array-native exact n-gram Jaccard pairs ≥ threshold — identical results
-    to :func:`ngram_jaccard_pairs` (same prefix-filter theorem, same hash
-    total order), different physical shape:
-
-    * shingle sets live as ONE hash-ordered array column per doc (map-only) —
-      no exploded shingle relation, so no distinct shuffle and no per-doc
-      row_number window;
-    * only the PREFIX explodes into the candidate join (n − ⌈t·n⌉ + 1 rows
-      per doc instead of n);
-    * verification is ``array_intersect`` on the two docs' arrays after
-      joining the bounded candidate set back — two joins that move one array
-      per doc, not two grid joins over every (doc, shingle) row.
-
-    Scale contract: per-row memory is the doc's shingle set (bounded by doc
-    length — the same bound `applyInPandas` text ops already assume); shuffle
-    volume is prefixes + candidate pairs, strictly less than the relational
-    path's full shingle relation. Same candidate-bounding property: only the
-    rarest-by-hash prefix shingles generate join rows.
-
-    ``spread``: optional doc-relation repartition BEFORE the map-heavy
-    shingling. This path has no shuffle until the candidate join, so its
-    parallelism is the SCAN's split count — correct on a real table (many
-    row groups) but serial on a single-row-group local file. Cost when used:
-    one shuffle of the raw doc bytes. Leave None when the source is already
-    well-split (the 100 TB case).
-
-    Measured (sf0.1, local[32], checksummed): identical pairs to the
-    relational path, but 2-3× SLOWER end-to-end — the candidate join's
-    shuffles carry few bytes yet heavy CPU, so AQE coalesces them below the
-    useful task count, and per-doc array ops (distinct/sort) pay quadratic
-    corners the shuffle-based distinct avoids. The relational
-    :func:`ngram_jaccard_pairs` stays the registered/recommended
-    implementation; this one is kept as the array-native alternative for
-    well-split inputs with short documents.
-    """
-    if spread:
-        df = df.repartition(spread)
-    # arr feeds the prefix explode, both pair-join sides (via pref), the
-    # group-size/budget aggregate, and both verify-array joins — the
-    # map-heavy shingling would re-execute per consumer; compute it once
-    # (same lazy-checkpoint rationale as the relational path's prefix)
-    arr = _shingle_arrays(df, text_col, id_col, k, block_col).localCheckpoint(
-        eager=False
-    )
-    blk = ["__blk"] if block_col is not None else []
-    n_sh = F.size("__sh")
-
-    def _ceil_t(n_col):
-        # same 1e-9 nudge as the relational path (exact-product float guard)
-        return F.ceil(F.lit(threshold) * n_col - F.lit(1e-9))
-
-    prefix_len = (n_sh - _ceil_t(n_sh) + 1).cast("int")
-    pref = arr.select(
-        *blk,
-        F.col("doc_id"),
-        n_sh.alias("n_sh"),
-        F.explode(F.slice("__sh", 1, prefix_len)).alias("shingle"),
-    )
-    if prefix_group_cap is not None or candidate_budget is not None:
-        from polars_order_book_spark.functions.skew import salted_pair_join
-
-        cands = (
-            salted_pair_join(
-                pref.select(*blk, "shingle", "doc_id", "n_sh"),
-                [*blk, "shingle"],
-                "doc_id",
-                "doc_a",
-                "doc_b",
-                prefix_group_cap if prefix_group_cap is not None else 1 << 62,
-                payload=[("n_sh", "na", "nb")],
-                pair_budget=candidate_budget,
-                budget_msg=(
-                    "ngram_jaccard_pairs_arrays: exact prefix-filter join is "
-                    "the bounded-block path; for unbounded corpora use "
-                    "MinHash-LSH (dedup_minhash_lsh / "
-                    "minhash_duplicate_pairs)"
-                ),
-            )
-            .where(
-                (F.col("na") >= _ceil_t(F.col("nb")))
-                & (F.col("nb") >= _ceil_t(F.col("na")))
-            )
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-    else:
-        a = pref.select(*blk, F.col("doc_id").alias("doc_a"), "shingle", F.col("n_sh").alias("na"))
-        b = pref.select(*blk, F.col("doc_id").alias("doc_b"), "shingle", F.col("n_sh").alias("nb"))
-        cands = (
-            a.join(b, on=[*blk, "shingle"])
-            .where(
-                (F.col("doc_a") < F.col("doc_b"))
-                & (F.col("na") >= _ceil_t(F.col("nb")))
-                & (F.col("nb") >= _ceil_t(F.col("na")))
-            )
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-    sets = arr.select("doc_id", "__sh")
-    return (
-        cands.join(sets.select(F.col("doc_id").alias("doc_a"), F.col("__sh").alias("__sa")), on="doc_a")
-        .join(sets.select(F.col("doc_id").alias("doc_b"), F.col("__sh").alias("__sb")), on="doc_b")
-        .withColumn("n_inter", F.size(F.array_intersect("__sa", "__sb")))
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.size("__sa") + F.size("__sb") - F.col("n_inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
 
 
 def ngram_jaccard_pairs(
@@ -781,7 +565,6 @@ def ngram_jaccard_pairs(
     k: int = DEFAULT_SHINGLE_K,
     block_col: str | None = None,
     threshold: float = 0.5,
-    order_by: str = "freq",
     prefix_group_cap: int | None = 4096,
     candidate_budget: int | None = 10_000_000,
 ) -> DataFrame:
@@ -789,26 +572,31 @@ def ngram_jaccard_pairs(
     all-pairs.
 
     Candidate generation uses the set-similarity-join prefix theorem: order
-    every doc's shingles by a global total order (ascending document
-    frequency, ties by value) and keep only the first
-    ``n − ceil(t·n) + 1`` shingles; any two sets with J ≥ t MUST share a
-    prefix shingle, so joining on prefix shingles alone loses no pairs.
-    A length filter (|A| ≥ t·|B|, necessary for J ≥ t) prunes further before
-    exact verification over the full shingle sets.
+    every doc's shingles by a global total order (the portable shingle hash,
+    ties by value) and keep only the first ``n − ceil(t·n) + 1`` shingles;
+    any two sets with J ≥ t MUST share a prefix shingle, so joining on prefix
+    shingles alone loses no pairs. A length filter (|A| ≥ t·|B|, necessary
+    for J ≥ t) prunes further before exact verification over the full
+    shingle sets.
+
+    Physical shape:
+
+    * each doc's shingle set is ONE hash-ordered array column (map-only) —
+      no exploded shingle relation, no distinct shuffle, no rank window;
+    * only the PREFIX explodes into the candidate join (n − ⌈t·n⌉ + 1 rows
+      per doc instead of n);
+    * verification is ``array_intersect`` on the two docs' arrays after
+      joining the bounded candidate set back — two joins that move one array
+      per doc.
 
     Scale contract: cost is Σ per-prefix-shingle collision group², and the
-    prefix keeps only each doc's RAREST shingles — high-frequency shingles
-    never generate candidates, so one giant block (e.g. block_col='lang' with
-    one dominant language) no longer implies a |block|² join. ``block_col``
-    remains as an optional semantic restriction (only intra-block pairs are
-    reported), not the scalability mechanism.
-
-    ``order_by``: the prefix theorem holds for ANY global total order.
-    ``"freq"`` (default) orders by ascending document frequency — minimal
-    candidates, costs a frequency groupBy + join. ``"hash"`` orders by the
-    portable shingle hash — skips both (two fewer passes over the shingle
-    relation) at the price of more candidates on skewed real-text corpora.
-    Results are identical either way.
+    prefix keeps each doc's first shingles in hash order, so a shingle
+    common to a block only generates candidates from the docs whose prefix
+    it falls in — one giant block (e.g. block_col='lang' with one dominant
+    language) does not imply a |block|² join. Per-row memory is the doc's
+    shingle set (bounded by doc length). ``block_col`` is an optional
+    semantic restriction (only intra-block pairs are reported), not the
+    scalability mechanism.
 
     Guards (both on by default — this operator is the BOUNDED-block exact
     path; MinHash-LSH is the unbounded-corpus path):
@@ -818,7 +606,7 @@ def ngram_jaccard_pairs(
       model-sized aggregate and asserted ≤ budget on the rows feeding the
       join — a boilerplate-heavy corpus that saturates the shingle space
       (measured at sf1: 18.5M candidates killed an 8 GiB heap mid-stage
-      with no warning, SCALE.md) now dies instantly with a message naming
+      with no warning, SCALE.md) dies instantly with a message naming
       ``dedup_minhash_lsh`` instead of OOMing. ``None`` disables.
     * ``prefix_group_cap`` salting: prefix-shingle groups above the cap
       salt-split via :func:`functions.skew.salted_pair_join` (triangle
@@ -826,34 +614,15 @@ def ngram_jaccard_pairs(
       shingle can't concentrate its df² pair space in a single task.
       ``None`` disables (budget check still applies if set).
     """
-    sh = shingles(df, text_col, id_col, k).distinct()
-    blk: list[str] = []
-    if block_col is not None:
-        blocks = df.select(F.col(id_col).alias("doc_id"), F.col(block_col).alias("__blk"))
-        sh = sh.join(blocks, on="doc_id")
-        blk = ["__blk"]
-    # The shingle relation feeds several subtrees (freq, rank, both verify
-    # joins). Measured: explicit persist() is a net LOSS here — the
-    # distinct's shuffle files already get reused across subtrees
-    # (ReusedExchange), so caching only adds materialization cost.
+    # arr feeds the prefix explode, both pair-join sides, the group-size/
+    # budget aggregate and both verify-array joins — the map-heavy shingling
+    # would re-execute per consumer; compute it once
+    arr = _shingle_arrays(df, text_col, id_col, k, block_col).localCheckpoint(
+        eager=False
+    )
+    blk = ["__blk"] if block_col is not None else []
+    n_sh = F.size("__sh")
 
-    if order_by == "freq":
-        freq = sh.groupBy(*blk, "shingle").agg(F.count(F.lit(1)).alias("__freq"))
-        keyed = sh.join(freq, on=[*blk, "shingle"])
-        order_cols = [F.col("__freq"), F.col("shingle")]
-    elif order_by == "hash":
-        keyed = sh.withColumn("__hkey", hash64(F.col("shingle")))
-        order_cols = [F.col("__hkey"), F.col("shingle")]
-    else:
-        raise ValueError(f"unknown order_by {order_by!r}")
-    # n_sh as a window count over the SAME doc_id partitioning the rank
-    # needs — one exchange serves both (r8: replaces a groupBy + join; the
-    # set sizes then ride the candidate pairs as payload so the final
-    # per-pair sizes joins disappear too).
-    ranked = keyed.withColumn(
-        "__rn",
-        F.row_number().over(Window.partitionBy("doc_id").orderBy(*order_cols)),
-    ).withColumn("n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
     # ceil(t·n) in float arithmetic can land one ULP above an exact integer
     # product (0.435·1000 = 435.00000000000006 → ceil 436), shortening the
     # prefix below what the theorem requires and silently dropping a boundary
@@ -861,81 +630,53 @@ def ngram_jaccard_pairs(
     def _ceil_t(n_col):
         return F.ceil(F.lit(threshold) * n_col - F.lit(1e-9))
 
-    prefix = ranked.where(F.col("__rn") <= F.col("n_sh") - _ceil_t(F.col("n_sh")) + 1)
-    # The prefix relation feeds three subtrees (both pair-join sides + the
-    # group-size/budget aggregate); unlike the full shingle relation (whose
-    # distinct shuffle is reused for free), the rank WINDOW re-executes per
-    # consumer. Lazy localCheckpoint computes it once — measured at sf0.1:
-    # guarded best-of 6.4 -> 4.9 s, below even the unguarded no-checkpoint
-    # shape (the unguarded self-join pays the double window too). Storage
-    # cost: the prefix rows (docs x prefix_len, narrow), disk-backed.
-    prefix = prefix.select(*blk, "shingle", "doc_id", "n_sh").localCheckpoint(
-        eager=False
+    prefix_len = (n_sh - _ceil_t(n_sh) + 1).cast("int")
+    pref = arr.select(
+        *blk,
+        F.col("doc_id"),
+        n_sh.alias("n_sh"),
+        F.explode(F.slice("__sh", 1, prefix_len)).alias("shingle"),
     )
-
+    # length filter: J >= t forces t·|B| <= |A| (and symmetrically)
+    lengths_ok = (F.col("na") >= _ceil_t(F.col("nb"))) & (F.col("nb") >= _ceil_t(F.col("na")))
     if prefix_group_cap is not None or candidate_budget is not None:
         from polars_order_book_spark.functions.skew import salted_pair_join
 
-        cands = (
-            salted_pair_join(
-                prefix.select(*blk, "shingle", "doc_id", "n_sh"),
-                [*blk, "shingle"],
-                "doc_id",
-                "doc_a",
-                "doc_b",
-                # budget-only mode: a cap past any real group size makes the
-                # triangle decomposition degenerate to the plain self-join
-                prefix_group_cap if prefix_group_cap is not None else 1 << 62,
-                payload=[("n_sh", "na", "nb")],
-                pair_budget=candidate_budget,
-                budget_msg=(
-                    "ngram_jaccard_pairs: exact prefix-filter join is the "
-                    "bounded-block path; for unbounded corpora use "
-                    "MinHash-LSH (dedup_minhash_lsh / "
-                    "minhash_duplicate_pairs)"
-                ),
-            )
-            # length filter: J >= t forces t·|B| <= |A| (and symmetrically)
-            .where(
-                (F.col("na") >= _ceil_t(F.col("nb")))
-                & (F.col("nb") >= _ceil_t(F.col("na")))
-            )
-            .select("doc_a", "doc_b", "na", "nb")
-            .distinct()
-        )
+        cands = salted_pair_join(
+            pref.select(*blk, "shingle", "doc_id", "n_sh"),
+            [*blk, "shingle"],
+            "doc_id",
+            "doc_a",
+            "doc_b",
+            # budget-only mode: a cap past any real group size makes the
+            # triangle decomposition degenerate to the plain self-join
+            prefix_group_cap if prefix_group_cap is not None else 1 << 62,
+            payload=[("n_sh", "na", "nb")],
+            pair_budget=candidate_budget,
+            budget_msg=(
+                "ngram_jaccard_pairs: exact prefix-filter join is the "
+                "bounded-block path; for unbounded corpora use "
+                "MinHash-LSH (dedup_minhash_lsh / "
+                "minhash_duplicate_pairs)"
+            ),
+        ).where(lengths_ok)
     else:
-        a = prefix.select(*blk, F.col("doc_id").alias("doc_a"), "shingle", F.col("n_sh").alias("na"))
-        b = prefix.select(*blk, F.col("doc_id").alias("doc_b"), "shingle", F.col("n_sh").alias("nb"))
-        cands = (
-            a.join(b, on=[*blk, "shingle"])
-            .where(
-                (F.col("doc_a") < F.col("doc_b"))
-                # length filter: J >= t forces t·|B| <= |A| (and symmetrically)
-                & (F.col("na") >= _ceil_t(F.col("nb")))
-                & (F.col("nb") >= _ceil_t(F.col("na")))
-            )
-            .select("doc_a", "doc_b", "na", "nb")
-            .distinct()
+        a = pref.select(*blk, F.col("doc_id").alias("doc_a"), "shingle", F.col("n_sh").alias("na"))
+        b = pref.select(*blk, F.col("doc_id").alias("doc_b"), "shingle", F.col("n_sh").alias("nb"))
+        cands = a.join(b, on=[*blk, "shingle"]).where(
+            (F.col("doc_a") < F.col("doc_b")) & lengths_ok
         )
-
-    # Measured NON-optimization (sf0.1, fresh session, identical checksums):
-    # semi-joining the shingle relation down to candidate docs before the
-    # verify joins — shuffled (best 6.1s vs 5.3s) or broadcast (7.3s) — LOSES:
-    # the candidate subtree gets re-executed for the prune/broadcast build,
-    # costing more than the pruned verify bytes save. The plain formulation
-    # below reuses the distinct's shuffle files across all subtrees. The set
-    # sizes ride the candidate pairs (na/nb are functionally dependent on the
-    # ids, so grouping by them keeps cardinality) — no per-pair sizes joins.
-    sh_plain = sh.select("doc_id", "shingle")
-    inter = (
-        cands.join(sh_plain.withColumnRenamed("doc_id", "doc_a"), on="doc_a")
-        .join(sh_plain.withColumnRenamed("doc_id", "doc_b"), on=["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    cands = cands.select("doc_a", "doc_b").distinct()
+    sets = arr.select("doc_id", "__sh")
     return (
-        inter
-        .withColumn("jaccard", F.col("n_inter").cast("double") / (F.col("na") + F.col("nb") - F.col("n_inter")))
+        cands.join(sets.select(F.col("doc_id").alias("doc_a"), F.col("__sh").alias("__sa")), on="doc_a")
+        .join(sets.select(F.col("doc_id").alias("doc_b"), F.col("__sh").alias("__sb")), on="doc_b")
+        .withColumn("n_inter", F.size(F.array_intersect("__sa", "__sb")))
+        .withColumn(
+            "jaccard",
+            F.col("n_inter").cast("double")
+            / (F.size("__sa") + F.size("__sb") - F.col("n_inter")),
+        )
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )

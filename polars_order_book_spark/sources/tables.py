@@ -57,11 +57,6 @@ def normalize_ts(df: DataFrame, cols: "tuple[str, ...]") -> DataFrame:
     return df
 
 
-def ts_columns(name: str) -> "tuple[str, ...]":
-    """Timestamp columns of a testdata table (empty tuple if none)."""
-    return _TS_COLS.get(name, ())
-
-
 def _defensive_confs(spark: SparkSession) -> None:
     """The driver may hand us a session built without our factory — pin the
     two confs our timestamp contract depends on: nanosAsLong (legacy
@@ -136,10 +131,6 @@ def load_event_jsonl(
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -46,6 +46,7 @@ from polars_order_book_spark.operators.order_book import (
     _side_from_lists,
     _side_to_lists,
     _snapshot_frame,
+    _validate_tick_dtype,
     snapshot_columns,
 )
 
@@ -200,6 +201,11 @@ def top_n_levels_stream(
     horizon = reorder_horizon or 0
     if horizon < 0:
         raise ValueError("reorder_horizon must be >= 0")
+    # the fold reads every tick as an int (_as_list): a float column would be
+    # truncated silently, so it is refused here, as in the batch fold
+    ticks = [seq, price, qty] + ([prev_price, prev_qty] if variant == "modify" else [])
+    for col in ticks:
+        _validate_tick_dtype(df.schema[col].dataType, col)
 
     keys = list(by)
     out_schema = StructType(

@@ -74,16 +74,16 @@ def test_prefix_filter_jaccard_matches_bruteforce_skewed_block(spark, threshold)
 
 
 def test_prefix_filter_hash_order_identical_results(spark):
-    """order_by='hash' (no frequency pass) must return exactly the same pairs
-    as the default frequency order — only candidate generation differs."""
+    """The prefix order is the portable shingle hash, the only order the
+    operator has: the retired ``order_by`` argument is rejected, and the
+    hash-ordered pairs match brute force."""
     rows = _doc_rows()
     df = spark.createDataFrame(rows, DOC_SCHEMA)
-    a = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-         for r in dedup.ngram_jaccard_pairs(df, threshold=0.5, block_col="lang").collect()}
-    b = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-         for r in dedup.ngram_jaccard_pairs(
-             df, threshold=0.5, block_col="lang", order_by="hash").collect()}
-    assert a == b and a
+    got = {(r["doc_a"], r["doc_b"]): r["jaccard"]
+           for r in dedup.ngram_jaccard_pairs(df, threshold=0.5, block_col="lang").collect()}
+    assert got == _brute_pairs(rows, 0.5) and got
+    with pytest.raises(TypeError):
+        dedup.ngram_jaccard_pairs(df, threshold=0.5, block_col="lang", order_by="hash")
 
 
 def test_prefix_filter_jaccard_no_block(spark):
@@ -121,25 +121,6 @@ def test_prefix_ceil_epsilon_guards_exact_products(spark):
     assert row["guarded"] == 7
 
 
-def test_ngram_jaccard_arrays_impl_identical(spark):
-    """The array-native implementation must produce exactly the relational
-    path's pairs (same prefix theorem, same hash total order)."""
-    docs = spark.createDataFrame(_doc_rows(), DOC_SCHEMA)
-    rel = sorted(
-        (r["doc_a"], r["doc_b"], round(r["jaccard"], 12))
-        for r in dedup.ngram_jaccard_pairs(
-            docs, threshold=0.4, block_col="lang", order_by="hash"
-        ).collect()
-    )
-    arr = sorted(
-        (r["doc_a"], r["doc_b"], round(r["jaccard"], 12))
-        for r in dedup.ngram_jaccard_pairs_arrays(
-            docs, threshold=0.4, block_col="lang", spread=4
-        ).collect()
-    )
-    assert rel == arr and len(rel) > 0
-
-
 def _components_of(rows):
     """Ground-truth union-find over edge tuples."""
     parent = {}
@@ -171,13 +152,13 @@ def test_star_components_match_label_propagation_random(spark):
         (r["doc_id"], r["component"], r["is_survivor"])
         for r in dedup.neardup_components_star(pairs).collect()
     }
-    via_prop = {
+    via_default = {
         (r["doc_id"], r["component"], r["is_survivor"])
-        for r in dedup.neardup_components_prop(pairs).collect()
+        for r in dedup.neardup_components(pairs).collect()
     }
-    assert via_star == via_prop
-    truth = _components_of(rows)
-    assert {(n, c) for n, c, _ in via_star} == set(truth.items())
+    truth = {(n, c, n == c) for n, c in _components_of(rows).items()}
+    assert via_star == truth
+    assert via_default == truth
 
 
 def test_star_components_long_chain(spark):
@@ -316,7 +297,7 @@ def test_ngram_jaccard_guards_do_not_change_results(spark):
         return sorted(
             (r["doc_a"], r["doc_b"], round(r["jaccard"], 12))
             for r in dedup.ngram_jaccard_pairs(
-                docs, threshold=0.4, block_col="lang", order_by="hash", **kw
+                docs, threshold=0.4, block_col="lang", **kw
             ).collect()
         )
 
@@ -339,24 +320,6 @@ def test_ngram_jaccard_candidate_budget_fails_fast(spark):
         q.collect()
     msg = str(ei.value)
     assert "pair_budget" in msg and "dedup_minhash_lsh" in msg
-
-
-def test_ngram_jaccard_arrays_guards_identical(spark):
-    docs = spark.createDataFrame(_doc_rows(), DOC_SCHEMA)
-    guarded = sorted(
-        (r["doc_a"], r["doc_b"], round(r["jaccard"], 12))
-        for r in dedup.ngram_jaccard_pairs_arrays(
-            docs, threshold=0.4, block_col="lang", spread=4
-        ).collect()
-    )
-    plain = sorted(
-        (r["doc_a"], r["doc_b"], round(r["jaccard"], 12))
-        for r in dedup.ngram_jaccard_pairs_arrays(
-            docs, threshold=0.4, block_col="lang", spread=4,
-            prefix_group_cap=None, candidate_budget=None,
-        ).collect()
-    )
-    assert guarded == plain and guarded
 
 
 def test_fuzzy_pairs_candidate_budget_fails_fast_and_is_inert_when_under(spark):

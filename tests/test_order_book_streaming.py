@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
+    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -23,6 +24,7 @@ from pyspark.sql.types import (
 )
 
 from polars_order_book_spark import top_n_levels_from_price_mutations
+from polars_order_book_spark.operators.order_book import OrderBookError
 from polars_order_book_spark.streaming import top_n_levels_stream
 from tests.conftest import rows_by_seq
 
@@ -232,6 +234,25 @@ def test_stream_requires_keys(spark):
     df = spark.createDataFrame([], EVENT_SCHEMA)
     with pytest.raises(ValueError, match="at least one key"):
         top_n_levels_stream(df, "mutations", by=[])
+
+
+@pytest.mark.parametrize("col", ["seq", "price", "qty", "prev_price", "prev_qty"])
+def test_stream_rejects_float_ticks(spark, col):
+    """The fold reads ticks as ints, so a float column (100.7) would fold as
+    level 100; the stream refuses it when the query is built, like the batch
+    fold."""
+    schema = StructType(
+        [f if f.name != col else StructField(col, DoubleType(), False)
+         for f in EVENT_SCHEMA.fields
+         + [StructField("prev_price", LongType(), False),
+            StructField("prev_qty", LongType(), False)]]
+    )
+    df = spark.createDataFrame([], schema)
+    with pytest.raises(OrderBookError, match=f"unsupported tick dtype double for column '{col}'"):
+        top_n_levels_stream(
+            df, "modify", prev_price="prev_price", prev_qty="prev_qty",
+            by=["product_id"],
+        )
 
 
 def _run_stream_batches(spark, tmp, batches, name, horizon, n=2, timeout=180):

@@ -5,10 +5,10 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from polars_order_book_spark.operators import sampling, text
+from polars_order_book_spark.operators import dedup, sampling, text
 from polars_order_book_spark.operators.dedup import (
     neardup_components,
-    neardup_components_prop,
+    neardup_components_star,
 )
 
 
@@ -25,12 +25,12 @@ def test_components_basic_clusters(spark):
 
 
 def test_components_long_chain_converges(spark):
-    """A 12-node chain needs ~diameter rounds of label propagation — pins the
-    iteration loop, not just the 1-hop case."""
+    """A 12-node chain needs several star rounds — pins the iteration loop,
+    not just the 1-hop case."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], ["doc_a", "doc_b"]
     )
-    rows = neardup_components_prop(pairs).collect()
+    rows = neardup_components_star(pairs).collect()
     assert all(r["component"] == 0 for r in rows)
     assert sum(r["is_survivor"] for r in rows) == 1
     assert len(rows) == 13
@@ -39,18 +39,19 @@ def test_components_long_chain_converges(spark):
 def test_components_nonconvergence_raises(spark):
     pairs = spark.createDataFrame([(i, i + 1) for i in range(8)], ["doc_a", "doc_b"])
     with pytest.raises(RuntimeError, match="did not converge"):
-        neardup_components_prop(pairs, max_iter=2)
+        neardup_components_star(pairs, max_iter=1)
 
 
 def test_components_bad_algorithm_raises(spark):
+    """The retired ``algorithm`` argument is rejected: one plan per size."""
     pairs = spark.createDataFrame([(1, 2)], ["doc_a", "doc_b"])
-    with pytest.raises(ValueError, match="algorithm"):
-        neardup_components(pairs, algorithm="bogus")
+    with pytest.raises(TypeError):
+        neardup_components(pairs, algorithm="star")
 
 
 def test_components_auto_matches_star_random(spark):
-    """auto (driver union-find here — under the cap) must equal the
-    distributed star rounds on a random multigraph with self-pairs and
+    """neardup_components (driver union-find here — under the cap) must equal
+    the distributed star rounds on a random multigraph with self-pairs and
     nulls."""
     import random
 
@@ -62,8 +63,6 @@ def test_components_auto_matches_star_random(spark):
         (r["doc_id"], r["component"], r["is_survivor"])
         for r in neardup_components(pairs).collect()
     }
-    from polars_order_book_spark.operators.dedup import neardup_components_star
-
     via_star = {
         (r["doc_id"], r["component"], r["is_survivor"])
         for r in neardup_components_star(pairs).collect()
@@ -72,12 +71,17 @@ def test_components_auto_matches_star_random(spark):
 
 
 def test_components_auto_falls_over_to_star_above_cap(spark):
-    """A 200-edge chain with max_driver_edges=10 must take the distributed
-    star path (and still be correct) instead of collecting."""
+    """A 200-edge chain over a driver cap of 10 edges must take the
+    distributed star path (and still be correct) instead of collecting."""
+    from unittest import mock
+
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], ["doc_a", "doc_b"]
     )
-    out = neardup_components(pairs, max_driver_edges=10).collect()
+    with mock.patch.object(dedup, "_MAX_DRIVER_EDGES", 10), mock.patch.object(
+        dedup, "_components_driver_unionfind", side_effect=AssertionError
+    ):
+        out = neardup_components(pairs).collect()
     assert {(r["doc_id"], r["component"]) for r in out} == {
         (i, 0) for i in range(201)
     }

@@ -185,12 +185,11 @@ HEADLINE = [
     "documents_unigram_em_vocab",
     "ob_updates_top10",
     # r8 session 2 / r9: deep-book folds at the monomorphization ceiling,
-    # PassJoin segments, array-native jaccard shape
+    # PassJoin segments
     "ob_updates_top20_deep",
     "ob_mutations_top10_deep",
     "ob_modify_top20_deep",
     "documents_fuzzy_pairs_segments",
-    "dedup_ngram_jaccard_arrays",
     # r10: absolute-threshold heavy hitters (exact groupBy shape, no sketch)
     "events_heavy_hitters_abs",
 ]
