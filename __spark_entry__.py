@@ -1580,24 +1580,14 @@ def _ob_nbbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq order, one pass per seq chunk seeded with every book's last quote,
     and takes max-bid / min-ask with TOTAL displayed size at the best price.
     A null price is an empty side and stops contributing (stale-quote hazard
-    pinned by pytest)."""
+    pinned by pytest). Also runs ob_nbbo_keyed_chunked and
+    ob_nbbo_keyed_bounded, the names of the retired chunk_size modes: every
+    call now takes the one chunk rule, seq div W."""
     from polars_order_book_spark.operators.nbbo import nbbo
 
     stream = bs.keyed_mutations_stream(load_table(spark, sf_dir, "events"))
     snaps = top_n_levels_from_price_mutations(stream, by=["book"], n=1)
     return nbbo(snaps, books=list(range(7)))
-
-
-def _ob_nbbo_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NBBO with a fixed chunk width (chunk_size=2000 seq units): the same
-    one-fold plan as ob_nbbo_keyed with width-derived chunk ids. Same
-    oracle as ob_nbbo_keyed; equality across chunk widths also pinned by
-    tests/test_nbbo.py."""
-    from polars_order_book_spark.operators.nbbo import nbbo
-
-    stream = bs.keyed_mutations_stream(load_table(spark, sf_dir, "events"))
-    snaps = top_n_levels_from_price_mutations(stream, by=["book"], n=1)
-    return nbbo(snaps, books=list(range(7)), chunk_size=2000)
 
 
 def _ob_nbbo_sql() -> str:
@@ -7844,7 +7834,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "documents_chunks": _docs_chunks,
         "documents_hash_embed_knn": _docs_hash_embed_knn,
         "embeddings_kmeans_step": _embeddings_kmeans_step,
-        "ob_nbbo_keyed_chunked": _ob_nbbo_chunked,
+        "ob_nbbo_keyed_chunked": _ob_nbbo,
         "ob_nbbo_keyed_bounded": _ob_nbbo,
         "q2_min_cost_supplier": hq.q2_min_cost_supplier,
         "q8_market_share": hq.q8_market_share,

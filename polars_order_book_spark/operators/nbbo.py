@@ -18,9 +18,9 @@ contributing to the bid until it quotes again. Every non-null price is a
 quote, negative ones included.
 
 Plan: NBBO is itself a fold over the global seq order with a little state
-per book, so it runs as one. Each row gets a seq-chunk id; each chunk is
-seeded with every book's last snapshot before it (a chunks × books
-``max_by`` summary, exploded over the chunks each summary row carries
+per book, so it runs as one. Each row gets a seq-chunk id, ``seq div W``;
+each chunk is seeded with every book's last snapshot before it (a chunks ×
+books ``max_by`` summary, exploded over the chunks each summary row carries
 into), and every chunk folds in one sequential ``mapInPandas`` pass. The
 chunks fold in parallel, and no window runs over the event timeline.
 """
@@ -33,17 +33,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
+from polars_order_book_spark.functions.runtime import shuffle_partitions
 from polars_order_book_spark.operators.order_book import (
     _as_list, _register_self_by_value, _validate_tick_dtype,
 )
 
 _register_self_by_value(__name__)
 
-# Auto-chunk bound: one chunk never covers more than this many seq units,
-# however few shuffle partitions the session has. For unique-seq streams
-# (the book contract) span ≈ rows, so this also bounds the rows one fold
-# task holds per chunk.
-_AUTO_CHUNK_MAX_SPAN = 2_000_000
+# One chunk never covers more than this many seq units. The chunk width is
+# this span split over the shuffle partitions, so data that spans it gives
+# every partition a chunk, and smaller inputs fold in fewer chunks. For
+# unique-seq streams (the book contract) span ≈ rows, so this also bounds
+# the rows one fold task holds per chunk.
+_CHUNK_SPAN = 2_000_000
 
 _QUOTES = ("bid_price_1", "bid_qty_1", "ask_price_1", "ask_qty_1")
 _SIDES = ("bp", "bq", "ap", "aq")
@@ -98,7 +100,6 @@ def nbbo(
     *,
     book_col: str = "book",
     seq_col: str = "seq",
-    chunk_size: "int | None | str" = "auto",
 ) -> DataFrame:
     """Consolidate keyed level-1 snapshots into the cross-book NBBO.
 
@@ -109,25 +110,15 @@ def nbbo(
     configuration); ids absent from the data never contribute, and a row of
     a book missing from the list fails the query.
 
-    ``chunk_size`` cuts the seq order into the chunks that fold in parallel:
-
-    * ``"auto"`` (default) — about shuffle-partitions equal seq ranges,
-      derived lazily from the seq bounds (one tiny scalar aggregate), with no
-      chunk wider than ``_AUTO_CHUNK_MAX_SPAN`` seq units.
-    * an ``int`` — a fixed chunk WIDTH in seq units (``seq div chunk_size``),
-      NOT a chunk count. Every chunk id between the first and the last is
-      seeded, so a width far below the seq gaps makes many empty chunks.
-    * ``None`` — one chunk: the whole timeline folds in one task.
-
-    All three produce identical output (pinned by differential tests + the
-    shared driver oracle).
+    The seq order is cut into chunks of ``W`` seq units (``seq div W``,
+    ``W = max(1, _CHUNK_SPAN // shuffle partitions)``) that fold in
+    parallel, each seeded with every book's last quote before it. Every
+    chunk id between a book's first chunk and the last one is seeded, so
+    seqs far sparser than one per unit (timestamps, say) seed many empty
+    chunks; an event counter keeps chunks and seeds data-sized.
     """
     if not books:
         raise ValueError("books must be non-empty")
-    if isinstance(chunk_size, str) and chunk_size != "auto":
-        raise ValueError(f"chunk_size must be an int, None, or 'auto', got {chunk_size!r}")
-    if isinstance(chunk_size, int) and chunk_size <= 0:
-        raise ValueError(f"chunk_size must be > 0, got {chunk_size}")
     # A row of a book missing from the caller's list would otherwise be
     # folded in silently from a venue the caller never declared; a row
     # with a null seq has no place in the seq order (and a null seq marks
@@ -147,47 +138,15 @@ def nbbo(
     # The fold decodes through _as_list, which reads float columns as ints.
     for c in (seq_col, *_QUOTES):
         _validate_tick_dtype(types[c], c)
-    # Serialized memory+disk: the rows feed the bounds, the chunk summary
-    # and the fold, and the checkpoint keeps the upstream plan from running
-    # once for each.
+    # Serialized memory+disk: the rows feed the chunk summary and the fold,
+    # and the checkpoint keeps the upstream plan from running once for each.
     rows = snapshots.where(known.isNull()).select(
         F.col(seq_col).alias("seq"),
         F.col(book_col).alias("book"),
         *[F.col(src).alias(dst) for src, dst in zip(_QUOTES, _SIDES)],
     ).localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-
-    if chunk_size is None:
-        tagged = rows.withColumn("__ck", F.lit(0).cast("long"))
-    elif chunk_size == "auto":
-        # Equal-width chunking: the seq bounds are one-row scalar
-        # subqueries, so the chunk ids stay in-plan, nothing is collected
-        # driver-side and nothing is joined.
-        from polars_order_book_spark.functions.runtime import shuffle_partitions
-
-        n_chunks = shuffle_partitions(snapshots.sparkSession, fallback_df=rows)
-        smin = rows.agg(F.min("seq")).scalar()
-        span = rows.agg(F.max("seq")).scalar() - smin + F.lit(1)
-        # Divide BEFORE multiplying, in double: (seq - smin) * n_chunks as
-        # a long multiply overflows (and wraps) once the seq span exceeds
-        # 2^63/n_chunks, silently breaking chunk-id monotonicity. The
-        # double path loses only low-bit precision, and the least() cap +
-        # coalesce keep ids in [0, n_chunks).
-        frac = (F.col("seq") - smin).cast("double") / span.cast("double")
-        # Chunk COUNT is itself span-derived (still fully in-plan): at
-        # least the shuffle width, but enough chunks that one chunk never
-        # spans more than _AUTO_CHUNK_MAX_SPAN seq units. A fixed count
-        # equal to the local shuffle width (32) made ~3M-row chunks at 100M
-        # events (r10 third-decade probe). For unique-seq streams span ≈
-        # rows, so this bounds chunk rows; on a real cluster shuffle width
-        # is thousands and the floor rarely binds.
-        nck = F.greatest(
-            F.lit(n_chunks).cast("long"),
-            F.ceil(span.cast("double") / F.lit(float(_AUTO_CHUNK_MAX_SPAN))),
-        )
-        ck = F.least(nck - F.lit(1), F.floor(frac * nck.cast("double")))
-        tagged = rows.withColumn("__ck", F.coalesce(ck, F.lit(0)).cast("long"))
-    else:
-        tagged = rows.withColumn("__ck", F.expr(f"seq div {int(chunk_size)}"))
+    parts = shuffle_partitions(snapshots.sparkSession, fallback_df=rows)
+    tagged = rows.withColumn("__ck", F.expr(f"seq div {max(1, _CHUNK_SPAN // parts)}"))
 
     # Carry-in: each book's last snapshot per chunk seeds every later chunk
     # up to and including the book's next chunk (or the last chunk). Seeds

@@ -37,7 +37,7 @@ in one task.
 from __future__ import annotations
 
 from bisect import bisect_left, insort
-from typing import Sequence
+from typing import Callable, Sequence
 
 import numpy as np
 import pandas as pd
@@ -581,6 +581,41 @@ def _validate_tick_dtype(dtype, col: str):
     )
 
 
+def _long_ticks(
+    df: DataFrame, ticks: dict[str, str | None], n: int
+) -> tuple[DataFrame, dict[str, str | None], list[str], Callable[[DataFrame], DataFrame]]:
+    """The tick contract both book folds share (ref generic core,
+    price_level.rs:8-44). ``ticks`` maps price, qty, prev_price and
+    prev_qty to their columns (None when absent). Each is validated, and a
+    non-long one is cast to long through a ``__tick_*`` temp column, since
+    the fold reads ticks as Python ints. Returns the frame, the columns the
+    fold reads, the temp columns and ``restore``, which casts the n-deep
+    snapshot PRICE columns of a fold's output back to the input price
+    dtype. Qty snapshots stay long: mutations aggregate qtys, and a sum
+    must not inherit a narrow input type's overflow (the same promotion
+    Polars applies to sums). Long ticks add nothing to the plan."""
+    price_dt = df.schema[ticks["price"]].dataType
+    read, temps = dict(ticks), []
+    for logical, col in ticks.items():
+        if col is None:
+            continue
+        dt = df.schema[col].dataType
+        _validate_tick_dtype(dt, col)
+        if not isinstance(dt, LongType):
+            read[logical] = f"__tick_{logical}"
+            df = df.withColumn(read[logical], F.col(col).cast("long"))
+            temps.append(read[logical])
+
+    def restore(result: DataFrame) -> DataFrame:
+        if isinstance(price_dt, LongType):
+            return result
+        return result.withColumns(
+            {c: F.col(c).cast(price_dt) for c in snapshot_columns(n) if "_price_" in c}
+        )
+
+    return df, read, temps, restore
+
+
 def _apply_fold(
     df: DataFrame,
     variant: str,
@@ -600,36 +635,13 @@ def _apply_fold(
         {"price": price, "qty": qty, "is_bid": is_bid, "seq": seq,
          "prev_price": prev_price, "prev_qty": prev_qty},
     )
-    price, qty, is_bid, seq = named["price"], named["qty"], named["is_bid"], named["seq"]
-    prev_price, prev_qty = named["prev_price"], named["prev_qty"]
+    is_bid, seq = named["is_bid"], named["seq"]
     snap_cols = snapshot_columns(n)
-
-    # Non-i64 ticks (ref generic core, price_level.rs:8-44): validate, cast to
-    # long through temp columns for the fold, and cast snapshot PRICE columns
-    # back to the input price dtype on the way out. Qty snapshots stay long:
-    # mutations aggregate qtys, and a sum must not inherit a narrow input
-    # type's overflow (the same promotion Polars applies to sums).
-    price_dt = df.schema[price].dataType
-    for logical, col in (("price", price), ("qty", qty),
-                         ("prev_price", prev_price), ("prev_qty", prev_qty)):
-        if col is None:
-            continue
-        dt = df.schema[col].dataType
-        _validate_tick_dtype(dt, col)
-        if not isinstance(dt, LongType):
-            tmp = f"__tick_{logical}"
-            df = df.withColumn(tmp, F.col(col).cast("long"))
-            temps.append(tmp)
-            if logical == "price":
-                price = tmp
-            elif logical == "qty":
-                qty = tmp
-            elif logical == "prev_price":
-                prev_price = tmp
-            else:
-                prev_qty = tmp
-    price_snap_cast = None if isinstance(price_dt, LongType) else price_dt
-    price_snap_cols = [c for c in snap_cols if "_price_" in c]
+    df, read, tick_temps, restore_prices = _long_ticks(
+        df, {k: named[k] for k in ("price", "qty", "prev_price", "prev_qty")}, n
+    )
+    temps += tick_temps
+    price, qty, prev_price, prev_qty = read.values()
 
     keys = list(by or ())
     out_fields = [f for f in df.schema.fields if f.name not in temps]
@@ -703,10 +715,7 @@ def _apply_fold(
         .mapInPandas(fold_stream, schema)
     )
 
-    if price_snap_cast is not None:
-        result = result.withColumns(
-            {c: F.col(c).cast(price_snap_cast) for c in price_snap_cols}
-        )
+    result = restore_prices(result)
     if output_struct:
         result = result.select(*keep, F.struct(*snap_cols).alias(output_struct))
     return result

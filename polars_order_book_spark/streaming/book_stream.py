@@ -42,6 +42,7 @@ from polars_order_book_spark.operators.order_book import (
     _as_list,
     _check_n,
     _fold_arrays,
+    _long_ticks,
     _register_self_by_value,
     _side_from_lists,
     _side_to_lists,
@@ -201,11 +202,15 @@ def top_n_levels_stream(
     horizon = reorder_horizon or 0
     if horizon < 0:
         raise ValueError("reorder_horizon must be >= 0")
-    # the fold reads every tick as an int (_as_list): a float column would be
-    # truncated silently, so it is refused here, as in the batch fold
-    ticks = [seq, price, qty] + ([prev_price, prev_qty] if variant == "modify" else [])
-    for col in ticks:
-        _validate_tick_dtype(df.schema[col].dataType, col)
+    # the fold reads every tick as an int (_as_list): ticks take the batch
+    # fold's contract, and seq is refused unless integral
+    _validate_tick_dtype(df.schema[seq].dataType, seq)
+    modify = variant == "modify"
+    df, read, _, restore_prices = _long_ticks(df, {
+        "price": price, "qty": qty,
+        "prev_price": prev_price if modify else None,
+        "prev_qty": prev_qty if modify else None,
+    }, n)
 
     keys = list(by)
     out_schema = StructType(
@@ -214,9 +219,11 @@ def top_n_levels_stream(
         + [StructField(c, LongType(), True) for c in snapshot_columns(n)]
     )
     fold = _book_fold(
-        variant, n, keys, seq, (is_bid, price, qty, prev_price, prev_qty), horizon
+        variant, n, keys, seq,
+        (is_bid, read["price"], read["qty"], read["prev_price"], read["prev_qty"]),
+        horizon,
     )
-    return (
+    return restore_prices(
         df.groupBy(*[F.col(k) for k in keys])
         .applyInPandasWithState(
             fold,

@@ -49,7 +49,6 @@ SLOW_TESTS = {
     "test_property_differential.py::test_property_modify_a_equals_b",
     "test_nbbo.py::test_nbbo_matches_bruteforce",
     "test_property_differential.py::test_property_updates_a_equals_b",
-    "test_nbbo.py::test_nbbo_chunked_equals_global",
     "test_property_differential.py::test_property_semdedup_matches_python_reference",
     "test_property_differential.py::test_property_nbbo_chunked_equals_global",
     "test_pipeline_ops.py::test_components_auto_falls_over_to_star_above_cap",

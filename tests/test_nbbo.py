@@ -2,7 +2,20 @@
 
 import pytest
 
+from polars_order_book_spark.operators import nbbo as nbbo_module
 from polars_order_book_spark.operators.nbbo import nbbo
+
+# Chunk spans whose width W = span // 4 is 1, 7, 40 and 1000 seq units at
+# the fixture's 4 shuffle partitions; unpatched, a test input is one chunk.
+SPANS = (4, 28, 160, 4000)
+
+
+def nbbo_rows(snaps, books, span=None):
+    """nbbo's rows as sorted tuples, with ``_CHUNK_SPAN`` set to ``span``."""
+    with pytest.MonkeyPatch.context() as mp:
+        if span is not None:
+            mp.setattr(nbbo_module, "_CHUNK_SPAN", span)
+        return sorted(map(tuple, nbbo(snaps, books).collect()))
 
 
 def _snaps(spark, rows):
@@ -29,7 +42,7 @@ def test_best_across_books_and_consolidated_size(spark):
 
 def test_emptied_side_stops_contributing(spark):
     """Book 0's bid side empties at seq 2: a naive ignore-nulls fill would
-    keep quoting its stale 10 bid forever — the sentinel decode must not."""
+    keep quoting its stale 10 bid forever — the fold must not."""
     snaps = _snaps(spark, [
         (0, 1, 10, 5, None, None),
         (0, 2, None, None, None, None),  # book 0 now fully empty
@@ -43,16 +56,17 @@ def test_emptied_side_stops_contributing(spark):
 
 def test_negative_and_old_sentinel_prices_are_quotes(spark):
     """A null price is the only empty side: a bid at -1 (the old encode
-    sentinel) or below is a real quote in every chunk mode."""
-    snaps = _snaps(spark, [
+    sentinel) or below is a real quote at every chunk width."""
+    rows = [
         (0, 1, -1, 5, None, None),
         (1, 2, -3, 4, -1, 2),
-    ])
-    for chunk in ("auto", None, 1, 3):
-        out = {r["seq"]: r for r in nbbo(snaps, books=[0, 1], chunk_size=chunk).collect()}
-        assert (out[1]["nbb_price"], out[1]["nbb_qty"]) == (-1, 5), chunk
-        assert (out[2]["nbb_price"], out[2]["nbb_qty"]) == (-1, 5), chunk
-        assert (out[2]["nbo_price"], out[2]["nbo_qty"]) == (-1, 2), chunk
+    ]
+    snaps = _snaps(spark, rows)
+    want = [(1, -1, 5, None, None), (2, -1, 5, -1, 2)]
+    assert py_rows(rows, [0, 1]) == want
+    assert nbbo_rows(snaps, [0, 1]) == want
+    for span in SPANS:
+        assert nbbo_rows(snaps, [0, 1], span) == want, span
 
 
 def test_unseen_books_and_validation(spark):
@@ -83,6 +97,11 @@ def _nbbo_py(rows, books):
         nbo_q = sum(q for p, q in asks if p == nbo) if nbo is not None else None
         out[seq] = (nbb, nbb_q, nbo, nbo_q)
     return out
+
+
+def py_rows(rows, books):
+    """The brute-force model's NBBO rows as sorted tuples, like nbbo_rows."""
+    return sorted((seq, *best) for seq, best in _nbbo_py(rows, books).items())
 
 
 @hsettings(
@@ -117,9 +136,8 @@ def test_nbbo_matches_bruteforce(spark, rows):
 
 
 def test_nbbo_chunked_equals_global(spark):
-    """Segmented-scan fill (chunk_size) must reproduce the single-window
-    result exactly, including carries across silent chunks and sentinel
-    re-emptying."""
+    """Seeded chunks must reproduce the one-chunk result exactly, including
+    carries across silent chunks and sides that empty again."""
     import random
 
     rng = random.Random(7)
@@ -135,59 +153,37 @@ def test_nbbo_chunked_equals_global(spark):
             None if ask_empty else rng.randint(111, 130),
             None if ask_empty else rng.randint(1, 9),
         ))
-    snaps = spark.createDataFrame(
-        rows,
-        "book long, seq long, bid_price_1 long, bid_qty_1 long, "
-        "ask_price_1 long, ask_qty_1 long",
-    )
-    from polars_order_book_spark.operators.nbbo import nbbo
-
-    base = sorted(map(tuple, nbbo(snaps, [0, 1, 2], chunk_size=None).collect()))
-    for chunk in (7, 40, 1000, "auto"):
-        chunked = sorted(
-            map(tuple, nbbo(snaps, [0, 1, 2], chunk_size=chunk).collect())
-        )
-        assert chunked == base, f"chunk_size={chunk}"
-    # the default IS the auto segmented scan
-    assert sorted(map(tuple, nbbo(snaps, [0, 1, 2]).collect())) == base
+    snaps = _snaps(spark, rows)
+    base = nbbo_rows(snaps, [0, 1, 2])
+    assert base == py_rows(rows, [0, 1, 2])
+    for span in SPANS:
+        assert nbbo_rows(snaps, [0, 1, 2], span) == base, f"_CHUNK_SPAN={span}"
 
 
 def test_nbbo_default_plan_has_no_global_timeline_window(spark):
-    """Scale pin (r5 default flip): the DEFAULT plan must never run ONE
-    unpartitioned events-sized window ordered by seq. Every mode is one
-    fold: one MapInPandas, no pivot and no window over seq (the chunk
-    carry-in windows run over the chunks x books summary)."""
+    """Scale pin: the plan must never run ONE unpartitioned events-sized
+    window ordered by seq. It is one fold: one MapInPandas, no pivot, no
+    window over seq (the chunk carry-in windows run over the chunks x books
+    summary) and no scalar subquery (the chunk id is ``seq div W``)."""
     import re
 
     snaps = _snaps(spark, [(0, 1, 10, 1, 12, 1), (1, 2, 11, 2, 13, 2)])
     plan = nbbo(snaps, books=[0, 1])._jdf.queryExecution().optimizedPlan().toString()
-    assert "windowspecdefinition(seq#" not in plan, plan
-    for chunk in ("auto", 2, None):
-        plan = (
-            nbbo(snaps, books=[0, 1], chunk_size=chunk)
-            ._jdf.queryExecution().optimizedPlan().toString()
-        )
-        assert plan.count("MapInPandas") == 1, (chunk, plan)
-        assert "pivot" not in plan.lower(), (chunk, plan)
-        assert not re.search(r"windowspecdefinition\([^)]*\bseq#", plan), (chunk, plan)
+    assert plan.count("MapInPandas") == 1, plan
+    assert "pivot" not in plan.lower(), plan
+    assert not re.search(r"windowspecdefinition\([^)]*\bseq#", plan), plan
+    assert "scalar-subquery" not in plan, plan
 
 
 def test_nbbo_chunked_guardrail(spark):
-    from polars_order_book_spark.operators.nbbo import nbbo
-
-    snaps = spark.createDataFrame(
-        [(0, 1, 10, 1, 12, 1)],
-        "book long, seq long, bid_price_1 long, bid_qty_1 long, "
-        "ask_price_1 long, ask_qty_1 long",
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        nbbo(snaps, [0], chunk_size=0)
+    snaps = _snaps(spark, [(0, 1, 10, 1, 12, 1)])
+    # the chunk width is derived, never passed
+    with pytest.raises(TypeError, match="chunk_size"):
+        nbbo(snaps, [0], chunk_size=2000)
     # the fold would read float ticks as ints, and a null seq marks a seed
-    with _pytest.raises(ValueError, match="tick dtype double"):
+    with pytest.raises(ValueError, match="tick dtype double"):
         nbbo(snaps.withColumn("bid_price_1", snaps.bid_price_1 + 0.5), [0])
-    with _pytest.raises(Exception, match="null seq"):
+    with pytest.raises(Exception, match="null seq"):
         nbbo(snaps.withColumn("seq", snaps.seq + None), [0]).collect()
 
 

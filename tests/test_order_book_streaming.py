@@ -16,7 +16,9 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
+    DecimalType,
     DoubleType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -253,6 +255,25 @@ def test_stream_rejects_float_ticks(spark, col):
             df, "modify", prev_price="prev_price", prev_qty="prev_qty",
             by=["product_id"],
         )
+
+
+@pytest.mark.parametrize("price_type", [IntegerType(), DecimalType(12, 0)])
+def test_stream_snapshot_prices_keep_the_input_price_type(spark, price_type):
+    """The stream takes the batch fold's tick contract: non-long ticks fold
+    as longs, and snapshot prices come back in the input price type."""
+    schema = StructType(
+        [f if f.name != "price" else StructField("price", price_type, False)
+         for f in EVENT_SCHEMA.fields]
+    )
+    out = top_n_levels_stream(spark.createDataFrame([], schema), "mutations",
+                              by=["product_id"])
+    batch = top_n_levels_from_price_mutations(
+        spark.createDataFrame([], schema), by=["product_id"]
+    )
+    for col in ("bid_price_1", "ask_price_1"):
+        assert out.schema[col].dataType == price_type, col
+        assert batch.schema[col].dataType == price_type, col
+    assert out.schema["bid_qty_1"].dataType == LongType()
 
 
 def _run_stream_batches(spark, tmp, batches, name, horizon, n=2, timeout=180):

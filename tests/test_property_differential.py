@@ -299,7 +299,7 @@ def test_property_fuzzy_pairs_complete_within_block(spark, texts):
     assert got == expected
 
 
-# --- chunked NBBO fill vs global window --------------------------------------
+# --- seeded NBBO chunks vs one chunk -----------------------------------------
 
 @settings(**SETTINGS)
 @given(
@@ -312,10 +312,12 @@ def test_property_fuzzy_pairs_complete_within_block(spark, texts):
         min_size=1,
         max_size=24,
     ),
-    chunk=st.sampled_from([1, 3, 7, 1000]),
+    # chunk widths W = span // 4 = 1, 3, 7 and 1000 at the fixture's 4
+    # shuffle partitions
+    span=st.sampled_from([4, 12, 28, 4000]),
 )
-def test_property_nbbo_chunked_equals_global(spark, rows, chunk):
-    from polars_order_book_spark.operators.nbbo import nbbo
+def test_property_nbbo_chunked_equals_global(spark, rows, span):
+    from tests.test_nbbo import nbbo_rows, py_rows
 
     data = []
     for i, (book, bid, ask) in enumerate(rows):
@@ -327,9 +329,9 @@ def test_property_nbbo_chunked_equals_global(spark, rows, chunk):
         "book long, seq long, bid_price_1 long, bid_qty_1 long, "
         "ask_price_1 long, ask_qty_1 long",
     )
-    base = sorted(map(tuple, nbbo(snaps, [0, 1, 2]).collect()))
-    chunked = sorted(map(tuple, nbbo(snaps, [0, 1, 2], chunk_size=chunk).collect()))
-    assert chunked == base
+    base = nbbo_rows(snaps, [0, 1, 2])
+    assert base == py_rows(data, [0, 1, 2])
+    assert nbbo_rows(snaps, [0, 1, 2], span) == base
 
 
 # --- semdedup vs brute-force reference --------------------------------------
