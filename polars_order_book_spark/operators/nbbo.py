@@ -19,10 +19,10 @@ quote, negative ones included.
 
 Plan: NBBO is itself a fold over the global seq order with a little state
 per book, so it runs as one. Each row gets a seq-chunk id, ``seq div W``;
-each chunk is seeded with every book's last snapshot before it (a chunks ×
-books ``max_by`` summary, exploded over the chunks each summary row carries
-into), and every chunk folds in one sequential ``mapInPandas`` pass. The
-chunks fold in parallel, and no window runs over the event timeline.
+each chunk that holds rows is seeded with every book's last snapshot before
+it (a chunks × books ``max_by`` summary, carried forward per book), and
+every chunk folds in one sequential ``mapInPandas`` pass. The chunks fold
+in parallel, and no window runs over the event timeline.
 """
 
 from __future__ import annotations
@@ -40,12 +40,13 @@ from polars_order_book_spark.operators.order_book import (
 
 _register_self_by_value(__name__)
 
-# One chunk never covers more than this many seq units. The chunk width is
-# this span split over the shuffle partitions, so data that spans it gives
-# every partition a chunk, and smaller inputs fold in fewer chunks. For
-# unique-seq streams (the book contract) span ≈ rows, so this also bounds
-# the rows one fold task holds per chunk.
-_CHUNK_SPAN = 2_000_000
+# The chunk width W in seq units. For unique-seq streams (the book contract)
+# a chunk holds about W rows, so the seeds (books per chunk that holds rows)
+# add about books / W rows per row, and an input of a few W per shuffle
+# partition folds on every partition. Seqs sparser than one per W units
+# (epoch-nanosecond timestamps, say) hold fewer rows per chunk, down to one,
+# so their seeds approach books per row.
+_CHUNK_WIDTH = 4096
 
 _QUOTES = ("bid_price_1", "bid_qty_1", "ask_price_1", "ask_qty_1")
 _SIDES = ("bp", "bq", "ap", "aq")
@@ -94,6 +95,41 @@ def _nbbo_fold(batches):
         yield pd.DataFrame([(pend, *_best(state))], columns=_OUT, dtype=object)
 
 
+def _seeds(tagged: DataFrame, books: "list", book_type, seq_type) -> DataFrame:
+    """The carry-in of ``tagged``'s chunks: for every chunk that holds rows
+    and every book quoted before it, one row with the book's last snapshot
+    before the chunk and a null seq, which sorts first in the chunk.
+
+    A mark row per (chunk, book) sorts ahead of the book's own summary row
+    for that chunk, so the last summary at or before the mark is the
+    book's state before the chunk. Seeds are at most books × (chunks that
+    hold rows), however sparse the seqs are.
+    """
+    summary = tagged.groupBy("__ck", "book").agg(
+        F.max_by(F.struct(*_SIDES), "seq").alias("__s")
+    )
+    marks = summary.select("__ck").distinct().select(
+        "__ck",
+        F.explode(F.array(*[F.lit(b).cast(book_type) for b in books])).alias("book"),
+        F.lit(None).cast(summary.schema["__s"].dataType).alias("__s"),
+    )
+    before = (
+        Window.partitionBy("book").orderBy("__ck", F.col("__s").isNotNull())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        marks.unionByName(summary)
+        .withColumn("__seed", F.last("__s", ignorenulls=True).over(before))
+        .where(F.col("__s").isNull() & F.col("__seed").isNotNull())
+        .select(
+            "__ck",
+            F.lit(None).cast(seq_type).alias("seq"),
+            "book",
+            *[F.col(f"__seed.{c}").alias(c) for c in _SIDES],
+        )
+    )
+
+
 def nbbo(
     snapshots: DataFrame,
     books: "list",
@@ -110,12 +146,11 @@ def nbbo(
     configuration); ids absent from the data never contribute, and a row of
     a book missing from the list fails the query.
 
-    The seq order is cut into chunks of ``W`` seq units (``seq div W``,
-    ``W = max(1, _CHUNK_SPAN // shuffle partitions)``) that fold in
-    parallel, each seeded with every book's last quote before it. Every
-    chunk id between a book's first chunk and the last one is seeded, so
-    seqs far sparser than one per unit (timestamps, say) seed many empty
-    chunks; an event counter keeps chunks and seeds data-sized.
+    The seq order is cut into chunks of ``_CHUNK_WIDTH`` seq units
+    (``seq div W``) that fold in parallel over the shuffle partitions. Each
+    chunk that holds rows is seeded with every book's last quote before it,
+    so there are at most books × (chunks that hold rows) seeds however
+    sparse the seqs are.
     """
     if not books:
         raise ValueError("books must be non-empty")
@@ -145,37 +180,18 @@ def nbbo(
         F.col(book_col).alias("book"),
         *[F.col(src).alias(dst) for src, dst in zip(_QUOTES, _SIDES)],
     ).localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    parts = shuffle_partitions(snapshots.sparkSession, fallback_df=rows)
-    tagged = rows.withColumn("__ck", F.expr(f"seq div {max(1, _CHUNK_SPAN // parts)}"))
+    tagged = rows.withColumn("__ck", F.expr(f"seq div {_CHUNK_WIDTH}"))
 
-    # Carry-in: each book's last snapshot per chunk seeds every later chunk
-    # up to and including the book's next chunk (or the last chunk). Seeds
-    # have a null seq, so they sort first in their chunk.
-    summary = tagged.groupBy("__ck", "book").agg(
-        F.max_by(F.struct(*_SIDES), "seq").alias("__s")
-    )
-    stop = F.coalesce(
-        F.lead("__ck").over(Window.partitionBy("book").orderBy("__ck")),
-        F.max("__ck").over(Window.partitionBy()),
-    )
-    # Spark's sequence counts down when start > stop: only rows with a
-    # later chunk to seed may reach it.
-    seeds = (
-        summary.withColumn("__stop", stop)
-        .where(F.col("__ck") < F.col("__stop"))
-        .select(
-            F.explode(F.sequence(F.col("__ck") + 1, F.col("__stop"))).alias("__ck"),
-            F.lit(None).cast(types[seq_col]).alias("seq"),
-            "book",
-            *[F.col(f"__s.{c}").alias(c) for c in _SIDES],
-        )
-    )
+    seeds = _seeds(tagged, books, types[book_col], types[seq_col])
+    # An explicit partition count: adaptive execution would coalesce a
+    # small input's chunks into one fold task.
+    parts = shuffle_partitions(snapshots.sparkSession, fallback_df=rows)
     schema = StructType([
         StructField(name, types[src]) for name, src in zip(_OUT, (seq_col, *_QUOTES))
     ])
     return (
         seeds.unionByName(tagged.select("__ck", "seq", "book", *_SIDES))
-        .repartition("__ck")
+        .repartition(parts, "__ck")
         .sortWithinPartitions("__ck", F.col("seq").asc_nulls_first())
         .mapInPandas(_nbbo_fold, schema)
     )

@@ -637,11 +637,12 @@ def _apply_fold(
     )
     is_bid, seq = named["is_bid"], named["seq"]
     snap_cols = snapshot_columns(n)
+    ticks = ("price", "qty", "prev_price", "prev_qty")
     df, read, tick_temps, restore_prices = _long_ticks(
-        df, {k: named[k] for k in ("price", "qty", "prev_price", "prev_qty")}, n
+        df, {k: named[k] for k in ticks}, n
     )
     temps += tick_temps
-    price, qty, prev_price, prev_qty = read.values()
+    price, qty, prev_price, prev_qty = (read[k] for k in ticks)
 
     keys = list(by or ())
     out_fields = [f for f in df.schema.fields if f.name not in temps]

@@ -5,16 +5,15 @@ import pytest
 from polars_order_book_spark.operators import nbbo as nbbo_module
 from polars_order_book_spark.operators.nbbo import nbbo
 
-# Chunk spans whose width W = span // 4 is 1, 7, 40 and 1000 seq units at
-# the fixture's 4 shuffle partitions; unpatched, a test input is one chunk.
-SPANS = (4, 28, 160, 4000)
+# Chunk widths in seq units; unpatched, a test input is one chunk.
+WIDTHS = (1, 7, 40, 1000)
 
 
-def nbbo_rows(snaps, books, span=None):
-    """nbbo's rows as sorted tuples, with ``_CHUNK_SPAN`` set to ``span``."""
+def nbbo_rows(snaps, books, width=None):
+    """nbbo's rows as sorted tuples, with ``_CHUNK_WIDTH`` set to ``width``."""
     with pytest.MonkeyPatch.context() as mp:
-        if span is not None:
-            mp.setattr(nbbo_module, "_CHUNK_SPAN", span)
+        if width is not None:
+            mp.setattr(nbbo_module, "_CHUNK_WIDTH", width)
         return sorted(map(tuple, nbbo(snaps, books).collect()))
 
 
@@ -65,8 +64,8 @@ def test_negative_and_old_sentinel_prices_are_quotes(spark):
     want = [(1, -1, 5, None, None), (2, -1, 5, -1, 2)]
     assert py_rows(rows, [0, 1]) == want
     assert nbbo_rows(snaps, [0, 1]) == want
-    for span in SPANS:
-        assert nbbo_rows(snaps, [0, 1], span) == want, span
+    for width in WIDTHS:
+        assert nbbo_rows(snaps, [0, 1], width) == want, width
 
 
 def test_unseen_books_and_validation(spark):
@@ -156,14 +155,40 @@ def test_nbbo_chunked_equals_global(spark):
     snaps = _snaps(spark, rows)
     base = nbbo_rows(snaps, [0, 1, 2])
     assert base == py_rows(rows, [0, 1, 2])
-    for span in SPANS:
-        assert nbbo_rows(snaps, [0, 1, 2], span) == base, f"_CHUNK_SPAN={span}"
+    for width in WIDTHS:
+        assert nbbo_rows(snaps, [0, 1, 2], width) == base, f"_CHUNK_WIDTH={width}"
+
+
+def test_sparse_seqs_seed_only_chunks_with_rows(spark):
+    """Timestamp-like seqs, 10^12 units apart: every row is its own chunk
+    at any width, and the chunks between them hold nothing. Each chunk that
+    holds rows gets one seed per book quoted before it, and no other chunk
+    gets any."""
+    from pyspark.sql import functions as F
+
+    rows = [
+        (i % 3, (i + 1) * 10**12 + i, 90 + i % 7, 1 + i % 4, 120 - i % 5, 2)
+        for i in range(30)
+    ]
+    snaps = _snaps(spark, rows)
+    want = py_rows(rows, [0, 1, 2])
+    assert nbbo_rows(snaps, [0, 1, 2]) == want
+    assert nbbo_rows(snaps, [0, 1, 2], 1) == want
+    tagged = snaps.select(
+        F.expr(f"seq div {nbbo_module._CHUNK_WIDTH}").alias("__ck"), "seq", "book",
+        *[F.col(q).alias(s) for q, s in zip(nbbo_module._QUOTES, nbbo_module._SIDES)],
+    )
+    seeds = nbbo_module._seeds(tagged, [0, 1, 2], "long", "long").collect()
+    # chunk i holds row i, of book i % 3: chunks 1 and 2 get 1 and 2
+    # seeds, and each later chunk all 3
+    assert len(seeds) == 1 + 2 + 3 * 27
+    assert {r["__ck"] for r in seeds} == {r[1] // nbbo_module._CHUNK_WIDTH for r in rows[1:]}
 
 
 def test_nbbo_default_plan_has_no_global_timeline_window(spark):
     """Scale pin: the plan must never run ONE unpartitioned events-sized
     window ordered by seq. It is one fold: one MapInPandas, no pivot, no
-    window over seq (the chunk carry-in windows run over the chunks x books
+    window over seq (the chunk carry-in window runs over the chunks x books
     summary) and no scalar subquery (the chunk id is ``seq div W``)."""
     import re
 

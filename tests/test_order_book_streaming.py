@@ -276,7 +276,8 @@ def test_stream_snapshot_prices_keep_the_input_price_type(spark, price_type):
     assert out.schema["bid_qty_1"].dataType == LongType()
 
 
-def _run_stream_batches(spark, tmp, batches, name, horizon, n=2, timeout=180):
+def _run_stream_batches(spark, tmp, batches, name, horizon, n=2, timeout=180,
+                        schema=EVENT_SCHEMA):
     """Feed chronological micro-batches (one file per trigger) through the
     reorder-mode stream under directory ``tmp``; return rows_by_seq of the
     memory sink."""
@@ -285,12 +286,12 @@ def _run_stream_batches(spark, tmp, batches, name, horizon, n=2, timeout=180):
     os.makedirs(in_dir)
     for i, chunk in enumerate(batches):
         part = os.path.join(tmp, f"part_{i}")
-        spark.createDataFrame(chunk, EVENT_SCHEMA).coalesce(1).write.parquet(part)
+        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(part)
         pq = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
         shutil.copy(os.path.join(part, pq), os.path.join(in_dir, f"{i:03d}.parquet"))
         time.sleep(1.1)
     stream_in = (
-        spark.readStream.schema(EVENT_SCHEMA)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
     )
@@ -307,6 +308,35 @@ def _run_stream_batches(spark, tmp, batches, name, horizon, n=2, timeout=180):
     )
     q.awaitTermination(timeout)
     return rows_by_seq(spark.table(name))
+
+
+@pytest.mark.parametrize("price_type", [IntegerType(), DecimalType(12, 0)])
+def test_stream_narrow_price_types_equal_batch_fold(spark, tmp_path, price_type):
+    """Int32 and DECIMAL(12,0) prices fold as longs across micro-batches and
+    come back in the input price type, equal to the batch fold."""
+    from decimal import Decimal
+
+    schema = StructType(
+        [f if f.name != "price" else StructField("price", price_type, False)
+         for f in EVENT_SCHEMA.fields]
+    )
+    cast = Decimal if isinstance(price_type, DecimalType) else int
+    rows = [
+        (p, s, bid, cast(price), q)
+        for p, s, bid, price, q in _mutation_events() if p == "A"
+    ]
+    golden = top_n_levels_from_price_mutations(
+        spark.createDataFrame(rows, schema), by=["product_id"], n=2
+    )
+    name = f"narrow_price_{price_type.typeName()}"
+    got = _run_stream_batches(
+        spark, tmp_path, [rows[:10], rows[10:]], name, horizon=None, schema=schema
+    )
+    for col in ("bid_price_1", "ask_price_2"):
+        assert spark.table(name).schema[col].dataType == price_type, col
+    snap_cols = [c for c in golden.columns if c.startswith(("bid_", "ask_"))]
+    want = rows_by_seq(golden.select("seq", *snap_cols))
+    assert {s: {c: r[c] for c in ("seq", *snap_cols)} for s, r in got.items()} == want
 
 
 def test_stream_reorder_buffer_matches_sorted_batch_golden(spark, tmp_path):

@@ -312,11 +312,9 @@ def test_property_fuzzy_pairs_complete_within_block(spark, texts):
         min_size=1,
         max_size=24,
     ),
-    # chunk widths W = span // 4 = 1, 3, 7 and 1000 at the fixture's 4
-    # shuffle partitions
-    span=st.sampled_from([4, 12, 28, 4000]),
+    width=st.sampled_from([1, 3, 7, 1000]),
 )
-def test_property_nbbo_chunked_equals_global(spark, rows, span):
+def test_property_nbbo_chunked_equals_global(spark, rows, width):
     from tests.test_nbbo import nbbo_rows, py_rows
 
     data = []
@@ -331,7 +329,7 @@ def test_property_nbbo_chunked_equals_global(spark, rows, span):
     )
     base = nbbo_rows(snaps, [0, 1, 2])
     assert base == py_rows(data, [0, 1, 2])
-    assert nbbo_rows(snaps, [0, 1, 2], span) == base
+    assert nbbo_rows(snaps, [0, 1, 2], width) == base
 
 
 # --- semdedup vs brute-force reference --------------------------------------
