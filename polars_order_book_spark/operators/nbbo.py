@@ -71,24 +71,24 @@ def _best(state: dict) -> tuple:
 
 
 def _nbbo_fold(batches):
-    """Fold ``(__ck, seq, book, bp, bq, ap, aq)`` rows sorted by
-    ``(__ck, seq NULLS FIRST)`` into one NBBO row per seq.
+    """Fold ``(__ck, __seed, seq, book, bp, bq, ap, aq)`` rows sorted by
+    ``(__ck, __seed DESC, seq)`` into one NBBO row per seq.
 
-    A chunk change resets the per-book state; a seed row (null seq) sets
-    its book's state and emits nothing. A seq's row is emitted once every
-    row of that seq is applied, also when those rows span two batches.
+    A chunk change resets the per-book state; a seed row sets its book's
+    state and emits nothing. A seq's row is emitted once every row of that
+    seq is applied, also when those rows span two batches.
     """
     ck, pend, state = object(), None, {}
     for pdf in batches:
         out = []
-        cols = [_as_list(pdf[c]) for c in ("__ck", "seq", "book", *_SIDES)]
-        for c, s, book, *quote in zip(*cols):
+        cols = [_as_list(pdf[c]) for c in ("__ck", "__seed", "seq", "book", *_SIDES)]
+        for c, seed, s, book, *quote in zip(*cols):
             if pend is not None and (c != ck or s != pend):
                 out.append((pend, *_best(state)))
             if c != ck:
                 ck, state = c, {}
             state[book] = quote
-            pend = s
+            pend = None if seed else s
         if out:
             yield pd.DataFrame(out, columns=_OUT, dtype=object)
     if pend is not None:
@@ -98,7 +98,9 @@ def _nbbo_fold(batches):
 def _seeds(tagged: DataFrame, books: "list", book_type, seq_type) -> DataFrame:
     """The carry-in of ``tagged``'s chunks: for every chunk that holds rows
     and every book quoted before it, one row with the book's last snapshot
-    before the chunk and a null seq, which sorts first in the chunk.
+    before the chunk and ``__seed`` set, which sorts first in the chunk.
+    Its seq is 0, which the fold ignores: a null would make Arrow hand the
+    column to the fold as float64, which cannot hold epoch-nanosecond seqs.
 
     A mark row per (chunk, book) sorts ahead of the book's own summary row
     for that chunk, so the last summary at or before the mark is the
@@ -119,13 +121,14 @@ def _seeds(tagged: DataFrame, books: "list", book_type, seq_type) -> DataFrame:
     )
     return (
         marks.unionByName(summary)
-        .withColumn("__seed", F.last("__s", ignorenulls=True).over(before))
-        .where(F.col("__s").isNull() & F.col("__seed").isNotNull())
+        .withColumn("__last", F.last("__s", ignorenulls=True).over(before))
+        .where(F.col("__s").isNull() & F.col("__last").isNotNull())
         .select(
             "__ck",
-            F.lit(None).cast(seq_type).alias("seq"),
+            F.lit(True).alias("__seed"),
+            F.lit(0).cast(seq_type).alias("seq"),
             "book",
-            *[F.col(f"__seed.{c}").alias(c) for c in _SIDES],
+            *[F.col(f"__last.{c}").alias(c) for c in _SIDES],
         )
     )
 
@@ -156,8 +159,8 @@ def nbbo(
         raise ValueError("books must be non-empty")
     # A row of a book missing from the caller's list would otherwise be
     # folded in silently from a venue the caller never declared; a row
-    # with a null seq has no place in the seq order (and a null seq marks
-    # a seed row below). Both fail the query instead.
+    # with a null seq has no place in the seq order. Both fail the query
+    # instead.
     known = F.assert_true(
         F.col(book_col).isin([*books]) & F.col(seq_col).isNotNull(),
         F.when(
@@ -190,8 +193,10 @@ def nbbo(
         StructField(name, types[src]) for name, src in zip(_OUT, (seq_col, *_QUOTES))
     ])
     return (
-        seeds.unionByName(tagged.select("__ck", "seq", "book", *_SIDES))
+        seeds.unionByName(tagged.select(
+            "__ck", F.lit(False).alias("__seed"), "seq", "book", *_SIDES
+        ))
         .repartition(parts, "__ck")
-        .sortWithinPartitions("__ck", F.col("seq").asc_nulls_first())
+        .sortWithinPartitions("__ck", F.col("__seed").desc(), "seq")
         .mapInPandas(_nbbo_fold, schema)
     )

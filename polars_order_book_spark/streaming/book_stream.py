@@ -9,17 +9,14 @@ Spark's managed per-key state store (``applyInPandasWithState``).
 Semantics: identical to the batch operators in ``operators.order_book`` —
 both paths call the same ``_fold_arrays`` event loop, with the streaming path
 persisting the two ``_Side`` structures into the state store between
-micro-batches. One fold function serves every stream: each book buffers its
-events in state and folds them in seq order once seq ≤ wm − h, where wm is
-the max seq seen and h the ``reorder_horizon``. The default horizon is 0,
-the in-order contract: every event folds in the micro-batch that brings it
-(within a batch we sort), and a seq at or below the last folded one, or a
-seq repeated, fails the query. This mirrors the reference's own "always sort
-your data" contract and is the documented delta from a watermark/late-data
-design; a horizon h > 0 admits events up to h seq units late.
+micro-batches. The contract is the reference's own "always sort your data":
+events must arrive in ``seq`` order ACROSS micro-batches (within a
+micro-batch any order, since the fold sorts it), and every micro-batch folds
+and emits all of its events. A null seq, a seq at or below the last one the
+book folded, or a seq repeated fails the query.
 
-Scale notes (100 TB design): state per book is O(live price levels + h), a
-few KB; the state store shards by key hash across executors, so throughput
+Scale notes (100 TB design): state per book is O(live price levels), a few
+KB; the state store shards by key hash across executors, so throughput
 scales with the number of books exactly like the batch path. Checkpointing
 gives exactly-once output; the fold is deterministic so replays are safe.
 """
@@ -55,17 +52,12 @@ from polars_order_book_spark.operators.order_book import (
 # module-level helpers here); see operators.order_book for rationale.
 _register_self_by_value(__name__)
 
-# Per book: the two sides as parallel price/qty arrays, the pending events
-# (parallel arrays in seq order; is_bid as 0/1; the prev pair empty outside
-# `modify`), the seq watermark `wm` (max seq seen) and `done` (the last seq
-# folded).
+# Per book: the two sides as parallel price/qty arrays and `done`, the last
+# seq folded.
 _STATE_SCHEMA = StructType(
-    [StructField(f, ArrayType(LongType()), True) for f in (
-        "bid_prices", "bid_qtys", "ask_prices", "ask_qtys",
-        "pend_seq", "pend_is_bid", "pend_price", "pend_qty",
-        "pend_prev_price", "pend_prev_qty",
-    )]
-    + [StructField("wm", LongType(), True), StructField("done", LongType(), True)]
+    [StructField(f, ArrayType(LongType()), True)
+     for f in ("bid_prices", "bid_qtys", "ask_prices", "ask_qtys")]
+    + [StructField("done", LongType(), True)]
 )
 
 
@@ -75,7 +67,6 @@ def _book_fold(
     keys: Sequence[str],
     seq: str,
     cols: Sequence[str | None],
-    horizon: int,
 ):
     """The ``applyInPandasWithState`` function of ``top_n_levels_stream``.
     ``cols`` names the is_bid, price, qty, prev_price and prev_qty columns
@@ -87,69 +78,47 @@ def _book_fold(
         pdfs: Iterable[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bp, bq, ap, aq, *pend, wm, done = state.get
-            bids, asks = _side_from_lists(bp, bq), _side_from_lists(ap, aq)
-        else:
-            bids, asks = _Side(), _Side()
-            pend, wm, done = [[]] * 6, None, None
-
         # applyInPandasWithState delivers one group's micro-batch as MULTIPLE
         # Arrow chunks in arbitrary post-shuffle order, so gather them all
-        # and order the whole batch with the pending events before folding.
+        # and order the whole batch before folding.
         chunks = [pdf for pdf in pdfs if not pdf.empty]
         if not chunks:
             return
         pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        new = pdf[seq].to_numpy(dtype=np.int64)
-        # Arrival contract. `done` stays in the floor: a restart with a
-        # larger horizon lowers wm − h below it, and a replayed seq that
-        # was already folded must not fold again.
-        if wm is not None:
-            floor = wm - horizon if done is None else max(done, wm - horizon)
-            late = new[new <= floor]
-            if late.size:
-                raise OrderBookError(
-                    f"event seq {late.min()} arrived out of order: the book "
-                    f"folded through seq {done} and its watermark {wm} "
-                    f"minus the reorder horizon {horizon} is {wm - horizon}"
-                )
-        seqs = np.concatenate([np.asarray(pend[0], dtype=np.int64), new])
+        # A null seq reaches pandas as NaN in a float64 column, which an
+        # int64 cast turns into INT64_MIN: refuse it before any cast.
+        if pdf[seq].isna().any():
+            raise OrderBookError(f"null event seq in book {key!r}: seqs must be non-null")
+        seqs = pdf[seq].to_numpy(dtype=np.int64)
         order = np.argsort(seqs, kind="stable")
         seqs = seqs[order]
-        # A duplicate (in the batch, or of a pending seq) would fold twice,
-        # applying its qty delta twice: fail loudly instead.
+        if state.exists:
+            bp, bq, ap, aq, done = state.get
+            bids, asks = _side_from_lists(bp, bq), _side_from_lists(ap, aq)
+        else:
+            bids, asks, done = _Side(), _Side(), None
+        # A replayed seq must not fold again, and a duplicate would apply
+        # its qty delta twice: fail loudly instead.
+        if done is not None and seqs[0] <= done:
+            raise OrderBookError(
+                f"event seq {seqs[0]} arrived out of order: the book folded "
+                f"through seq {done}"
+            )
         dup = seqs[1:] == seqs[:-1]
         if dup.any():
             raise OrderBookError(
                 f"duplicate event seq {seqs[1:][dup][0]} — seqs must be "
                 "unique per book"
             )
-        wm = int(new.max()) if wm is None else max(wm, int(new.max()))
-        vals = [
-            np.array(p + _as_list(pdf[c]), dtype=object)[order] if c else None
-            for p, c in zip(pend[1:], cols)
-        ]
-
-        ready = int(np.searchsorted(seqs, wm - horizon, side="right"))
-        if ready:
-            out, mask, bids, asks = _fold_arrays(
-                variant, n, seqs[:ready],
-                *[v[:ready].tolist() if v is not None else None for v in vals],
-                bids=bids, asks=asks,
-            )
-            done = int(seqs[ready - 1])
-            # Key columns come from the group key: emitted rows can come
-            # from earlier micro-batches.
-            base = {k: [kv] * ready for k, kv in zip(keys, key)}
-            base[seq] = seqs[:ready]
-            yield _snapshot_frame(base, out, mask, snap_cols)
-
-        pend = [seqs[ready:].tolist()] + [
-            [] if v is None else v[ready:].tolist() for v in vals
-        ]
-        pend[1] = [None if b is None else int(b) for b in pend[1]]
-        state.update((*_side_to_lists(bids), *_side_to_lists(asks), *pend, wm, done))
+        out, mask, bids, asks = _fold_arrays(
+            variant, n, seqs,
+            *[_as_list(pdf[c].iloc[order]) if c else None for c in cols],
+            bids=bids, asks=asks,
+        )
+        base = {k: [kv] * len(seqs) for k, kv in zip(keys, key)}
+        base[seq] = seqs
+        yield _snapshot_frame(base, out, mask, snap_cols)
+        state.update((*_side_to_lists(bids), *_side_to_lists(asks), int(seqs[-1])))
 
     return fold_batches
 
@@ -166,7 +135,6 @@ def top_n_levels_stream(
     seq: str = "seq",
     by: Sequence[str] = ("product_id",),
     n: int = 1,
-    reorder_horizon: int | None = None,
 ) -> DataFrame:
     """Continuous top-N book over a streaming DataFrame.
 
@@ -180,17 +148,8 @@ def top_n_levels_stream(
     stream through one task anyway (the reference's own constraint,
     ref: README.md:184-197).
 
-    ``reorder_horizon`` h (None means 0): each book buffers events in its
-    state and folds/emits an event only once its seq ≤ wm − h, where wm is
-    the max seq seen for that book (a seq-domain watermark). The arrival
-    contract: every event's seq must be > wm − h at arrival (late by at most
-    ``h`` seq units) and above the book's last folded seq, and seqs are
-    unique per book; a violation fails the query loudly. At h = 0 (the
-    default) events must arrive in ``seq`` order ACROSS micro-batches, and
-    each micro-batch folds and emits all of its events. With h > 0, emission
-    is delayed by up to ``h`` seq units behind the stream head, state grows
-    by the O(h) event buffer per book, and the buffer tail (within ``h`` of
-    wm) stays pending until later events advance the watermark.
+    Events must arrive in ``seq`` order across micro-batches; a null,
+    replayed or repeated seq fails the query (see the module docstring).
     """
     _check_n(n)
     if variant not in ("updates", "mutations", "modify"):
@@ -199,9 +158,6 @@ def top_n_levels_stream(
         raise ValueError("modify variant requires prev_price and prev_qty")
     if not by:
         raise ValueError("streaming book requires at least one key column in `by`")
-    horizon = reorder_horizon or 0
-    if horizon < 0:
-        raise ValueError("reorder_horizon must be >= 0")
     # the fold reads every tick as an int (_as_list): ticks take the batch
     # fold's contract, and seq is refused unless integral
     _validate_tick_dtype(df.schema[seq].dataType, seq)
@@ -221,7 +177,6 @@ def top_n_levels_stream(
     fold = _book_fold(
         variant, n, keys, seq,
         (is_bid, read["price"], read["qty"], read["prev_price"], read["prev_qty"]),
-        horizon,
     )
     return restore_prices(
         df.groupBy(*[F.col(k) for k in keys])

@@ -65,7 +65,6 @@ SLOW_TESTS = {
     "test_classifier.py::test_step_matches_numpy_reference",
     "test_agg_stream.py::test_fold_batches_converge_to_full_recompute",
     "test_dedup.py::test_star_components_match_label_propagation_random",
-    "test_order_book_streaming.py::test_stream_reorder_buffer_matches_sorted_batch_golden",
     "test_similarity.py::test_ivf_trained_centroids_improve_recall_on_clustered_data",
     "test_registry.py::test_query_analyzes[orders_merge_stream]",
     "test_stream_rig_drain.py::test_file_writing_rig_outlives_its_scratch_dir[orders_merge_stream]",
@@ -90,10 +89,8 @@ SLOW_TESTS = {
     "test_registry.py::test_query_analyzes[q20_concentrated_suppliers]",
     "test_state_store.py::test_interval_join_rocksdb_matches_default",
     "test_registry.py::test_query_analyzes[ann_recall_pq]",
-    "test_order_book_streaming.py::test_stream_reorder_horizon_zero_equals_in_order_contract",
     "test_order_book_chunked.py::test_property_fold_matches_naive_modify",
     "test_registry.py::test_query_analyzes[part_triangle_counts]",
-    "test_order_book_streaming.py::test_stream_reorder_duplicate_pending_seq_fails_loudly",
     "test_profile_stream.py::test_profile_accumulates_across_micro_batches",
     "test_agg_stream.py::test_two_sequential_runs_both_fold_with_default_checkpoint",
     "test_join_stream.py::test_stream_left_outer_emits_null_for_unmatched",
@@ -129,7 +126,6 @@ SLOW_TESTS = {
     "test_dedup.py::test_banding_recall_eval_counts_truth_and_caught",
     "test_similarity.py::test_semdedup_incremental_self_id_pair_filtered_and_salt_equivalence",
     "test_streaming_recovery.py::test_dedup_stream_state_survives_restart",
-    "test_order_book_streaming.py::test_stream_reorder_too_late_fails_query",
     "test_pipeline_ops.py::test_components_auto_matches_star_random",
     "test_asof.py::test_asof_forward",
     "test_asof.py::test_asof_null_payload_does_not_skip_back",

@@ -3,9 +3,8 @@ driven without Spark: a dict-backed ``GroupState`` stub holds each book's
 state between micro-batches, and every micro-batch reaches the fold as
 several shuffled pandas chunks per book, as ``applyInPandasWithState``
 delivers it. Emitted snapshots must equal the naive reference
-(``naive_book``) at horizon 0 (in-order) and at a horizon h > 0 with
-arrivals permuted within h, and every arrival-contract violation must
-raise ``OrderBookError``.
+(``naive_book``), and every arrival-contract violation must raise
+``OrderBookError``.
 """
 
 import random
@@ -16,7 +15,10 @@ import pytest
 from naive_book import top_n_keyed, valid_stream
 from polars_order_book_spark import OrderBookError
 from polars_order_book_spark.operators.order_book import snapshot_columns
-from polars_order_book_spark.streaming.book_stream import _book_fold
+from polars_order_book_spark.streaming.book_stream import (
+    _book_fold,
+    top_n_levels_stream,
+)
 
 COLS = ["book", "seq", "is_bid", "price", "qty", "prev_price", "prev_qty"]
 BOOKS = ("A", "B")
@@ -40,17 +42,17 @@ class _State:
         return self.store[self.key]
 
     def update(self, value: tuple) -> None:
-        *arrays, wm, done = value
-        assert len(arrays) == 10
-        for v in [*(x for a in arrays for x in a), wm, done]:
+        *arrays, done = value
+        assert len(arrays) == 4
+        for v in [*(x for a in arrays for x in a), done]:
             assert v is None or type(v) is int, v
         self.store[self.key] = tuple(value)
 
 
-def _fold(variant, n=3, horizon=0):
+def _fold(variant, n=3):
     prev = ("prev_price", "prev_qty") if variant == "modify" else (None, None)
     return _book_fold(variant, n, ["book"], "seq",
-                      ("is_bid", "price", "qty", *prev), horizon)
+                      ("is_bid", "price", "qty", *prev))
 
 
 def _run(fold, batches, store=None, seed=0, n=3):
@@ -98,30 +100,8 @@ def test_in_order_fold_matches_naive(variant, seed):
     store = {}
     got = _run(_fold(variant), batches, store, seed)
     assert got == top_n_keyed(rows, variant, 3)
-    for book in BOOKS:  # horizon 0: nothing stays pending
-        _, _, _, _, pend_seq, *_, wm, done = store[(book,)]
-        assert pend_seq == [] and wm == done
-
-
-@pytest.mark.parametrize("variant", ["updates", "mutations", "modify"])
-@pytest.mark.parametrize("horizon", [3, 17])
-def test_reorder_fold_matches_naive(variant, horizon):
-    for seed in range(5):
-        rng = random.Random(1000 * horizon + seed)
-        rows = _two_books(variant, seed)
-        # Arrival order by seq + jitter in [0, h): every event arrives
-        # after only events with seq < its own + h, i.e. within the horizon.
-        arrived = sorted(rows, key=lambda r: r[1] + rng.random() * horizon)
-        store = {}
-        got = _run(_fold(variant, horizon=horizon), _batches(arrived, rng), store, seed)
-        want = top_n_keyed(rows, variant, 3)
-        # Each book's watermark is the max seq of its own events.
-        bound = {b: max(s for bb, s in want if bb == b) - horizon for b in BOOKS}
-        assert set(got) == {(b, s) for b, s in want if s <= bound[b]}
-        assert got == {k: want[k] for k in got}
-        for book in BOOKS:
-            pend_seq = store[(book,)][4]
-            assert pend_seq == sorted(s for b, s in want if b == book and s > bound[book])
+    for book in BOOKS:  # `done` is the book's last seq
+        assert store[(book,)][4] == max(s for b, s in got if b == book)
 
 
 def _mut(*seqs):
@@ -140,28 +120,20 @@ def test_duplicate_within_batch_raises():
         _run(_fold("mutations"), [_mut(1, 1)])
 
 
-def test_duplicate_of_pending_seq_raises():
-    store = {}
-    _run(_fold("mutations", horizon=100), [_mut(1, 2)], store)
-    assert store[("A",)][4] == [1, 2]
-    with pytest.raises(OrderBookError, match="duplicate event seq 2"):
-        _run(_fold("mutations", horizon=100), [_mut(2, 3)], store)
+def test_null_seq_raises():
+    """A null seq reaches pandas as NaN in a float64 column; an int64 cast
+    would fold it as seq INT64_MIN."""
+    pdf = pd.DataFrame({
+        "book": ["A"] * 3, "seq": [1.0, float("nan"), 3.0],
+        "is_bid": [True] * 3, "price": [10] * 3, "qty": [1] * 3,
+    })
+    with pytest.raises(OrderBookError, match="null event seq"):
+        list(_fold("mutations")(("A",), iter([pdf]), _State({}, ("A",))))
 
 
-def test_seq_beyond_horizon_raises():
-    store = {}
-    _run(_fold("mutations", horizon=5), [_mut(*range(10))], store)
-    with pytest.raises(OrderBookError, match="reorder horizon"):
-        _run(_fold("mutations", horizon=5), [_mut(3)], store)
-
-
-def test_restart_with_larger_horizon_rejects_folded_seq():
-    """A restart from an in-order checkpoint with a larger horizon lowers
-    wm − h below the folded seqs; ``done`` must still reject a replay."""
-    store = {}
-    _run(_fold("mutations"), [_mut(1, 2, 3)], store)
-    with pytest.raises(OrderBookError, match="event seq 2 arrived out of order"):
-        _run(_fold("mutations", horizon=5), [_mut(2)], store)
+def test_reorder_horizon_is_gone():
+    with pytest.raises(TypeError, match="reorder_horizon"):
+        top_n_levels_stream(None, "mutations", reorder_horizon=0)
 
 
 def test_float64_tick_past_exact_range_raises():

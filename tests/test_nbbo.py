@@ -185,6 +185,19 @@ def test_sparse_seqs_seed_only_chunks_with_rows(spark):
     assert {r["__ck"] for r in seeds} == {r[1] // nbbo_module._CHUNK_WIDTH for r in rows[1:]}
 
 
+def test_epoch_nanosecond_seqs_fold(spark):
+    """Seqs near 1.7e18, 1 s apart: every row is its own chunk, so every
+    fold batch holds seed rows. A null seq on the seeds made Arrow hand the
+    fold a float64 seq column, which cannot hold these values exactly."""
+    rows = [
+        (i % 3, 1_700_000_000_000_000_000 + i * 10**9,
+         90 + i % 7, 1 + i % 4, 120 - i % 5, 2)
+        for i in range(40)
+    ]
+    want = py_rows(rows, [0, 1, 2])
+    assert nbbo_rows(_snaps(spark, rows), [0, 1, 2]) == want
+
+
 def test_nbbo_default_plan_has_no_global_timeline_window(spark):
     """Scale pin: the plan must never run ONE unpartitioned events-sized
     window ordered by seq. It is one fold: one MapInPandas, no pivot, no
@@ -205,7 +218,8 @@ def test_nbbo_chunked_guardrail(spark):
     # the chunk width is derived, never passed
     with pytest.raises(TypeError, match="chunk_size"):
         nbbo(snaps, [0], chunk_size=2000)
-    # the fold would read float ticks as ints, and a null seq marks a seed
+    # the fold would read float ticks as ints, and a null seq has no place
+    # in the seq order
     with pytest.raises(ValueError, match="tick dtype double"):
         nbbo(snaps.withColumn("bid_price_1", snaps.bid_price_1 + 0.5), [0])
     with pytest.raises(Exception, match="null seq"):
@@ -241,20 +255,21 @@ import pandas as pd
 
 from polars_order_book_spark.operators.nbbo import _nbbo_fold
 
-_FOLD_COLS = ["__ck", "seq", "book", "bp", "bq", "ap", "aq"]
+_FOLD_COLS = ["__ck", "__seed", "seq", "book", "bp", "bq", "ap", "aq"]
 
 
 def _fold_input(rows, chunk_of):
     """The sorted rows the plan hands the fold: each present chunk opens
-    with one seed row (null seq) per book quoted before it, carrying that
-    book's last snapshot, then the chunk's own rows in seq order."""
+    with one seed row (``__seed`` set, seq 0) per book quoted before it,
+    carrying that book's last snapshot, then the chunk's own rows in seq
+    order."""
     rows = sorted(rows, key=lambda r: r[1])
     out, last = [], {}
     for ck in sorted({chunk_of(r[1]) for r in rows}):
-        out += [(ck, None, b, *q) for b, q in sorted(last.items())]
+        out += [(ck, True, 0, b, *q) for b, q in sorted(last.items())]
         for book, seq, *q in rows:
             if chunk_of(seq) == ck:
-                out.append((ck, seq, book, *q))
+                out.append((ck, False, seq, book, *q))
                 last[book] = tuple(q)
     return out
 
@@ -275,7 +290,8 @@ def _run_fold(rows, cuts=()):
 
 
 def test_fold_one_seq_across_two_batches():
-    rows = [(0, 1, 0, 10, 5, 12, 3), (0, 1, 1, 10, 2, 11, 4), (0, 2, 1, 9, 1, 11, 4)]
+    rows = [(0, False, 1, 0, 10, 5, 12, 3), (0, False, 1, 1, 10, 2, 11, 4),
+            (0, False, 2, 1, 9, 1, 11, 4)]
     want = {1: (10, 7, 11, 4), 2: (10, 5, 11, 4)}
     for cuts in ((), (1,), (2,), (1, 2)):
         assert _run_fold(rows, cuts) == want, cuts
@@ -284,10 +300,10 @@ def test_fold_one_seq_across_two_batches():
 def test_fold_seeds_then_silent_books():
     # chunk 1: books 0 and 1 only seed; book 2 quotes on its own
     rows = [
-        (1, None, 0, 10, 5, None, None),
-        (1, None, 1, 11, 1, 13, 2),
-        (1, 20, 2, 11, 3, 12, 1),
-        (1, 21, 2, None, None, 13, 6),
+        (1, True, 0, 0, 10, 5, None, None),
+        (1, True, 0, 1, 11, 1, 13, 2),
+        (1, False, 20, 2, 11, 3, 12, 1),
+        (1, False, 21, 2, None, None, 13, 6),
     ]
     assert _run_fold(rows) == {20: (11, 4, 12, 1), 21: (11, 1, 13, 8)}
     assert _run_fold(rows, (1, 3)) == _run_fold(rows)
@@ -295,7 +311,7 @@ def test_fold_seeds_then_silent_books():
 
 def test_fold_chunk_change_resets_state():
     # chunk 1 has no seed for book 0: its chunk-0 quote must not leak in
-    rows = [(0, 1, 0, 10, 5, 12, 3), (1, 5, 1, 8, 2, 14, 1)]
+    rows = [(0, False, 1, 0, 10, 5, 12, 3), (1, False, 5, 1, 8, 2, 14, 1)]
     assert _run_fold(rows) == {1: (10, 5, 12, 3), 5: (8, 2, 14, 1)}
     assert _run_fold(rows, (1,)) == _run_fold(rows)
 

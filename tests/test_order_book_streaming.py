@@ -26,7 +26,10 @@ from pyspark.sql.types import (
 )
 
 from polars_order_book_spark import top_n_levels_from_price_mutations
-from polars_order_book_spark.operators.order_book import OrderBookError
+from polars_order_book_spark.operators.order_book import (
+    OrderBookError,
+    snapshot_columns,
+)
 from polars_order_book_spark.streaming import top_n_levels_stream
 from tests.conftest import rows_by_seq
 
@@ -276,11 +279,10 @@ def test_stream_snapshot_prices_keep_the_input_price_type(spark, price_type):
     assert out.schema["bid_qty_1"].dataType == LongType()
 
 
-def _run_stream_batches(spark, tmp, batches, name, horizon, n=2, timeout=180,
+def _run_stream_batches(spark, tmp, batches, name, n=2, timeout=180,
                         schema=EVENT_SCHEMA):
     """Feed chronological micro-batches (one file per trigger) through the
-    reorder-mode stream under directory ``tmp``; return rows_by_seq of the
-    memory sink."""
+    stream under directory ``tmp``; return rows_by_seq of the memory sink."""
     in_dir = os.path.join(tmp, "in")
     ckpt = os.path.join(tmp, "ckpt")
     os.makedirs(in_dir)
@@ -296,7 +298,7 @@ def _run_stream_batches(spark, tmp, batches, name, horizon, n=2, timeout=180,
         .parquet(in_dir)
     )
     snaps = top_n_levels_stream(
-        stream_in, "mutations", by=["product_id"], n=n, reorder_horizon=horizon
+        stream_in, "mutations", by=["product_id"], n=n
     )
     q = (
         snaps.writeStream.format("memory")
@@ -330,97 +332,13 @@ def test_stream_narrow_price_types_equal_batch_fold(spark, tmp_path, price_type)
     )
     name = f"narrow_price_{price_type.typeName()}"
     got = _run_stream_batches(
-        spark, tmp_path, [rows[:10], rows[10:]], name, horizon=None, schema=schema
+        spark, tmp_path, [rows[:10], rows[10:]], name, schema=schema
     )
     for col in ("bid_price_1", "ask_price_2"):
         assert spark.table(name).schema[col].dataType == price_type, col
     snap_cols = [c for c in golden.columns if c.startswith(("bid_", "ask_"))]
     want = rows_by_seq(golden.select("seq", *snap_cols))
     assert {s: {c: r[c] for c in ("seq", *snap_cols)} for s, r in got.items()} == want
-
-
-def test_stream_reorder_buffer_matches_sorted_batch_golden(spark, tmp_path):
-    """Out-of-order arrival within the horizon: emitted snapshots must equal
-    the sorted-batch golden for every seq at or below the final watermark
-    minus the horizon; later seqs stay buffered (unemitted)."""
-    rows = {}
-    qty_state = {}
-    for s in range(30):
-        p = 100 + (s * 3) % 7
-        if p in qty_state and s % 4 == 3:
-            q = -min(qty_state[p], 1 + s % 3)
-        else:
-            q = 1 + s % 5
-        qty_state[p] = qty_state.get(p, 0) + q
-        if qty_state[p] == 0:
-            del qty_state[p]
-        rows[s] = ("A", s, True, p, q)
-
-    golden_df = spark.createDataFrame(
-        [rows[s] for s in range(30)], EVENT_SCHEMA
-    )
-    expected = rows_by_seq(
-        top_n_levels_from_price_mutations(golden_df, by=["product_id"], n=2)
-    )
-
-    # each arrival satisfies seq > max_seen - 5 (late by at most 5)
-    order1 = [2, 0, 1, 3, 5, 4, 6, 8, 7, 9]
-    order2 = [12, 10, 11, 14, 13, 15, 17, 16, 19, 18]
-    order3 = [21, 20, 22, 24, 23, 25, 27, 26, 29, 28]
-    batches = [[rows[s] for s in o] for o in (order1, order2, order3)]
-    got = _run_stream_batches(spark, tmp_path, batches, "book_reorder_ok", horizon=5)
-
-    emitted_bound = 29 - 5  # final watermark minus horizon
-    assert set(got) == set(s for s in range(emitted_bound + 1))
-    snap_cols = [c for c in next(iter(expected.values())) if c.startswith(("bid_", "ask_"))]
-    for s in range(emitted_bound + 1):
-        for c in snap_cols:
-            assert got[s][c] == expected[s][c], f"seq {s} col {c}"
-
-
-def test_stream_reorder_too_late_fails_query(spark, tmp_path):
-    """An event later than the horizon violates the arrival contract and must
-    fail the query loudly, like every other contract violation."""
-    rows1 = [("A", s, True, 100 + s % 3, 1) for s in range(10)]  # wm -> 9
-    rows2 = [("A", 3, True, 100, 1)]  # 3 <= 9 - 5: beyond the horizon
-    with pytest.raises(Exception) as e:
-        _run_stream_batches(spark, tmp_path, [rows1, rows2], "book_reorder_late", horizon=5)
-    assert "reorder horizon" in str(e.value)
-
-
-def test_stream_reorder_horizon_zero_equals_in_order_contract(spark, tmp_path):
-    """horizon=0 folds everything already seen except nothing is held back:
-    wm - 0 covers every seq, so in-order input matches the batch golden
-    completely."""
-    rows = [("A", s, True, 100 + s % 3, 1) for s in range(12)]
-    golden = rows_by_seq(
-        top_n_levels_from_price_mutations(
-            spark.createDataFrame(rows, EVENT_SCHEMA), by=["product_id"], n=2
-        )
-    )
-    got = _run_stream_batches(
-        spark, tmp_path, [rows[:6], rows[6:]], "book_reorder_zero", horizon=0
-    )
-    assert set(got) == set(golden)
-    snap_cols = [c for c in next(iter(golden.values())) if c.startswith(("bid_", "ask_"))]
-    for s, exp in golden.items():
-        for c in snap_cols:
-            assert got[s][c] == exp[c]
-
-
-def test_stream_reorder_duplicate_pending_seq_fails_loudly(spark, tmp_path):
-    """A duplicate of a still-pending seq must raise, not be folded twice:
-    the too-late check alone would admit it and silently double-apply the
-    qty delta."""
-    batches = [
-        [("A", 1, True, 10, 3), ("A", 2, True, 10, 2)],
-        [("A", 2, True, 10, 2), ("A", 3, True, 10, 1)],  # seq 2 again
-    ]
-    import pytest as _pytest
-    from pyspark.errors import StreamingQueryException
-
-    with _pytest.raises(StreamingQueryException, match="duplicate event seq 2"):
-        _run_stream_batches(spark, tmp_path, batches, "reorder_dup_sink", horizon=100)
 
 
 def test_stream_in_order_replayed_seq_fails_loudly(spark, tmp_path):
@@ -434,7 +352,7 @@ def test_stream_in_order_replayed_seq_fails_loudly(spark, tmp_path):
     ]
     with pytest.raises(StreamingQueryException,
                        match="event seq 2 arrived out of order"):
-        _run_stream_batches(spark, tmp_path, batches, "in_order_replay_sink", horizon=None)
+        _run_stream_batches(spark, tmp_path, batches, "in_order_replay_sink")
 
 
 def test_stream_in_order_duplicate_seq_in_batch_fails_loudly(spark, tmp_path):
@@ -442,4 +360,60 @@ def test_stream_in_order_duplicate_seq_in_batch_fails_loudly(spark, tmp_path):
 
     batches = [[("A", 1, True, 10, 3), ("A", 1, True, 10, 3)]]
     with pytest.raises(StreamingQueryException, match="duplicate event seq 1"):
-        _run_stream_batches(spark, tmp_path, batches, "in_order_dup_sink", horizon=None)
+        _run_stream_batches(spark, tmp_path, batches, "in_order_dup_sink")
+
+
+def test_stream_restart_from_checkpoint_equals_batch_fold(spark, tmp_path):
+    """Stop after the first micro-batch and restart on the same checkpoint:
+    each book resumes from the state row the state store saved, so the two
+    runs' snapshots together equal the batch fold."""
+    from polars_order_book_spark.sources.sinks import (
+        append_stream_batch,
+        read_stream_batches,
+    )
+
+    rows = _mutation_events()
+    src, root, ckpt = (str(tmp_path / d) for d in ("src", "data", "ckpt"))
+
+    def run(chunk):
+        spark.createDataFrame(chunk, EVENT_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        snaps = top_n_levels_stream(
+            spark.readStream.schema(EVENT_SCHEMA).parquet(src), "mutations",
+            by=["product_id"], n=2,
+        )
+        q = (
+            snaps.writeStream.foreachBatch(
+                lambda bdf, bid: append_stream_batch(bdf, bid, root)
+            )
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(180), "stream did not finish"
+
+    run(rows[:13])  # book A's seqs 0..12
+    state = {
+        r["key"]["product_id"]: r["value"]["groupState"].asDict()
+        for r in spark.read.format("statestore").load(ckpt).collect()
+    }
+    # book A after seq 12, by hand: bid 104 x 2; asks 153 x 7, 154 x 2
+    assert state == {"A": {
+        "bid_prices": [104], "bid_qtys": [2],
+        "ask_prices": [153, 154], "ask_qtys": [7, 2], "done": 12,
+    }}
+    run(rows[13:])  # the rest of book A, then all of book B
+
+    cols = ["product_id", "seq", *snapshot_columns(2)]
+
+    def keyed(df):
+        return {(r["product_id"], r["seq"]): r for r in df.select(cols).collect()}
+
+    want = keyed(top_n_levels_from_price_mutations(
+        spark.createDataFrame(rows, EVENT_SCHEMA), by=["product_id"], n=2
+    ))
+    got = keyed(read_stream_batches(spark, root))
+    assert len(want) == len(rows)
+    assert got == want
